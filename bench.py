@@ -304,13 +304,13 @@ def main() -> None:
         meta_cache=shard_meta_pq,
     )
     # the same warehouse served through the SearchEngine facade (parse ->
-    # WAND over parquet shards -> post-limit doc_meta hydration) — the
-    # full serving path a query node runs, minus snippets (no corpus
-    # attached, matching the other q_* rows)
-    from spaghettisearch_spark.api import SearchEngine
+    # WAND over parquet shards -> one keyed doc_cards read + driver-side
+    # snippets) — the full serving path a query node runs
+    from spaghettisearch_spark.api import SearchEngine, build_doc_cards
 
     eng_wh = SearchEngine(
-        spark=spark, index=idx, cfg=cfg, shards=shards_pq, doc_map=doc_map,
+        spark=spark, index=idx, cfg=cfg, shards=shards_pq,
+        doc_cards=build_doc_cards(doc_map, corpus, idx.doc_meta).cache(),
         warehouse_dir=_shard_dir, n_docs=n_files,
     )
     qset["q_engine_warehouse"] = lambda: eng_wh.query_df(

@@ -125,14 +125,15 @@ def main():
             import shutil as _sh
             import tempfile as _tmp
 
-            from spaghettisearch_spark.api import SearchEngine
+            from spaghettisearch_spark.api import SearchEngine, build_doc_cards
 
             shard_dir = _tmp.mkdtemp(prefix="bx_shards_")
             shards.write.mode("overwrite").partitionBy("shard").parquet(shard_dir)
             shards_pq = spark.read.parquet(shard_dir)
             eng = SearchEngine(
                 spark=spark, index=idx, cfg=cfg, shards=shards_pq,
-                doc_map=doc_map, warehouse_dir=shard_dir, n_docs=n_files,
+                doc_cards=build_doc_cards(doc_map, corpus, idx.doc_meta).cache(),
+                warehouse_dir=shard_dir, n_docs=n_files,
             )
             out["q_engine_warehouse"] = best_of(
                 lambda: eng.query_df(

@@ -13,37 +13,128 @@ class; rank semantics are covered by the oracle tests.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .config import DEFAULT, EngineConfig
-from .functions.snippets import with_snippets
+from .functions.snippets import make_summary_py
 from .functions.tokenize import parse_query
 from .operators.bm25 import search
 from .operators.index_build import Index, build_index
 from .operators.links import extract_links
 from .operators.pagerank import compute_pagerank
-from .operators.wand import wand_topk
+from .operators.wand import dense_vector, wand_topk
 from .sources.corpus import ingest
+
+# doc_cards: one row per document, keyed and clustered by the dense
+# doc_key — the reference's forward tables forw[1..4] (SURVEY §1) as one
+# row: metadata, top words, PageRank, family, and the snippet source
+CARD_META = [
+    "repo", "path", "commit", "lang", "content_sha256", "page_size",
+    "top_words",
+]
+CARD_COLS = [
+    "doc_key", "doc_id", *CARD_META, "pagerank", "parents_anchors",
+    "children_top5", "content",
+]
+_FAMILY_TYPES = {
+    "parents_anchors": "array<struct<parent:string,terms:array<string>>>",
+    "children_top5": "array<string>",
+}
+# cards per parquet file / cached partition: a k-key lookup opens the
+# few files whose doc_key range holds the keys (In pushdown on min/max)
+CARDS_PER_FILE = 16384
+# the top-k job's columns; query_df returns these, then CARD_META, then
+# the snippet
+_SCORE_COLS = ["title_rank", "body_rank", "pagerank", "score"]
+
+
+def build_doc_cards(
+    doc_map: DataFrame,
+    corpus: DataFrame,
+    doc_meta: DataFrame,
+    pagerank: DataFrame | None = None,
+    links: DataFrame | None = None,
+) -> DataFrame:
+    """doc_cards rows for the (doc_key, doc_id) ``doc_map``: metadata and
+    top words from ``doc_meta``, the snippet source from ``corpus``,
+    PageRank (0 without a vector) and the family from ``links``
+    (incremental.family_top5, null without links). Left joins from the
+    map, so every key gets exactly one card."""
+    cards = (
+        doc_map.select("doc_key", "doc_id")
+        .join(doc_meta.select("doc_id", *CARD_META), "doc_id", "left")
+        .join(corpus.select("doc_id", "content"), "doc_id", "left")
+    )
+    if pagerank is None:
+        cards = cards.withColumn("pagerank", F.lit(0.0))
+    else:
+        cards = cards.join(
+            pagerank.select("doc_id", F.col("rank").alias("pagerank")),
+            "doc_id", "left",
+        ).fillna(0.0, ["pagerank"])
+    if links is None:
+        for c, t in _FAMILY_TYPES.items():
+            cards = cards.withColumn(c, F.lit(None).cast(t))
+    else:
+        from .operators.incremental import family_top5
+
+        cards = cards.join(
+            family_top5(links).select("doc_id", *_FAMILY_TYPES), "doc_id", "left"
+        )
+    return cards.select(*CARD_COLS)
+
+
+def _store_cards(
+    spark: SparkSession, cards: DataFrame, n: int, path: str | None,
+    mode: str = "overwrite",
+) -> DataFrame:
+    """Cluster ``n`` card rows by doc_key (one file / partition per
+    CARDS_PER_FILE keys, sorted within) and write them to ``path`` as
+    zstd parquet — returning the read-back frame — or, without a path,
+    cache them in memory."""
+    n_files = max(1, -(-n // CARDS_PER_FILE))
+    clustered = cards.repartition(
+        n_files, F.floor(F.col("doc_key") / CARDS_PER_FILE)
+    ).sortWithinPartitions("doc_key")
+    if path is None:
+        clustered = clustered.cache()
+        clustered.count()
+        return clustered
+    clustered.write.mode(mode).option("compression", "zstd").parquet(path)
+    return spark.read.parquet(path)
 
 
 @dataclass
 class SearchEngine:
+    """The serving engine. A query is two Spark jobs: the top-k job (k
+    rows of key + score parts, PageRank folded into the bucket kernel)
+    and one keyed read of those k rows from ``doc_cards``; snippets are
+    computed on the driver from the card's content. A first-seen query
+    term adds one block-metadata fetch (``meta_cache``).
+
+    ``doc_cards`` (CARD_COLS, one row per doc, clustered by the dense
+    doc_key) is written once at build: zstd parquet under
+    ``warehouse_dir``, else cached in memory. ``doc_map`` is its
+    (doc_key, doc_id) projection. The PageRank vectors (global and per
+    topic) are dense float64 arrays indexed by doc_key, broadcast once
+    per cards version and swapped by reference, so a running query
+    keeps the vector it started with."""
+
     spark: SparkSession
     index: Index
     cfg: EngineConfig = field(default_factory=lambda: DEFAULT)
     pagerank: DataFrame | None = None
-    corpus: DataFrame | None = None  # for snippets (content column)
-    links: DataFrame | None = None
     # (doc_id, category, rank) from operators.topics.compute_topic_pagerank
     topic_pagerank: DataFrame | None = None
     # compressed-warehouse serving backend (build(with_shards=True)):
-    # dense-keyed posting shards + (doc_key, doc_id) map + the per-term
-    # block-metadata cache a serving node keeps across queries
+    # dense-keyed posting shards + the per-term block-metadata cache a
+    # serving node keeps across queries
     shards: DataFrame | None = None
-    doc_map: DataFrame | None = None
+    doc_cards: DataFrame | None = None
     # ONE shared cache: per-term block metadata is pagerank-invariant, so
     # every topic reuses the same term rows; only the cached PR blend
     # maximum is vector-specific (a stale pr_max under another topic's
@@ -53,12 +144,14 @@ class SearchEngine:
     # parquet warehouse root (build(..., warehouse_dir=...)): shards are
     # served from the partitionBy("shard") read-back frame instead of a
     # cached in-memory one — the at-scale layout (partition pruning +
-    # column-pruned metadata reads; measured FASTER than the cached
-    # frame at sf0.1), and the substrate the LSM maintenance methods
-    # (apply_merge / refresh_stats) rewrite with dynamic partition
-    # overwrite, I/O bounded by the touched shard partitions
+    # column-pruned metadata reads), and the substrate the LSM
+    # maintenance methods (apply_merge / refresh_stats) rewrite with
+    # dynamic partition overwrite, I/O bounded by the touched shard
+    # partitions
     warehouse_dir: str | None = None
     n_docs: int = 0
+    # {None: global, topic: that topic's} Broadcast PageRank vector
+    pr_vectors: dict = field(default_factory=dict)
 
     # ------------------------------------------------------------------
     @classmethod
@@ -79,13 +172,16 @@ class SearchEngine:
         — the working version of the reference's dead topic-probability
         blend (its computeTopicProbs is a no-op, SURVEY.md §3.1).
 
-        ``warehouse_dir`` (implies with_shards): persist the compressed
-        shards as partitionBy("shard") parquet plus the doc_map
-        dimension, and SERVE from the read-back frames — queries then
-        partition-prune to the query terms' shard directories and
-        column-prune the block metadata off disk, and the engine gains
-        the LSM maintenance methods (apply_merge / refresh_stats) that
-        rewrite only touched partitions in place."""
+        Always writes ``doc_cards`` (the family is aggregated here,
+        once). ``warehouse_dir`` (implies with_shards): persist the
+        compressed shards as partitionBy("shard") zstd parquet and the
+        cards as zstd parquet, and SERVE from the read-back frames —
+        queries then partition-prune to the query terms' shard
+        directories and read only the k result cards, and the engine
+        gains the LSM maintenance methods (apply_merge / refresh_stats)
+        that rewrite only touched partitions in place."""
+        from .operators.compression import build_doc_dim, build_posting_shards
+
         corpus = ingest(documents).cache()
         links = extract_links(corpus, cfg).cache()
         idx = build_index(corpus, cfg, links=links)
@@ -99,111 +195,110 @@ class SearchEngine:
             from .operators.topics import compute_topic_pagerank
 
             tpr = compute_topic_pagerank(spark, corpus, links, topics, cfg).cache()
-        shards = doc_map = None
-        n_docs = 0
+        doc_dim = build_doc_dim(corpus).cache()
+        n_docs = doc_dim.count()
+        doc_map = doc_dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
+        doc_cards = _store_cards(
+            spark,
+            build_doc_cards(doc_map, corpus, idx.doc_meta, pr, links),
+            n_docs,
+            f"{warehouse_dir}/doc_cards" if warehouse_dir is not None else None,
+        )
+        shards = None
         if with_shards or warehouse_dir is not None:
-            # warehouse-resident serving: dense-keyed compressed shards +
-            # deferred doc_id hydration (cfg must be bm25 — asserted at
-            # query time by the shard paths)
-            from .operators.compression import build_doc_dim, build_posting_shards
-
-            n_docs = corpus.count()
-            doc_dim = build_doc_dim(corpus).cache()
+            # warehouse-resident serving: dense-keyed compressed shards
+            # (cfg must be bm25 — asserted at query time by the shard
+            # paths)
             built = build_posting_shards(
                 idx.postings, n_docs, cfg,
                 doc_dim=doc_dim, weight_col="bm25_weight",
             )
             if warehouse_dir is not None:
                 shards_path = f"{warehouse_dir}/posting_shards"
-                map_path = f"{warehouse_dir}/doc_map"
                 # cluster by shard before the partitioned write (guide
                 # §6): without this every upstream task writes its own
                 # file into every shard directory (tasks x shards tiny
                 # files); clustered, each directory holds one
                 # well-sized file and a term's pruned scan opens ONE
                 # file instead of dozens
-                built.repartition("shard").write.mode(
-                    "overwrite"
+                built.repartition("shard").write.mode("overwrite").option(
+                    "compression", "zstd"
                 ).partitionBy("shard").parquet(shards_path)
-                doc_dim.select(
-                    F.col("doc_idx").alias("doc_key"), "doc_id"
-                ).write.mode("overwrite").parquet(map_path)
-                # serve from the read-back frames: queries prune to the
+                # serve from the read-back frame: queries prune to the
                 # terms' shard partitions and read only the metadata /
-                # requested payload columns; the corpus-sized doc_map
-                # stays on disk (it only ever joins the k-row output)
+                # requested payload columns
                 shards = spark.read.parquet(shards_path)
-                doc_map = spark.read.parquet(map_path)
             else:
                 shards = built.cache()
                 shards.count()
-                doc_map = doc_dim.select(
-                    F.col("doc_idx").alias("doc_key"), "doc_id"
-                ).cache()
-                doc_map.count()
-            doc_dim.unpersist()
-        return cls(
-            spark=spark, index=idx, cfg=cfg, pagerank=pr, corpus=corpus,
-            links=links, topic_pagerank=tpr, shards=shards, doc_map=doc_map,
-            warehouse_dir=warehouse_dir, n_docs=n_docs,
+        doc_dim.unpersist()
+        eng = cls(
+            spark=spark, index=idx, cfg=cfg, pagerank=pr, topic_pagerank=tpr,
+            shards=shards, doc_cards=doc_cards, warehouse_dir=warehouse_dir,
+            n_docs=n_docs,
         )
+        eng.pr_vectors = eng._build_pr_vectors()
+        # the cards hold everything queries read of these two
+        corpus.unpersist()
+        links.unpersist()
+        return eng
+
+    @property
+    def doc_map(self) -> DataFrame | None:
+        """(doc_key, doc_id): the dense document dimension."""
+        if self.doc_cards is None:
+            return None
+        return self.doc_cards.select("doc_key", "doc_id")
+
+    def _build_pr_vectors(self) -> dict:
+        """Dense doc_key-indexed PageRank vectors from the current cards
+        (global) and the topic artifact, each broadcast once. Called at
+        build and whenever the cards change — never from query threads."""
+        tables = {}
+        if self.pagerank is not None:
+            pdf = (
+                self.doc_cards.filter(F.col("pagerank") != 0)
+                .select("doc_key", "pagerank").toPandas()
+            )
+            tables[None] = dense_vector(pdf["doc_key"], pdf["pagerank"], self.n_docs)
+        if self.topic_pagerank is not None:
+            pdf = (
+                self.topic_pagerank.join(self.doc_map, "doc_id")
+                .select("category", "doc_key", "rank").toPandas()
+            )
+            for topic, g in pdf.groupby("category"):
+                tables[topic] = dense_vector(g["doc_key"], g["rank"], self.n_docs)
+        bc = self.spark.sparkContext.broadcast
+        return {t: bc(v) for t, v in tables.items()}
 
     # ------------------------------------------------------------------
-    def _hydration_meta(self) -> DataFrame:
-        """doc_meta persisted for serving. The Index holds doc_meta as a
-        LAZY frame (build_doc_meta = two aggregations over the tokens
-        table), so hydrating against it re-runs that pipeline on EVERY
-        query — measured ~0.3 s/query at sf0.1, pure recompute. A
-        serving node keeps this index table materialized (the
-        reference's forward table lives in its DB); memoized by object
-        identity so apply_merge's doc_meta replacement invalidates it.
-        """
-        from pyspark import StorageLevel
-
-        cached = self.__dict__.get("_meta_persisted")
-        if cached is not None:
-            if cached is self.index.doc_meta:
-                return cached
-            cached.unpersist()
-        dm = self.index.doc_meta.persist(StorageLevel.MEMORY_AND_DISK)
-        self.__dict__["_meta_persisted"] = dm
-        return dm
-
-    # ------------------------------------------------------------------
-    def query_df(
+    def _ranked(
         self,
         q: str,
-        k: int | None = None,
-        use_wand: bool = False,
-        topic: str | None = None,
-        backend: str = "memory",
-    ) -> DataFrame:
-        """Top-k as a DataFrame (scores + metadata), snippets included
-        when the corpus is attached. ``topic`` blends that category's
-        PageRank vector instead of the global one (requires a build with
-        topics=...). ``backend="shards"`` serves the SAME query surface
-        (terms, phrases, PR/topic blend, wand, hydration, snippets) from
-        the compressed posting shards — the warehouse-resident path
-        (requires build(..., with_shards=True)); results are asserted
-        identical to the in-memory backend in test_api."""
+        k: int | None,
+        use_wand: bool,
+        topic: str | None,
+        backend: str,
+    ) -> tuple[list, str, list, list]:
+        """The top-k job: (its k rows, their key column, the query's
+        free terms, its phrases). Shard rows are keyed by doc_key,
+        memory rows by doc_id."""
         k = k or self.cfg.top_k
         terms, phrases = parse_query(q, self.cfg.remove_stopwords, self.cfg.stem)
-        pr = self.pagerank
-        if topic is not None:
-            if self.topic_pagerank is None:
-                raise ValueError("topic= requires a build(..., topics=...)")
-            pr = self.topic_pagerank.filter(F.col("category") == topic).select(
-                "doc_id", "rank"
-            )
+        if topic is not None and self.topic_pagerank is None:
+            raise ValueError("topic= requires a build(..., topics=...)")
         if backend not in ("memory", "shards"):
             raise ValueError(f"unknown backend {backend!r}")
+        if backend == "shards" and self.shards is None:
+            raise ValueError(
+                'backend="shards" requires a build(..., with_shards=True)'
+            )
+        if not terms and not phrases:
+            return [], "doc_id", terms, phrases
         wandable = use_wand and not phrases and self.cfg.scorer == "bm25"
-        hydrated = False
         if backend == "shards":
-            if self.shards is None or self.doc_map is None:
-                raise ValueError(
-                    'backend="shards" requires a build(..., with_shards=True)'
-                )
+            key = "doc_key"
+            pr = self.pr_vectors.get(topic)
             if wandable:
                 from .operators.wand import _PR_MAX_KEY, wand_topk_from_shards
 
@@ -211,7 +306,7 @@ class SearchEngine:
                     _PR_MAX_KEY if topic is None else f"{_PR_MAX_KEY}:{topic}"
                 )
                 topk = wand_topk_from_shards(
-                    self.spark, self.shards, self.doc_map, terms, self.cfg,
+                    self.spark, self.shards, None, terms, self.cfg,
                     k=k, pagerank=pr, dense_keys=True,
                     meta_cache=self.meta_cache, pr_max_key=pr_key,
                     # planner decides per query whether the exact-floor
@@ -223,41 +318,89 @@ class SearchEngine:
                 from .operators.bm25 import search_from_shards
 
                 topk = search_from_shards(
-                    self.spark, self.shards, self.doc_map, q, self.cfg,
-                    pagerank=pr, k=k, doc_meta=self._hydration_meta(),
+                    self.spark, self.shards, None, q, self.cfg,
+                    pagerank=pr, k=k,
                     skip_key_check=True,  # build() made the pair itself
                     dense_keys=True,  # build() keys by dense doc_idx
                     meta_cache=self.meta_cache,  # sizes the decode stages
                 )
-                hydrated = True
-        elif wandable:
-            topk = wand_topk(
-                self.spark, self.index, terms, self.cfg, k=k, pagerank=pr
-            )
         else:
-            topk = search(
-                self.spark, self.index, q, self.cfg,
-                pagerank=pr, k=k, hydrate=True,
+            key = "doc_id"
+            pr = self.pagerank
+            if topic is not None:
+                pr = self.topic_pagerank.filter(
+                    F.col("category") == topic
+                ).select("doc_id", "rank")
+            if wandable:
+                topk = wand_topk(
+                    self.spark, self.index, terms, self.cfg, k=k, pagerank=pr
+                )
+            else:
+                topk = search(self.spark, self.index, q, self.cfg, pagerank=pr, k=k)
+        return topk.collect(), key, terms, phrases
+
+    def _with_cards(self, ranked: list, key: str, terms, phrases) -> list[dict]:
+        """The card lookup: ONE keyed read of the k ranked rows' cards,
+        snippets computed here on the driver, rows in the final
+        (score desc, doc_id asc) order — dense keys merged in by
+        extend_doc_dim are not in doc_id order."""
+        if not ranked:
+            return []
+        if self.doc_cards is None:
+            raise ValueError("query needs doc_cards: build the engine with SearchEngine.build")
+        keys = [r[key] for r in ranked]
+        cards = {
+            c[key]: c.asDict(recursive=True)
+            for c in self.doc_cards.filter(F.col(key).isin(keys)).collect()
+        }
+        out = []
+        for r in ranked:
+            card = cards.get(r[key])
+            if card is None:
+                raise RuntimeError(f"no doc_cards row for {key}={r[key]!r}")
+            content = card.pop("content")
+            card.update({c: r[c] for c in _SCORE_COLS})
+            card["snippet"] = (
+                "" if content is None
+                else make_summary_py(content, terms, phrases, self.cfg.stem)
             )
-            hydrated = True
-        if not hydrated:
-            # inner broadcast-left join (see bm25.search hydrate note):
-            # a left join here planned SortMergeJoin over all of doc_meta
-            topk = F.broadcast(topk).join(self._hydration_meta(), "doc_id")
-            # limit(k): no-op on <=k rows, plans TakeOrderedAndProject
-            topk = topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        if self.corpus is not None:
-            # broadcast build = the k-row side, stream = the corpus scan;
-            # output follows the streamed side, so restore the total
-            # order afterwards (k rows — a trivial sort)
-            topk = F.broadcast(topk).join(
-                self.corpus.select("doc_id", "content"), "doc_id"
-            )
-            topk = with_snippets(
-                topk, "content", terms, phrases, stem=self.cfg.stem
-            ).drop("content")
-            topk = topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        return topk
+            out.append(card)
+        out.sort(key=lambda d: (-d["score"], d["doc_id"]))
+        return out
+
+    def query_df(
+        self,
+        q: str,
+        k: int | None = None,
+        use_wand: bool = False,
+        topic: str | None = None,
+        backend: str = "memory",
+    ) -> DataFrame:
+        """Top-k as a DataFrame: (doc_id, title_rank, body_rank,
+        pagerank, score, CARD_META..., snippet), in (score desc, doc_id
+        asc) order. Runs the same two jobs as ``query`` and returns the
+        finished rows. ``topic`` blends that category's PageRank vector
+        instead of the global one (requires a build with topics=...).
+        ``backend="shards"`` serves the SAME query surface (terms,
+        phrases, PR/topic blend, wand, cards, snippets) from the
+        compressed posting shards — the warehouse-resident path
+        (requires build(..., with_shards=True)); results are asserted
+        identical to the in-memory backend in test_api."""
+        cards = self._with_cards(*self._ranked(q, k, use_wand, topic, backend))
+        cols = ["doc_id", *_SCORE_COLS, *CARD_META, "snippet"]
+        types = {
+            f.name: f.dataType
+            for f in (self.doc_cards.schema if self.doc_cards is not None else [])
+        }
+        schema = T.StructType([
+            T.StructField(c, types.get(c) or (
+                T.DoubleType() if c in _SCORE_COLS else T.StringType()
+            ))
+            for c in cols
+        ])
+        return self.spark.createDataFrame(
+            [tuple(c[x] for x in cols) for c in cards], schema
+        )
 
     def query(
         self,
@@ -270,48 +413,27 @@ class SearchEngine:
         """Reference-JSON-shaped result cards (server.go:47-48 encodes
         []Rank_combined, incl. top-5 parents with their anchor terms and
         top-5 children — retrieval/util.go:56-92, get_metadata.go:237-266)."""
-        rows = self.query_df(q, k, use_wand, topic=topic, backend=backend).collect()
-        family: dict = {}
-        if self.links is not None and rows:
-            from .operators.incremental import family_top5
-
-            ids = [r["doc_id"] for r in rows]
-            # prune the edge list to the k result docs BEFORE aggregating
-            # (isin pushes to the links scan; k is tiny) — children need
-            # src in ids, parents need dst in ids, both lists complete
-            fam_links = self.links.filter(
-                F.col("src_doc").isin(ids) | F.col("dst_doc").isin(ids)
-            )
-            family = {
-                r["doc_id"]: r.asDict(recursive=True)
-                for r in family_top5(fam_links)
-                .filter(F.col("doc_id").isin(ids))
-                .collect()
+        cards = self._with_cards(*self._ranked(q, k, use_wand, topic, backend))
+        return [
+            {
+                "rank": rank,
+                "doc_id": d["doc_id"],
+                "url": f"{d['repo']}/{d['path']}",
+                "title": d["path"],
+                "final_rank": d["score"],
+                "title_rank": d["title_rank"],
+                "body_rank": d["body_rank"],
+                "pagerank": d["pagerank"],
+                "page_size": d["page_size"],
+                "mod_date": d["commit"],
+                "top_words": d["top_words"],
+                "parents": d["parents_anchors"] or [],
+                "children": d["children_top5"] or [],
+                "snippet": d["snippet"],
+                "content_sha256": d["content_sha256"],
             }
-        out = []
-        for rank, r in enumerate(rows, 1):
-            d = r.asDict(recursive=True)
-            fam = family.get(d["doc_id"], {})
-            out.append(
-                {
-                    "rank": rank,
-                    "doc_id": d["doc_id"],
-                    "url": f"{d.get('repo', '')}/{d.get('path', '')}",
-                    "title": d.get("path"),
-                    "final_rank": d["score"],
-                    "title_rank": d["title_rank"],
-                    "body_rank": d["body_rank"],
-                    "pagerank": d.get("pagerank", 0.0),
-                    "page_size": d.get("page_size"),
-                    "mod_date": d.get("commit"),
-                    "top_words": d.get("top_words"),
-                    "parents": fam.get("parents_anchors") or [],
-                    "children": fam.get("children_top5") or [],
-                    "snippet": d.get("snippet", ""),
-                    "content_sha256": d.get("content_sha256"),
-                }
-            )
-        return out
+            for rank, d in enumerate(cards, 1)
+        ]
 
     # ------------------------------------------------------------------
     # LSM maintenance on the parquet warehouse: both methods compute the
@@ -337,6 +459,7 @@ class SearchEngine:
             # well-sized file (same §6 note as the initial build write)
             frame.repartition("shard")
             .write.mode("overwrite")
+            .option("compression", "zstd")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("shard")
             .parquet(shards_path)
@@ -358,6 +481,7 @@ class SearchEngine:
                         [], frame.drop("shard").schema
                     )
                     .write.mode("overwrite")
+                    .option("compression", "zstd")
                     .parquet(f"{shards_path}/shard={sid}")
                 )
         self.shards = self.spark.read.parquet(shards_path)
@@ -373,21 +497,21 @@ class SearchEngine:
         through undecoded (merge_posting_shards partitions_only).
 
         ``new_doc_map`` (doc_key, doc_id): dimension rows for docs this
-        delta INTRODUCES (from compression.extend_doc_dim) — appended to
-        the warehouse doc_map before the merge. Required whenever the
-        delta references keys beyond the current dimension: a posting
-        whose key the map cannot hydrate would otherwise be silently
-        dropped from top-k output after ranking, so that case raises
-        loudly instead (checked from the delta's block-metadata samples,
-        no payload decode).
+        delta INTRODUCES (from compression.extend_doc_dim; the full
+        extended dim is accepted too — only keys past the current
+        dimension count). Required whenever the delta references keys
+        beyond the current dimension: a ranked key without a card would
+        have no result to show, so that case raises loudly instead
+        (checked from the delta's block metadata, no payload decode).
 
-        ``new_corpus`` (ingested rows for the SAME new docs): extends
-        the engine's card surface — doc_meta (hydration) and the
-        snippet corpus — so result cards for merged-in docs don't
-        silently vanish at the post-top-k joins. Without it the
-        POSTINGS serve correctly but query_df's hydration (inner
-        broadcast joins, deliberately: a left join would plan an SMJ
-        over the corpus-sized side) drops unknown doc_ids."""
+        ``new_corpus`` (ingested rows for the SAME new docs): the source
+        of their cards, appended to ``doc_cards`` — metadata, top words
+        and snippet source; PageRank 0 and no family until the next full
+        build. Required with ``new_doc_map``. The PageRank vectors are
+        then rebuilt for the grown key space and swapped by reference.
+
+        Both checks run BEFORE any state changes: a rejected merge
+        leaves doc_cards, n_docs and the shards untouched."""
         from .functions.hashing import term_hash60_col
         from .operators.compression import merge_posting_shards
 
@@ -397,9 +521,9 @@ class SearchEngine:
         # NOT a max-key witness — it samples the top-32 postings BY
         # WEIGHT, so a >32-posting block can reference keys beyond the
         # dimension whose weights fall below every sampled one, and the
-        # guard would silently pass while those ranked rows vanish at
-        # the dense-key hydration join. Fall back to the sample only for
-        # pre-range-metadata frames (best effort, as before).
+        # guard would silently pass while those ranked rows have no
+        # card. Fall back to the sample only for pre-range-metadata
+        # frames (best effort, as before).
         if "range_bounds" in delta.columns:
             key_max = F.coalesce(
                 F.element_at("range_bounds", -1),
@@ -408,52 +532,41 @@ class SearchEngine:
         else:
             key_max = F.array_max("top_doc_keys")
         mx = delta.agg(F.max(key_max).alias("m")).first()["m"]
+        n_new = 0
         if new_doc_map is not None:
-            # accept either (doc_key, doc_id) or extend_doc_dim's FULL
-            # (doc_id, doc_idx) dim — only rows past the current
-            # dimension are appended, so passing the whole extended dim
-            # never duplicates existing mappings
             if "doc_idx" in new_doc_map.columns:
                 new_doc_map = new_doc_map.select(
                     F.col("doc_idx").alias("doc_key"), "doc_id"
                 )
-            new_doc_map = new_doc_map.filter(F.col("doc_key") >= self.n_docs)
+            new_doc_map = new_doc_map.filter(
+                F.col("doc_key") >= self.n_docs
+            ).localCheckpoint(eager=True)
             n_new = new_doc_map.count()
-        else:
-            n_new = 0
-        # dimension check BEFORE any engine-state mutation: a rejected
-        # merge must leave doc_map/doc_meta/corpus untouched (previously
-        # the doc_map parquet was durably appended and the card surface
-        # extended before this could raise)
         if mx is not None and int(mx) >= self.n_docs + n_new:
             raise ValueError(
                 f"delta references doc_key {int(mx)} beyond the warehouse "
                 f"dimension (n_docs={self.n_docs + n_new}) — pass the new "
                 "docs' dimension rows via new_doc_map= (extend_doc_dim), or "
-                "the ranked rows would silently vanish at hydration"
+                "the ranked rows would have no card"
             )
-        if new_corpus is not None:
+        if n_new and new_corpus is None:
+            raise ValueError(
+                f"new_doc_map introduces {n_new} docs: pass their ingested "
+                "rows via new_corpus= so their cards can be written"
+            )
+        if n_new:
             from .operators.index_build import build_doc_meta, tokenize_fields
 
             nc = new_corpus.localCheckpoint(eager=True)
-            meta_new = build_doc_meta(nc, tokenize_fields(nc, cfg=self.cfg))
-            self.index = replace(
-                self.index,
-                doc_meta=self.index.doc_meta.unionByName(
-                    meta_new, allowMissingColumns=True
-                ).localCheckpoint(eager=False),
+            cards = build_doc_cards(
+                new_doc_map, nc, build_doc_meta(nc, tokenize_fields(nc, cfg=self.cfg)),
             )
-            if self.corpus is not None:
-                self.corpus = self.corpus.unionByName(
-                    nc.select(*self.corpus.columns)
-                ).localCheckpoint(eager=False)
-        if new_doc_map is not None:
-            map_path = f"{self.warehouse_dir}/doc_map"
-            new_doc_map.select("doc_key", "doc_id").write.mode(
-                "append"
-            ).parquet(map_path)
-            self.doc_map = self.spark.read.parquet(map_path)
+            self.doc_cards = _store_cards(
+                self.spark, cards, n_new, f"{self.warehouse_dir}/doc_cards",
+                mode="append",
+            )
             self.n_docs += n_new
+            self.pr_vectors = self._build_pr_vectors()
         # expected touched partitions, same derivation the merge uses —
         # so an emptied partition is still rewritten (see
         # _overwrite_touched)

@@ -8,8 +8,10 @@ summary extraction (/root/reference/retrieval/get_metadata.go:79-209):
   - else static fallback: the middle 21 words of the document
     (get_metadata.go:195-205)
 
-Runs as a scalar pandas UDF on the TOP-K rows only (post-limit
-hydration), so it touches k documents, never the corpus.
+The serving engine calls ``make_summary_py`` on the driver for the k
+result cards (api.SearchEngine.query); ``with_snippets`` applies the
+same function as a scalar pandas UDF to a DataFrame of results. Either
+way it touches k documents, never the corpus.
 """
 
 from __future__ import annotations

@@ -29,6 +29,8 @@ sqrt(|q|)) with NaN->0 (get_metadata.go:53-66).
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -53,14 +55,20 @@ def _corpus_stats_map(index: Index) -> dict[str, tuple[int, float]]:
 def _query_terms_df(spark: SparkSession, terms: list[str]):
     """Free terms with multiplicity (duplicate query terms score twice,
     matching the reference's per-occurrence accumulation)."""
-    from collections import Counter
-
     from ..functions.smalldf import tiny_df
 
     counts = Counter(terms)
     return tiny_df(
         spark, [(t, int(c)) for t, c in counts.items()], "term string, qtf int"
     )
+
+
+def term_lookup(values: dict) -> F.Column:
+    """Per-row value of the ``term`` column from a driver dict, as a
+    literal map: replaces a broadcast join of a tiny query-term frame,
+    whose BroadcastExchange costs a Spark job of its own per query."""
+    pairs = [x for t in sorted(values) for x in (F.lit(t), F.lit(values[t]))]
+    return F.create_map(*pairs)[F.col("term")]
 
 
 def bm25_contrib_col(cfg: EngineConfig, n_docs: int, avgdl: float) -> F.Column:
@@ -293,27 +301,34 @@ def _blend_and_topk(
 def search_from_shards(
     spark: SparkSession,
     shards: DataFrame,
-    doc_map: DataFrame,
+    doc_map: DataFrame | None,
     query: str,
     cfg: EngineConfig = DEFAULT,
-    pagerank: DataFrame | None = None,
+    pagerank=None,
     k: int | None = None,
-    doc_meta: DataFrame | None = None,
     skip_key_check: bool = False,
     dense_keys: bool | None = None,
     meta_cache: dict | None = None,
 ) -> DataFrame:
-    """The FULL query pipeline (free terms + phrases + field blend + PR
-    + hydration) served from the COMPRESSED posting shards — the
-    warehouse-resident serving path. Same semantics and (to float
-    associativity) same values as ``search`` on the in-memory index the
-    shards were built from; asserted in test_api.
+    """The FULL query pipeline (free terms + phrases + field blend + PR)
+    served from the COMPRESSED posting shards — the warehouse-resident
+    serving path. Same semantics and (to float associativity) same
+    values as ``search`` on the in-memory index the shards were built
+    from; asserted in test_api.
 
     ``dense_keys`` (None = probe the doc_map once): with dense doc_idx
-    keys the whole pipeline — free-term scoring, phrase position
-    intersection, blend, top-k — runs on long keys and doc_map joins
-    only the k-row output (broadcast); with hash keys the map joins
-    before scoring because tie-breaking needs the doc_id strings.
+    keys the free-term and phrase rows (doc_key, field, contrib) run
+    through the WAND paths' bucket kernel (wand._wand_from_hits), which
+    blends the fields and PageRank and cuts the top-k — one top-k tail
+    for every shard query. ``doc_map=None`` (the serving engine) returns
+    the k rows keyed by ``doc_key``; a direct caller that passes the map
+    gets doc_id strings (wand.hydrate_doc_ids). With hash keys the map
+    joins before scoring because tie-breaking needs the doc_id strings,
+    and the in-memory tail (_blend_and_topk) ranks them.
+
+    ``pagerank``: in dense mode the kernel's Broadcast lookup or an
+    ad-hoc (doc_id, rank) frame (see wand.wand_topk_from_shards); in
+    hash mode a (doc_id, rank) frame.
 
     ``doc_map`` (doc_key long, doc_id string) must use the SAME key mode
     the shards were built with — dense doc_idx (build_doc_dim) or 60-bit
@@ -326,15 +341,14 @@ def search_from_shards(
     BM25-only (blocks store precomputed impact weights; tfidf_cosine's
     per-query normalization needs the in-memory path). Free terms decode
     only the weight stream; phrases additionally decode positions.
-    ``doc_meta`` (when given) hydrates the top-k exactly like
-    ``search(hydrate=True)``.
 
     ``meta_cache``: same per-term block-metadata cache contract as
     wand_topk_from_shards — used here only to SIZE the decode stages
-    from the query terms' summed block df (guide §2.2: one decode task
-    per ~query_target_postings_per_task postings instead of one
-    near-empty Python task per scan partition). Results are identical
-    with or without it.
+    and the kernel exchange from the query terms' summed block df
+    (guide §2.2: one decode task per ~query_target_postings_per_task
+    postings instead of one near-empty Python task per scan partition);
+    without it each call fetches the metadata once. Results are
+    identical with or without it.
     """
     from .compression import (
         decode_shards,
@@ -343,6 +357,7 @@ def search_from_shards(
         term_block_meta,
     )
     from .phrase import phrase_matches_from_shards
+    from .wand import _wand_from_hits, hydrate_doc_ids, pr_broadcast
 
     if cfg.scorer != "bm25":
         raise ValueError(
@@ -385,18 +400,26 @@ def search_from_shards(
         dense_keys = bool(m_row) and int(m_row[0]["doc_key"]) < (1 << 44)
     # dense-key serving scores entirely on long keys (the dense doc_idx
     # is assigned in global doc_id sort order, so (score desc, key asc)
-    # is the same total order as the string tie-break) and joins the
-    # corpus-sized doc_map only against the k-row output — the phrase
-    # analog of the wand path's deferred hydration. Hash-key mode keeps
-    # the pre-scoring join (hash keys don't preserve doc_id order, so
-    # the tie-break needs the strings).
+    # is the same total order as the string tie-break). Hash-key mode
+    # keeps the pre-scoring join (hash keys don't preserve doc_id
+    # order, so the tie-break needs the strings).
     pre_map = None if dense_keys else doc_map
+    # one metadata fetch for the query's first-seen terms: it sizes the
+    # kernel's bucket exchange, and the per-part lookups below hit it
+    cache = {} if meta_cache is None else meta_cache
+    kernel_parts = query_decode_parts(
+        term_block_meta(
+            shards, free_terms + [t for p in phrase_lists for t in p], cfg,
+            cache,
+        ),
+        cfg,
+    )
     parts: list[DataFrame] = []
     if free_terms:
-        qdf = _query_terms_df(spark, free_terms)
+        counts = Counter(free_terms)
         pruned = prune_shards(shards, free_terms, cfg)
         n_parts = query_decode_parts(
-            term_block_meta(shards, free_terms, cfg, meta_cache), cfg
+            term_block_meta(shards, free_terms, cfg, cache), cfg
         )
         if n_parts is not None:
             pruned = pruned.coalesce(n_parts)
@@ -407,45 +430,48 @@ def search_from_shards(
             else decoded.join(pre_map, "doc_key")
         )
         parts.append(
-            decoded.join(F.broadcast(qdf), "term").select(
+            decoded.select(
                 "doc_id",
                 "field",
-                (F.col("weight") * F.col("qtf")).alias("contrib"),
+                (F.col("weight") * term_lookup(
+                    {t: float(c) for t, c in counts.items()}
+                )).alias("contrib"),
             )
         )
     for phrase in phrase_lists:
         m = phrase_matches_from_shards(
             spark, shards, pre_map, phrase, cfg,
             decode_parts=query_decode_parts(
-                term_block_meta(shards, phrase, cfg, meta_cache), cfg
+                term_block_meta(shards, phrase, cfg, cache), cfg
             ),
         )
         parts.append(m.select("doc_id", "field", "contrib"))
-    if not parts:
-        scored = spark.createDataFrame(
-            [], "doc_id string, title_rank double, body_rank double"
-        )
-        return _blend_and_topk(scored, cfg, pagerank, k, doc_meta)
-    scored = _pivot_field_ranks(parts)
     if not dense_keys:
-        return _blend_and_topk(scored, cfg, pagerank, k, doc_meta)
-    pr_keyed = None
-    if pagerank is not None:
-        # ad-hoc remap (at 10^12 docs store PR doc_key-keyed at build
-        # time — same note as the wand path)
-        pr_keyed = pagerank.join(doc_map, "doc_id").select(
-            F.col("doc_key").alias("doc_id"), "rank"
+        scored = (
+            _pivot_field_ranks(parts)
+            if parts
+            else spark.createDataFrame(
+                [], "doc_id string, title_rank double, body_rank double"
+            )
         )
-    topk = _blend_and_topk(scored, cfg, pr_keyed, k, None)
-    out = (
-        doc_map.join(
-            F.broadcast(topk.withColumnRenamed("doc_id", "doc_key")),
-            "doc_key",
+        return _blend_and_topk(scored, cfg, pagerank, k)
+    if not parts:
+        return spark.createDataFrame(
+            [], "doc_key long, title_rank double, body_rank double, "
+            "pagerank double, score double"
         )
-        .drop("doc_key")
-        .select("doc_id", "title_rank", "body_rank", "pagerank", "score")
+    rows = parts[0]
+    for p in parts[1:]:
+        rows = rows.unionByName(p)
+    n_buckets = 16  # the WAND paths' default
+    ranked = _wand_from_hits(
+        rows.withColumn("qterm_id", F.lit(0)),
+        cfg, k, n_buckets,
+        pr_broadcast(spark, pagerank, doc_map, dense_keys=True),
+        shuffle_parts=(
+            None if kernel_parts is None else max(1, min(kernel_parts, n_buckets))
+        ),
     )
-    if doc_meta is not None:
-        out = F.broadcast(out).join(doc_meta, "doc_id")
-    # limit(k): no-op on <=k rows, plans TakeOrderedAndProject
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    if doc_map is None:
+        return ranked.withColumnRenamed("doc_id", "doc_key")
+    return hydrate_doc_ids(ranked, doc_map, k)

@@ -666,13 +666,19 @@ def decode_shards(
                 )
             )
             total = int(counts.sum())
-            deltas = vb_decode(joined)
+            deltas = vb_decode(joined).astype(np.uint64)
             # within-block cumsum: global cumsum minus the running total
-            # at each block's first value
-            g = np.cumsum(deltas)
+            # at each block's first value. Accumulated in uint64: the
+            # running total over several blocks of 60-bit hash keys
+            # passes 2^64, but modular subtraction of the block's base
+            # still yields the block's own cumsum mod 2^64, which IS the
+            # key (keys < 2^63), so the int64 cast at the end is exact
+            g = np.cumsum(deltas, dtype=np.uint64)
             v_starts = np.cumsum(counts) - counts
             base = np.repeat(
-                np.where(v_starts > 0, g[np.maximum(v_starts, 1) - 1], 0),
+                np.where(
+                    v_starts > 0, g[np.maximum(v_starts, 1) - 1], np.uint64(0)
+                ),
                 counts,
             )
             keys = (g - base).astype(np.int64)
@@ -1034,14 +1040,17 @@ def merge_posting_shards(
     # same key supersedes its own tombstone (it is not in drop_keys'
     # base-side application).
     base_rows = decode_shards(touched_base)
-    delta_rows = decode_shards(delta)
+    # the delta's decoded rows feed both drop_keys and the union below:
+    # materialize them once so the delta is decoded once
+    delta_rows = decode_shards(delta).localCheckpoint(eager=False)
     drop_keys = delta_rows.select("term", "field", "doc_key")
     if delete_postings is not None:
         drop_keys = drop_keys.unionByName(
             delete_postings.select("term", "field", "doc_key")
         )
     merged = base_rows.join(
-        drop_keys.distinct(), ["term", "field", "doc_key"], "left_anti"
+        F.broadcast(drop_keys.distinct()), ["term", "field", "doc_key"],
+        "left_anti",
     ).unionByName(
         delta_rows.select(
             "term", "field", "doc_key", "tf", "weight", "positions"

@@ -9,7 +9,7 @@ Reference semantics (/root/reference/retrieval/phrase.go):
     non-empty (phrase.go:64-106); when it matches, each present field
     contributes the SUM of the phrase terms' weights (phrase.go:97-106)
 
-Spark shape: broadcast (term_idx, term) frame -> join postings ->
+Spark shape: literal term -> [term_idx] map, exploded onto postings ->
 ``transform(positions, p -> p - term_idx)`` -> groupBy(doc, field) ->
 completeness filter -> ``aggregate(..., array_intersect)`` fold. All
 JVM-side array ops; no Python in the loop.
@@ -92,21 +92,27 @@ def phrase_matches_from_hits(
 ):
     """Shared tail: ``hits`` carries (term, field, doc_id, positions,
     contrib) for the phrase terms."""
+    from .bm25 import term_lookup
+
     n = len(phrase)
-    from ..functions.smalldf import tiny_df
-
-    qdf = tiny_df(
-        spark, [(i, t) for i, t in enumerate(phrase)], "term_idx int, term string"
-    )
-
-    adj = hits.join(F.broadcast(qdf), "term").select(
-        "doc_id",
-        "field",
-        "term_idx",
-        "contrib",
-        F.transform(
-            "positions", lambda p: p - F.col("term_idx")
-        ).alias("adj_positions"),
+    # each row fans out to every index its term holds in the phrase (a
+    # repeated term is matched once per occurrence); a literal map, not
+    # a broadcast join of a tiny frame, so no extra job per query
+    idx_of: dict[str, list[int]] = {}
+    for i, t in enumerate(phrase):
+        idx_of.setdefault(t, []).append(i)
+    adj = (
+        hits.filter(F.col("term").isin(sorted(idx_of)))
+        .withColumn("term_idx", F.explode(term_lookup(idx_of)))
+        .select(
+            "doc_id",
+            "field",
+            "term_idx",
+            "contrib",
+            F.transform(
+                "positions", lambda p: p - F.col("term_idx")
+            ).alias("adj_positions"),
+        )
     )
 
     grouped = adj.groupBy("doc_id", "field").agg(

@@ -44,41 +44,55 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import DEFAULT, EngineConfig
-from .bm25 import posting_hits
+from .bm25 import posting_hits, term_lookup
 from .index_build import FIELD_BODY, FIELD_TITLE, Index
 
-_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("title_rank", T.DoubleType()),
-        T.StructField("body_rank", T.DoubleType()),
-        T.StructField("score", T.DoubleType()),
-    ]
-)
-
-# dense-key variant: the shard path can score on the long doc_idx and
-# hydrate doc_id strings AFTER top-k (see wand_topk_from_shards)
-_OUT_SCHEMA_LONG = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("title_rank", T.DoubleType()),
-        T.StructField("body_rank", T.DoubleType()),
-        T.StructField("score", T.DoubleType()),
-    ]
-)
+def _out_schema(key_type: T.DataType) -> T.StructType:
+    """Kernel output: (doc_id, title_rank, body_rank, pagerank, score);
+    ``doc_id`` carries the dense long doc_key on the shard paths."""
+    return T.StructType(
+        [T.StructField("doc_id", key_type)]
+        + [
+            T.StructField(c, T.DoubleType())
+            for c in ("title_rank", "body_rank", "pagerank", "score")
+        ]
+    )
 
 
+_OUT_COLS = ["doc_id", "title_rank", "body_rank", "pagerank", "score"]
 
-def _score_bucket_vectorized(k: int):
+
+def _pr_lookup(pr, keys) -> np.ndarray:
+    """PageRank of each key: ``pr`` is a dense float64 vector indexed by
+    doc_key (keys past its end score 0 — docs merged in after the
+    vector was built), or a doc_id-indexed Series (string keys)."""
+    if isinstance(pr, np.ndarray):
+        keys = np.asarray(keys, dtype=np.int64)
+        out = np.zeros(len(keys), dtype=np.float64)
+        ok = (keys >= 0) & (keys < len(pr))
+        out[ok] = pr[keys[ok]]
+        return out
+    return pr.reindex(keys).fillna(0.0).to_numpy(np.float64)
+
+
+def _score_bucket_vectorized(k: int, pr=None, w_pr: float = 0.0):
     """Vectorized exact per-bucket top-k: factorize doc ids once, then a
     single branchless ``np.bincount`` scatter-add per score column over
     the WHOLE bucket, followed by an O(n) k-th-score partition and a
     tiny (-score, doc_id) tie-break sort of the survivors.
+
+    ``pr`` (a Broadcast of a _pr_lookup table) folds the PageRank blend
+    into the kernel: each candidate gains ``w_pr * pr[doc]`` (w_pr =
+    w_pagerank * blend_scale) before the k-th-score cut, and the row
+    carries the looked-up rank in its ``pagerank`` column. The
+    candidate set is unchanged (docs with at least one posting), the
+    same as the exhaustive path's left join.
 
     Why this beats document-at-a-time WAND here: the bucket's postings
     are already Arrow-resident (the pruned scan + shuffle did the real
@@ -91,9 +105,8 @@ def _score_bucket_vectorized(k: int):
     equal to the exhaustive scorer in tests."""
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["doc_id", "title_rank", "body_rank", "score"]
         if pdf.empty:
-            return pd.DataFrame(columns=cols)
+            return pd.DataFrame(columns=_OUT_COLS)
         codes, uniques = pd.factorize(pdf["doc_id"], sort=False)
         n = len(uniques)
         acc = np.bincount(
@@ -105,6 +118,11 @@ def _score_bucket_vectorized(k: int):
         acc_b = np.bincount(
             codes, weights=pdf["body_c"].to_numpy(np.float64), minlength=n
         )
+        if pr is not None:
+            ranks = _pr_lookup(pr.value, uniques)
+            acc = acc + w_pr * ranks
+        else:
+            ranks = np.zeros(n, dtype=np.float64)
         if n > k:
             kth = np.partition(acc, n - k)[n - k]
             cand = np.nonzero(acc >= kth)[0]  # >= keeps kth-score ties
@@ -112,18 +130,56 @@ def _score_bucket_vectorized(k: int):
             cand = np.arange(n)
         ids = uniques[cand]
         order = sorted(range(len(cand)), key=lambda i: (-acc[cand[i]], ids[i]))[:k]
-        sel = cand[[order[i] for i in range(len(order))]]
+        sel = cand[order]
         return pd.DataFrame(
             {
                 "doc_id": uniques[sel],
                 "title_rank": acc_t[sel],
                 "body_rank": acc_b[sel],
+                "pagerank": ranks[sel],
                 "score": acc[sel],
             },
-            columns=cols,
+            columns=_OUT_COLS,
         )
 
     return kernel
+
+
+def pr_broadcast(
+    spark: SparkSession, pagerank, doc_map=None, dense_keys: bool = False
+):
+    """The bucket kernel's Broadcast PageRank lookup for ``pagerank``:
+    None and an existing Broadcast pass through; a (doc_id, rank) frame
+    becomes a doc_id-indexed Series, or — for ``dense_keys``, through
+    the (doc_key, doc_id) map — a float64 vector indexed by doc_key. One
+    driver collect for ad-hoc callers; a serving engine builds its
+    vectors once (api.SearchEngine) and passes the Broadcast itself."""
+    if pagerank is None or isinstance(pagerank, Broadcast):
+        return pagerank
+    if dense_keys and doc_map is None:
+        raise ValueError(
+            "a (doc_id, rank) PageRank frame needs the doc_map to key it "
+            "by doc_key; pass the map or a Broadcast vector"
+        )
+    if not dense_keys:
+        pdf = pagerank.select("doc_id", "rank").toPandas()
+        table = pd.Series(
+            pdf["rank"].to_numpy(np.float64), index=pdf["doc_id"].to_numpy()
+        )
+    else:
+        pdf = (
+            doc_map.join(pagerank, "doc_id").select("doc_key", "rank").toPandas()
+        )
+        table = dense_vector(pdf["doc_key"], pdf["rank"])
+    return spark.sparkContext.broadcast(table)
+
+
+def dense_vector(keys, values, n: int = 0) -> np.ndarray:
+    """float64 vector of length >= n with ``values`` at ``keys``."""
+    keys = np.asarray(keys, dtype=np.int64)
+    vec = np.zeros(max(n, int(keys.max()) + 1 if len(keys) else 0))
+    vec[keys] = np.asarray(values, dtype=np.float64)
+    return vec
 
 
 def wand_topk(
@@ -141,8 +197,9 @@ def wand_topk(
     Returns (doc_id, title_rank, body_rank, pagerank, score) — same shape
     and (to float associativity) same values as bm25.search's exhaustive
     path for term-only queries, asserted in tests. PageRank, when given,
-    is folded in as an additional WAND term so its mass participates in
-    the upper bounds — pruning stays admissible and results stay exact.
+    is folded into the bucket kernel (a broadcast doc_id -> rank
+    lookup), so its mass enters each candidate's score before the
+    local top-k cut and results stay exact.
     """
     from collections import Counter
 
@@ -158,39 +215,38 @@ def wand_topk(
             "pagerank double, score double"
         )
     counts = Counter(query_terms)
-    from ..functions.smalldf import tiny_df
-
-    qdf = tiny_df(
-        spark,
-        [(t, i, float(c)) for i, (t, c) in enumerate(sorted(counts.items()))],
-        "term string, qterm_id int, qtf double",
+    terms = sorted(counts)
+    hits = posting_hits(index, terms, cfg).select(
+        "doc_id", "field",
+        term_lookup({t: i for i, t in enumerate(terms)}).alias("qterm_id"),
+        (F.col("contrib") * term_lookup(
+            {t: float(counts[t]) for t in terms}
+        )).alias("contrib"),
     )
-
-    hits = posting_hits(index, list(counts), cfg).join(F.broadcast(qdf), "term")
     return _wand_from_hits(
-        spark, hits, len(counts), cfg, k, n_buckets, pagerank, kernel
+        hits, cfg, k, n_buckets, pr_broadcast(spark, pagerank), kernel
     )
 
 
 def _wand_from_hits(
-    spark: SparkSession,
     hits: DataFrame,
-    n_qterms: int,
     cfg: EngineConfig,
     k: int,
     n_buckets: int,
-    pagerank: DataFrame | None,
+    pr=None,
     kernel="taat",
     shuffle_parts: int | None = None,
 ) -> DataFrame:
-    """Shared tail of the WAND paths: ``hits`` must carry
-    (doc_id, field, qterm_id, qtf, contrib). ``shuffle_parts`` (shard
-    path) sizes the bucket-kernel exchange from the planner-known decode
-    volume — an explicit repartition by doc_bucket that the groupBy
-    reuses (one exchange, exact task count) instead of the session-wide
-    shuffle-partition default."""
-    # blended per-posting impact: field weight folded in, so the WAND
-    # kernel maximizes the FINAL blended score directly
+    """The one top-k tail of every shard and WAND path: ``hits`` carries
+    (doc_id, field, qterm_id, contrib) with the query-term frequency
+    already multiplied into ``contrib``; ``pr`` is the kernel's
+    Broadcast PageRank lookup (see _score_bucket_vectorized).
+    ``shuffle_parts`` (shard paths) sizes the bucket-kernel exchange
+    from the planner-known decode volume — an explicit repartition by
+    doc_bucket that the groupBy reuses (one exchange, exact task count)
+    instead of the session-wide shuffle-partition default."""
+    # blended per-posting impact: field weight folded in, so the kernel
+    # maximizes the FINAL blended score directly
     fw = (
         F.when(F.col("field") == FIELD_TITLE, F.lit(cfg.w_title))
         .when(F.col("field") == FIELD_BODY, F.lit(cfg.w_body))
@@ -199,16 +255,15 @@ def _wand_from_hits(
     per_posting = hits.select(
         "doc_id",
         "qterm_id",
-        (fw * F.col("contrib") * F.col("qtf") * F.lit(cfg.blend_scale)).alias(
-            "blended"
-        ),
-        F.when(F.col("field") == FIELD_TITLE, F.col("contrib") * F.col("qtf"))
+        (fw * F.col("contrib") * F.lit(cfg.blend_scale)).alias("blended"),
+        F.when(F.col("field") == FIELD_TITLE, F.col("contrib"))
         .otherwise(F.lit(0.0))
         .alias("title_c"),
-        F.when(F.col("field") == FIELD_BODY, F.col("contrib") * F.col("qtf"))
+        F.when(F.col("field") == FIELD_BODY, F.col("contrib"))
         .otherwise(F.lit(0.0))
         .alias("body_c"),
     )
+    long_keys = dict(hits.dtypes).get("doc_id") == "bigint"
     if callable(kernel):
         # an injected reference kernel (tests/daat_reference.py) walks
         # document-at-a-time and needs ONE cursor per (doc, qterm): a
@@ -217,34 +272,38 @@ def _wand_from_hits(
         # duplicates natively, so the production path skips this whole
         # shuffle — posting rows flow straight into the bucket
         # partitioning (halves the query path's shuffle volume).
+        # Reference kernels tie-break on string doc_ids and score term
+        # postings only, so dense long keys and PageRank are refused.
+        if long_keys:
+            raise ValueError(
+                "injected reference kernels tie-break on string doc_ids; "
+                "dense long keys require the vectorized kernel"
+            )
+        if pr is not None:
+            raise ValueError(
+                "injected reference kernels score term postings only; "
+                "the PageRank blend requires the vectorized kernel"
+            )
         per_doc_term = per_posting.groupBy("doc_id", "qterm_id").agg(
             F.sum("blended").alias("contrib"),
             F.sum("title_c").alias("title_c"),
             F.sum("body_c").alias("body_c"),
         )
-    else:
+        ref = kernel(cfg, k)
+
+        def bucket_kernel(pdf):
+            return ref(pdf).assign(pagerank=0.0)[_OUT_COLS]
+    elif kernel == "taat":
         per_doc_term = per_posting.withColumnRenamed("blended", "contrib")
-    if pagerank is not None:
-        # exact PR blending: PR becomes one more WAND term, present for
-        # every candidate doc — its bucket max feeds the upper bounds, so
-        # pruning stays admissible. Candidate set unchanged (docs with at
-        # least one term hit), matching the exhaustive path.
-        pr_rows = (
-            per_doc_term.select("doc_id")
-            .distinct()
-            .join(pagerank.select("doc_id", F.col("rank").alias("pr")), "doc_id", "left")
-            .select(
-                "doc_id",
-                F.lit(n_qterms).alias("qterm_id"),
-                (
-                    F.lit(cfg.w_pagerank * cfg.blend_scale)
-                    * F.coalesce("pr", F.lit(0.0))
-                ).alias("contrib"),
-                F.lit(0.0).alias("title_c"),
-                F.lit(0.0).alias("body_c"),
-            )
+        bucket_kernel = _score_bucket_vectorized(
+            k, pr, cfg.w_pagerank * cfg.blend_scale
         )
-        per_doc_term = per_doc_term.unionByName(pr_rows)
+    else:
+        raise ValueError(
+            "only the vectorized kernel ships in the engine; pass a "
+            "callable (cfg, k) -> (pdf -> pdf) factory to inject a "
+            "reference kernel (see tests/daat_reference.py)"
+        )
 
     bucketed = per_doc_term.withColumn(
         "doc_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
@@ -255,42 +314,28 @@ def _wand_from_hits(
         # the groupBy below adds NO second exchange and AQE has nothing
         # to coalesce — the kernel stage runs exactly this many tasks
         bucketed = bucketed.repartition(shuffle_parts, "doc_bucket")
-    long_keys = dict(hits.dtypes).get("doc_id") == "bigint"
-    if callable(kernel):
-        # parity-test injection point; reference kernels tie-break on
-        # string doc_ids, so dense long keys are refused loudly
-        if long_keys:
-            raise ValueError(
-                "injected reference kernels tie-break on string doc_ids; "
-                "dense long keys require the vectorized kernel"
-            )
-        bucket_kernel = kernel(cfg, k)
-    elif kernel == "taat":
-        bucket_kernel = _score_bucket_vectorized(k)
-    else:
-        raise ValueError(
-            "only the vectorized kernel ships in the engine; pass a "
-            "callable (cfg, k) -> (pdf -> pdf) factory to inject a "
-            "reference kernel (see tests/daat_reference.py)"
-        )
     local = bucketed.groupBy("doc_bucket").applyInPandas(
-        bucket_kernel, _OUT_SCHEMA_LONG if long_keys else _OUT_SCHEMA
+        bucket_kernel,
+        _out_schema(T.LongType() if long_keys else T.StringType()),
     )
-    out = local
-    if pagerank is not None:
-        out = out.join(
-            pagerank.select("doc_id", F.col("rank").alias("pr")), "doc_id", "left"
-        ).withColumn("pr", F.coalesce("pr", F.lit(0.0)))
-    else:
-        out = out.withColumn("pr", F.lit(0.0))
+    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def hydrate_doc_ids(ranked: DataFrame, doc_map: DataFrame, k: int) -> DataFrame:
+    """doc_id strings for a dense-keyed k-row top-k (doc_id column holds
+    the doc_key) from a (doc_key, doc_id) map, for direct callers of the
+    shard paths that pass one: a broadcast of the k-row side, then the
+    (score desc, doc_id asc) order. The serving engine passes no map and
+    reads the k keys' cards instead (api.SearchEngine.query)."""
     return (
-        out.select(
-            "doc_id",
-            "title_rank",
-            "body_rank",
-            F.col("pr").alias("pagerank"),
-            "score",
+        doc_map.join(
+            F.broadcast(ranked.withColumnRenamed("doc_id", "doc_key")),
+            "doc_key",
         )
+        .select(*_OUT_COLS)
+        # limit(k) is a no-op on the <=k joined rows but turns the
+        # final global sort into TakeOrderedAndProject (no range-
+        # partitioning sampling pass)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
@@ -605,12 +650,12 @@ def plan_blocks(
 def wand_topk_from_shards(
     spark: SparkSession,
     shards: DataFrame,
-    doc_map: DataFrame,
+    doc_map: DataFrame | None,
     query_terms: list[str],
     cfg: EngineConfig = DEFAULT,
     k: int | None = None,
     n_buckets: int = 16,
-    pagerank: DataFrame | None = None,
+    pagerank=None,
     kernel="taat",
     dense_keys: bool = False,
     meta_cache: dict | None = None,
@@ -668,11 +713,19 @@ def wand_topk_from_shards(
     - ``dense_keys=True`` (the warehouse/at-scale path): doc_key is the
       dense ``doc_idx`` from build_doc_dim, which is assigned in GLOBAL
       doc_id sort order — so (score desc, doc_key asc) is the same total
-      order as (score desc, doc_id asc) and scoring can run entirely on
-      long keys. doc_map is then joined AFTER top-k against the
-      n_buckets*k kernel output (broadcast k-row side): the corpus-sized
-      map never enters the per-query shuffle, which is the only join
-      shape that survives 10^12 docs. Requires the vectorized kernel.
+      order as (score desc, doc_id asc) and scoring runs entirely on
+      long keys. With ``doc_map=None`` (the serving engine) the result
+      is the k rows (doc_key, title_rank, body_rank, pagerank, score):
+      ONE Spark job, and the caller reads the k keys' doc_cards rows.
+      A direct caller that passes a doc_map gets doc_id strings
+      (hydrate_doc_ids: a broadcast of the k-row side). Requires the
+      vectorized kernel.
+
+    ``pagerank``: the blend's PageRank as the kernel's Broadcast lookup
+    (a dense float64 vector indexed by doc_key in dense mode — what the
+    engine builds once per cards version), or an ad-hoc (doc_id, rank)
+    frame that is collected into one (pr_broadcast). Either way the
+    rank is added inside the bucket kernel; no join enters the plan.
 
     ``meta_cache``: optional dict owned by the caller, mapping term ->
     its block-metadata rows. A serving node queries the same shards
@@ -716,6 +769,7 @@ def wand_topk_from_shards(
         )
     term_list = sorted(counts)
     pruned = prune_shards(shards, term_list, cfg)
+    pr_bc = pr_broadcast(spark, pagerank, doc_map, dense_keys)
 
     cand_keys = None
     q_parts = None
@@ -731,16 +785,17 @@ def wand_topk_from_shards(
     if meta is not None:
         extra_ub = 0.0
         if pagerank is not None:
-            # cache the PR blend maximum alongside the term metadata —
-            # without this every blended query pays one driver aggregation
-            # even on the repeat-query path the meta_cache exists for. The
-            # reserved key can't collide: the tokenizer never emits NUL.
+            # cache the PR blend maximum alongside the term metadata, so
+            # the repeat-query path never touches the lookup table on the
+            # driver. The reserved key can't collide: the tokenizer never
+            # emits NUL.
             if not pr_max_key.startswith("\x00"):
                 raise ValueError("pr_max_key must start with NUL")
             if meta_cache is not None and pr_max_key in meta_cache:
                 pr_max = meta_cache[pr_max_key]
             else:
-                pr_max = pagerank.agg(F.max("rank")).first()[0]
+                table = pr_bc.value
+                pr_max = float(table.max()) if len(table) else 0.0
                 if meta_cache is not None:
                     meta_cache[pr_max_key] = pr_max
             extra_ub = cfg.w_pagerank * cfg.blend_scale * float(pr_max or 0.0)
@@ -811,13 +866,6 @@ def wand_topk_from_shards(
             sample_keys = sorted(
                 {dk for r in meta for dk in (r["top_doc_keys"] or [])}
             )
-            from ..functions.smalldf import tiny_df as _tiny
-
-            qdf1 = _tiny(
-                spark,
-                [(t, qtf_map[t]) for t in term_list],
-                "term string, qtf double",
-            )
             fw1 = (
                 F.when(F.col("field") == FIELD_TITLE, F.lit(cfg.w_title))
                 .when(F.col("field") == FIELD_BODY, F.lit(cfg.w_body))
@@ -827,11 +875,10 @@ def wand_topk_from_shards(
                 pruned, fields=("weight",), doc_keys=sample_keys
             )
             rows1 = (
-                d1.join(F.broadcast(qdf1), "term")
-                .groupBy("doc_key")
+                d1.groupBy("doc_key")
                 .agg(
                     F.sum(
-                        fw1 * F.col("weight") * F.col("qtf")
+                        fw1 * F.col("weight") * term_lookup(qtf_map)
                         * F.lit(cfg.blend_scale)
                     ).alias("s")
                 )
@@ -915,68 +962,41 @@ def wand_topk_from_shards(
         pruned, fields=("weight",), doc_keys=cand_keys,
         key_ranges=(keep_ranges or None) if meta is not None else None,
     )
-    from ..functions.smalldf import tiny_df
-
-    qdf = tiny_df(
-        spark,
-        [(t, i, float(counts[t])) for i, t in enumerate(term_list)],
-        "term string, qterm_id int, qtf double",
-    )
-    if dense_keys:
+    if dense_keys and meta is not None:
         # loud guard for the silent-empty failure mode: shards built
-        # with 60-bit hash keys joined against a dense doc_map match
-        # nothing. The block-metadata samples are already on the driver;
-        # dense doc_idx values are < n_docs while hash keys are uniform
-        # in [0, 2^60) — a sampled key past 2^44 (~17T docs) cannot be a
+        # with 60-bit hash keys served as dense keys match no card. The
+        # block-metadata samples are already on the driver; dense
+        # doc_idx values are < n_docs while hash keys are uniform in
+        # [0, 2^60) — a sampled key past 2^44 (~17T docs) cannot be a
         # dense index this engine targets.
-        if meta is not None:
-            sampled = [
-                dk for r in meta for dk in (r["top_doc_keys"] or [])
-            ]
-            if sampled and max(sampled) >= (1 << 44):
-                raise ValueError(
-                    "dense_keys=True but the shards' doc_keys look like "
-                    "60-bit hash keys (sampled key >= 2^44) — build the "
-                    "shards with doc_dim= and pass the matching dense "
-                    "doc_map, or drop dense_keys"
-                )
-        # score on the dense long keys; hydrate doc_id strings after top-k
-        hits = decoded.join(F.broadcast(qdf), "term").select(
-            F.col("doc_key").alias("doc_id"), "field", "qterm_id", "qtf",
-            F.col("weight").alias("contrib"),
-        )
-        pr_keyed = None
-        if pagerank is not None:
-            # at 10^12 docs store PR doc_key-keyed at build time; this
-            # remap is the ad-hoc equivalent
-            pr_keyed = pagerank.join(doc_map, "doc_id").select(
-                F.col("doc_key").alias("doc_id"), "rank"
+        sampled = [dk for r in meta for dk in (r["top_doc_keys"] or [])]
+        if sampled and max(sampled) >= (1 << 44):
+            raise ValueError(
+                "dense_keys=True but the shards' doc_keys look like "
+                "60-bit hash keys (sampled key >= 2^44) — build the "
+                "shards with doc_dim= and pass the matching dense "
+                "doc_map, or drop dense_keys"
             )
-        ranked = _wand_from_hits(
-            spark, hits, len(counts), cfg, k, n_buckets, pr_keyed, kernel,
-            shuffle_parts=q_parts,
-        ).withColumnRenamed("doc_id", "doc_key")
-        return (
-            doc_map.join(F.broadcast(ranked), "doc_key")
-            .select("doc_id", "title_rank", "body_rank", "pagerank", "score")
-            # limit(k) is a no-op on the <=k joined rows but turns the
-            # final global sort into TakeOrderedAndProject (no range-
-            # partitioning sampling pass)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-    hits = (
-        decoded.join(F.broadcast(qdf), "term")
-        .join(doc_map, "doc_key")
-        .select(
-            "doc_id", "field", "qterm_id", "qtf",
-            F.col("weight").alias("contrib"),
-        )
+    if dense_keys:
+        # score on the dense long keys; doc_id strings only after top-k
+        keyed = decoded.withColumnRenamed("doc_key", "doc_id")
+    else:
+        keyed = decoded.join(doc_map, "doc_key")
+    hits = keyed.select(
+        "doc_id", "field",
+        term_lookup({t: i for i, t in enumerate(term_list)}).alias("qterm_id"),
+        (F.col("weight") * term_lookup(
+            {t: float(counts[t]) for t in term_list}
+        )).alias("contrib"),
     )
-    return _wand_from_hits(
-        spark, hits, len(counts), cfg, k, n_buckets, pagerank, kernel,
-        shuffle_parts=q_parts,
+    ranked = _wand_from_hits(
+        hits, cfg, k, n_buckets, pr_bc, kernel, shuffle_parts=q_parts
     )
+    if not dense_keys:
+        return ranked
+    if doc_map is None:
+        return ranked.withColumnRenamed("doc_id", "doc_key")
+    return hydrate_doc_ids(ranked, doc_map, k)
 
 
 def build_doc_map(corpus: DataFrame) -> DataFrame:

@@ -29,6 +29,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """``$SPARK_DRIVER_MEM`` if set, else half of host RAM capped at
+    24g: the heap plus the Python workers' memory must fit the host,
+    or the kernel kills the JVM mid-run (a fixed 24g did that on a
+    16 GB host)."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{max(1024, min(24 * 1024, ram_mb // 2))}m"
+
+
 def get_spark(
     app_name: str = "spaghettisearch_spark",
     cores: int | None = None,
@@ -64,11 +76,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # local mode runs driver + executors in ONE JVM: the heap holds
         # every cached table AND all concurrent tasks' aggregation and
-        # Arrow buffers (guide §5). 8g was arbitrary and sat within ~10%
-        # of OOM on 150k-doc corpora; size to the host (still overridden
-        # by $SPARK_DRIVER_MEM, and irrelevant on a real cluster where
-        # executors carry the data)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        # Arrow buffers (guide §5); irrelevant on a real cluster where
+        # executors carry the data
+        .config("spark.driver.memory", driver_memory())
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():

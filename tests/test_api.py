@@ -368,3 +368,201 @@ def test_apply_merge_guard_catches_unsampled_key_and_leaves_state_intact(
     assert eng.n_docs == n0
     assert eng.doc_map.count() == map_rows0
     assert eng.index.doc_meta.count() == meta_rows0
+
+
+def _spark_jobs(spark, group, fn):
+    """(fn(), number of Spark jobs it started) via a job group."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _assert_same_cards(got, want):
+    assert [c["doc_id"] for c in got] == [c["doc_id"] for c in want]
+    for a, b in zip(got, want):
+        assert a["final_rank"] == pytest.approx(b["final_rank"], rel=1e-9)
+        assert a["pagerank"] == pytest.approx(b["pagerank"], rel=1e-9)
+        for key in ("url", "content_sha256", "snippet", "parents",
+                    "children", "top_words", "page_size"):
+            assert a[key] == b[key], key
+
+
+def test_warehouse_query_is_two_jobs(spark, docs_tiny, tmp_path):
+    """A repeated shard query costs the top-k job plus one keyed read of
+    doc_cards — at most 3 Spark jobs for a WAND bag and for a phrase —
+    and its cards equal the memory backend's."""
+    from spaghettisearch_spark.api import SearchEngine
+
+    eng = SearchEngine.build(
+        spark, spark.createDataFrame(docs_tiny),
+        warehouse_dir=str(tmp_path / "wh"),
+    )
+    for i, (q, wand) in enumerate(
+        [("parse buffer", True), ('"hash table" flush', False)]
+    ):
+        mem = eng.query(q, k=5, use_wand=wand, backend="memory")
+        first = eng.query(q, k=5, use_wand=wand, backend="shards")
+        again, n_jobs = _spark_jobs(
+            spark, f"two-jobs-{i}",
+            lambda: eng.query(q, k=5, use_wand=wand, backend="shards"),
+        )
+        assert n_jobs <= 3, (q, n_jobs)
+        assert again == first
+        _assert_same_cards(again, mem)
+
+
+def _merge_batch(spark, eng, rows):
+    """(delta, extended dim, ingested corpus) for new raw ``rows``,
+    through the public LSM path."""
+    from pyspark.sql import functions as F
+
+    from spaghettisearch_spark.operators.compression import (
+        build_posting_shards,
+        extend_doc_dim,
+    )
+    from spaghettisearch_spark.operators.index_build import build_index
+    from spaghettisearch_spark.sources.corpus import ingest
+
+    raw = spark.createDataFrame(
+        rows,
+        "repo string, path string, commit string, lang string, "
+        "content string",
+    )
+    nc = ingest(raw).localCheckpoint(eager=True)
+    old = eng.doc_map.select("doc_id", F.col("doc_key").alias("doc_idx"))
+    ext = extend_doc_dim(old, nc.select("doc_id")).localCheckpoint(eager=True)
+    delta = build_posting_shards(
+        build_index(nc, eng.cfg).postings, eng.n_docs + len(rows), eng.cfg,
+        doc_dim=ext, weight_col="bm25_weight",
+    ).localCheckpoint(eager=True)
+    return delta, ext, nc
+
+
+def test_apply_merge_appends_cards(spark, docs_small, tmp_path):
+    """Merged docs get cards (url, content_sha256, snippet; PageRank 0,
+    no family) and serve through both shard paths alike; a merge the
+    dimension guard rejects leaves doc_cards unchanged."""
+    import hashlib
+
+    from spaghettisearch_spark.api import SearchEngine
+
+    eng = SearchEngine.build(
+        spark, spark.createDataFrame(docs_small.head(100)),
+        warehouse_dir=str(tmp_path / "wh"),
+    )
+    rows = [
+        ("rnew", f"zznew{i}.py", "c1", "python",
+         f"zzmergesig parse buffer flush zzmergesig{i} dispatch parse")
+        for i in range(3)
+    ]
+    delta, ext, nc = _merge_batch(spark, eng, rows)
+    cards0 = sorted(map(tuple, eng.doc_cards.collect()))
+    with pytest.raises(ValueError, match="beyond the warehouse dimension"):
+        eng.apply_merge(delta)
+    assert sorted(map(tuple, eng.doc_cards.collect())) == cards0
+    old_pr = eng.pr_vectors[None]
+    eng.apply_merge(delta, new_doc_map=ext, new_corpus=nc)
+    # swapped by reference; the old vector stays readable
+    assert eng.pr_vectors[None] is not old_pr
+    assert len(old_pr.value) == eng.n_docs - 3
+    assert len(eng.pr_vectors[None].value) == eng.n_docs
+    hits = eng.query("zzmergesig", k=10, use_wand=True, backend="shards")
+    want = {f"rnew/{r[1]}": r[4] for r in rows}
+    assert {c["url"] for c in hits} == set(want)
+    for c in hits:
+        content = want[c["url"]]
+        assert c["content_sha256"] == hashlib.sha256(
+            content.encode()
+        ).hexdigest()
+        assert c["snippet"] == content
+        assert c["pagerank"] == 0.0
+        assert c["parents"] == [] and c["children"] == []
+    q = "zzmergesig parse buffer zzmergesig1"
+    wand = eng.query(q, k=10, use_wand=True, backend="shards")
+    exhaustive = eng.query(q, k=10, use_wand=False, backend="shards")
+    assert wand
+    assert [c["doc_id"] for c in wand] == [c["doc_id"] for c in exhaustive]
+
+
+def test_concurrent_queries_across_merge(spark, docs_small, tmp_path):
+    """4 query threads against one warehouse engine while a merge
+    commits between queries (no query spans the commit): every query
+    succeeds and returns exactly the sequential answer of the state it
+    ran in, old or new."""
+    import concurrent.futures as fut
+    import threading
+
+    from spaghettisearch_spark.api import SearchEngine
+
+    eng = SearchEngine.build(
+        spark, spark.createDataFrame(docs_small.head(150)),
+        warehouse_dir=str(tmp_path / "wh"),
+    )
+    queries = [
+        ("dispatch buffer parse", True),
+        ('"hash table" parse', False),
+        ("zzconcsig parse", True),
+        ("buffer", True),
+    ]
+
+    def answers():
+        return {
+            q: [r["doc_id"] for r in eng.query(q, backend="shards", use_wand=w)]
+            for q, w in queries
+        }
+
+    delta, ext, nc = _merge_batch(spark, eng, [
+        ("rconc", "zzconc.py", "c1", "python", "zzconcsig parse buffer parse"),
+    ])
+    want = {"old": answers()}
+    cond = threading.Condition()
+    state = {"readers": 0, "writing": False, "phase": "old", "done": 0}
+
+    def run(args):
+        q, w = args
+        with cond:
+            while state["writing"]:
+                cond.wait()
+            state["readers"] += 1
+            phase = state["phase"]
+        try:
+            got = [
+                r["doc_id"] for r in eng.query(q, backend="shards", use_wand=w)
+            ]
+        finally:
+            with cond:
+                state["readers"] -= 1
+                state["done"] += 1
+                cond.notify_all()
+        return phase, q, got
+
+    def merge():
+        with cond:
+            while state["done"] < 4:
+                cond.wait()
+            state["writing"] = True
+            while state["readers"]:
+                cond.wait()
+        try:
+            eng.apply_merge(delta, new_doc_map=ext, new_corpus=nc)
+        finally:
+            with cond:
+                state["phase"] = "new"
+                state["writing"] = False
+                cond.notify_all()
+
+    stream = [queries[i % len(queries)] for i in range(12)]
+    with fut.ThreadPoolExecutor(5) as ex:
+        writer = ex.submit(merge)
+        results = list(ex.map(run, stream))
+        writer.result()
+    want["new"] = answers()
+    assert want["new"]["zzconcsig parse"] != want["old"]["zzconcsig parse"]
+    assert {phase for phase, _q, _g in results} == {"old", "new"}
+    for phase, q, got in results:
+        assert got == want[phase][q], (phase, q)

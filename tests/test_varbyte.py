@@ -236,3 +236,36 @@ def test_absolute_block_bound(spark):
     assert key(base) == key(huge)
     dim.unpersist()
     shards.unpersist()
+
+
+def test_decode_chunk_of_60bit_hash_key_blocks(spark):
+    """Many blocks of 60-bit hash keys decoded in ONE chunk: the running
+    key total across the chunk passes 2^64, and the per-block keys must
+    still come back exact (the within-block cumsum is modular)."""
+    from spaghettisearch_spark.config import DEFAULT
+    from spaghettisearch_spark.operators.compression import (
+        build_posting_shards,
+        decode_shards,
+    )
+
+    rng = np.random.default_rng(7)
+    rows = []
+    for t in range(40):
+        keys = np.unique(rng.integers(1 << 59, 1 << 60, size=5))
+        rows += [
+            (f"term{t}", "body", int(dk), 1, [0], 1.0 + i)
+            for i, dk in enumerate(keys)
+        ]
+    assert sum(min(dk for tm, _f, dk, *_ in rows if tm == f"term{t}")
+               for t in range(40)) > 2**64
+    postings = spark.createDataFrame(
+        rows,
+        "term string, field string, doc_key long, tf int, "
+        "positions array<int>, weight double",
+    )
+    shards = build_posting_shards(postings, 1000, DEFAULT)
+    got = sorted(
+        (r["term"], r["doc_key"])
+        for r in decode_shards(shards.coalesce(1), fields=("weight",)).collect()
+    )
+    assert got == sorted((r[0], r[2]) for r in rows)

@@ -95,22 +95,22 @@ def main():
     print("decode_only_collect", t(lambda: decode_shards(
         pruned, fields=("weight",)).collect()))
 
-    # stage 2: decode + qdf join + bucket groupBy + kernel (no final join)
-    from spaghettisearch_spark.operators.wand import _wand_from_hits
+    # stage 2: decode + bucket groupBy + kernel (no card lookup)
+    from spaghettisearch_spark.operators.wand import _wand_from_hits, term_lookup
     from collections import Counter
     counts = Counter(wand_terms)
 
     def kernel_only():
-        qdf = spark.createDataFrame(
-            [(x, i, float(counts[x])) for i, x in enumerate(sorted(counts))],
-            "term string, qterm_id int, qtf double",
-        )
+        terms = sorted(counts)
         decoded = decode_shards(pruned, fields=("weight",))
-        hits = decoded.join(F.broadcast(qdf), "term").select(
-            F.col("doc_key").alias("doc_id"), "field", "qterm_id", "qtf",
-            F.col("weight").alias("contrib"),
+        hits = decoded.select(
+            F.col("doc_key").alias("doc_id"), "field",
+            term_lookup({x: i for i, x in enumerate(terms)}).alias("qterm_id"),
+            (F.col("weight") * term_lookup(
+                {x: float(counts[x]) for x in terms}
+            )).alias("contrib"),
         )
-        _wand_from_hits(spark, hits, len(counts), cfg, 50, 16, None, "taat").collect()
+        _wand_from_hits(hits, cfg, 50, 16).collect()
 
     print("kernel_no_hydration", t(kernel_only))
 
