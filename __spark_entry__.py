@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` — flagship BM25 search over the sf0.001 documents table.
-``queries()`` — one entry per implemented operator (SURVEY.md §2 +
-training-data ops), each (spark, sf_dir) -> DataFrame.
+``queries()`` — one entry per search-engine operator (SURVEY.md §2),
+each (spark, sf_dir) -> DataFrame.
 ``oracle_sql()`` — DuckDB ANSI-SQL mirrors. Tokenization for oracle-
 checked entries is the engine's exact pipeline minus Porter2 stemming
 (DuckDB has no stemmer); stemming correctness is covered by pytest
@@ -15,7 +15,6 @@ engines so the driver's value-hash compares integers, not float reprs.
 from __future__ import annotations
 
 import os
-import shutil
 import sys
 from collections.abc import Callable
 
@@ -25,7 +24,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spaghettisearch_spark.config import EngineConfig
-from spaghettisearch_spark.functions.hashing import term_hash60_col, term_hash60_sql
 from spaghettisearch_spark.functions.tokenize import STOPWORDS, tokenize_col
 
 # ---------------------------------------------------------------------------
@@ -577,40 +575,6 @@ def q_graph_family_top5(spark, sf_dir):
     )
 
 
-def q_q1_pricing_summary(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity")).cast("long").alias("sum_qty"),
-            F.round(F.sum("l_extendedprice") * 100).cast("long").alias("sum_base_e2"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))) * 100
-            ).cast("long").alias("sum_disc_e2"),
-            F.count("*").cast("long").alias("count_order"),
-        )
-    )
-
-
-def q_q3_revenue_top10(spark, sf_dir):
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    seg = cust.filter(F.col("c_mktsegment") == "BUILDING")
-    j = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(seg), orders.o_custkey == seg.c_custkey)
-        .groupBy("l_orderkey")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))) * 100
-            ).cast("long").alias("revenue_e2")
-        )
-    )
-    return j.orderBy(F.desc("revenue_e2"), F.asc("l_orderkey")).limit(10)
-
-
 def q_snippets(spark, sf_dir):
     """Result-card snippet extraction (reference get_metadata.go:79-209):
     first free-term match -> ±10-word window around it, else the static
@@ -626,532 +590,6 @@ def q_snippets(spark, sf_dir):
     return d.select(_did().alias("did"), udf(F.col("text")).alias("snippet"))
 
 
-def q_events_rollup(spark, sf_dir):
-    """GROUPING SETS over events — (type), (type, day), grand total —
-    with exact interpolated percentiles on every grouping-set row
-    (merged r2 entry events_value_quantiles; Spark `percentile` ==
-    DuckDB `quantile_cont`: both sort and linearly interpolate at
-    p*(n-1), so the doubles are bit-identical). The cube/rollup family
-    the reference lacks and Spark gives free."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type",
-        F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-        "value",
-    )
-    ev.createOrReplaceTempView("ev_rollup")
-    return spark.sql(
-        """
-        SELECT COALESCE(event_type, '<all>') AS event_type,
-               COALESCE(day, '<all>') AS day,
-               COUNT(*) AS n,
-               CAST(ROUND(SUM(value) * 100) AS BIGINT) AS sum_value_e2,
-               CAST(ROUND(percentile(value, 0.5) * 100000) AS BIGINT) AS p50_e5,
-               CAST(ROUND(percentile(value, 0.9) * 100000) AS BIGINT) AS p90_e5,
-               CAST(ROUND(percentile(value, 0.99) * 100000) AS BIGINT) AS p99_e5
-        FROM ev_rollup
-        GROUP BY GROUPING SETS ((event_type), (event_type, day), ())
-        """
-    ).select(
-        "event_type", "day", F.col("n").cast("long").alias("n"),
-        "sum_value_e2", "p50_e5", "p90_e5", "p99_e5",
-    )
-
-
-def q_events_windows(spark, sf_dir):
-    """Event-time windows, tumbling (1 h) and sliding (1 h / 30 min
-    slide), unioned with a ``kind`` discriminator — each event lands in
-    one tumbling and exactly two sliding windows; the DuckDB mirror
-    expands sliding via a UNION of the two epoch-aligned starts.
-    (Merged r2 entries events_hourly + events_sliding_window.)"""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-
-    def agg(w, kind):
-        return (
-            ev.groupBy(w.alias("win"), "event_type")
-            .agg(
-                F.count("*").cast("long").alias("n"),
-                F.round(F.sum("value") * 100).cast("long").alias("sum_value_e2"),
-            )
-            .select(
-                F.lit(kind).alias("kind"),
-                # string output: timestamp dtypes are ambiguous across engines
-                F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias(
-                    "win_start"
-                ),
-                "event_type",
-                "n",
-                "sum_value_e2",
-            )
-        )
-
-    return agg(F.window("ts", "1 hour"), "tumbling").unionByName(
-        agg(F.window("ts", "1 hour", "30 minutes"), "sliding")
-    )
-
-
-def q_events_profile(spark, sf_dir):
-    """Per-type profile: exact COUNT(DISTINCT) and JSON-prop extraction
-    in one aggregation (merged r2 entries events_distinct_users +
-    events_json_extract; the approx_count_distinct sketch variant is
-    pytest-gated against a 5% bound, since HLL implementations differ
-    across engines)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    k = F.regexp_extract(F.col("props"), r'"k":\s*(\d+)', 1).cast("long")
-    return (
-        ev.select("event_type", "user_id", k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.count_distinct("user_id").cast("long").alias("n_users"),
-            F.count("*").cast("long").alias("n_events"),
-            F.sum("k").cast("long").alias("sum_k"),
-            F.max("k").cast("long").alias("max_k"),
-        )
-    )
-
-
-def q_events_sessionize(spark, sf_dir):
-    """Gap-based sessionization (30 min) — lag/cumsum window pattern;
-    streaming flavor lives in streaming/sessions.py (stateful op)."""
-    from spaghettisearch_spark.streaming.sessions import sessionize_batch
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    s = sessionize_batch(ev, 30)
-    return s.select(
-        "user_id",
-        F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-        "n_events",
-        F.round(F.col("sum_value") * 100).cast("long").alias("sum_value_e2"),
-    )
-
-
-def q_events_sessionize_stream(spark, sf_dir):
-    """STREAMING sessionization: replay the events table as a file-source
-    stream through the applyInPandasWithState operator and hash-match
-    the BATCH oracle. One sentinel event per user beyond max_ts + gap +
-    watermark closes every real session via the kernel's in-batch gap
-    logic; sentinel sessions stay open and are never emitted. All files
-    process in one availableNow batch — the in-batch path is
-    order-independent, so the result can't depend on file mtime
-    tie-breaks (the multi-batch watermark path is exercised by
-    tests/test_sessions.py with controlled batch boundaries)."""
-    import datetime as dt
-    import tempfile
-    import uuid
-
-    from spaghettisearch_spark.streaming.sessions import sessionize_stream
-
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select("user_id", F.col("ts").cast("timestamp").alias("ts"), "value")
-    )
-    mx = ev.agg(F.max("ts")).first()[0]
-    sentinel_ts = mx + dt.timedelta(minutes=30 + 10 + 5)
-    sentinels = ev.select("user_id").distinct().select(
-        "user_id",
-        F.lit(sentinel_ts).cast("timestamp").alias("ts"),
-        F.lit(0.0).alias("value"),
-    )
-    tmp = tempfile.mkdtemp(prefix="sess_stream_")
-    src = f"{tmp}/events"
-    ev.unionByName(sentinels).repartition(4).write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema(
-        "user_id bigint, ts timestamp, value double"
-    ).parquet(src)
-    name = f"sess_{uuid.uuid4().hex[:10]}"
-    q = (
-        sessionize_stream(stream, gap_minutes=30, watermark="10 minutes")
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("sessionize stream did not drain within 300s")
-    shutil.rmtree(tmp, ignore_errors=True)  # memory sink holds the rows
-    out = spark.table(name)
-    return out.select(
-        "user_id",
-        F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-        "n_events",
-        F.round(F.col("sum_value") * 100).cast("long").alias("sum_value_e2"),
-    )
-
-
-def q_events_lookback_join(spark, sf_dir):
-    """Interval self-join: each event paired with the same user's events
-    in the 10 minutes before it (streaming/joins.interval_self_join —
-    identical plan runs as a watermarked stream-stream join), aggregated
-    per (type, preceding type)."""
-    from spaghettisearch_spark.streaming.joins import interval_self_join
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    pairs = interval_self_join(ev, lookback_minutes=10)
-    return pairs.groupBy("a_type", "b_type").agg(
-        F.count("*").cast("long").alias("n"),
-        F.round(F.sum("b_value") * 100).cast("long").alias("sum_b_e2"),
-    )
-
-
-def q_orders_windows(spark, sf_dir):
-    """Two window families in one pass over orders (merged r2 entries
-    orders_rank_window + orders_above_cust_avg): per-customer top-2 by
-    price via row_number, plus the correlated-subquery pattern (orders
-    strictly above the customer's own average) decorrelated into
-    count/sum windows — the rewrite any engine wants at scale. The
-    compare is exact integer cents (cents * n > sum_cents) so no
-    float-boundary flip between engines."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    wr = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    wa = Window.partitionBy("o_custkey")
-    return (
-        orders.select(
-            "o_custkey", "o_orderkey", "o_totalprice", cents.alias("price_e2")
-        )
-        .withColumn("rn", F.row_number().over(wr).cast("int"))
-        .withColumn("n", F.count("*").over(wa))
-        .withColumn("s", F.sum("price_e2").over(wa))
-        .filter(F.col("rn") <= 2)
-        .select(
-            "o_custkey",
-            "o_orderkey",
-            "price_e2",
-            "rn",
-            (F.col("price_e2") * F.col("n") > F.col("s"))
-            .cast("int")
-            .alias("above_avg"),
-        )
-    )
-
-
-def q_dedup_exact(spark, sf_dir):
-    from spaghettisearch_spark.operators.textops import exact_dup_groups
-
-    return exact_dup_groups(_docs(spark, sf_dir), "doc_id", "text").select(
-        "content_md5", "n_dupes", F.col("keep_id").cast("long").alias("keep_id")
-    )
-
-
-def q_minhash_signatures(spark, sf_dir):
-    from spaghettisearch_spark.operators.textops import minhash_signatures
-
-    toks = _body_tokens(spark, sf_dir).select(
-        F.col("doc_id").alias("id"), "term"
-    ).distinct()
-    return minhash_signatures(toks, "id", 8).select(
-        F.col("id").cast("long").alias("doc_id"),
-        F.col("salt").cast("int").alias("salt"),
-        "minhash",
-    )
-
-
-def q_lsh_candidate_pairs(spark, sf_dir):
-    """Banded MinHash LSH candidates (b=4 bands x r=2 rows over 8
-    minhashes) on 3-token SHINGLE signatures — shingle space is large,
-    so the S-curve 1-(1-s^2)^4 actually SELECTS (candidates ≪
-    all-pairs). Signatures over raw term-sets of this corpus's 24-word
-    shared vocabulary are the documented degenerate case (near-all-pairs
-    no matter the banding; covered in tests with the ``max_bucket``
-    guard), not the headline path."""
-    from spaghettisearch_spark.operators.textops import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-        token_shingles,
-    )
-
-    toks = _body_tokens(spark, sf_dir).select(
-        F.col("doc_id").alias("id"), "pos", "term"
-    )
-    sh = token_shingles(toks, "id", 3)
-    sigs = minhash_signatures(sh.withColumnRenamed("shingle", "term"), "id", 8)
-    return lsh_candidate_pairs(sigs, band_rows=2).select(
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
-    )
-
-
-def q_simhash60(spark, sf_dir):
-    from spaghettisearch_spark.operators.textops import simhash60
-
-    tf = q_tf_postings(spark, sf_dir).select(
-        F.col("did").alias("id"), "term", "tf"
-    )
-    # join back to numeric doc_id for stable output
-    m = _docs(spark, sf_dir).select(_did().alias("id"), F.col("doc_id"))
-    return (
-        simhash60(tf, "id")
-        .join(m, "id")
-        .select(F.col("doc_id").cast("long").alias("doc_id"), "simhash")
-    )
-
-
-def q_embedding_cosine_top10(spark, sf_dir):
-    from spaghettisearch_spark.operators.similarity import cosine_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qv = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    res = cosine_topk(emb, list(qv), k=10)
-    return res.select("vec_id", _e("cosine", 100000).alias("cos_e5"))
-
-
-def q_embedding_near_dup_pairs(spark, sf_dir):
-    """Embedding-cosine near-duplicate pairs via the SRP-bucketed SCALE
-    path (multi-probe Hamming<=2 over 4 planes, exact cosine verify on
-    candidates only). The DuckDB oracle is the exact all-pairs form —
-    matching it demonstrates the bucketed path's recall on this corpus
-    (probe coverage 11/16 of bucket space; pairs split by >2 of the 4
-    planes would be missed — see operators/similarity.py recall note)."""
-    from spaghettisearch_spark.operators.similarity import srp_near_dup_pairs
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    dim = len(emb.select("embedding").first()[0])
-    pairs = srp_near_dup_pairs(
-        emb, dim=dim, threshold=0.55, n_planes=4, hamming=2
-    )
-    return pairs.select("id_a", "id_b", _e("cos", 100000).alias("cos_e5"))
-
-
-LANG_PROFILES = {
-    "dataflow": ["stream", "batch", "window", "spark", "filter"],
-    "relational": ["table", "join", "query", "row", "column"],
-    "storage": ["scan", "key", "value", "hash", "sort"],
-}
-
-
-def q_lang_id(spark, sf_dir):
-    from spaghettisearch_spark.operators.textops import language_id_scores
-
-    out = language_id_scores(
-        _docs(spark, sf_dir), "doc_id", "text", LANG_PROFILES
-    )
-    return out.select(
-        F.col("id").cast("long").alias("doc_id"),
-        F.col("lang"),
-        _e("score", 10**6).alias("score_e6"),
-    )
-
-
-def q_quality_stats(spark, sf_dir):
-    """Cheap pretraining-quality features + the Gopher/MassiveText-style
-    repetition signals (top-token fraction, duplicate bigram/trigram
-    fractions) — one driver row set for both operators."""
-    from spaghettisearch_spark.operators.textops import (
-        quality_stats,
-        repetition_stats,
-    )
-
-    qs = quality_stats(_docs(spark, sf_dir), "doc_id", "text")
-    rep = repetition_stats(_docs(spark, sf_dir), "doc_id", "text")
-    return qs.join(rep, "id").select(
-        F.col("id").cast("long").alias("doc_id"),
-        "n_chars",
-        "n_tokens",
-        "n_tokens_nostop",
-        _e("distinct_ratio", 10**6).alias("distinct_ratio_e6"),
-        _e("mean_token_len", 10**4).alias("mean_token_len_e4"),
-        _e("top_token_frac", 10**6).alias("top_token_frac_e6"),
-        _e("dup_bigram_frac", 10**6).alias("dup_bigram_frac_e6"),
-        _e("dup_trigram_frac", 10**6).alias("dup_trigram_frac_e6"),
-    )
-
-
-def q_bpe_token_count(spark, sf_dir):
-    from spaghettisearch_spark.operators.textops import bpe_ish_token_count
-
-    return bpe_ish_token_count(_docs(spark, sf_dir), "doc_id", "text").select(
-        F.col("id").cast("long").alias("doc_id"), "n_bpe_tokens"
-    )
-
-
-def q_doc_fingerprint(spark, sf_dir):
-    from spaghettisearch_spark.operators.textops import doc_fingerprint
-
-    toks = _body_tokens(spark, sf_dir).select(
-        F.col("doc_id").alias("id"), "pos", "term"
-    )
-    return doc_fingerprint(toks, "id", 3).select(
-        F.col("id").cast("long").alias("doc_id"), "fp_min", "fp_xor", "n_shingles"
-    )
-
-
-def q_ngram_jaccard_pairs(spark, sf_dir):
-    from spaghettisearch_spark.operators.textops import jaccard_pairs, token_shingles
-
-    toks = _body_tokens(spark, sf_dir).select(
-        F.col("doc_id").alias("id"), "pos", "term"
-    )
-    sh = token_shingles(toks, "id", 3)
-    return jaccard_pairs(sh, threshold=0.2).select(
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
-        _e("jaccard", 10**6).alias("jaccard_e6"),
-    )
-
-
-def q_lsh_jaccard_verified(spark, sf_dir):
-    """Full near-dup pipeline: 3-token shingles -> MinHash(8) -> banded
-    LSH (4x2) candidates -> exact jaccard verify (threshold 0.2) ONLY on
-    candidates. Shingle space is large, so the S-curve actually selects
-    (unlike term-set LSH on a tiny shared vocabulary)."""
-    from spaghettisearch_spark.operators.textops import (
-        jaccard_pairs,
-        lsh_candidate_pairs,
-        minhash_signatures,
-        token_shingles,
-    )
-
-    toks = _body_tokens(spark, sf_dir).select(
-        F.col("doc_id").alias("id"), "pos", "term"
-    )
-    sh = token_shingles(toks, "id", 3)
-    sigs = minhash_signatures(sh.withColumnRenamed("shingle", "term"), "id", 8)
-    cands = lsh_candidate_pairs(sigs, band_rows=2)
-    out = jaccard_pairs(sh, threshold=0.2, candidates=cands)
-    return out.select(
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
-        _e("jaccard", 10**6).alias("jaccard_e6"),
-    )
-
-
-def q_train_val_split(spark, sf_dir):
-    """Deterministic hash split (80/10/10) of the documents table —
-    stable train/val/test assignment, bit-identical in DuckDB."""
-    from spaghettisearch_spark.operators.textops import hash_split
-
-    d = _docs(spark, sf_dir).select("doc_id")
-    return hash_split(d, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1})
-
-
-def q_dup_clusters(spark, sf_dir):
-    """Dedup clustering: connected components over the verified near-dup
-    pairs — (doc, cluster) with cluster = min doc id in the component
-    (the canonical keep-doc). Oracle: DuckDB recursive reachability."""
-    from spaghettisearch_spark.operators.graph import connected_components
-
-    pairs = q_lsh_jaccard_verified(spark, sf_dir).select("id_a", "id_b")
-    comp = connected_components(pairs)
-    return comp.select(
-        F.col("id").cast("long").alias("doc_id"),
-        F.col("component").cast("long").alias("component"),
-    )
-
-
-def q_train_split_dedup(spark, sf_dir):
-    """End-to-end leakage-safe split: connected-component dedup clusters
-    -> cluster representative (component min-id; self for singleton
-    docs) -> the 80/10/10 hash split keyed on the REPRESENTATIVE, so
-    near-duplicate docs can never straddle train/test
-    (textops.hash_split's documented intended use)."""
-    from spaghettisearch_spark.operators.graph import connected_components
-    from spaghettisearch_spark.operators.textops import hash_split
-
-    pairs = q_lsh_jaccard_verified(spark, sf_dir).select("id_a", "id_b")
-    comp = connected_components(pairs).select(
-        F.col("id").cast("long").alias("doc_id"),
-        F.col("component").cast("long").alias("component"),
-    )
-    d = (
-        _docs(spark, sf_dir)
-        .select("doc_id")
-        .join(comp, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("component", F.col("doc_id")).cast("long").alias("rep"),
-        )
-    )
-    return hash_split(d, "rep", {"train": 0.8, "val": 0.1, "test": 0.1}).select(
-        "doc_id", "rep", "split"
-    )
-
-
-def q_redact_pii(spark, sf_dir):
-    """PII scrub gate (operators/textops.redact_pii — native
-    regexp_replace/regexp_count, patterns restricted to the Java-regex
-    ∩ RE2 syntax so the DuckDB mirror is bit-identical). Every doc gets
-    a deterministic synthetic contact line (email, IPv4, 32-hex secret)
-    appended so the redaction actually fires on this corpus; counts are
-    per-pattern over the pre-redaction text."""
-    from spaghettisearch_spark.operators.textops import redact_pii
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@example.com from "),
-            (F.col("doc_id") % 256).cast("string"),
-            F.lit(".0.0.1 key "),
-            F.md5(F.col("text")),
-        ).alias("text"),
-    )
-    out = redact_pii(d, "doc_id", "text")
-    return out.select(
-        F.col("id").cast("long").alias("doc_id"),
-        "redacted",
-        "n_email",
-        "n_ipv4",
-        "n_hex_secret",
-    )
-
-
-def q_dedup_stream(spark, sf_dir):
-    """STREAMING effectively-once guard: replay the events table as a
-    file-source stream WITH redelivered duplicates (every 7th user's
-    rows appear twice, i.e. within the watermark horizon) through
-    ``dropDuplicatesWithinWatermark`` and hash-match the DuckDB
-    DISTINCT of the original table. Output is the key columns only, so
-    the arbitrary which-copy-survives choice can't leak into the hash;
-    (user_id, event_type, second-formatted ts) is verified unique on
-    this corpus, so formatting can't collapse distinct keys."""
-    import tempfile
-    import uuid
-
-    from spaghettisearch_spark.streaming.ingest import dedup_stream
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id", "event_type", F.col("ts").cast("timestamp").alias("ts")
-    )
-    redelivered = ev.filter(F.col("user_id") % 7 == 0)
-    tmp = tempfile.mkdtemp(prefix="dedup_stream_")
-    src = f"{tmp}/events"
-    ev.unionByName(redelivered).repartition(4).write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema(
-        "user_id bigint, event_type string, ts timestamp"
-    ).parquet(src)
-    deduped = dedup_stream(
-        stream, ["user_id", "event_type", "ts"], watermark="30 minutes"
-    )
-    name = f"dedup_{uuid.uuid4().hex[:10]}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("dedup stream did not drain within 300s")
-    shutil.rmtree(tmp, ignore_errors=True)  # memory sink holds the rows
-    return spark.table(name).select(
-        "user_id",
-        "event_type",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
-    )
-
-
 # --- rows-only entries (no SQL oracle; driver records weaker check) ------
 
 def q_porter2_stem_vocab(spark, sf_dir):
@@ -1159,28 +597,6 @@ def q_porter2_stem_vocab(spark, sf_dir):
 
     vocab = _body_tokens(spark, sf_dir).select("term").distinct()
     return vocab.select("term", stem_word_udf("term").alias("stem")).orderBy("term")
-
-
-def q_ann_srp_top10(spark, sf_dir):
-    from spaghettisearch_spark.operators.similarity import ann_topk_bucketed
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qv = emb.filter(F.col("vec_id") == 1).select("embedding").first()[0]
-    res = ann_topk_bucketed(
-        emb, list(qv), dim=len(qv), k=10, n_planes=6, hamming=1
-    )
-    return res.select("vec_id", _e("cosine", 100000).alias("cos_e5"))
-
-
-def q_ann_ivf_top10(spark, sf_dir):
-    """IVF-style ANN (coarse quantize -> probe nearest cells -> exact
-    cosine inside). Approximate by design -> rows-only."""
-    from spaghettisearch_spark.operators.similarity import ivf_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qv = emb.filter(F.col("vec_id") == 2).select("embedding").first()[0]
-    res = ivf_topk(emb, list(qv), k=10, n_cells=8, n_probe=2)
-    return res.select("vec_id", _e("cosine", 100000).alias("cos_e5"))
 
 
 def q_fixture_flagship(spark, sf_dir):
@@ -1226,20 +642,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Exactly 50 entries — the driver records the first 50, so every
-    entry gets a driver-visible row (round 2 had 53 and the last three,
-    including the flagship, were silently dropped). Six r2 entry pairs
-    are merged, semantics preserved: events_hourly+events_sliding_window
-    -> events_windows; events_distinct_users+events_json_extract ->
-    events_profile; events_value_quantiles folded into events_rollup;
-    orders_rank_window+orders_above_cust_avg -> orders_windows;
-    graph_out_degree folded into graph_family_top5. Rows-only entries
-    sit mid-list so a lower cap would still report them. Round 5
-    rotated the low-value relational region_rollup (merged r2
-    customers_without_orders+region_supplier_counts; anti-join coverage
-    remains via train_split_dedup and the merge tombstone path) for
-    stats_refresh_topk, putting the compaction family under the hash
-    gate."""
+    """The 22 search entries: indexing stats, BM25 / WAND / phrase
+    top-k (in-memory and warehouse shards), PageRank (global and
+    topic-sensitive), link families, snippets and the stats refresh.
+    Entries without an ``oracle_sql()`` mirror are rows-only."""
     return {
         "tf_postings": q_tf_postings,
         "doc_frequency": q_doc_frequency,
@@ -1250,10 +656,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "wand_topk_shards": q_wand_topk_shards,
         "phrase_topk": q_phrase_topk,
         "phrase_topk_shards": q_phrase_topk_shards,
-        # rows-only (non-SQL-expressible) entries — early, not last
+        # rows-only (non-SQL-expressible) entries
         "fixture_flagship": q_fixture_flagship,
-        "ann_srp_top10": q_ann_srp_top10,
-        "ann_ivf_top10": q_ann_ivf_top10,
         "porter2_stem_vocab": q_porter2_stem_vocab,
         "vocab_prefix": q_vocab_prefix,
         "corpus_stats": q_corpus_stats,
@@ -1264,39 +668,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pagerank_topic": q_pagerank_topic,
         "topic_term_stats": q_topic_term_stats,
         "topic_meta": q_topic_meta,
-        "q1_pricing_summary": q_q1_pricing_summary,
-        "q3_revenue_top10": q_q3_revenue_top10,
         "snippets": q_snippets,
         "stats_refresh_topk": q_stats_refresh_topk,
-        "events_rollup": q_events_rollup,
-        "events_profile": q_events_profile,
-        "events_windows": q_events_windows,
-        "events_lookback_join": q_events_lookback_join,
-        "events_sessionize": q_events_sessionize,
-        "events_sessionize_stream": q_events_sessionize_stream,
-        "dedup_stream": q_dedup_stream,
-        "orders_windows": q_orders_windows,
-        "dedup_exact": q_dedup_exact,
-        "minhash_signatures": q_minhash_signatures,
-        "lsh_candidate_pairs": q_lsh_candidate_pairs,
-        "lsh_jaccard_verified": q_lsh_jaccard_verified,
-        "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-        "dup_clusters": q_dup_clusters,
-        "train_val_split": q_train_val_split,
-        "train_split_dedup": q_train_split_dedup,
-        "simhash60": q_simhash60,
-        "embedding_cosine_top10": q_embedding_cosine_top10,
-        "embedding_near_dup_pairs": q_embedding_near_dup_pairs,
-        "lang_id": q_lang_id,
-        "quality_stats": q_quality_stats,
-        "bpe_token_count": q_bpe_token_count,
-        "doc_fingerprint": q_doc_fingerprint,
-        "redact_pii": q_redact_pii,
     }
 
 
 def oracle_sql() -> dict[str, str]:
-    h60 = term_hash60_sql  # shorthand
     n_docs_sub = "(SELECT COUNT(*) FROM documents)"
     sqls: dict[str, str] = {}
 
@@ -1483,27 +860,6 @@ wc AS (
 SELECT np.category, num_pages, COALESCE(word_count, 0)::BIGINT AS word_count
 FROM np LEFT JOIN wc ON wc.category = np.category
 """
-    sqls["q1_pricing_summary"] = """
-SELECT l_returnflag, l_linestatus,
-       CAST(ROUND(SUM(l_quantity)) AS BIGINT) AS sum_qty,
-       CAST(ROUND(SUM(l_extendedprice) * 100) AS BIGINT) AS sum_base_e2,
-       CAST(ROUND(SUM(l_extendedprice * (1 - l_discount)) * 100) AS BIGINT) AS sum_disc_e2,
-       COUNT(*)::BIGINT AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-"""
-    sqls["q3_revenue_top10"] = """
-SELECT l_orderkey,
-       CAST(ROUND(SUM(l_extendedprice * (1 - l_discount)) * 100) AS BIGINT) AS revenue_e2
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-GROUP BY l_orderkey
-ORDER BY revenue_e2 DESC, l_orderkey ASC
-LIMIT 10
-"""
     snippet_terms = ", ".join(f"'{t}'" for t in QUERY_TERMS)
     # RE2's \\s is ASCII-only while the Spark UDF's str.split() breaks on
     # Unicode whitespace (incl. NBSP and the \\x1c-\\x1f separators) —
@@ -1540,354 +896,5 @@ SELECT did,
        ELSE array_to_string(words[greatest((L//2)-10,0)+1:least(greatest((L//2)-10,0)+21, L)], ' ')
   END AS snippet
 FROM m
-"""
-    sqls["events_rollup"] = """
-SELECT COALESCE(event_type, '<all>') AS event_type,
-       COALESCE(day, '<all>') AS day,
-       COUNT(*)::BIGINT AS n,
-       CAST(ROUND(SUM(value) * 100) AS BIGINT) AS sum_value_e2,
-       CAST(ROUND(quantile_cont(value, 0.5) * 100000) AS BIGINT) AS p50_e5,
-       CAST(ROUND(quantile_cont(value, 0.9) * 100000) AS BIGINT) AS p90_e5,
-       CAST(ROUND(quantile_cont(value, 0.99) * 100000) AS BIGINT) AS p99_e5
-FROM (
-  SELECT event_type, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, value
-  FROM events
-)
-GROUP BY GROUPING SETS ((event_type), (event_type, day), ())
-"""
-    sqls["events_windows"] = """
-WITH starts AS (
-  SELECT event_type, value,
-         date_trunc('hour', ts) AS h1,
-         make_timestamp(CAST(floor(epoch(ts) / 1800) * 1800 AS BIGINT) * 1000000) AS s1
-  FROM events
-),
-expanded AS (
-  SELECT 'tumbling' AS kind, event_type, value, h1 AS win_start FROM starts
-  UNION ALL
-  SELECT 'sliding', event_type, value, s1 FROM starts
-  UNION ALL
-  SELECT 'sliding', event_type, value, s1 - INTERVAL 30 MINUTE FROM starts
-)
-SELECT kind, strftime(win_start, '%Y-%m-%d %H:%M:%S') AS win_start, event_type,
-       COUNT(*)::BIGINT AS n,
-       CAST(ROUND(SUM(value) * 100) AS BIGINT) AS sum_value_e2
-FROM expanded GROUP BY 1, 2, 3
-"""
-    sqls["events_profile"] = r"""
-SELECT event_type, COUNT(DISTINCT user_id)::BIGINT AS n_users,
-       COUNT(*)::BIGINT AS n_events,
-       SUM(CAST(regexp_extract(props, '"k":\s*(\d+)', 1) AS BIGINT))::BIGINT AS sum_k,
-       MAX(CAST(regexp_extract(props, '"k":\s*(\d+)', 1) AS BIGINT))::BIGINT AS max_k
-FROM events GROUP BY event_type
-"""
-    sqls["dedup_stream"] = """
-SELECT DISTINCT user_id, event_type,
-       strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts
-FROM events
-"""
-    sqls["events_sessionize"] = """
-WITH marked AS (
-  SELECT user_id, ts, value,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1 ELSE 0
-         END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-),
-sessions AS (
-  SELECT user_id, ts, value,
-         SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM marked
-)
-SELECT user_id,
-       strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-       COUNT(*)::BIGINT AS n_events,
-       CAST(ROUND(SUM(value) * 100) AS BIGINT) AS sum_value_e2
-FROM sessions GROUP BY user_id, session_id
-"""
-    sqls["events_sessionize_stream"] = sqls["events_sessionize"]
-    sqls["events_lookback_join"] = """
-SELECT a.event_type AS a_type, b.event_type AS b_type,
-       COUNT(*)::BIGINT AS n,
-       CAST(ROUND(SUM(b.value) * 100) AS BIGINT) AS sum_b_e2
-FROM events a
-JOIN events b
-  ON a.user_id = b.user_id
- AND b.ts < a.ts
- AND b.ts >= a.ts - INTERVAL 10 MINUTE
-GROUP BY 1, 2
-"""
-    sqls["orders_windows"] = """
-WITH r AS (
-  SELECT o_custkey, o_orderkey,
-         CAST(ROUND(o_totalprice * 100) AS BIGINT) AS price_e2,
-         ROW_NUMBER() OVER (PARTITION BY o_custkey
-                            ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn,
-         COUNT(*) OVER (PARTITION BY o_custkey) AS n,
-         SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-           OVER (PARTITION BY o_custkey) AS s
-  FROM orders
-)
-SELECT o_custkey, o_orderkey, price_e2, rn::INT AS rn,
-       (CASE WHEN price_e2 * n > s THEN 1 ELSE 0 END)::INT AS above_avg
-FROM r WHERE rn <= 2
-"""
-    sqls["train_val_split"] = f"""
-SELECT doc_id,
-       CASE WHEN {h60("CAST(doc_id AS VARCHAR)", "split:")} % 10000 < 8000 THEN 'train'
-            WHEN {h60("CAST(doc_id AS VARCHAR)", "split:")} % 10000 < 9000 THEN 'val'
-            ELSE 'test' END AS split
-FROM documents
-"""
-    sqls["dedup_exact"] = """
-SELECT md5(text) AS content_md5, COUNT(*)::BIGINT AS n_dupes,
-       MIN(doc_id)::BIGINT AS keep_id
-FROM documents GROUP BY md5(text)
-"""
-    minhash_parts = "\nUNION ALL\n".join(
-        f"SELECT doc_id, {s} AS salt, MIN({h60('term', f's{s}:')}) AS minhash "
-        f"FROM dtf GROUP BY doc_id"
-        for s in range(8)
-    )
-    sqls["minhash_signatures"] = f"""
-WITH {_TOKS},
-dtf AS (SELECT doc_id, term FROM toks GROUP BY doc_id, term)
-SELECT doc_id::BIGINT AS doc_id, salt::INT AS salt, minhash FROM ({minhash_parts})
-"""
-    sqls["simhash60"] = f"""
-WITH {_TOKS},
-tf AS (SELECT doc_id, term, COUNT(*)::BIGINT AS tf FROM toks GROUP BY doc_id, term),
-bits AS (
-  SELECT doc_id, b.bit,
-         SUM(CASE WHEN ({h60('term')} >> b.bit) & 1 = 1 THEN tf ELSE -tf END) AS s
-  FROM tf CROSS JOIN (SELECT unnest(range(60)) AS bit) b
-  GROUP BY doc_id, b.bit
-)
-SELECT doc_id::BIGINT AS doc_id,
-       SUM(CASE WHEN s > 0 THEN (1::BIGINT << bit) ELSE 0 END)::BIGINT AS simhash
-FROM bits GROUP BY doc_id
-"""
-    sqls["embedding_cosine_top10"] = """
-SELECT vec_id,
-       CAST(ROUND(list_cosine_similarity(
-         embedding::DOUBLE[],
-         (SELECT embedding FROM embeddings WHERE vec_id = 0)::DOUBLE[]
-       ) * 100000) AS BIGINT) AS cos_e5
-FROM embeddings
-ORDER BY list_cosine_similarity(
-  embedding::DOUBLE[],
-  (SELECT embedding FROM embeddings WHERE vec_id = 0)::DOUBLE[]) DESC, vec_id ASC
-LIMIT 10
-"""
-    sqls["embedding_near_dup_pairs"] = """
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       CAST(ROUND(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) * 100000) AS BIGINT) AS cos_e5
-FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.55
-"""
-    lang_score_parts = "\nUNION ALL\n".join(
-        "SELECT doc_id, '{lang}' AS lang, "
-        "len(list_intersect(dtoks, [{markers}]))::DOUBLE / {n} AS score FROM rawt".format(
-            lang=lang,
-            markers=",".join(f"'{m}'" for m in markers),
-            n=float(len(markers)),
-        )
-        for lang, markers in sorted(LANG_PROFILES.items())
-    )
-    sqls["lang_id"] = f"""
-WITH rawt AS (
-  SELECT doc_id,
-         list_distinct(list_filter(
-           string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '),
-           t -> t <> '')) AS dtoks
-  FROM documents
-),
-scored AS ({lang_score_parts}),
-ranked AS (
-  SELECT doc_id, lang, score,
-         ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY score DESC, lang ASC) AS rn
-  FROM scored
-)
-SELECT doc_id::BIGINT AS doc_id, lang,
-       CAST(ROUND(score * 1000000) AS BIGINT) AS score_e6
-FROM ranked WHERE rn = 1
-"""
-    sqls["quality_stats"] = f"""
-WITH raw AS (
-  SELECT doc_id,
-         length(text)::BIGINT AS n_chars,
-         list_filter(string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '),
-                     t -> t <> '') AS rt,
-         list_filter(string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '),
-                     t -> t <> '' AND t NOT IN ({_SW_SQL})) AS ft
-  FROM documents
-)
-SELECT doc_id::BIGINT AS doc_id, n_chars,
-       len(rt)::BIGINT AS n_tokens,
-       len(ft)::BIGINT AS n_tokens_nostop,
-       CAST(ROUND(len(list_distinct(rt))::DOUBLE / GREATEST(len(rt), 1) * 1e6) AS BIGINT) AS distinct_ratio_e6,
-       CAST(ROUND(list_sum(list_transform(rt, t -> length(t)))::DOUBLE / GREATEST(len(rt), 1) * 1e4) AS BIGINT) AS mean_token_len_e4,
-       CAST(ROUND(CASE WHEN len(rt) = 0 THEN 0.0 ELSE
-         list_max(list_transform(list_distinct(rt),
-                                 t -> len(list_filter(rt, x -> x = t))))::DOUBLE
-           / len(rt) END * 1e6) AS BIGINT) AS top_token_frac_e6,
-       CAST(ROUND(CASE WHEN len(rt) <= 1 THEN 0.0 ELSE
-         1.0 - len(list_distinct(list_transform(range(1, len(rt)),
-                     i -> rt[i] || ' ' || rt[i+1])))::DOUBLE
-           / (len(rt) - 1) END * 1e6) AS BIGINT) AS dup_bigram_frac_e6,
-       CAST(ROUND(CASE WHEN len(rt) <= 2 THEN 0.0 ELSE
-         1.0 - len(list_distinct(list_transform(range(1, len(rt) - 1),
-                     i -> rt[i] || ' ' || rt[i+1] || ' ' || rt[i+2])))::DOUBLE
-           / (len(rt) - 2) END * 1e6) AS BIGINT) AS dup_trigram_frac_e6
-FROM raw
-"""
-    sqls["bpe_token_count"] = r"""
-SELECT doc_id::BIGINT AS doc_id,
-       len(regexp_extract_all(text, '\w+|[^\w\s]'))::BIGINT AS n_bpe_tokens
-FROM documents
-"""
-    sqls["doc_fingerprint"] = f"""
-WITH {_TL},
-sh AS (
-  SELECT DISTINCT doc_id,
-         toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS shingle
-  FROM tl CROSS JOIN (SELECT unnest(range(1, 100000)) AS i)
-  WHERE i + 2 <= len(toks)
-),
-h AS (SELECT doc_id, {h60('shingle')} AS h FROM sh)
-SELECT doc_id::BIGINT AS doc_id, MIN(h) AS fp_min, bit_xor(h) AS fp_xor,
-       COUNT(*)::BIGINT AS n_shingles
-FROM h GROUP BY doc_id
-"""
-    sqls["ngram_jaccard_pairs"] = f"""
-WITH {_TL},
-sh AS (
-  SELECT DISTINCT doc_id,
-         toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS shingle
-  FROM tl CROSS JOIN (SELECT unnest(range(1, 100000)) AS i)
-  WHERE i + 2 <= len(toks)
-),
-sizes AS (SELECT doc_id, COUNT(*)::BIGINT AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*)::BIGINT AS n_inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT id_a::BIGINT AS id_a, id_b::BIGINT AS id_b,
-       CAST(ROUND(n_inter::DOUBLE / (sa.n + sb.n - n_inter) * 1e6) AS BIGINT) AS jaccard_e6
-FROM inter
-JOIN sizes sa ON sa.doc_id = id_a
-JOIN sizes sb ON sb.doc_id = id_b
-WHERE n_inter::DOUBLE / (sa.n + sb.n - n_inter) >= 0.2
-"""
-    shingle_minhash_parts = "\nUNION ALL\n".join(
-        f"SELECT doc_id, {s} AS salt, MIN({h60('shingle', f's{s}:')}) AS minhash "
-        f"FROM sh GROUP BY doc_id"
-        for s in range(8)
-    )
-    shingle_cand_ctes = f"""{_TL},
-sh AS (
-  SELECT DISTINCT doc_id,
-         toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS shingle
-  FROM tl CROSS JOIN (SELECT unnest(range(1, 100000)) AS i)
-  WHERE i + 2 <= len(toks)
-),
-sigs AS (SELECT doc_id, salt, minhash FROM ({shingle_minhash_parts}) ),
-bands AS (
-  SELECT doc_id, CAST(salt // 2 AS INT) AS band,
-         string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY salt) AS band_sig
-  FROM sigs GROUP BY doc_id, CAST(salt // 2 AS INT)
-),
-bk AS (SELECT doc_id, band, {h60('band_sig')} AS bucket FROM bands),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bk a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket
-  WHERE a.doc_id < b.doc_id
-)"""
-    sqls["lsh_candidate_pairs"] = f"""
-WITH {shingle_cand_ctes}
-SELECT id_a::BIGINT AS id_a, id_b::BIGINT AS id_b FROM cand
-"""
-    shingle_pair_ctes = shingle_cand_ctes + f""",
-sizes AS (SELECT doc_id, COUNT(*)::BIGINT AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*)::BIGINT AS n_inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-vpairs AS (
-  SELECT i.id_a, i.id_b,
-         n_inter::DOUBLE / (sa.n + sb.n - n_inter) AS jaccard
-  FROM inter i
-  JOIN cand c ON c.id_a = i.id_a AND c.id_b = i.id_b
-  JOIN sizes sa ON sa.doc_id = i.id_a
-  JOIN sizes sb ON sb.doc_id = i.id_b
-  WHERE n_inter::DOUBLE / (sa.n + sb.n - n_inter) >= 0.2
-)"""
-    sqls["lsh_jaccard_verified"] = f"""
-WITH {shingle_pair_ctes}
-SELECT id_a::BIGINT AS id_a, id_b::BIGINT AS id_b,
-       CAST(ROUND(jaccard * 1e6) AS BIGINT) AS jaccard_e6
-FROM vpairs
-"""
-    sqls["dup_clusters"] = f"""
-WITH RECURSIVE {shingle_pair_ctes},
-und AS (
-  SELECT id_a AS s, id_b AS d FROM vpairs
-  UNION
-  SELECT id_b AS s, id_a AS d FROM vpairs
-),
-cnodes AS (SELECT DISTINCT s AS id FROM und),
-reach(id, root) AS (
-  SELECT id, id FROM cnodes
-  UNION
-  SELECT u.d, r.root FROM reach r JOIN und u ON u.s = r.id
-)
-SELECT id::BIGINT AS doc_id, MIN(root)::BIGINT AS component
-FROM reach GROUP BY id
-"""
-    rep = "COALESCE(comp.component, d.doc_id)"
-    rep_h = h60(f"CAST({rep} AS VARCHAR)", "split:")
-    sqls["train_split_dedup"] = f"""
-WITH RECURSIVE {shingle_pair_ctes},
-und AS (
-  SELECT id_a AS s, id_b AS d FROM vpairs
-  UNION
-  SELECT id_b AS s, id_a AS d FROM vpairs
-),
-cnodes AS (SELECT DISTINCT s AS id FROM und),
-reach(id, root) AS (
-  SELECT id, id FROM cnodes
-  UNION
-  SELECT u.d, r.root FROM reach r JOIN und u ON u.s = r.id
-),
-comp AS (SELECT id AS doc_id, MIN(root) AS component FROM reach GROUP BY id)
-SELECT d.doc_id, {rep}::BIGINT AS rep,
-       CASE WHEN {rep_h} % 10000 < 8000 THEN 'train'
-            WHEN {rep_h} % 10000 < 9000 THEN 'val'
-            ELSE 'test' END AS split
-FROM documents d LEFT JOIN comp ON comp.doc_id = d.doc_id
-"""
-    pii_email = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-    pii_ip = r"\b([0-9]{1,3}\.){3}[0-9]{1,3}\b"
-    pii_hex = r"\b[0-9a-fA-F]{32,}\b"
-    sqls["redact_pii"] = f"""
-WITH d AS (
-  SELECT doc_id,
-         text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com from '
-              || CAST(doc_id % 256 AS VARCHAR) || '.0.0.1 key ' || md5(text) AS text
-  FROM documents
-)
-SELECT doc_id::BIGINT AS doc_id,
-       regexp_replace(regexp_replace(regexp_replace(text,
-         '{pii_email}', '<EMAIL>', 'g'),
-         '{pii_ip}', '<IP>', 'g'),
-         '{pii_hex}', '<SECRET>', 'g') AS redacted,
-       len(regexp_extract_all(text, '{pii_email}'))::BIGINT AS n_email,
-       len(regexp_extract_all(text, '{pii_ip}'))::BIGINT AS n_ipv4,
-       len(regexp_extract_all(text, '{pii_hex}'))::BIGINT AS n_hex_secret
-FROM d
 """
     return sqls

@@ -437,72 +437,6 @@ def main() -> None:
 
     _shutil.rmtree(_shard_dir, ignore_errors=True)
 
-    # ---- training-data ops ----
-    from spaghettisearch_spark.functions.tokenize import tokenize_col
-    from spaghettisearch_spark.operators.textops import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-        simhash60,
-    )
-
-    toks = docs.select(
-        F.col("doc_id").alias("id"),
-        F.posexplode(tokenize_col("text")).alias("pos", "term"),
-    )
-    # scale path: cap degenerate buckets (the synthetic 24-word vocab makes
-    # most docs near-identical; uncapped pairs are the oracle entry's job)
-    timings["minhash_lsh"] = best_of(
-        lambda: lsh_candidate_pairs(
-            minhash_signatures(toks.select("id", "term").distinct(), "id", 8),
-            band_rows=2,
-            max_bucket=200,
-        ).count()
-    )
-
-    tf = toks.groupBy("id", "term").agg(F.count("*").alias("tf"))
-    timings["simhash"] = best_of(lambda: simhash60(tf, "id").count())
-
-    # full near-dup pipeline: shingles -> MinHash -> banded LSH ->
-    # exact-jaccard verify on candidates only -> connected components
-    from spaghettisearch_spark.operators.graph import connected_components
-    from spaghettisearch_spark.operators.textops import (
-        jaccard_pairs,
-        token_shingles,
-    )
-
-    def run_dedup_pipeline():
-        # shingles feed BOTH the signature and the verify stage — cache
-        # the shared intermediate (timing includes materialization)
-        sh = token_shingles(toks, "id", 3).cache()
-        try:
-            sigs = minhash_signatures(
-                sh.withColumnRenamed("shingle", "term"), "id", 8
-            )
-            cands = lsh_candidate_pairs(sigs, band_rows=2, max_bucket=200)
-            verified = jaccard_pairs(sh, threshold=0.2, candidates=cands)
-            connected_components(verified.select("id_a", "id_b")).count()
-        finally:
-            sh.unpersist()
-
-    timings["dedup_pipeline"] = best_of(run_dedup_pipeline)
-
-    from spaghettisearch_spark.operators.similarity import (
-        cosine_topk,
-        srp_near_dup_pairs,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qv = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    timings["ann_cosine_topk"] = best_of(
-        lambda: cosine_topk(emb, list(qv), k=10).collect()
-    )
-
-    timings["near_dup_srp"] = best_of(
-        lambda: srp_near_dup_pairs(
-            emb, dim=len(qv), threshold=0.55, n_planes=4, hamming=2
-        ).count()
-    )
-
     # ---- Zipf-vocabulary section: the at-scale machinery measured on a
     # corpus that can exercise it (the driver corpus's uniform 24-word
     # vocabulary can't: every delta touches every hot group and block

@@ -10,7 +10,7 @@ the reference's normalized tf-idf cosine exactly
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -80,8 +80,6 @@ class EngineConfig:
     # stemming on/off (oracle SQL path runs unstemmed)
     stem: bool = True
     remove_stopwords: bool = True
-
-    extra: dict = field(default_factory=dict)
 
 
 DEFAULT = EngineConfig()

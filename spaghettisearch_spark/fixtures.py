@@ -158,12 +158,6 @@ REFERENCE_QUERIES: list[tuple[int, str, str]] = [
 ]
 
 
-def make_queries() -> pd.DataFrame:
-    return pd.DataFrame(
-        REFERENCE_QUERIES, columns=["query_id", "query", "kind"]
-    )
-
-
 def make_zipf_documents(
     spark,
     n_docs: int,

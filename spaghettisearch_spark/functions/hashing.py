@@ -1,14 +1,12 @@
-"""Hash identities shared between Spark, DuckDB oracle SQL, and Python.
+"""Hash identities shared between Spark and Python.
 
 The reference keys everything by md5 hex digests
 (/root/reference/indexer/indexer.go:38-39,366-367); we keep that (Spark
-``F.md5`` emits identical hex) plus the north-rule ``sha256(content)``
-end-to-end invariant (``F.sha2(c, 256)``).
+``F.md5`` emits identical hex).
 
 ``term_hash60`` is a portable 60-bit integer hash — the first 15 hex
-digits of md5 — computable identically in Spark (conv/substring), DuckDB
-(``('0x'||substr(md5(t),1,15))::BIGINT``), and Python. MinHash/SimHash
-build on it so their oracle SQL can reproduce signatures bit-for-bit.
+digits of md5 — computable identically in Spark (conv/substring) and
+Python. It picks a term's shard bucket and the hash ``doc_key``.
 """
 
 from __future__ import annotations
@@ -35,17 +33,8 @@ def term_id_col(term: Column | str = "term") -> Column:
     return F.md5(t)
 
 
-def term_id_py(term: str) -> str:
-    return hashlib.md5(term.encode()).hexdigest()
-
-
-def sha256_col(c: Column | str) -> Column:
-    col = F.col(c) if isinstance(c, str) else c
-    return F.sha2(col, 256)
-
-
 def term_hash60_col(c: Column | str, salt: str = "") -> Column:
-    """60-bit integer hash of a string, identical across Spark/DuckDB/Python."""
+    """60-bit integer hash of a string, identical across Spark and Python."""
     col = F.col(c) if isinstance(c, str) else c
     if salt:
         col = F.concat(F.lit(salt), col)
@@ -54,9 +43,3 @@ def term_hash60_col(c: Column | str, salt: str = "") -> Column:
 
 def term_hash60_py(s: str, salt: str = "") -> int:
     return int(hashlib.md5((salt + s).encode()).hexdigest()[:15], 16)
-
-
-def term_hash60_sql(expr: str, salt: str = "") -> str:
-    """DuckDB SQL fragment computing the same 60-bit hash."""
-    inner = f"'{salt}' || {expr}" if salt else expr
-    return f"('0x' || substr(md5({inner}), 1, 15))::BIGINT"

@@ -45,10 +45,6 @@ _EXCEPTIONS2 = frozenset(
 )
 
 
-def _is_vowel(word: str, i: int) -> bool:
-    return word[i] in _VOWELS
-
-
 def _regions(word: str) -> tuple[int, int]:
     """Return (r1, r2) start offsets."""
     n = len(word)
@@ -277,7 +273,3 @@ def stem(word: str) -> str:  # noqa: C901 - algorithm is inherently branchy
 @functools.lru_cache(maxsize=1 << 16)
 def stem_cached(word: str) -> str:
     return stem(word)
-
-
-def stem_tokens(tokens: list[str]) -> list[str]:
-    return [stem_cached(t) for t in tokens]

@@ -393,18 +393,6 @@ def _plan_df(meta_rows: list, keep: set | None) -> int:
     return total
 
 
-def select_blocks(
-    meta_rows: list,
-    cfg: EngineConfig,
-    qtf: dict[str, float],
-    k: int,
-    extra_ub: float = 0.0,
-    min_threshold: float | None = None,
-) -> set[tuple[str, str, int]]:
-    """Back-compat wrapper: the kept-block set from plan_blocks."""
-    return plan_blocks(meta_rows, cfg, qtf, k, extra_ub, min_threshold)[0]
-
-
 def _range_counts(df: int, n_sub: int) -> np.ndarray:
     """Posting count of each equi-depth sub-range of a df-posting block
     (the encoder's chunking formula, compression._encode_blocks):

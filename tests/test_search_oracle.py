@@ -46,6 +46,8 @@ def test_empty_queries(spark, index_small, oracle_small):
 
 def test_rank_identity_tfidf_mode(spark, index_small, oracle_small):
     cfg = EngineConfig(scorer="tfidf_cosine")
+    # a frozen config is hashable, so it can key caches
+    assert hash(EngineConfig()) == hash(DEFAULT)
     for _, query, kind in REFERENCE_QUERIES[:6]:
         got, want = _run_both(spark, index_small, oracle_small, query, cfg)
         assert [r["doc_id"] for r in got] == list(want["doc_id"]), kind

@@ -1,10 +1,9 @@
-"""Streaming ingest: incremental postings == batch postings; windowed
-event-time aggregation with watermark runs and matches the batch plan."""
+"""Streaming ingest: incremental postings == batch postings; re-dropped
+docs upsert; compaction after a stream equals a batch build; snippets."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def test_stream_ingest_matches_batch(spark, docs_tiny, tmp_path):
@@ -91,232 +90,6 @@ def test_stream_redrop_changed_doc_upserts(spark, docs_tiny, tmp_path):
     assert full.exceptAll(compacted).count() == 0
 
 
-def test_windowed_query_stats_batch_parity(spark, tmp_path):
-    from spaghettisearch_spark.streaming.ingest import windowed_query_stats
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    batch_out = windowed_query_stats(ev).orderBy("win_start", "event_type")
-    rows = batch_out.collect()
-    assert len(rows) > 0
-    # streaming run over the same data (file source, availableNow)
-    src = str(tmp_path / "ev")
-    ev.write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(ev.schema).parquet(src)
-    )
-    out_dir = str(tmp_path / "out")
-    q = (
-        windowed_query_stats(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(out_dir)
-    # append mode emits only watermark-closed windows; every emitted row
-    # must match the batch result exactly
-    batch_map = {
-        (r["win_start"], r["event_type"]): (r["n"], r["sum_value"]) for r in rows
-    }
-    emitted = got.collect()
-    assert len(emitted) > 0
-    for r in emitted:
-        key = (r["win_start"], r["event_type"])
-        assert key in batch_map
-        n, sv = batch_map[key]
-        assert r["n"] == n
-        assert r["sum_value"] == pytest.approx(sv, rel=1e-9)
-
-
-def test_interval_self_join_stream_matches_batch(spark, tmp_path):
-    """Stream-stream interval join (watermarked both sides) must emit
-    exactly the batch self-join's pairs."""
-    from spaghettisearch_spark.streaming.joins import interval_self_join
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    batch = {
-        (r["user_id"], r["a_ts"], r["b_ts"], r["a_type"], r["b_type"])
-        for r in interval_self_join(ev, lookback_minutes=10).collect()
-    }
-    assert batch  # fixture has same-user events within 10 minutes
-
-    src = str(tmp_path / "ev")
-    ev.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    out_dir = str(tmp_path / "out")
-    q = (
-        interval_self_join(stream, lookback_minutes=10)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["user_id"], r["a_ts"], r["b_ts"], r["a_type"], r["b_type"])
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got == batch
-
-
-def test_dedup_stream_matches_batch(spark, tmp_path):
-    """dropDuplicatesWithinWatermark on a redelivered stream == batch
-    dropDuplicates (duplicates land within the horizon)."""
-    from spaghettisearch_spark.streaming.ingest import dedup_stream
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").select(
-        "user_id", "ts", "event_type", "value"
-    )
-    # simulate at-least-once redelivery: every row duplicated
-    redelivered = ev.unionByName(ev)
-    want = sorted(
-        (r["user_id"], r["ts"], r["event_type"])
-        for r in dedup_stream(redelivered, ["user_id", "ts", "event_type"]).collect()
-    )
-    assert len(want) == ev.dropDuplicates(["user_id", "ts", "event_type"]).count()
-
-    src = str(tmp_path / "ev")
-    redelivered.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(redelivered.schema).parquet(src)
-    out_dir = str(tmp_path / "out")
-    q = (
-        dedup_stream(stream, ["user_id", "ts", "event_type"])
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = sorted(
-        (r["user_id"], r["ts"], r["event_type"])
-        for r in spark.read.parquet(out_dir).collect()
-    )
-    assert got == want
-
-
-def test_multimodal_features(spark, corpus_tiny):
-    from spaghettisearch_spark.operators.multimodal import (
-        attach_fake_media,
-        extract_media_features,
-        fake_decode,
-    )
-
-    media = attach_fake_media(corpus_tiny)
-    feats = extract_media_features(media).collect()
-    assert len(feats) == corpus_tiny.count()
-    by_id = {r["doc_id"]: r for r in feats}
-    # deterministic: recompute one row's features locally
-    one = media.first()
-    w, h, nf, feat = fake_decode(bytes(one["payload"]))
-    got = by_id[one["doc_id"]]
-    assert (got["width"], got["height"], got["n_frames"]) == (w, h, nf)
-    assert got["feature"] == pytest.approx(list(feat), rel=1e-6)
-    assert len(got["feature"]) == 8
-
-
-def test_multimodal_batch_payload_bounded(spark, corpus_tiny):
-    """Chunking must actually bound per-chunk payload bytes (ADVICE r01:
-    the old session-conf set/restore around the lazy plan was a no-op)."""
-    from spaghettisearch_spark.operators.multimodal import (
-        attach_fake_media,
-        extract_media_features,
-    )
-
-    media = attach_fake_media(corpus_tiny)  # 256-byte payloads
-    # 1 KiB budget over 64 * 256 B of payload -> chunks of <= 4 rows
-    budget = 1024
-    rows = extract_media_features(
-        media, target_batch_mb=budget / (1024 * 1024), emit_batch_bytes=True
-    ).collect()
-    assert len(rows) == corpus_tiny.count()
-    assert all(r["batch_bytes"] <= budget for r in rows)
-    assert any(r["batch_bytes"] > 256 for r in rows)  # actually batched
-
-    # degenerate budget 0: every row its own chunk, nothing dropped
-    got = extract_media_features(
-        media, target_batch_mb=0, emit_batch_bytes=True
-    ).collect()
-    assert all(r["batch_bytes"] == 256 for r in got)
-    assert len(got) == corpus_tiny.count()
-
-
-def test_png_codec_roundtrip():
-    """Pure-stdlib PNG codec: every scanline filter x every supported
-    channel count round-trips bit-exact."""
-    import numpy as np
-
-    from spaghettisearch_spark.operators.multimodal import (
-        decode_png,
-        encode_png,
-    )
-
-    shapes = [(5, 7, 1), (8, 6, 3), (4, 4, 4), (3, 9, 2)]
-    for h, w, ch in shapes:
-        rng = np.random.RandomState(h * 100 + w * 10 + ch)
-        px = rng.randint(0, 256, size=(h, w, ch), dtype=np.uint8)
-        for filt in range(5):
-            out = decode_png(encode_png(px, filter_type=filt))
-            assert out.shape == (h, w, ch), (filt, (h, w, ch))
-            assert np.array_equal(out, px), f"filter {filt} ch {ch}"
-
-
-def test_png_real_decode_through_spark(spark):
-    """real_decode is no longer a stub for PNG: synthetic bitmaps encode
-    driver-side, decode inside mapInPandas via the stdlib codec, and the
-    extracted features match the local computation."""
-    import numpy as np
-
-    from spaghettisearch_spark.operators.multimodal import (
-        encode_png,
-        extract_media_features,
-        png_features,
-        real_decode,
-    )
-
-    rows = []
-    want = {}
-    for i in range(6):
-        rng = np.random.RandomState(1000 + i)
-        h, w = 8 + i, 12 + 2 * i
-        px = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-        png = encode_png(px, filter_type=i % 5)
-        rows.append((f"d{i}", bytearray(png)))
-        want[f"d{i}"] = (w, h, png_features(px))
-    media = spark.createDataFrame(
-        rows, "doc_id string, payload binary"
-    ).withColumn(
-        "media",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.lit("image/png").alias("mime"),
-            F.length("payload").cast("long").alias("n_bytes"),
-        ),
-    )
-    got = {
-        r["doc_id"]: r
-        for r in extract_media_features(media, decode=real_decode).collect()
-    }
-    assert set(got) == set(want)
-    for d, (w, h, feat) in want.items():
-        assert (got[d]["width"], got[d]["height"]) == (w, h)
-        assert got[d]["feature"] == pytest.approx(list(feat), rel=1e-6)
-
-    # formats without a built-in codec still fail loudly (no PIL in
-    # this env; TIFF magic) — and a JPEG-magic payload now routes to
-    # the REAL baseline decoder, which rejects garbage with ValueError
-    with pytest.raises(NotImplementedError):
-        real_decode(b"II*\x00 not a png")
-    with pytest.raises(ValueError):
-        real_decode(b"\xff\xd8\xff\xe0 not a jpeg")
-
-
 def test_snippets(spark, corpus_tiny):
     from spaghettisearch_spark.functions.snippets import make_summary_py, with_snippets
     from spaghettisearch_spark.functions.tokenize import parse_query
@@ -341,7 +114,6 @@ def test_snippets(spark, corpus_tiny):
 def test_compact_after_stream(spark, docs_tiny, tmp_path):
     """Stream docs in -> compact -> full queryable index over everything."""
     from spaghettisearch_spark.operators.bm25 import search
-    from spaghettisearch_spark.plans.build_pipeline import BuiltIndex
     from spaghettisearch_spark.streaming.ingest import compact, stream_ingest_documents
 
     in_dir = str(tmp_path / "drop")
@@ -369,322 +141,3 @@ def test_compact_after_stream(spark, docs_tiny, tmp_path):
     assert [r["doc_id"] for r in a] == [r["doc_id"] for r in b]
     for x, y in zip(a, b):
         assert x["score"] == pytest.approx(y["score"], rel=1e-9)
-
-
-def test_wav_codec_roundtrip():
-    """Pure-stdlib WAV codec: 16-bit PCM round-trips bit-exact for mono
-    through 4-channel; 8-bit payloads (hand-packed, odd data length ->
-    pad byte) decode with the documented widening."""
-    import struct
-
-    import numpy as np
-
-    from spaghettisearch_spark.operators.multimodal import (
-        decode_wav,
-        encode_wav,
-    )
-
-    for ch in (1, 2, 4):
-        rng = np.random.RandomState(40 + ch)
-        s = rng.randint(-32768, 32768, size=(101, ch)).astype(np.int16)
-        out, sr = decode_wav(encode_wav(s, sample_rate=8000 + ch))
-        assert sr == 8000 + ch
-        assert out.shape == s.shape
-        assert np.array_equal(out, s), ch
-    # 8-bit mono, ODD byte count: the data chunk gets a RIFF pad byte,
-    # and a trailing chunk after it must still parse
-    raw = bytes([0, 127, 128, 255, 200])
-    fmt = struct.pack("<HHIIHH", 1, 1, 4000, 4000, 1, 8)
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(raw)) + raw + b"\x00"  # pad
-        + b"LIST" + struct.pack("<I", 4) + b"INFO"
-    )
-    payload = b"RIFF" + struct.pack("<I", len(body)) + body
-    out, sr = decode_wav(payload)
-    assert sr == 4000
-    want = ((np.frombuffer(raw, dtype=np.uint8).astype(np.int16) - 128) << 8)[
-        :, None
-    ]
-    assert np.array_equal(out, want)
-    # loud failure on non-PCM
-    bad_fmt = struct.pack("<HHIIHH", 3, 1, 4000, 16000, 4, 32)  # float
-    bad = (
-        b"RIFF" + struct.pack("<I", 24) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(bad_fmt)) + bad_fmt
-    )
-    with pytest.raises(NotImplementedError):
-        decode_wav(bad)
-
-
-def test_wav_real_decode_through_spark(spark):
-    """real_decode handles RIFF/WAVE natively: synthetic tones encode
-    driver-side, decode inside mapInPandas, and the audio features match
-    the local computation; (channels, sample_rate, n_samples) land in
-    the (width, height, n_frames) slots as documented."""
-    import numpy as np
-
-    from spaghettisearch_spark.operators.multimodal import (
-        encode_wav,
-        extract_media_features,
-        real_decode,
-        wav_features,
-    )
-
-    rows, want = [], {}
-    for i in range(4):
-        rng = np.random.RandomState(2000 + i)
-        ch = 1 + i % 2
-        n = 500 + 37 * i
-        t = np.arange(n * ch).reshape(n, ch)
-        s = (
-            10000 * np.sin(t / (3.0 + i))
-            + rng.randint(-500, 500, size=(n, ch))
-        ).astype(np.int16)
-        sr = 8000 * (1 + i % 3)
-        rows.append((f"a{i}", bytearray(encode_wav(s, sr))))
-        want[f"a{i}"] = (ch, sr, n, wav_features(s, sr))
-    media = spark.createDataFrame(
-        rows, "doc_id string, payload binary"
-    ).withColumn(
-        "media",
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.lit("audio/wav").alias("mime"),
-            F.length("payload").cast("long").alias("n_bytes"),
-        ),
-    )
-    got = {
-        r["doc_id"]: r
-        for r in extract_media_features(media, decode=real_decode).collect()
-    }
-    assert set(got) == set(want)
-    for d, (ch, sr, n, feat) in want.items():
-        g = got[d]
-        assert (g["width"], g["height"], g["n_frames"]) == (ch, sr, n)
-        assert g["feature"] == pytest.approx(list(feat), rel=1e-6)
-
-
-def test_bmp_codec_roundtrip():
-    """Pure-stdlib BMP codec: 24-bit BI_RGB round-trips bit-exact across
-    widths that exercise every row-padding remainder (w*3 mod 4), plus
-    grayscale replication, top-down row order, and honest raises for
-    unsupported depth / truncated payloads; real_decode dispatches BMP
-    by magic."""
-    import struct
-
-    import numpy as np
-
-    from spaghettisearch_spark.operators.multimodal import (
-        decode_bmp,
-        encode_bmp,
-        real_decode,
-    )
-
-    for w in (1, 2, 3, 4, 5, 17):
-        rng = np.random.RandomState(w)
-        px = rng.randint(0, 256, size=(7, w, 3)).astype(np.uint8)
-        out = decode_bmp(encode_bmp(px))
-        assert out.shape == px.shape and np.array_equal(out, px), w
-    # grayscale input replicates to 3 channels
-    g = np.arange(12, dtype=np.uint8).reshape(3, 4)
-    out = decode_bmp(encode_bmp(g))
-    assert np.array_equal(out, np.stack([g] * 3, axis=-1))
-    # top-down variant (negative height) decodes to the same pixels
-    px = np.random.RandomState(9).randint(0, 256, (5, 3, 3)).astype(np.uint8)
-    payload = bytearray(encode_bmp(px[::-1]))  # encoder stores bottom-up
-    h = struct.unpack_from("<i", payload, 22)[0]
-    struct.pack_into("<i", payload, 22, -h)
-    assert np.array_equal(decode_bmp(bytes(payload)), px[::-1][::-1])
-    # real_decode dispatch: width/height and an 8-dim feature vector
-    w_, h_, n_, feat = real_decode(encode_bmp(px))
-    assert (w_, h_, n_) == (3, 5, 1) and feat.shape == (8,)
-    # honest raises
-    bad = bytearray(encode_bmp(px))
-    struct.pack_into("<H", bad, 28, 8)  # claim 8-bit depth
-    try:
-        decode_bmp(bytes(bad))
-        raise AssertionError("8-bit BMP must raise")
-    except NotImplementedError:
-        pass
-    try:
-        decode_bmp(encode_bmp(px)[:40])
-        raise AssertionError("truncated BMP must raise")
-    except ValueError:
-        pass
-
-
-def test_gif_codec_roundtrip():
-    """Pure-stdlib GIF codec: indexed images round-trip to the exact
-    palette RGB across palette sizes (code widths 2..8), multi-block
-    LZW data (>255 byte streams), 89a extension blocks are skipped,
-    and the decoder's variable-width LZW handles a PIL-free synthetic
-    stream; interlace honestly raises."""
-    import struct
-
-    import numpy as np
-
-    from spaghettisearch_spark.operators.multimodal import (
-        decode_gif,
-        encode_gif,
-        real_decode,
-    )
-
-    for n_pal in (2, 4, 16, 256):
-        rng = np.random.RandomState(n_pal)
-        pal = rng.randint(0, 256, size=(n_pal, 3)).astype(np.uint8)
-        idx = rng.randint(0, n_pal, size=(13, 11)).astype(np.uint8)
-        out = decode_gif(encode_gif(idx, pal))
-        assert out.shape == (13, 11, 3)
-        assert np.array_equal(out, pal[idx]), n_pal
-    # large image -> LZW stream spans many 255-byte sub-blocks
-    pal = np.arange(48, dtype=np.uint8).reshape(16, 3)
-    idx = (np.arange(64 * 64) % 16).astype(np.uint8).reshape(64, 64)
-    assert np.array_equal(decode_gif(encode_gif(idx, pal)), pal[idx])
-    # real_decode dispatch
-    w_, h_, n_, feat = real_decode(encode_gif(idx, pal))
-    assert (w_, h_, n_) == (64, 64, 1) and feat.shape == (8,)
-    # 89a graphic-control extension before the image must be skipped
-    payload = encode_gif(idx[:4, :4], pal)
-    with_ext = (
-        payload[:13 + 48]
-        + b"\x21\xf9\x04\x00\x00\x00\x00\x00"
-        + payload[13 + 48:]
-    )
-    assert np.array_equal(decode_gif(with_ext), pal[idx[:4, :4]])
-    # interlaced flag raises; the image descriptor sits right after the
-    # 13-byte header + 48-byte global color table (16 entries x 3)
-    bad = bytearray(encode_gif(idx[:4, :4], pal))
-    ipos = 13 + 48
-    assert bad[ipos] == 0x2C
-    bad[ipos + 9] |= 0x40
-    try:
-        decode_gif(bytes(bad))
-        raise AssertionError("interlaced GIF must raise")
-    except NotImplementedError:
-        pass
-
-
-def test_mjpeg_avi_video_frame_sample():
-    """The video slot is real now: MJPEG AVI encodes (pure-stdlib RIFF
-    writer), decode_avi_frames walks nested LISTs back to the exact
-    frame payloads, and video_features frame-samples through the
-    built-in JPEG decoder; real_decode dispatches by RIFF/AVI magic and
-    non-MJPEG video still raises honestly."""
-    import numpy as np
-
-    from spaghettisearch_spark.functions.jpeg import decode_jpeg, encode_jpeg
-    from spaghettisearch_spark.operators.multimodal import (
-        decode_avi_frames,
-        encode_avi_mjpeg,
-        png_features,
-        real_decode,
-        video_features,
-    )
-
-    h, w, n = 16, 24, 5
-    frames = []
-    for i in range(n):
-        px = np.zeros((h, w, 3), dtype=np.uint8)
-        px[:, :, 0] = np.linspace(10 + 20 * i, 200, w)[None, :]
-        px[:, :, 1] = 30 * i
-        px[:, :, 2] = 128
-        frames.append(encode_jpeg(px, quality=90))
-    avi = encode_avi_mjpeg(frames, w, h, fps=10)
-    dw, dh, dn, jpegs = decode_avi_frames(avi)
-    assert (dw, dh, dn) == (w, h, n)
-    assert jpegs == frames  # container round-trip is byte-exact
-    fw, fh, fn, feat = video_features(avi, sample_n=3)
-    assert (fw, fh, fn) == (w, h, n) and feat.shape == (8,)
-    # feature = mean over EVENLY spaced sampled frames — first and last
-    # frame both included, so late-clip content influences the feature
-    idx = np.unique(np.round(np.linspace(0, len(jpegs) - 1, 3)).astype(int))
-    assert idx[0] == 0 and idx[-1] == len(jpegs) - 1
-    want = np.mean(
-        np.stack([png_features(decode_jpeg(jpegs[i])) for i in idx]), axis=0
-    )
-    assert np.allclose(feat, want, rtol=1e-6)
-    # real_decode dispatch
-    rw, rh, rn, rfeat = real_decode(avi)
-    assert (rw, rh, rn) == (w, h, n) and rfeat.shape == (8,)
-    # an AVI whose stream is not MJPEG raises, never fakes
-    import struct
-    raw = b"\x00" * 40
-    body = (
-        b"AVI "
-        + b"LIST" + struct.pack("<I", 4 + 8 + len(raw)) + b"movi"
-        + b"00dc" + struct.pack("<I", len(raw)) + raw
-    )
-    not_mjpeg = b"RIFF" + struct.pack("<I", len(body)) + body
-    try:
-        real_decode(not_mjpeg)
-        raise AssertionError("non-MJPEG AVI must raise")
-    except NotImplementedError:
-        pass
-
-
-def test_wav_malformed_raises_valueerror():
-    """Truncated/corrupt WAV payloads raise ValueError (the codec
-    contract), never struct.error or a silently shorter clip."""
-    import struct
-
-    import pytest as _pytest
-
-    from spaghettisearch_spark.operators.multimodal import decode_wav
-
-    # fmt chunk shorter than 16 bytes
-    fmt4 = b"WAVE" + b"fmt " + struct.pack("<I", 4) + b"\x01\x00\x01\x00"
-    with _pytest.raises(ValueError):
-        decode_wav(b"RIFF" + struct.pack("<I", len(fmt4)) + fmt4)
-    # data chunk declaring a length past the buffer
-    fmt = struct.pack("<HHIIHH", 1, 1, 4000, 4000, 1, 8)
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", 1000) + b"\x00" * 4
-    )
-    with _pytest.raises(ValueError):
-        decode_wav(b"RIFF" + struct.pack("<I", len(body)) + body)
-
-
-def test_gif_local_color_table():
-    """Decoder path untested by the writer (which emits a global table):
-    an image with NO global table and a LOCAL color table must decode
-    against the local palette."""
-    import struct
-
-    import numpy as np
-
-    from spaghettisearch_spark.operators.multimodal import (
-        decode_gif,
-        encode_gif,
-    )
-
-    pal = np.arange(48, dtype=np.uint8).reshape(16, 3)
-    idx = (np.arange(5 * 4) % 16).astype(np.uint8).reshape(5, 4)
-    payload = bytearray(encode_gif(idx, pal))
-    # surgery: turn OFF the global table (screen flags), drop the 48-byte
-    # GCT, and re-insert the table as a LOCAL one after the image
-    # descriptor with the local-table flag set
-    flags = payload[10]
-    depth = (flags & 0x07)
-    gct_len = (2 << depth) * 3
-    assert payload[10] & 0x80
-    payload[10] = flags & 0x7F  # GCT off
-    gct = bytes(payload[13:13 + gct_len])
-    del payload[13:13 + gct_len]
-    ipos = 13
-    assert payload[ipos] == 0x2C
-    payload[ipos + 9] |= 0x80 | depth  # local table flag + size
-    local = payload[:ipos + 10] + gct + payload[ipos + 10:]
-    out = decode_gif(bytes(local))
-    assert np.array_equal(out, pal[idx])
-    # and an image with NEITHER table raises
-    no_table = payload[:ipos + 10]
-    no_table[ipos + 9] &= ~0x80
-    try:
-        decode_gif(bytes(no_table + payload[ipos + 10:]))
-        raise AssertionError("GIF without any color table must raise")
-    except ValueError:
-        pass

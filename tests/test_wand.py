@@ -426,7 +426,7 @@ def test_range_aware_planner_beats_global_bounds(spark):
         build_posting_shards,
     )
     from spaghettisearch_spark.operators.wand import (
-        select_blocks,
+        plan_blocks,
         wand_topk_from_shards,
     )
 
@@ -469,11 +469,11 @@ def test_range_aware_planner_beats_global_bounds(spark):
         "term", "field", "salt", "df", "max_weight",
         "top_doc_keys", "top_weights",
     ]
-    keep_rng = select_blocks(
+    keep_rng = plan_blocks(
         shards.select(*(meta_cols + ["range_bounds", "range_maxw"])).collect(),
         cfg, qtf, 5,
-    )
-    keep_glob = select_blocks(shards.select(*meta_cols).collect(), cfg, qtf, 5)
+    )[0]
+    keep_glob = plan_blocks(shards.select(*meta_cols).collect(), cfg, qtf, 5)[0]
     assert len(keep_rng) <= 4
     assert len(keep_glob) >= 4 * len(keep_rng), (len(keep_rng), len(keep_glob))
     dim.unpersist()

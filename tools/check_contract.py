@@ -17,10 +17,7 @@ import pandas as pd
 import __spark_entry__ as entry_mod
 from spaghettisearch_spark.session import get_spark
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["documents"]
 
 
 def norm(df: pd.DataFrame) -> pd.DataFrame:
