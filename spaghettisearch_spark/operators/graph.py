@@ -26,8 +26,8 @@ the per-round shuffle shrinks with the frontier. Same output contract,
 cross-asserted in tests; pick it when component sizes are unbounded
 (web-scale dedup graphs).
 
-Oracle: DuckDB WITH RECURSIVE reachability + MIN(root) — bit-identical
-cluster ids (min doc id per component), see __spark_entry__.dup_clusters.
+Oracle: a Python union-find (tests/test_textops.py) — identical cluster
+ids (min doc id per component).
 """
 
 from __future__ import annotations

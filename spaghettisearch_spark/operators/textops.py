@@ -5,7 +5,7 @@ These are the operations a 100 TB training-data pipeline runs over the
 corpus besides search indexing. All are pure DataFrame ops over a
 ``tokens(id, pos, term)`` frame — no Python in the hot path. Hash
 identities come from functions/hashing.term_hash60 so every operator
-here has a bit-identical DuckDB oracle (see __spark_entry__.oracle_sql).
+here has a bit-identical pure-Python reference (tests/test_textops.py).
 
 Scale notes:
   - MinHash signatures: one groupBy(id) over |salts| aggregates — the
@@ -132,7 +132,7 @@ def lsh_band_buckets(signatures: DataFrame, band_rows: int = 2) -> DataFrame:
     """signatures(id, salt, minhash) -> (id, band, bucket): group the
     signature into bands of ``band_rows`` consecutive salts; the bucket
     key hashes the band's minhashes in salt order (portable 60-bit hash,
-    so the DuckDB oracle reproduces buckets bit-for-bit)."""
+    so a Python reference reproduces buckets bit-for-bit)."""
     banded = signatures.withColumn(
         "band", F.floor(F.col("salt") / band_rows).cast("int")
     )

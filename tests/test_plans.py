@@ -92,6 +92,22 @@ def test_hydration_join_is_broadcast_not_smj(spark, wh_index):
     assert "BroadcastHashJoin" in plan
 
 
+def test_near_dup_plan_has_no_cartesian(spark):
+    """The default near-dup path must be a bucket equi-join, never a
+    cross/nested-loop product (the r01 all-pairs scale-killer)."""
+    from spaghettisearch_spark.operators.similarity import srp_near_dup_pairs
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 7), float(i % 3), 1.0]) for i in range(50)],
+        "vec_id int, embedding array<double>",
+    )
+    plan = _formatted_plan(
+        spark, srp_near_dup_pairs(emb, dim=3, threshold=0.9)
+    )
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
 def test_broadcast_in_query_join(spark, wh_index):
     from spaghettisearch_spark.operators.bm25 import search
 

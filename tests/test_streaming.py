@@ -1,5 +1,7 @@
 """Streaming ingest: incremental postings == batch postings; re-dropped
-docs upsert; compaction after a stream equals a batch build; snippets."""
+docs upsert; compaction after a stream equals a batch build; snippets;
+windowed event-time aggregation and watermarked dedup match their batch
+plans."""
 
 from __future__ import annotations
 
@@ -90,6 +92,83 @@ def test_stream_redrop_changed_doc_upserts(spark, docs_tiny, tmp_path):
     assert full.exceptAll(compacted).count() == 0
 
 
+def test_windowed_query_stats_batch_parity(spark, tmp_path):
+    from spaghettisearch_spark.streaming.ingest import windowed_query_stats
+
+    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    batch_out = windowed_query_stats(ev).orderBy("win_start", "event_type")
+    rows = batch_out.collect()
+    assert len(rows) > 0
+    # streaming run over the same data (file source, availableNow)
+    src = str(tmp_path / "ev")
+    ev.write.mode("overwrite").parquet(src)
+    stream = (
+        spark.readStream.schema(ev.schema).parquet(src)
+    )
+    out_dir = str(tmp_path / "out")
+    q = (
+        windowed_query_stats(stream)
+        .writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = spark.read.parquet(out_dir)
+    # append mode emits only watermark-closed windows; every emitted row
+    # must match the batch result exactly
+    batch_map = {
+        (r["win_start"], r["event_type"]): (r["n"], r["sum_value"]) for r in rows
+    }
+    emitted = got.collect()
+    assert len(emitted) > 0
+    for r in emitted:
+        key = (r["win_start"], r["event_type"])
+        assert key in batch_map
+        n, sv = batch_map[key]
+        assert r["n"] == n
+        assert r["sum_value"] == pytest.approx(sv, rel=1e-9)
+
+
+def test_dedup_stream_matches_batch(spark, tmp_path):
+    """dropDuplicatesWithinWatermark on a redelivered stream == batch
+    dropDuplicates (duplicates land within the horizon)."""
+    from spaghettisearch_spark.streaming.ingest import dedup_stream
+
+    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").select(
+        "user_id", "ts", "event_type", "value"
+    )
+    # simulate at-least-once redelivery: every row duplicated
+    redelivered = ev.unionByName(ev)
+    want = sorted(
+        (r["user_id"], r["ts"], r["event_type"])
+        for r in dedup_stream(redelivered, ["user_id", "ts", "event_type"]).collect()
+    )
+    assert len(want) == ev.dropDuplicates(["user_id", "ts", "event_type"]).count()
+
+    src = str(tmp_path / "ev")
+    redelivered.write.mode("overwrite").parquet(src)
+    stream = spark.readStream.schema(redelivered.schema).parquet(src)
+    out_dir = str(tmp_path / "out")
+    q = (
+        dedup_stream(stream, ["user_id", "ts", "event_type"])
+        .writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    got = sorted(
+        (r["user_id"], r["ts"], r["event_type"])
+        for r in spark.read.parquet(out_dir).collect()
+    )
+    assert got == want
+
+
 def test_snippets(spark, corpus_tiny):
     from spaghettisearch_spark.functions.snippets import make_summary_py, with_snippets
     from spaghettisearch_spark.functions.tokenize import parse_query
@@ -114,6 +193,7 @@ def test_snippets(spark, corpus_tiny):
 def test_compact_after_stream(spark, docs_tiny, tmp_path):
     """Stream docs in -> compact -> full queryable index over everything."""
     from spaghettisearch_spark.operators.bm25 import search
+    from spaghettisearch_spark.plans.build_pipeline import BuiltIndex
     from spaghettisearch_spark.streaming.ingest import compact, stream_ingest_documents
 
     in_dir = str(tmp_path / "drop")
