@@ -114,7 +114,12 @@ class SearchEngine:
     rows of key + score parts, PageRank folded into the bucket kernel)
     and one keyed read of those k rows from ``doc_cards``; snippets are
     computed on the driver from the card's content. A first-seen query
-    term adds one block-metadata fetch (``meta_cache``).
+    term adds one block-metadata fetch (``meta_cache``). A WAND bag
+    whose planned decode volume fits one task
+    (``cfg.query_target_postings_per_task``) runs its top-k job as one
+    stage of one task, decoding and scoring in one Python pass; larger
+    plans, phrases and non-WAND queries shuffle postings to the bucket
+    kernel.
 
     ``doc_cards`` (CARD_COLS, one row per doc, clustered by the dense
     doc_key) is written once at build: zstd parquet under

@@ -71,10 +71,13 @@ class EngineConfig:
     # the skip planner already knows the decode volume (kept blocks'
     # summed df after range/candidate pruning), so the decode stage and
     # the bucket-kernel shuffle are sized to ~this many postings per
-    # task instead of inheriting corpus-scale partition defaults — a
-    # 3-term query over a 5k-doc index runs 1-2 tasks per stage, a hot
-    # query over 10^9-posting lists fans out to thousands, from the same
-    # rule. Matches block_target_postings' order of magnitude.
+    # task instead of inheriting corpus-scale partition defaults. A WAND
+    # bag whose volume fits ONE task (every serving query over the
+    # local corpora) runs its top-k as one stage of one task: decode and
+    # score in one Python pass, no bucket shuffle. A hot query over
+    # 10^9-posting lists fans out to thousands of tasks and keeps the
+    # shuffled tail, from the same rule. Matches block_target_postings'
+    # order of magnitude.
     query_target_postings_per_task: int = 65536
 
     # stemming on/off (oracle SQL path runs unstemmed)

@@ -357,7 +357,12 @@ def search_from_shards(
         term_block_meta,
     )
     from .phrase import phrase_matches_from_shards
-    from .wand import _wand_from_hits, hydrate_doc_ids, pr_broadcast
+    from .wand import (
+        _wand_from_hits,
+        empty_topk,
+        hydrate_doc_ids,
+        pr_broadcast,
+    )
 
     if cfg.scorer != "bm25":
         raise ValueError(
@@ -446,27 +451,16 @@ def search_from_shards(
             ),
         )
         parts.append(m.select("doc_id", "field", "contrib"))
-    if not dense_keys:
-        scored = (
-            _pivot_field_ranks(parts)
-            if parts
-            else spark.createDataFrame(
-                [], "doc_id string, title_rank double, body_rank double"
-            )
-        )
-        return _blend_and_topk(scored, cfg, pagerank, k)
     if not parts:
-        return spark.createDataFrame(
-            [], "doc_key long, title_rank double, body_rank double, "
-            "pagerank double, score double"
-        )
+        return empty_topk(spark, dense_keys, doc_map)
+    if not dense_keys:
+        return _blend_and_topk(_pivot_field_ranks(parts), cfg, pagerank, k)
     rows = parts[0]
     for p in parts[1:]:
         rows = rows.unionByName(p)
     n_buckets = 16  # the WAND paths' default
     ranked = _wand_from_hits(
-        rows.withColumn("qterm_id", F.lit(0)),
-        cfg, k, n_buckets,
+        rows, cfg, k, n_buckets,
         pr_broadcast(spark, pagerank, doc_map, dense_keys=True),
         shuffle_parts=(
             None if kernel_parts is None else max(1, min(kernel_parts, n_buckets))

@@ -570,6 +570,7 @@ def decode_shards(
     fields: tuple[str, ...] = ("tf", "weight", "positions"),
     doc_keys=None,
     key_ranges: dict | None = None,
+    consumer: tuple | None = None,
 ) -> DataFrame:
     """posting_shards -> one row per (term, field, doc_key) — the
     round-trip inverse of build_posting_shards (modulo doc_id -> 60-bit
@@ -602,7 +603,13 @@ def decode_shards(
     reads it off the block's own range_maxw length), so the positional
     mapping stays exact even if RANGE_SUB_N changes between build and
     serve. Blocks absent from the dict decode whole; combines with
-    ``doc_keys`` by intersection."""
+    ``doc_keys`` by intersection.
+
+    ``consumer`` (optional ``(fn, schema)``): hand each task's decoded
+    frames (an iterator of pandas frames with the columns above) to
+    ``fn`` inside the same Python task, and return what it yields, of
+    ``schema``, instead of the decoded rows — decode and the consumer's
+    work then cost one Python crossing (the one-task WAND top-k)."""
     extra = list(passthrough)
     want = [f for f in ("tf", "weight", "positions") if f in fields]
     out_cols = ["term", "field", "doc_key"] + want + extra
@@ -773,7 +780,12 @@ def decode_shards(
         need.append("weights")
     if want_pos:
         need += ["pos_lens", "positions"]
-    return shards.select(*(need + extra)).mapInPandas(_decode, schema)
+    if consumer is None:
+        return shards.select(*(need + extra)).mapInPandas(_decode, schema)
+    then, out_schema = consumer
+    return shards.select(*(need + extra)).mapInPandas(
+        lambda batch_iter: then(_decode(batch_iter)), out_schema
+    )
 
 
 BLOCK_META_COLS = [

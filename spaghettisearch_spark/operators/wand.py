@@ -28,10 +28,18 @@ Distributed shape (the part that must survive 100 TB):
      exhaustive scorer;
   4. global top-k = TakeOrderedAndProject over n_buckets * k rows.
 
+  The one-task case: when the skip planner sizes a dense-keyed shard
+  query to ONE task (kept decode volume <=
+  ``cfg.query_target_postings_per_task``, the serving norm), steps 2-3
+  collapse. That task already holds every posting of every doc, so it
+  decodes the kept blocks and runs the bucket kernel over them in the
+  same Python pass (_one_task_topk): one stage, one task, one Python
+  crossing, no shuffle. Larger plans keep the bucketed tail above.
+
 Exactness: every bucket returns its true local top-k, and the global
-merge of true local top-k sets contains the true global top-k. Pruning
-(upper-bound skipping) only ever discards docs that cannot enter the
-local heap.
+merge of true local top-k sets contains the true global top-k (with one
+task, its bucket is the whole candidate set). Pruning (upper-bound
+skipping) only ever discards docs that cannot enter the local heap.
 
 Scoring model: per-posting impact weights are precomputed at index time
 (BM25 weights need only tf, df, dl, avgdl — all known at build), so
@@ -81,42 +89,51 @@ def _pr_lookup(pr, keys) -> np.ndarray:
     return pr.reindex(keys).fillna(0.0).to_numpy(np.float64)
 
 
-def _score_bucket_vectorized(k: int, pr=None, w_pr: float = 0.0):
-    """Vectorized exact per-bucket top-k: factorize doc ids once, then a
-    single branchless ``np.bincount`` scatter-add per score column over
-    the WHOLE bucket, followed by an O(n) k-th-score partition and a
-    tiny (-score, doc_id) tie-break sort of the survivors.
+def _score_bucket_vectorized(k: int, cfg: EngineConfig, pr=None):
+    """Vectorized exact per-bucket top-k over (doc_id, field, contrib)
+    posting rows, ``contrib`` = stored impact weight x query-term
+    frequency. The blend lives here, once: each posting's field weight
+    x ``blend_scale`` and its title/body split. Then it factorizes doc
+    ids once, runs a single branchless ``np.bincount`` scatter-add per
+    score column over the WHOLE bucket, an O(n) k-th-score partition
+    and a tiny (-score, doc_id) tie-break sort of the survivors.
 
     ``pr`` (a Broadcast of a _pr_lookup table) folds the PageRank blend
-    into the kernel: each candidate gains ``w_pr * pr[doc]`` (w_pr =
-    w_pagerank * blend_scale) before the k-th-score cut, and the row
-    carries the looked-up rank in its ``pagerank`` column. The
-    candidate set is unchanged (docs with at least one posting), the
-    same as the exhaustive path's left join.
+    into the kernel: each candidate gains ``w_pagerank * blend_scale *
+    pr[doc]`` before the k-th-score cut, and the row carries the
+    looked-up rank in its ``pagerank`` column. The candidate set is
+    unchanged (docs with at least one posting), the same as the
+    exhaustive path's left join.
 
     Why this beats document-at-a-time WAND here: the bucket's postings
-    are already Arrow-resident (the pruned scan + shuffle did the real
-    skipping), so DAAT's upper-bound skipping saves only Python-loop CPU
-    — and a bincount accumulates a posting in ~1ns vs ~1us per iteration
-    of the pointer-chasing loop. Pruning would have to skip >99.9% of
-    postings to win; on hot terms (df ~ 80%) it skips almost nothing.
-    The classic DAAT heap kernel survives only as the test-side parity
+    are already Arrow-resident (the pruned scan did the real skipping),
+    so DAAT's upper-bound skipping saves only Python-loop CPU — and a
+    bincount accumulates a posting in ~1ns vs ~1us per iteration of the
+    pointer-chasing loop. Pruning would have to skip >99.9% of postings
+    to win; on hot terms (df ~ 80%) it skips almost nothing. The
+    classic DAAT heap kernel survives only as the test-side parity
     oracle (tests/daat_reference.py) — both are exact and asserted
     equal to the exhaustive scorer in tests."""
+    w_pr = cfg.w_pagerank * cfg.blend_scale
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:
             return pd.DataFrame(columns=_OUT_COLS)
+        field = pdf["field"].to_numpy()
+        contrib = pdf["contrib"].to_numpy(np.float64)
+        is_t = field == FIELD_TITLE
+        is_b = field == FIELD_BODY
+        fw = np.where(is_t, cfg.w_title, np.where(is_b, cfg.w_body, 0.0))
         codes, uniques = pd.factorize(pdf["doc_id"], sort=False)
         n = len(uniques)
         acc = np.bincount(
-            codes, weights=pdf["contrib"].to_numpy(np.float64), minlength=n
+            codes, weights=fw * contrib * cfg.blend_scale, minlength=n
         )
         acc_t = np.bincount(
-            codes, weights=pdf["title_c"].to_numpy(np.float64), minlength=n
+            codes, weights=np.where(is_t, contrib, 0.0), minlength=n
         )
         acc_b = np.bincount(
-            codes, weights=pdf["body_c"].to_numpy(np.float64), minlength=n
+            codes, weights=np.where(is_b, contrib, 0.0), minlength=n
         )
         if pr is not None:
             ranks = _pr_lookup(pr.value, uniques)
@@ -237,43 +254,27 @@ def _wand_from_hits(
     kernel="taat",
     shuffle_parts: int | None = None,
 ) -> DataFrame:
-    """The one top-k tail of every shard and WAND path: ``hits`` carries
-    (doc_id, field, qterm_id, contrib) with the query-term frequency
-    already multiplied into ``contrib``; ``pr`` is the kernel's
-    Broadcast PageRank lookup (see _score_bucket_vectorized).
+    """The shuffled top-k tail of the WAND and shard paths: ``hits``
+    carries (doc_id, field, contrib) with the query-term frequency
+    already multiplied into ``contrib`` (plus ``qterm_id`` for an
+    injected reference kernel); ``pr`` is the kernel's Broadcast
+    PageRank lookup (see _score_bucket_vectorized). The rows are
+    hash-partitioned by ``doc_bucket`` so each bucket holds every
+    posting of its docs, and each bucket cuts its exact local top-k.
     ``shuffle_parts`` (shard paths) sizes the bucket-kernel exchange
     from the planner-known decode volume — an explicit repartition by
     doc_bucket that the groupBy reuses (one exchange, exact task count)
     instead of the session-wide shuffle-partition default."""
-    # blended per-posting impact: field weight folded in, so the kernel
-    # maximizes the FINAL blended score directly
-    fw = (
-        F.when(F.col("field") == FIELD_TITLE, F.lit(cfg.w_title))
-        .when(F.col("field") == FIELD_BODY, F.lit(cfg.w_body))
-        .otherwise(F.lit(0.0))
-    )
-    per_posting = hits.select(
-        "doc_id",
-        "qterm_id",
-        (fw * F.col("contrib") * F.lit(cfg.blend_scale)).alias("blended"),
-        F.when(F.col("field") == FIELD_TITLE, F.col("contrib"))
-        .otherwise(F.lit(0.0))
-        .alias("title_c"),
-        F.when(F.col("field") == FIELD_BODY, F.col("contrib"))
-        .otherwise(F.lit(0.0))
-        .alias("body_c"),
-    )
     long_keys = dict(hits.dtypes).get("doc_id") == "bigint"
     if callable(kernel):
         # an injected reference kernel (tests/daat_reference.py) walks
         # document-at-a-time and needs ONE cursor per (doc, qterm): a
         # doc can hit the same query term in BOTH fields, so collapse
-        # first. The vectorized kernel's scatter-add collapses
-        # duplicates natively, so the production path skips this whole
-        # shuffle — posting rows flow straight into the bucket
-        # partitioning (halves the query path's shuffle volume).
-        # Reference kernels tie-break on string doc_ids and score term
-        # postings only, so dense long keys and PageRank are refused.
+        # first, blending in Spark. The vectorized kernel's scatter-add
+        # collapses duplicates natively, so the production path skips
+        # this whole shuffle. Reference kernels tie-break on string
+        # doc_ids and score term postings only, so dense long keys and
+        # PageRank are refused.
         if long_keys:
             raise ValueError(
                 "injected reference kernels tie-break on string doc_ids; "
@@ -284,20 +285,25 @@ def _wand_from_hits(
                 "injected reference kernels score term postings only; "
                 "the PageRank blend requires the vectorized kernel"
             )
-        per_doc_term = per_posting.groupBy("doc_id", "qterm_id").agg(
-            F.sum("blended").alias("contrib"),
-            F.sum("title_c").alias("title_c"),
-            F.sum("body_c").alias("body_c"),
+        is_t = F.col("field") == FIELD_TITLE
+        is_b = F.col("field") == FIELD_BODY
+        fw = (
+            F.when(is_t, F.lit(cfg.w_title))
+            .when(is_b, F.lit(cfg.w_body))
+            .otherwise(F.lit(0.0))
+        )
+        rows = hits.groupBy("doc_id", "qterm_id").agg(
+            F.sum(fw * F.col("contrib") * F.lit(cfg.blend_scale)).alias("contrib"),
+            F.sum(F.when(is_t, F.col("contrib")).otherwise(0.0)).alias("title_c"),
+            F.sum(F.when(is_b, F.col("contrib")).otherwise(0.0)).alias("body_c"),
         )
         ref = kernel(cfg, k)
 
         def bucket_kernel(pdf):
             return ref(pdf).assign(pagerank=0.0)[_OUT_COLS]
     elif kernel == "taat":
-        per_doc_term = per_posting.withColumnRenamed("blended", "contrib")
-        bucket_kernel = _score_bucket_vectorized(
-            k, pr, cfg.w_pagerank * cfg.blend_scale
-        )
+        rows = hits.select("doc_id", "field", "contrib")
+        bucket_kernel = _score_bucket_vectorized(k, cfg, pr)
     else:
         raise ValueError(
             "only the vectorized kernel ships in the engine; pass a "
@@ -305,7 +311,7 @@ def _wand_from_hits(
             "reference kernel (see tests/daat_reference.py)"
         )
 
-    bucketed = per_doc_term.withColumn(
+    bucketed = rows.withColumn(
         "doc_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
     )
     if shuffle_parts is not None:
@@ -317,6 +323,40 @@ def _wand_from_hits(
     local = bucketed.groupBy("doc_bucket").applyInPandas(
         bucket_kernel,
         _out_schema(T.LongType() if long_keys else T.StringType()),
+    )
+    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def _one_task_topk(
+    pruned: DataFrame, cfg: EngineConfig, k: int, pr, qtf: dict, **decode_kw
+) -> DataFrame:
+    """Top-k of a dense-keyed shard query whose kept postings fit in ONE
+    task: ``pruned`` (coalesced to one partition) is decoded and scored
+    in one Python pass — decode_shards hands its frames straight to the
+    bucket kernel, with ``contrib = weight x qtf`` computed in between —
+    so the job is one stage, one task and one Python crossing, with no
+    bucket exchange (one task already holds every posting of every
+    doc). ``decode_kw`` is the planner's decode pruning (doc_keys,
+    key_ranges)."""
+    from .compression import decode_shards
+
+    score = _score_bucket_vectorized(k, cfg, pr)
+
+    def consume(frames):
+        frames = [f for f in frames if len(f)]
+        if not frames:
+            return
+        pdf = pd.concat(frames, ignore_index=True)
+        yield score(pd.DataFrame({
+            "doc_id": pdf["doc_key"],
+            "field": pdf["field"],
+            "contrib": pdf["weight"].to_numpy(np.float64)
+            * pdf["term"].map(qtf).to_numpy(np.float64),
+        }))
+
+    local = decode_shards(
+        pruned, fields=("weight",),
+        consumer=(consume, _out_schema(T.LongType())), **decode_kw,
     )
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -651,7 +691,11 @@ def wand_topk_from_shards(
     pr_max_key: str = _PR_MAX_KEY,
 ) -> DataFrame:
     """Exact top-k straight from the compressed posting shards: pruned
-    shard scan -> varbyte decode (mapInPandas) -> block-max WAND.
+    shard scan -> varbyte decode (mapInPandas) -> block-max WAND. With
+    dense keys and a plan that fits one task (the planner's decode
+    volume vs ``cfg.query_target_postings_per_task``), decode and the
+    bucket kernel share one Python pass and the top-k job is one stage
+    (_one_task_topk); otherwise postings shuffle to the bucket kernel.
 
     ``two_phase=True`` refines the skip threshold with one extra
     distributed round: decode ONLY the sampled docs' postings (the
@@ -740,10 +784,7 @@ def wand_topk_from_shards(
         raise ValueError("shard-backed WAND requires bm25 impact weights")
     k = k or cfg.top_k
     if not query_terms:
-        return spark.createDataFrame(
-            [], "doc_id string, title_rank double, body_rank double, "
-            "pagerank double, score double"
-        )
+        return empty_topk(spark, dense_keys, doc_map)
     counts = Counter(query_terms)
     if dense_keys and "top_weights" not in shards.columns:
         # without block metadata the hash-vs-dense key-mode mismatch guard
@@ -756,6 +797,7 @@ def wand_topk_from_shards(
             "this shards frame lacks them"
         )
     term_list = sorted(counts)
+    qtf = {t: float(counts[t]) for t in term_list}
     pruned = prune_shards(shards, term_list, cfg)
     pr_bc = pr_broadcast(spark, pagerank, doc_map, dense_keys)
 
@@ -787,7 +829,6 @@ def wand_topk_from_shards(
                 if meta_cache is not None:
                     meta_cache[pr_max_key] = pr_max
             extra_ub = cfg.w_pagerank * cfg.blend_scale * float(pr_max or 0.0)
-        qtf_map = {t: float(counts[t]) for t in term_list}
         # exact-floor cache: the wave-1 floor is a pure function of
         # (shards, bag, k) AND the scoring weights the wave multiplies
         # in (w_title/w_body/blend_scale — so those are part of the
@@ -802,7 +843,7 @@ def wand_topk_from_shards(
         # the floor needs for admissibility.
         floor_key = (
             "\x00floor:" + repr((
-                tuple(sorted(qtf_map.items())), k,
+                tuple(sorted(qtf.items())), k,
                 cfg.w_title, cfg.w_body, cfg.blend_scale,
             ))
             if meta_cache is not None
@@ -813,7 +854,7 @@ def wand_topk_from_shards(
         )
         LAST_SKIP_STATS["floor_cached"] = int(cached_floor is not None)
         keep, _thr, cand_keys, keep_ranges = plan_blocks(
-            meta, cfg, qtf_map, k, extra_ub, min_threshold=cached_floor
+            meta, cfg, qtf, k, extra_ub, min_threshold=cached_floor
         )
         if cached_floor is not None:
             # the cached floor IS what the wave would recompute — same
@@ -866,7 +907,7 @@ def wand_topk_from_shards(
                 d1.groupBy("doc_key")
                 .agg(
                     F.sum(
-                        fw1 * F.col("weight") * term_lookup(qtf_map)
+                        fw1 * F.col("weight") * term_lookup(qtf)
                         * F.lit(cfg.blend_scale)
                     ).alias("s")
                 )
@@ -881,7 +922,7 @@ def wand_topk_from_shards(
                 if floor_key is not None:
                     meta_cache[floor_key] = floor
                 keep, _thr, cand_keys, keep_ranges = plan_blocks(
-                    meta, cfg, qtf_map, k, extra_ub, min_threshold=floor
+                    meta, cfg, qtf, k, extra_ub, min_threshold=floor
                 )
         LAST_SKIP_STATS["total"] = len(meta)
         LAST_SKIP_STATS["kept"] = len(keep)
@@ -939,17 +980,6 @@ def wand_topk_from_shards(
         # tasks instead of one near-empty Python task per partition
         pruned = pruned.coalesce(int(q_parts))
 
-    # term-bag scoring needs ONLY the precomputed impact weights: skip
-    # the tf/positions varbyte decode and their Arrow transfer entirely;
-    # when the planner proved doc-level pruning admissible, only the
-    # candidate postings survive the decode (everything downstream —
-    # Arrow, bucket shuffle, kernel — scales with |candidates|), and
-    # kept blocks additionally shed their provably-sub-threshold
-    # sub-ranges (range-level pruning — see plan_blocks)
-    decoded = decode_shards(
-        pruned, fields=("weight",), doc_keys=cand_keys,
-        key_ranges=(keep_ranges or None) if meta is not None else None,
-    )
     if dense_keys and meta is not None:
         # loud guard for the silent-empty failure mode: shards built
         # with 60-bit hash keys served as dense keys match no card. The
@@ -965,26 +995,52 @@ def wand_topk_from_shards(
                 "shards with doc_dim= and pass the matching dense "
                 "doc_map, or drop dense_keys"
             )
-    if dense_keys:
-        # score on the dense long keys; doc_id strings only after top-k
-        keyed = decoded.withColumnRenamed("doc_key", "doc_id")
+    # term-bag scoring needs ONLY the precomputed impact weights: skip
+    # the tf/positions varbyte decode and their Arrow transfer entirely;
+    # when the planner proved doc-level pruning admissible, only the
+    # candidate postings survive the decode (everything downstream —
+    # Arrow, bucket shuffle, kernel — scales with |candidates|), and
+    # kept blocks additionally shed their provably-sub-threshold
+    # sub-ranges (range-level pruning — see plan_blocks)
+    decode_kw = {
+        "doc_keys": cand_keys,
+        "key_ranges": (keep_ranges or None) if meta is not None else None,
+    }
+    if dense_keys and q_parts == 1 and kernel == "taat":
+        # the planned volume fits one task, which then holds every
+        # posting of every doc: decode and score in one Python pass
+        ranked = _one_task_topk(pruned, cfg, k, pr_bc, qtf, **decode_kw)
     else:
-        keyed = decoded.join(doc_map, "doc_key")
-    hits = keyed.select(
-        "doc_id", "field",
-        term_lookup({t: i for i, t in enumerate(term_list)}).alias("qterm_id"),
-        (F.col("weight") * term_lookup(
-            {t: float(counts[t]) for t in term_list}
-        )).alias("contrib"),
-    )
-    ranked = _wand_from_hits(
-        hits, cfg, k, n_buckets, pr_bc, kernel, shuffle_parts=q_parts
-    )
+        decoded = decode_shards(pruned, fields=("weight",), **decode_kw)
+        if dense_keys:
+            # score on the dense long keys; doc_id strings only after top-k
+            keyed = decoded.withColumnRenamed("doc_key", "doc_id")
+        else:
+            keyed = decoded.join(doc_map, "doc_key")
+        hits = keyed.select(
+            "doc_id", "field",
+            term_lookup({t: i for i, t in enumerate(term_list)}).alias("qterm_id"),
+            (F.col("weight") * term_lookup(qtf)).alias("contrib"),
+        )
+        ranked = _wand_from_hits(
+            hits, cfg, k, n_buckets, pr_bc, kernel, shuffle_parts=q_parts
+        )
     if not dense_keys:
         return ranked
     if doc_map is None:
         return ranked.withColumnRenamed("doc_id", "doc_key")
     return hydrate_doc_ids(ranked, doc_map, k)
+
+
+def empty_topk(spark: SparkSession, dense_keys: bool, doc_map) -> DataFrame:
+    """The zero-row top-k of a shard query, keyed like a non-empty
+    result: ``doc_key long`` for dense keys without a doc_map (the
+    serving engine), ``doc_id string`` otherwise."""
+    key = "doc_key long" if dense_keys and doc_map is None else "doc_id string"
+    return spark.createDataFrame(
+        [], f"{key}, title_rank double, body_rank double, "
+        "pagerank double, score double"
+    )
 
 
 def build_doc_map(corpus: DataFrame) -> DataFrame:

@@ -382,6 +382,16 @@ def _spark_jobs(spark, group, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _job_stage_tasks(spark, group):
+    """Task count of each stage of each job started under ``group``, in
+    job order: [[tasks per stage] per job]."""
+    st = spark.sparkContext.statusTracker()
+    return [
+        [st.getStageInfo(s).numTasks for s in st.getJobInfo(j).stageIds]
+        for j in sorted(st.getJobIdsForGroup(group))
+    ]
+
+
 def _assert_same_cards(got, want):
     assert [c["doc_id"] for c in got] == [c["doc_id"] for c in want]
     for a, b in zip(got, want):
@@ -395,7 +405,9 @@ def _assert_same_cards(got, want):
 def test_warehouse_query_is_two_jobs(spark, docs_tiny, tmp_path):
     """A repeated shard query costs the top-k job plus one keyed read of
     doc_cards — at most 3 Spark jobs for a WAND bag and for a phrase —
-    and its cards equal the memory backend's."""
+    and its cards equal the memory backend's. A WAND bag this small
+    plans one task, so its top-k job is one stage of one task: decode
+    and score in one Python pass, no bucket shuffle."""
     from spaghettisearch_spark.api import SearchEngine
 
     eng = SearchEngine.build(
@@ -412,8 +424,47 @@ def test_warehouse_query_is_two_jobs(spark, docs_tiny, tmp_path):
             lambda: eng.query(q, k=5, use_wand=wand, backend="shards"),
         )
         assert n_jobs <= 3, (q, n_jobs)
+        if wand:
+            assert _job_stage_tasks(spark, f"two-jobs-{i}")[0] == [1]
         assert again == first
         _assert_same_cards(again, mem)
+
+
+def test_multi_task_tail_matches_one_task_and_oracle(
+    spark, docs_small, oracle_small, tmp_path
+):
+    """A WAND bag planned over several tasks (a tiny
+    query_target_postings_per_task) keeps the shuffled bucket tail, and
+    ranks like the one-task pass and the pandas oracle, PageRank
+    blended in."""
+    from dataclasses import replace
+
+    from spaghettisearch_spark.api import SearchEngine
+    from spaghettisearch_spark.oracle.pandas_oracle import oracle_search
+
+    eng = SearchEngine.build(
+        spark, spark.createDataFrame(docs_small),
+        warehouse_dir=str(tmp_path / "wh"),
+    )
+    many = replace(
+        eng, cfg=replace(eng.cfg, query_target_postings_per_task=1),
+        meta_cache={},
+    )
+    pr = {r["doc_id"]: r["rank"] for r in eng.pagerank.collect()}
+    for i, q in enumerate(["parse buffer flush", "dispatch buffer kernel parse"]):
+        one = eng.query(q, k=10, use_wand=True, backend="shards")
+        many.query(q, k=10, use_wand=True, backend="shards")  # fills the caches
+        got, _ = _spark_jobs(
+            spark, f"many-tasks-{i}",
+            lambda: many.query(q, k=10, use_wand=True, backend="shards"),
+        )
+        topk_stages = _job_stage_tasks(spark, f"many-tasks-{i}")[0]
+        assert len(topk_stages) == 2 and max(topk_stages) > 1, topk_stages
+        want = oracle_search(oracle_small, q, eng.cfg, pagerank=pr, k=10)
+        ids = [c["doc_id"] for c in got]
+        assert ids == [c["doc_id"] for c in one] == list(want["doc_id"]), q
+        for c, w in zip(got, want["score"]):
+            assert c["final_rank"] == pytest.approx(w, abs=1e-6)
 
 
 def _merge_batch(spark, eng, rows):

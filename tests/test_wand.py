@@ -164,6 +164,58 @@ def test_wand_from_shards_dense_keys(spark, corpus_small, index_small):
     shards.unpersist(); doc_map.unpersist(); doc_dim.unpersist(); pr.unpersist()
 
 
+def test_empty_bag_schema_matches_nonempty(spark, corpus_small, index_small):
+    """An empty bag returns the columns and types of a non-empty result,
+    from both shard entry points, in every key mode: dense keys without
+    a doc_map (the serving engine), dense keys with one, hash keys."""
+    from pyspark.sql import functions as F
+
+    from spaghettisearch_spark.operators.bm25 import search_from_shards
+    from spaghettisearch_spark.operators.compression import (
+        build_doc_dim,
+        build_posting_shards,
+    )
+    from spaghettisearch_spark.operators.wand import (
+        build_doc_map,
+        wand_topk_from_shards,
+    )
+
+    n_docs = corpus_small.count()
+    doc_dim = build_doc_dim(corpus_small).cache()
+    dense = build_posting_shards(
+        index_small.postings, n_docs, DEFAULT,
+        doc_dim=doc_dim, weight_col="bm25_weight",
+    ).cache()
+    dense_map = doc_dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
+    hashed = build_posting_shards(
+        index_small.postings, n_docs, DEFAULT, weight_col="bm25_weight"
+    ).cache()
+    hash_map = build_doc_map(corpus_small).cache()
+    terms, _ = parse_query("parse")
+    for shards, doc_map, dense_keys, key in [
+        (dense, None, True, "doc_key"),
+        (dense, dense_map, True, "doc_id"),
+        (hashed, hash_map, False, "doc_id"),
+    ]:
+        got = [
+            wand_topk_from_shards(
+                spark, shards, doc_map, bag, DEFAULT, k=5,
+                dense_keys=dense_keys,
+            ).dtypes
+            for bag in ([], terms)
+        ] + [
+            search_from_shards(
+                spark, shards, doc_map, q, DEFAULT, k=5,
+                skip_key_check=True, dense_keys=dense_keys,
+            ).dtypes
+            for q in ("", "parse")
+        ]
+        assert got[0][0][0] == key
+        assert all(g == got[0] for g in got), (key, got)
+    for f in (dense, hashed, hash_map, doc_dim):
+        f.unpersist()
+
+
 def test_wand_shards_meta_cache(spark, corpus_small, index_small):
     """meta_cache: the per-term block-metadata dictionary a serving node
     keeps. Cached and uncached planning must produce identical results;

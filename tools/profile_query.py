@@ -2,7 +2,8 @@
 
 Builds the sf0.1 index + shards exactly like bench.py, then times:
   - the session's fixed action floor (collect on a 1-row cached frame)
-  - each sub-stage of wand_topk_from_shards in isolation
+  - the decode alone, and the engine's top-k job at the default task
+    sizing and forced to several tasks (stages and tasks printed)
   - the full query under config variations (AQE on/off, shuffle partitions)
 
 Run:  python tools/profile_query.py [n_docs]
@@ -13,6 +14,7 @@ from __future__ import annotations
 import os
 import sys
 import time
+from dataclasses import replace
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -95,24 +97,33 @@ def main():
     print("decode_only_collect", t(lambda: decode_shards(
         pruned, fields=("weight",)).collect()))
 
-    # stage 2: decode + bucket groupBy + kernel (no card lookup)
-    from spaghettisearch_spark.operators.wand import _wand_from_hits, term_lookup
-    from collections import Counter
-    counts = Counter(wand_terms)
+    # the engine's top-k job (no card read), timed at the default task
+    # sizing (one task: decode and score in one Python pass) and forced
+    # to several tasks (the shuffled bucket tail), with the stages and
+    # tasks each run's top-k job took
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    for name, c in (
+        ("topk_default", cfg),
+        ("topk_many_tasks", replace(cfg, query_target_postings_per_task=1)),
+    ):
+        cache: dict = {}
 
-    def kernel_only():
-        terms = sorted(counts)
-        decoded = decode_shards(pruned, fields=("weight",))
-        hits = decoded.select(
-            F.col("doc_key").alias("doc_id"), "field",
-            term_lookup({x: i for i, x in enumerate(terms)}).alias("qterm_id"),
-            (F.col("weight") * term_lookup(
-                {x: float(counts[x]) for x in terms}
-            )).alias("contrib"),
-        )
-        _wand_from_hits(hits, cfg, 50, 16).collect()
+        def topk(c=c, cache=cache):
+            wand_topk_from_shards(
+                spark, shards, None, wand_terms, c, k=50, dense_keys=True,
+                meta_cache=cache, two_phase="auto",
+            ).collect()
 
-    print("kernel_no_hydration", t(kernel_only))
+        print(name, t(topk))
+        sc.setJobGroup(name, name)
+        topk()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        for j in sorted(st.getJobIdsForGroup(name)):
+            # stages of the cached shards' lineage are listed but skipped
+            infos = [st.getStageInfo(s) for s in st.getJobInfo(j).stageIds]
+            ran = [i.numCompletedTasks for i in infos if i and i.numCompletedTasks]
+            print(f"  {name} job {j}: {len(ran)} stage(s) run, tasks {ran}")
 
     # exhaustive for comparison
     print("exhaustive_search", t(lambda: search(
