@@ -118,8 +118,8 @@ class SearchEngine:
     whose planned decode volume fits one task
     (``cfg.query_target_postings_per_task``) runs its top-k job as one
     stage of one task, decoding and scoring in one Python pass; larger
-    plans, phrases and non-WAND queries shuffle postings to the bucket
-    kernel.
+    plans shuffle postings to the bucket kernel, and phrase and non-WAND
+    queries do so at any size.
 
     ``doc_cards`` (CARD_COLS, one row per doc, clustered by the dense
     doc_key) is written once at build: zstd parquet under

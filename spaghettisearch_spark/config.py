@@ -72,12 +72,13 @@ class EngineConfig:
     # summed df after range/candidate pruning), so the decode stage and
     # the bucket-kernel shuffle are sized to ~this many postings per
     # task instead of inheriting corpus-scale partition defaults. A WAND
-    # bag whose volume fits ONE task (every serving query over the
-    # local corpora) runs its top-k as one stage of one task: decode and
-    # score in one Python pass, no bucket shuffle. A hot query over
-    # 10^9-posting lists fans out to thousands of tasks and keeps the
-    # shuffled tail, from the same rule. Matches block_target_postings'
-    # order of magnitude.
+    # bag whose volume fits ONE task (every WAND bag over the local test
+    # and benchmark corpora) runs its top-k as one stage of one task:
+    # decode and score in one Python pass, no bucket shuffle. A hot
+    # query over 10^9-posting lists fans out to thousands of tasks and
+    # keeps the shuffled tail, from the same rule. Phrase queries and
+    # use_wand=False term queries keep the shuffled tail at any size.
+    # Matches block_target_postings' order of magnitude.
     query_target_postings_per_task: int = 65536
 
     # stemming on/off (oracle SQL path runs unstemmed)

@@ -30,11 +30,13 @@ Distributed shape (the part that must survive 100 TB):
 
   The one-task case: when the skip planner sizes a dense-keyed shard
   query to ONE task (kept decode volume <=
-  ``cfg.query_target_postings_per_task``, the serving norm), steps 2-3
-  collapse. That task already holds every posting of every doc, so it
-  decodes the kept blocks and runs the bucket kernel over them in the
-  same Python pass (_one_task_topk): one stage, one task, one Python
-  crossing, no shuffle. Larger plans keep the bucketed tail above.
+  ``cfg.query_target_postings_per_task``; every WAND bag over the local
+  corpora), steps 2-3 collapse. That task already holds every posting
+  of every doc, so it decodes the kept blocks and runs the bucket
+  kernel over them in the same Python pass (_one_task_topk): one stage,
+  one task, one Python crossing, no shuffle. Larger plans keep the
+  bucketed tail above, and so do phrase queries (bm25.search_from_shards)
+  at any size.
 
 Exactness: every bucket returns its true local top-k, and the global
 merge of true local top-k sets contains the true global top-k (with one
@@ -227,10 +229,7 @@ def wand_topk(
         )
     k = k or cfg.top_k
     if not query_terms:
-        return spark.createDataFrame(
-            [], "doc_id string, title_rank double, body_rank double, "
-            "pagerank double, score double"
-        )
+        return empty_topk(spark, False, None)
     counts = Counter(query_terms)
     terms = sorted(counts)
     hits = posting_hits(index, terms, cfg).select(
