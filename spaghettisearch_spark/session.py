@@ -20,6 +20,30 @@ stage input sizes are NOT known at plan time — e.g. ad-hoc corpora
 with no size statistics — to get runtime coalescing/skew handling
 back; every operator is correct under both settings (exactness never
 depends on the physical plan).
+
+Python worker daemon: sessions from ``get_spark`` start their Python
+workers through ``spaghettisearch_spark.worker``
+(``spark.python.daemon.module``). It freezes the zip-import caches of
+the archives on the daemon's ``sys.path`` at startup: Spark's
+``pyspark.zip``, the py4j zip and the spark-core jar. PySpark calls
+``importlib.invalidate_caches()`` at the start of every task, and on
+CPython 3.11 that re-reads each archive's whole directory once per
+cached importer, in pure Python. Measured inside a warm worker on a
+4-core host, that took ~210 ms a task (12 importers over
+``pyspark.zip``, 1,328 files, ~11 ms each; 2 over the 5,359-file
+spark-core jar, ~48 ms each), and ~0.1 ms with the freeze; a 1-row
+``mapInPandas`` job fell from ~350 to ~145 ms median. The cost is fixed
+per Python crossing, so small query batches paid it whole. Freezing is
+safe because those archives are installed files that do not change
+while the application runs; archives added later (``addPyFile``,
+``--py-files``) are still re-read as CPython does.
+
+The freeze applies only to sessions built by ``get_spark`` with the
+daemon on (Spark's default, ``spark.python.use.daemon``). A session
+built elsewhere, such as one a caller passes to ``__spark_entry__``,
+pays the per-task re-read. The daemon imports the
+package before any task runs, so the executors' Python must find it at
+startup: installed, on ``PYTHONPATH``, or in the working directory.
 """
 
 from __future__ import annotations
@@ -80,6 +104,9 @@ def get_spark(
         # executors carry the data
         .config("spark.driver.memory", driver_memory())
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # start Python workers with Spark's archive directories read once,
+        # not once per task (module docstring)
+        .config("spark.python.daemon.module", "spaghettisearch_spark.worker")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -22,21 +22,18 @@ def main() -> None:
     args = ap.parse_args()
 
     from pyspark import StorageLevel
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from spaghettisearch_spark.config import DEFAULT
     from spaghettisearch_spark.operators import index_build as ib
+    from spaghettisearch_spark.session import get_spark
     from spaghettisearch_spark.sources.corpus import ingest
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cores}]")
-        .appName(f"profile-{args.cores}")
-        .config("spark.sql.shuffle.partitions", str(args.cores * 2))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        f"profile-{args.cores}",
+        cores=args.cores,
+        shuffle_partitions=args.cores * 2,
+        adaptive=True,
     )
     spark.sparkContext.setLogLevel("ERROR")
 

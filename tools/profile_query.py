@@ -1,7 +1,8 @@
 """Per-query latency breakdown for the shard-backed WAND path (guide §1).
 
 Builds the sf0.1 index + shards exactly like bench.py, then times:
-  - the session's fixed action floor (collect on a 1-row cached frame)
+  - the session's fixed action floors: collect on a 1-row cached frame,
+    and the same row through one ``mapInPandas`` Python crossing
   - the decode alone, and the engine's top-k job at the default task
     sizing and forced to several tasks (stages and tasks printed)
   - the full query under config variations (AQE on/off, shuffle partitions)
@@ -79,6 +80,8 @@ def main():
     one = spark.createDataFrame([(1,)], "x int").cache()
     one.count()
     print("floor_1row_collect", t(lambda: one.collect()))
+    print("floor_1row_mapInPandas", t(lambda: one.mapInPandas(
+        lambda batches: batches, "x int").collect()))
     print("floor_createDataFrame", t(lambda: spark.createDataFrame(
         [(x, i, 1.0) for i, x in enumerate(wand_terms)],
         "term string, qterm_id int, qtf double").collect()))

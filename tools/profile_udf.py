@@ -18,19 +18,16 @@ def main() -> None:
     ap.add_argument("--corpus", required=True)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from spaghettisearch_spark.functions.stem_udf import stem_tokens_udf
     from spaghettisearch_spark.functions.tokenize import tokenize_col
+    from spaghettisearch_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cores}]")
-        .appName(f"profudf-{args.cores}")
-        .config("spark.sql.shuffle.partitions", str(args.cores * 2))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        f"profudf-{args.cores}",
+        cores=args.cores,
+        shuffle_partitions=args.cores * 2,
     )
     spark.sparkContext.setLogLevel("ERROR")
     docs = spark.read.parquet(args.corpus).repartition(args.cores * 4).cache()

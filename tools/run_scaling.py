@@ -58,7 +58,12 @@ def run(cores: int, corpus: Path, zip_path: Path) -> dict:
         "--corpus", str(corpus),
         "--reps", os.environ.get("SCALING_REPS", "4"),
     ]
+    # the session's worker daemon imports the package before any task
+    # adds the --py-files zip, so it must be on the daemon's path too
     env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (str(REPO), env.get("PYTHONPATH")) if p
+    )
     out = subprocess.run(cmd, capture_output=True, text=True, env=env, timeout=3600)
     for line in reversed(out.stdout.strip().splitlines()):
         if line.startswith("{"):
