@@ -157,7 +157,7 @@ def _engine_shards(spark: SparkSession, sf_dir: str):
         n_docs = corpus.count()
         # dense-keyed shards (doc_idx) + deferred doc_id hydration: the
         # at-scale shape — the corpus-sized map never rides a per-query
-        # shuffle (wand.py wand_topk_from_shards dense_keys docstring).
+        # shuffle (wand.py wand_topk_from_shards docstring).
         #
         # The shards are produced by a SIMULATED RE-CRAWL, so every
         # hash-green shard entry also gates the composed incremental
@@ -338,7 +338,7 @@ def q_wand_topk_shards(spark, sf_dir):
     shards, doc_map, meta = _engine_shards(spark, sf_dir)
     res = wand_topk_from_shards(
         spark, shards, doc_map, QUERY_TERMS, CFG, k=20, n_buckets=8,
-        dense_keys=True, meta_cache=meta,
+        meta_cache=meta,
     )
     return res.select(
         F.col("doc_id").alias("did"), _e("score", 100000).alias("score_e5")
@@ -356,29 +356,29 @@ def q_stats_refresh_topk(spark, sf_dir):
     clean-build paths — refreshed-from-another-scorer ==
     built-from-scratch, weight-exact to 1e-5."""
     from spaghettisearch_spark.operators.compression import (
+        build_doc_dim,
         build_posting_shards,
         key_doc_stats,
         refresh_shard_stats,
     )
-    from spaghettisearch_spark.operators.wand import (
-        build_doc_map,
-        wand_topk_from_shards,
-    )
+    from spaghettisearch_spark.operators.wand import wand_topk_from_shards
 
     idx = _engine_index(spark, sf_dir)
     corpus = idx._driver_corpus
-    n_docs = corpus.count()
+    dim = build_doc_dim(corpus).cache()
+    n_docs = dim.count()
     # default weight_col="weight" = the tf-idf column — deliberately the
     # WRONG scorer for WAND, to be repaired in place by the refresh
-    stale = build_posting_shards(idx.postings, n_docs, CFG).cache()
+    stale = build_posting_shards(idx.postings, n_docs, CFG, doc_dim=dim).cache()
     stale.count()
     refreshed = refresh_shard_stats(
-        stale, idx.term_stats, key_doc_stats(idx.doc_stats, None),
+        stale, idx.term_stats, key_doc_stats(idx.doc_stats, dim),
         idx.corpus_stats.collect(), CFG, drift_threshold=0.0,
     )
     res = wand_topk_from_shards(
-        spark, refreshed, build_doc_map(corpus), QUERY_TERMS, CFG,
-        k=20, n_buckets=8,
+        spark, refreshed,
+        dim.select(F.col("doc_idx").alias("doc_key"), "doc_id"),
+        QUERY_TERMS, CFG, k=20, n_buckets=8,
     )
     return res.select(
         F.col("doc_id").alias("did"), _e("score", 100000).alias("score_e5")

@@ -285,7 +285,7 @@ def main() -> None:
     ).cache()
     doc_map.count()
     qset["q_wand_shards"] = lambda: wand_topk_from_shards(
-        spark, shards, doc_map, wand_terms, cfg, k=50, dense_keys=True,
+        spark, shards, doc_map, wand_terms, cfg, k=50,
         meta_cache=shard_meta,
     )
     # the same query against PARQUET-backed shards partitioned by shard id
@@ -300,7 +300,7 @@ def main() -> None:
     shards_pq = spark.read.parquet(_shard_dir)
     shard_meta_pq: dict = {}
     qset["q_wand_shards_parquet"] = lambda: wand_topk_from_shards(
-        spark, shards_pq, doc_map, wand_terms, cfg, k=50, dense_keys=True,
+        spark, shards_pq, doc_map, wand_terms, cfg, k=50,
         meta_cache=shard_meta_pq,
     )
     # the same warehouse served through the SearchEngine facade (parse ->
@@ -377,11 +377,11 @@ def main() -> None:
     for q in (
         wand_topk(spark, idx, wand_terms, cfg, k=50, n_buckets=cpus),
         wand_topk_from_shards(
-            spark, shards, doc_map, wand_terms, cfg, k=50, dense_keys=True,
+            spark, shards, doc_map, wand_terms, cfg, k=50,
             meta_cache=shard_meta,
         ),
         wand_topk_from_shards(
-            spark, shards_pq, doc_map, wand_terms, cfg, k=50, dense_keys=True,
+            spark, shards_pq, doc_map, wand_terms, cfg, k=50,
             meta_cache=shard_meta_pq,
         ),
     ):
@@ -416,7 +416,7 @@ def main() -> None:
     got_mm2p = [
         r["doc_id"]
         for r in wand_topk_from_shards(
-            spark, shards, doc_map, wand_terms, cfg, k=50, dense_keys=True,
+            spark, shards, doc_map, wand_terms, cfg, k=50,
             meta_cache=mm_cache, two_phase=True,
         ).collect()
     ]
@@ -488,7 +488,7 @@ def main() -> None:
     def zq(bag, meta=zmeta, sh=None, two_phase=False, k=50):
         return wand_topk_from_shards(
             spark, sh if sh is not None else zshards, zmap, bag, zcfg,
-            k=k, dense_keys=True, meta_cache=meta, two_phase=two_phase,
+            k=k, meta_cache=meta, two_phase=two_phase,
         )
 
     # hard exactness gate before timing anything
@@ -763,7 +763,7 @@ def main() -> None:
 
         def zlq(bag, k=50, two_phase=False, meta=None):
             return wand_topk_from_shards(
-                spark, zlshards, zlmap, bag, zcfg, k=k, dense_keys=True,
+                spark, zlshards, zlmap, bag, zcfg, k=k,
                 meta_cache=zlmeta if meta is None else meta,
                 two_phase=two_phase,
             )

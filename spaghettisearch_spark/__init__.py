@@ -10,8 +10,7 @@ warehouse.
 Layout:
     functions/   tokenization, Porter2 stemming (pandas UDF), hashing, snippets
     operators/   index build, compression, BM25, phrase, WAND, PageRank, topics,
-                 links, incremental maintenance; textops/similarity/graph
-                 (dedup/ANN family, used by no search path, slated for removal)
+                 links, incremental maintenance
     sources/     corpus ingest adapters + stage checkpoints with lineage
     plans/       full build pipeline DAG
     streaming/   Structured Streaming ingest

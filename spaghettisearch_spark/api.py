@@ -135,9 +135,9 @@ class SearchEngine:
     pagerank: DataFrame | None = None
     # (doc_id, category, rank) from operators.topics.compute_topic_pagerank
     topic_pagerank: DataFrame | None = None
-    # compressed-warehouse serving backend (build(with_shards=True)):
-    # dense-keyed posting shards + the per-term block-metadata cache a
-    # serving node keeps across queries
+    # compressed-warehouse serving backend (build(warehouse_dir=...)):
+    # the read-back posting_shards frame + the per-term block-metadata
+    # cache a serving node keeps across queries
     shards: DataFrame | None = None
     doc_cards: DataFrame | None = None
     # ONE shared cache: per-term block metadata is pagerank-invariant, so
@@ -147,9 +147,8 @@ class SearchEngine:
     # keyed per topic (pr_max_key=_PR_MAX_KEY + ":" + topic)
     meta_cache: dict = field(default_factory=dict)
     # parquet warehouse root (build(..., warehouse_dir=...)): shards are
-    # served from the partitionBy("shard") read-back frame instead of a
-    # cached in-memory one — the at-scale layout (partition pruning +
-    # column-pruned metadata reads), and the substrate the LSM
+    # served from the partitionBy("shard") read-back frame — partition
+    # pruning + column-pruned metadata reads, and the substrate the LSM
     # maintenance methods (apply_merge / refresh_stats) rewrite with
     # dynamic partition overwrite, I/O bounded by the touched shard
     # partitions
@@ -167,7 +166,6 @@ class SearchEngine:
         cfg: EngineConfig = DEFAULT,
         with_pagerank: bool = True,
         topics: DataFrame | None = None,
-        with_shards: bool = False,
         warehouse_dir: str | None = None,
     ) -> "SearchEngine":
         """One-call build from a raw (repo, path, commit, lang, content)
@@ -178,7 +176,8 @@ class SearchEngine:
         blend (its computeTopicProbs is a no-op, SURVEY.md §3.1).
 
         Always writes ``doc_cards`` (the family is aggregated here,
-        once). ``warehouse_dir`` (implies with_shards): persist the
+        once), cached in memory without ``warehouse_dir``. The shard
+        backend exists only with ``warehouse_dir``: persist the
         compressed shards as partitionBy("shard") zstd parquet and the
         cards as zstd parquet, and SERVE from the read-back frames —
         queries then partition-prune to the query terms' shard
@@ -210,32 +209,26 @@ class SearchEngine:
             f"{warehouse_dir}/doc_cards" if warehouse_dir is not None else None,
         )
         shards = None
-        if with_shards or warehouse_dir is not None:
+        if warehouse_dir is not None:
             # warehouse-resident serving: dense-keyed compressed shards
             # (cfg must be bm25 — asserted at query time by the shard
             # paths)
-            built = build_posting_shards(
+            shards_path = f"{warehouse_dir}/posting_shards"
+            # cluster by shard before the partitioned write (guide §6):
+            # without this every upstream task writes its own file into
+            # every shard directory (tasks x shards tiny files);
+            # clustered, each directory holds one well-sized file and a
+            # term's pruned scan opens ONE file instead of dozens
+            build_posting_shards(
                 idx.postings, n_docs, cfg,
                 doc_dim=doc_dim, weight_col="bm25_weight",
-            )
-            if warehouse_dir is not None:
-                shards_path = f"{warehouse_dir}/posting_shards"
-                # cluster by shard before the partitioned write (guide
-                # §6): without this every upstream task writes its own
-                # file into every shard directory (tasks x shards tiny
-                # files); clustered, each directory holds one
-                # well-sized file and a term's pruned scan opens ONE
-                # file instead of dozens
-                built.repartition("shard").write.mode("overwrite").option(
-                    "compression", "zstd"
-                ).partitionBy("shard").parquet(shards_path)
-                # serve from the read-back frame: queries prune to the
-                # terms' shard partitions and read only the metadata /
-                # requested payload columns
-                shards = spark.read.parquet(shards_path)
-            else:
-                shards = built.cache()
-                shards.count()
+            ).repartition("shard").write.mode("overwrite").option(
+                "compression", "zstd"
+            ).partitionBy("shard").parquet(shards_path)
+            # serve from the read-back frame: queries prune to the
+            # terms' shard partitions and read only the metadata /
+            # requested payload columns
+            shards = spark.read.parquet(shards_path)
         doc_dim.unpersist()
         eng = cls(
             spark=spark, index=idx, cfg=cfg, pagerank=pr, topic_pagerank=tpr,
@@ -296,7 +289,7 @@ class SearchEngine:
             raise ValueError(f"unknown backend {backend!r}")
         if backend == "shards" and self.shards is None:
             raise ValueError(
-                'backend="shards" requires a build(..., with_shards=True)'
+                'backend="shards" requires a build(..., warehouse_dir=...)'
             )
         if not terms and not phrases:
             return [], "doc_id", terms, phrases
@@ -312,7 +305,7 @@ class SearchEngine:
                 )
                 topk = wand_topk_from_shards(
                     self.spark, self.shards, None, terms, self.cfg,
-                    k=k, pagerank=pr, dense_keys=True,
+                    k=k, pagerank=pr,
                     meta_cache=self.meta_cache, pr_max_key=pr_key,
                     # planner decides per query whether the exact-floor
                     # wave pays (kept posting volume vs
@@ -325,8 +318,6 @@ class SearchEngine:
                 topk = search_from_shards(
                     self.spark, self.shards, None, q, self.cfg,
                     pagerank=pr, k=k,
-                    skip_key_check=True,  # build() made the pair itself
-                    dense_keys=True,  # build() keys by dense doc_idx
                     meta_cache=self.meta_cache,  # sizes the decode stages
                 )
         else:
@@ -389,7 +380,7 @@ class SearchEngine:
         ``backend="shards"`` serves the SAME query surface (terms,
         phrases, PR/topic blend, wand, cards, snippets) from the
         compressed posting shards — the warehouse-resident path
-        (requires build(..., with_shards=True)); results are asserted
+        (requires build(..., warehouse_dir=...)); results are asserted
         identical to the in-memory backend in test_api."""
         cards = self._with_cards(*self._ranked(q, k, use_wand, topic, backend))
         cols = ["doc_id", *_SCORE_COLS, *CARD_META, "snippet"]

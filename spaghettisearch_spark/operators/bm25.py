@@ -306,8 +306,6 @@ def search_from_shards(
     cfg: EngineConfig = DEFAULT,
     pagerank=None,
     k: int | None = None,
-    skip_key_check: bool = False,
-    dense_keys: bool | None = None,
     meta_cache: dict | None = None,
 ) -> DataFrame:
     """The FULL query pipeline (free terms + phrases + field blend + PR)
@@ -316,27 +314,17 @@ def search_from_shards(
     values as ``search`` on the in-memory index the shards were built
     from; asserted in test_api.
 
-    ``dense_keys`` (None = probe the doc_map once): with dense doc_idx
-    keys the free-term and phrase rows (doc_key, field, contrib) run
-    through the WAND paths' bucket kernel (wand._wand_from_hits), which
-    blends the fields and PageRank and cuts the top-k — one top-k tail
-    for every shard query. ``doc_map=None`` (the serving engine) returns
-    the k rows keyed by ``doc_key``; a direct caller that passes the map
-    gets doc_id strings (wand.hydrate_doc_ids). With hash keys the map
-    joins before scoring because tie-breaking needs the doc_id strings,
-    and the in-memory tail (_blend_and_topk) ranks them.
+    The free-term and phrase rows (doc_key, field, contrib) run on the
+    dense doc_key through the WAND paths' bucket kernel
+    (wand._wand_from_hits), which blends the fields and PageRank and
+    cuts the top-k — one top-k tail for every shard query.
+    ``doc_map=None`` (the serving engine) returns the k rows keyed by
+    ``doc_key``; a direct caller that passes the (doc_key long, doc_id
+    string) map gets doc_id strings (wand.hydrate_doc_ids).
 
-    ``pagerank``: in dense mode the kernel's Broadcast lookup or an
-    ad-hoc (doc_id, rank) frame (see wand.wand_topk_from_shards); in
-    hash mode a (doc_id, rank) frame.
-
-    ``doc_map`` (doc_key long, doc_id string) must use the SAME key mode
-    the shards were built with — dense doc_idx (build_doc_dim) or 60-bit
-    hash keys (wand.build_doc_map). A mismatched pair joins nothing and
-    would silently return empty results, so a cheap two-probe guard
-    (one sampled key from each side; dense keys are < 2^44, hash keys
-    uniform in [0, 2^60)) raises loudly instead — ``skip_key_check=True``
-    for callers that constructed the pair themselves (SearchEngine).
+    ``pagerank``: the kernel's Broadcast lookup or an ad-hoc (doc_id,
+    rank) frame keyed through ``doc_map`` (see
+    wand.wand_topk_from_shards).
 
     BM25-only (blocks store precomputed impact weights; tfidf_cosine's
     per-query normalization needs the in-memory path). Free terms decode
@@ -369,46 +357,10 @@ def search_from_shards(
             "shard-backed serving requires bm25 impact weights; "
             "tfidf_cosine needs the in-memory path"
         )
-    # ONE doc_map probe serves both the key-mode guard and the
-    # dense_keys default — two back-to-back limit(1) jobs for the same
-    # row would double the per-query fixed cost for default callers
-    m_row = (
-        doc_map.select("doc_key").limit(1).collect()
-        if (not skip_key_check or dense_keys is None)
-        else []
-    )
-    if not skip_key_check:
-        s_row = (
-            shards.select(F.element_at("top_doc_keys", 1).alias("k"))
-            .filter(F.col("k").isNotNull()).limit(1).collect()
-            if "top_doc_keys" in shards.columns
-            else []
-        )
-        if s_row and m_row:
-            s_dense = int(s_row[0]["k"]) < (1 << 44)
-            m_dense = int(m_row[0]["doc_key"]) < (1 << 44)
-            if s_dense != m_dense:
-                raise ValueError(
-                    "shards and doc_map use different doc_key modes "
-                    f"(shards {'dense' if s_dense else 'hash'}, doc_map "
-                    f"{'dense' if m_dense else 'hash'}) — the join would "
-                    "silently match nothing; build both with the same "
-                    "doc_dim, or both with hash keys"
-                )
     k = k or cfg.top_k
     free_terms, phrase_lists = parse_query(
         query, cfg.remove_stopwords, cfg.stem
     )
-    if dense_keys is None:
-        # from the shared probe above: dense doc_idx values are < n_docs
-        # (far below 2^44), hash keys uniform in [0, 2^60)
-        dense_keys = bool(m_row) and int(m_row[0]["doc_key"]) < (1 << 44)
-    # dense-key serving scores entirely on long keys (the dense doc_idx
-    # is assigned in global doc_id sort order, so (score desc, key asc)
-    # is the same total order as the string tie-break). Hash-key mode
-    # keeps the pre-scoring join (hash keys don't preserve doc_id
-    # order, so the tie-break needs the strings).
-    pre_map = None if dense_keys else doc_map
     # one metadata fetch for the query's first-seen terms: it sizes the
     # kernel's bucket exchange, and the per-part lookups below hit it
     cache = {} if meta_cache is None else meta_cache
@@ -429,13 +381,8 @@ def search_from_shards(
         if n_parts is not None:
             pruned = pruned.coalesce(n_parts)
         decoded = decode_shards(pruned, fields=("weight",))
-        decoded = (
-            decoded.withColumnRenamed("doc_key", "doc_id")
-            if pre_map is None
-            else decoded.join(pre_map, "doc_key")
-        )
         parts.append(
-            decoded.select(
+            decoded.withColumnRenamed("doc_key", "doc_id").select(
                 "doc_id",
                 "field",
                 (F.col("weight") * term_lookup(
@@ -445,16 +392,14 @@ def search_from_shards(
         )
     for phrase in phrase_lists:
         m = phrase_matches_from_shards(
-            spark, shards, pre_map, phrase, cfg,
+            spark, shards, None, phrase, cfg,
             decode_parts=query_decode_parts(
                 term_block_meta(shards, phrase, cfg, cache), cfg
             ),
         )
         parts.append(m.select("doc_id", "field", "contrib"))
     if not parts:
-        return empty_topk(spark, dense_keys, doc_map)
-    if not dense_keys:
-        return _blend_and_topk(_pivot_field_ranks(parts), cfg, pagerank, k)
+        return empty_topk(spark, by_doc_id=doc_map is not None)
     rows = parts[0]
     for p in parts[1:]:
         rows = rows.unionByName(p)

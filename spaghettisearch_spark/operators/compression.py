@@ -199,11 +199,9 @@ def _encode_blocks(batch_iter):
     groups and the per-group IPC dwarfed the actual encoding (measured
     54s vs ~10s for the same postings at sf0.1).
 
-    ``doc_key`` is whatever integer key the caller chose: the dense
-    doc_idx from build_doc_dim (pipeline path — collision-free, tiny
-    deltas) or the 60-bit md5 prefix (test path). Keys are delta+varbyte
-    packed in sorted order; positions are per-doc delta streams with a
-    parallel lengths stream.
+    ``doc_key`` is the dense doc_idx from build_doc_dim (collision-free,
+    tiny deltas). Keys are delta+varbyte packed in sorted order;
+    positions are per-doc delta streams with a parallel lengths stream.
     """
     cols = [f.name for f in SHARD_SCHEMA.fields]
     for whole in batch_iter:
@@ -412,11 +410,11 @@ def build_posting_shards(
     collect_list groups are therefore all small, and the shuffle key
     (term, field, salt) spreads hot terms over n_salts tasks.
 
-    ``doc_dim`` (doc_id, doc_idx) — when given, blocks key docs by the
-    DENSE index (collision-free at any corpus size, and dense deltas
-    varbyte-compress to ~1 byte each vs ~8 for 60-bit hash deltas). The
-    default 60-bit-hash keying needs no dimension table and is fine for
-    tests; the build pipeline always passes doc_dim.
+    ``doc_dim`` (doc_id, doc_idx) keys the blocks' docs by the DENSE
+    index (collision-free at any corpus size; dense deltas
+    varbyte-compress to ~1 byte each). Postings that already carry a
+    ``doc_key`` (the merge path re-encoding decoded blocks) need none;
+    any other call without ``doc_dim`` raises.
     """
     if weight_col != "weight":
         postings = postings.withColumn("weight", F.col(weight_col))
@@ -496,14 +494,15 @@ def build_posting_shards(
         )
     )
 
-    if "doc_key" in postings.columns:
-        pass  # caller pre-keyed (merge path re-encoding decoded blocks)
-    elif doc_dim is not None:
+    if "doc_key" not in postings.columns:
+        if doc_dim is None:
+            raise ValueError(
+                "postings carry no doc_key: pass doc_dim= (build_doc_dim) "
+                "to key them by the dense doc_idx"
+            )
         postings = postings.join(
             doc_dim.select("doc_id", F.col("doc_idx").alias("doc_key")), "doc_id"
         )
-    else:
-        postings = postings.withColumn("doc_key", term_hash60_col("doc_id"))
     keyed = (
         postings
         .withColumn("shard", (term_hash60_col("term") % cfg.n_shards).cast("int"))
@@ -573,8 +572,8 @@ def decode_shards(
     consumer: tuple | None = None,
 ) -> DataFrame:
     """posting_shards -> one row per (term, field, doc_key) — the
-    round-trip inverse of build_posting_shards (modulo doc_id -> 60-bit
-    doc_key projection). ``passthrough`` names extra non-payload columns
+    round-trip inverse of build_posting_shards (modulo doc_id -> dense
+    doc_key). ``passthrough`` names extra non-payload columns
     to replicate onto every decoded row (e.g. a segment tag the merge
     adds before a single union-then-decode stage); they must not collide
     with the decoded column names.
@@ -676,8 +675,8 @@ def decode_shards(
             deltas = vb_decode(joined).astype(np.uint64)
             # within-block cumsum: global cumsum minus the running total
             # at each block's first value. Accumulated in uint64: the
-            # running total over several blocks of 60-bit hash keys
-            # passes 2^64, but modular subtraction of the block's base
+            # running total over several blocks of large keys can pass
+            # 2^64, but modular subtraction of the block's base
             # still yields the block's own cumsum mod 2^64, which IS the
             # key (keys < 2^63), so the int64 cast at the end is exact
             g = np.cumsum(deltas, dtype=np.uint64)
@@ -1005,12 +1004,11 @@ def merge_posting_shards(
     delta), exactly as an LSM sequences memtable flushes. Tests assert
     the <=2-rows-per-group invariant on the merged decode.
 
-    Both sides must use the same doc_key mode (same doc_dim, or both
-    60-bit hash keys). Pass MATERIALIZED segments (cached or read from
-    storage): the plan references each side more than once (touched-set
-    derivation, pass-through anti-join, decode), and Spark does not
-    dedupe common subplans — an unmaterialized side gets recomputed per
-    reference.
+    Both sides must be keyed by the same doc_dim. Pass MATERIALIZED
+    segments (cached or read from storage): the plan references each
+    side more than once (touched-set derivation, pass-through anti-join,
+    decode), and Spark does not dedupe common subplans — an
+    unmaterialized side gets recomputed per reference.
     """
     touched = delta.select("term", "field").distinct()
     if delete_postings is not None:
@@ -1113,8 +1111,8 @@ def refresh_shard_stats(
     its dl IS present fails loudly (raise_error) instead of encoding a
     silent NULL weight.
 
-    ``doc_stats_keyed`` must be (doc_key, field, dl) in the SAME doc_key
-    mode as the shards (use key_doc_stats for the dense-dim path);
+    ``doc_stats_keyed`` must be (doc_key, field, dl) keyed by the
+    shards' doc_dim (key_doc_stats);
     ``corpus_stats_rows`` is the collected CURRENT corpus_stats (field,
     n_docs, avgdl). Global-stats drift (n_docs/avgdl move too) is only
     repaired on the groups this refresh touches — when global drift
@@ -1207,16 +1205,11 @@ def refresh_shard_stats(
     return untouched.unionByName(reencoded)
 
 
-def key_doc_stats(doc_stats: DataFrame, doc_dim: DataFrame | None) -> DataFrame:
-    """doc_stats(doc_id, field, dl) -> (doc_key, field, dl) in the shard
-    key mode: dense doc_idx when ``doc_dim`` is given, 60-bit hash keys
-    otherwise."""
-    if doc_dim is not None:
-        return doc_stats.join(doc_dim, "doc_id").select(
-            F.col("doc_idx").alias("doc_key"), "field", "dl"
-        )
-    return doc_stats.select(
-        term_hash60_col("doc_id").alias("doc_key"), "field", "dl"
+def key_doc_stats(doc_stats: DataFrame, doc_dim: DataFrame) -> DataFrame:
+    """doc_stats(doc_id, field, dl) -> (doc_key, field, dl), keyed by the
+    dense doc_idx of ``doc_dim`` (doc_id, doc_idx)."""
+    return doc_stats.join(doc_dim, "doc_id").select(
+        F.col("doc_idx").alias("doc_key"), "field", "dl"
     )
 
 

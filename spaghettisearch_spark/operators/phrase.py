@@ -61,7 +61,7 @@ def phrase_matches_from_shards(
     varbyte position decode -> offset-adjust -> intersect. ``contrib`` is
     the stored impact weight (bm25 path).
 
-    ``doc_map=None`` (dense-key serving): position intersection needs no
+    ``doc_map=None`` (the serving engine): position intersection needs no
     doc_id strings, so the match runs entirely on the long doc_key
     (returned in the ``doc_id`` column) and the corpus-sized map never
     enters the per-query plan — the caller hydrates after top-k, the

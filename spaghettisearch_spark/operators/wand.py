@@ -28,8 +28,10 @@ Distributed shape (the part that must survive 100 TB):
      exhaustive scorer;
   4. global top-k = TakeOrderedAndProject over n_buckets * k rows.
 
-  The one-task case: when the skip planner sizes a dense-keyed shard
-  query to ONE task (kept decode volume <=
+  Shard queries score on the dense ``doc_key`` (build_doc_dim assigns it
+  in global doc_id order, so the long key tie-breaks like the string).
+  The one-task case: when the skip planner sizes a shard query to ONE
+  task (kept decode volume <=
   ``cfg.query_target_postings_per_task``; every WAND bag over the local
   corpora), steps 2-3 collapse. That task already holds every posting
   of every doc, so it decodes the kept blocks and runs the bucket
@@ -229,7 +231,7 @@ def wand_topk(
         )
     k = k or cfg.top_k
     if not query_terms:
-        return empty_topk(spark, False, None)
+        return empty_topk(spark, by_doc_id=True)
     counts = Counter(query_terms)
     terms = sorted(counts)
     hits = posting_hits(index, terms, cfg).select(
@@ -271,14 +273,8 @@ def _wand_from_hits(
         # doc can hit the same query term in BOTH fields, so collapse
         # first, blending in Spark. The vectorized kernel's scatter-add
         # collapses duplicates natively, so the production path skips
-        # this whole shuffle. Reference kernels tie-break on string
-        # doc_ids and score term postings only, so dense long keys and
-        # PageRank are refused.
-        if long_keys:
-            raise ValueError(
-                "injected reference kernels tie-break on string doc_ids; "
-                "dense long keys require the vectorized kernel"
-            )
+        # this whole shuffle. Reference kernels score term postings
+        # only, so PageRank is refused.
         if pr is not None:
             raise ValueError(
                 "injected reference kernels score term postings only; "
@@ -329,7 +325,7 @@ def _wand_from_hits(
 def _one_task_topk(
     pruned: DataFrame, cfg: EngineConfig, k: int, pr, qtf: dict, **decode_kw
 ) -> DataFrame:
-    """Top-k of a dense-keyed shard query whose kept postings fit in ONE
+    """Top-k of a shard query whose kept postings fit in ONE
     task: ``pruned`` (coalesced to one partition) is decoded and scored
     in one Python pass — decode_shards hands its frames straight to the
     bucket kernel, with ``contrib = weight x qtf`` computed in between —
@@ -512,9 +508,9 @@ def plan_blocks(
     transfer, and the bucket shuffle then scale with |candidates|, not
     with the hot term's df.
 
-    Intervals are int64 end-to-end — 60-bit hash keys are not exactly
-    representable in float64, and a boundary off by 2^60*eps could
-    silently drop a true overlap (inadmissible)."""
+    Intervals are int64 end-to-end: doc_keys are exact integers, and a
+    float boundary rounded the wrong way could silently drop a true
+    overlap (inadmissible)."""
     from .compression import BLOCK_SAMPLE_N
     fw = {FIELD_TITLE: cfg.w_title, FIELD_BODY: cfg.w_body}
 
@@ -683,17 +679,15 @@ def wand_topk_from_shards(
     k: int | None = None,
     n_buckets: int = 16,
     pagerank=None,
-    kernel="taat",
-    dense_keys: bool = False,
     meta_cache: dict | None = None,
     two_phase: bool | str = False,
     pr_max_key: str = _PR_MAX_KEY,
 ) -> DataFrame:
     """Exact top-k straight from the compressed posting shards: pruned
     shard scan -> varbyte decode (mapInPandas) -> block-max WAND. With
-    dense keys and a plan that fits one task (the planner's decode
-    volume vs ``cfg.query_target_postings_per_task``), decode and the
-    bucket kernel share one Python pass and the top-k job is one stage
+    a plan that fits one task (the planner's decode volume vs
+    ``cfg.query_target_postings_per_task``), decode and the bucket
+    kernel share one Python pass and the top-k job is one stage
     (_one_task_topk); otherwise postings shuffle to the bucket kernel.
 
     ``two_phase=True`` refines the skip threshold with one extra
@@ -733,29 +727,21 @@ def wand_topk_from_shards(
     derived driver-side) and only the query terms' block rows inside
     them; everything else never leaves parquet.
 
-    ``doc_map`` is (doc_key long, doc_id string). Two keying modes:
-
-    - ``dense_keys=False``: doc_key is ``term_hash60(doc_id)`` (no
-      dimension table needed — test/ad-hoc mode). The map joins the
-      candidate postings BEFORE scoring, because tie-breaking needs the
-      doc_id string and hash keys don't preserve its order. Collisions
-      at 60 bits merge postings of distinct docs — detectable by
-      comparing count(distinct doc_key) to count(distinct doc_id).
-    - ``dense_keys=True`` (the warehouse/at-scale path): doc_key is the
-      dense ``doc_idx`` from build_doc_dim, which is assigned in GLOBAL
-      doc_id sort order — so (score desc, doc_key asc) is the same total
-      order as (score desc, doc_id asc) and scoring runs entirely on
-      long keys. With ``doc_map=None`` (the serving engine) the result
-      is the k rows (doc_key, title_rank, body_rank, pagerank, score):
-      ONE Spark job, and the caller reads the k keys' doc_cards rows.
-      A direct caller that passes a doc_map gets doc_id strings
-      (hydrate_doc_ids: a broadcast of the k-row side). Requires the
-      vectorized kernel.
+    The shards key docs by the dense ``doc_idx`` from build_doc_dim
+    (``doc_key``), which is assigned in GLOBAL doc_id sort order — so
+    (score desc, doc_key asc) is the same total order as (score desc,
+    doc_id asc) and scoring runs entirely on long keys, with the
+    vectorized kernel only. With ``doc_map=None`` (the serving engine)
+    the result is the k rows (doc_key, title_rank, body_rank, pagerank,
+    score): ONE Spark job, and the caller reads the k keys' doc_cards
+    rows. A direct caller that passes a (doc_key long, doc_id string)
+    ``doc_map`` gets doc_id strings (hydrate_doc_ids: a broadcast of
+    the k-row side).
 
     ``pagerank``: the blend's PageRank as the kernel's Broadcast lookup
-    (a dense float64 vector indexed by doc_key in dense mode — what the
-    engine builds once per cards version), or an ad-hoc (doc_id, rank)
-    frame that is collected into one (pr_broadcast). Either way the
+    (a dense float64 vector indexed by doc_key — what the engine builds
+    once per cards version), or an ad-hoc (doc_id, rank) frame that is
+    collected into one through ``doc_map`` (pr_broadcast). Either way the
     rank is added inside the bucket kernel; no join enters the plan.
 
     ``meta_cache``: optional dict owned by the caller, mapping term ->
@@ -783,22 +769,12 @@ def wand_topk_from_shards(
         raise ValueError("shard-backed WAND requires bm25 impact weights")
     k = k or cfg.top_k
     if not query_terms:
-        return empty_topk(spark, dense_keys, doc_map)
+        return empty_topk(spark, by_doc_id=doc_map is not None)
     counts = Counter(query_terms)
-    if dense_keys and "top_weights" not in shards.columns:
-        # without block metadata the hash-vs-dense key-mode mismatch guard
-        # below can't run, and a mismatched doc_map would silently return
-        # an empty result — refuse loudly instead. Every shard frame
-        # build_posting_shards produces carries these columns.
-        raise ValueError(
-            "dense_keys=True requires the block-metadata columns "
-            "(top_doc_keys/top_weights) so the key-mode guard can run; "
-            "this shards frame lacks them"
-        )
     term_list = sorted(counts)
     qtf = {t: float(counts[t]) for t in term_list}
     pruned = prune_shards(shards, term_list, cfg)
-    pr_bc = pr_broadcast(spark, pagerank, doc_map, dense_keys)
+    pr_bc = pr_broadcast(spark, pagerank, doc_map, dense_keys=True)
 
     cand_keys = None
     q_parts = None
@@ -979,21 +955,6 @@ def wand_topk_from_shards(
         # tasks instead of one near-empty Python task per partition
         pruned = pruned.coalesce(int(q_parts))
 
-    if dense_keys and meta is not None:
-        # loud guard for the silent-empty failure mode: shards built
-        # with 60-bit hash keys served as dense keys match no card. The
-        # block-metadata samples are already on the driver; dense
-        # doc_idx values are < n_docs while hash keys are uniform in
-        # [0, 2^60) — a sampled key past 2^44 (~17T docs) cannot be a
-        # dense index this engine targets.
-        sampled = [dk for r in meta for dk in (r["top_doc_keys"] or [])]
-        if sampled and max(sampled) >= (1 << 44):
-            raise ValueError(
-                "dense_keys=True but the shards' doc_keys look like "
-                "60-bit hash keys (sampled key >= 2^44) — build the "
-                "shards with doc_dim= and pass the matching dense "
-                "doc_map, or drop dense_keys"
-            )
     # term-bag scoring needs ONLY the precomputed impact weights: skip
     # the tf/positions varbyte decode and their Arrow transfer entirely;
     # when the planner proved doc-level pruning admissible, only the
@@ -1005,47 +966,32 @@ def wand_topk_from_shards(
         "doc_keys": cand_keys,
         "key_ranges": (keep_ranges or None) if meta is not None else None,
     }
-    if dense_keys and q_parts == 1 and kernel == "taat":
+    if q_parts == 1:
         # the planned volume fits one task, which then holds every
         # posting of every doc: decode and score in one Python pass
         ranked = _one_task_topk(pruned, cfg, k, pr_bc, qtf, **decode_kw)
     else:
         decoded = decode_shards(pruned, fields=("weight",), **decode_kw)
-        if dense_keys:
-            # score on the dense long keys; doc_id strings only after top-k
-            keyed = decoded.withColumnRenamed("doc_key", "doc_id")
-        else:
-            keyed = decoded.join(doc_map, "doc_key")
-        hits = keyed.select(
+        # score on the dense long keys; doc_id strings only after top-k
+        hits = decoded.withColumnRenamed("doc_key", "doc_id").select(
             "doc_id", "field",
-            term_lookup({t: i for i, t in enumerate(term_list)}).alias("qterm_id"),
             (F.col("weight") * term_lookup(qtf)).alias("contrib"),
         )
         ranked = _wand_from_hits(
-            hits, cfg, k, n_buckets, pr_bc, kernel, shuffle_parts=q_parts
+            hits, cfg, k, n_buckets, pr_bc, shuffle_parts=q_parts
         )
-    if not dense_keys:
-        return ranked
     if doc_map is None:
         return ranked.withColumnRenamed("doc_id", "doc_key")
     return hydrate_doc_ids(ranked, doc_map, k)
 
 
-def empty_topk(spark: SparkSession, dense_keys: bool, doc_map) -> DataFrame:
-    """The zero-row top-k of a shard query, keyed like a non-empty
-    result: ``doc_key long`` for dense keys without a doc_map (the
-    serving engine), ``doc_id string`` otherwise."""
-    key = "doc_key long" if dense_keys and doc_map is None else "doc_id string"
+def empty_topk(spark: SparkSession, by_doc_id: bool) -> DataFrame:
+    """The zero-row top-k, keyed like a non-empty result: ``doc_id
+    string`` for rows that carry doc ids (the in-memory index, a shard
+    query given a doc_map), else ``doc_key long`` (the serving engine)."""
+    key = "doc_id string" if by_doc_id else "doc_key long"
     return spark.createDataFrame(
         [], f"{key}, title_rank double, body_rank double, "
         "pagerank double, score double"
     )
 
-
-def build_doc_map(corpus: DataFrame) -> DataFrame:
-    """(doc_key, doc_id) dimension for shard-backed queries."""
-    from ..functions.hashing import term_hash60_col
-
-    return corpus.select(
-        term_hash60_col("doc_id").alias("doc_key"), "doc_id"
-    ).distinct()

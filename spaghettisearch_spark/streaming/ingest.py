@@ -9,10 +9,6 @@ rows (partitioned by term bucket), so the index grows incrementally
 without touching existing partitions' history. Readers recompute df/
 avgdl from the appended state (or periodically compact via the batch
 pipeline — same code path, plans/build_pipeline.py).
-
-Also provides a watermarked event-time windowed aggregation over a query
-log stream — the standard Structured Streaming stateful-op surface
-(no reference analog; SURVEY.md §2.9 notes the reference has none).
 """
 
 from __future__ import annotations
@@ -141,59 +137,6 @@ def live_postings(spark: SparkSession, warehouse: str) -> DataFrame:
     )
     live_keys = live_corpus(spark, warehouse).select("doc_id", "ingest_seq")
     return postings.join(live_keys, ["doc_id", "ingest_seq"], "left_semi")
-
-
-def windowed_query_stats(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str | None = None,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Event-time windowed counts with late-data watermark over a
-    (streaming or batch) frame with columns (ts timestamp, event_type
-    string, value double). Works identically on a batch frame (Spark
-    runs the same plan), which is how the test cross-checks it."""
-    w = F.window("ts", window, slide) if slide else F.window("ts", window)
-    # watermarks require TIMESTAMP (NTZ parquet columns won't do)
-    df = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    if df.isStreaming:
-        df = df.withWatermark("ts", watermark)
-    return (
-        df.groupBy(w.alias("win"), "event_type")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("value").alias("sum_value"),
-        )
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-
-
-def dedup_stream(
-    events: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """At-least-once -> effectively-once: drop duplicate records by key
-    within the watermark horizon (``dropDuplicatesWithinWatermark``) —
-    the standard guard in front of a streaming sink when the upstream
-    can redeliver. State is bounded by the watermark (keys older than it
-    are evicted), unlike plain dropDuplicates whose state grows forever
-    on a stream. On a batch frame, falls back to plain dropDuplicates —
-    same result for data whose duplicates arrive within the horizon,
-    which is how the test cross-checks it."""
-    df = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    if df.isStreaming:
-        return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-            keys
-        )
-    return df.dropDuplicates(keys)
 
 
 def compact(spark: SparkSession, warehouse: str, cfg: EngineConfig = DEFAULT):

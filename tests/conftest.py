@@ -66,3 +66,19 @@ def oracle_small(docs_small):
     from spaghettisearch_spark.oracle.pandas_oracle import build_oracle_index
 
     return build_oracle_index(docs_small)
+
+
+@pytest.fixture(scope="session")
+def dim_small(spark, corpus_small):
+    """(doc_dim, doc_map) of corpus_small: the dense (doc_id, doc_idx)
+    dimension posting shards are keyed by, and its (doc_key, doc_id)
+    projection that hydrates shard results to doc ids."""
+    from pyspark.sql import functions as F
+
+    from spaghettisearch_spark.operators.compression import build_doc_dim
+
+    doc_dim = build_doc_dim(corpus_small).cache()
+    doc_dim.count()
+    doc_map = doc_dim.select(F.col("doc_idx").alias("doc_key"), "doc_id").cache()
+    doc_map.count()
+    return doc_dim, doc_map

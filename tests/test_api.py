@@ -68,11 +68,12 @@ def test_wordlist(engine):
 
 
 @pytest.fixture(scope="module")
-def shard_engine(spark, docs_tiny):
+def shard_engine(spark, docs_tiny, tmp_path_factory):
     from spaghettisearch_spark.api import SearchEngine
 
     return SearchEngine.build(
-        spark, spark.createDataFrame(docs_tiny), with_shards=True
+        spark, spark.createDataFrame(docs_tiny),
+        warehouse_dir=str(tmp_path_factory.mktemp("wh_api")),
     )
 
 
@@ -103,13 +104,13 @@ def test_shard_backend_matches_memory(shard_engine):
         spark=shard_engine.spark, index=shard_engine.index,
         cfg=shard_engine.cfg,
     )
-    with pytest.raises(ValueError, match="with_shards"):
+    with pytest.raises(ValueError, match="warehouse_dir"):
         eng2.query_df("parse", backend="shards")
 
 
 def test_warehouse_engine_serves_and_compacts(spark, docs_tiny, tmp_path):
     """warehouse_dir: the engine serves every backend="shards" query
-    from partitionBy("shard") parquet with cards identical to the
+    from partitionBy("shard") parquet with cards identical to its
     in-memory backend, and the LSM maintenance methods rewrite only the
     warehouse in place: apply_merge makes a delta segment searchable
     (and tombstones deletable), refresh_stats with no drift leaves
@@ -126,16 +127,13 @@ def test_warehouse_engine_serves_and_compacts(spark, docs_tiny, tmp_path):
         spark, spark.createDataFrame(docs_tiny), warehouse_dir=wh
     )
     assert (tmp_path / "wh" / "posting_shards").exists()
-    mem_eng = SearchEngine.build(
-        spark, spark.createDataFrame(docs_tiny), with_shards=True
-    )
     for q, wand in [
         ("parse buffer", False),
         ('"hash table" flush', False),
         ("parse buffer", True),
         ("dispatch", True),
     ]:
-        mem = mem_eng.query(q, k=5, use_wand=wand, backend="shards")
+        mem = eng.query(q, k=5, use_wand=wand, backend="memory")
         wh_cards = eng.query(q, k=5, use_wand=wand, backend="shards")
         assert [c["doc_id"] for c in wh_cards] == [c["doc_id"] for c in mem], q
         for a, b in zip(wh_cards, mem):
@@ -193,7 +191,7 @@ def test_warehouse_engine_serves_and_compacts(spark, docs_tiny, tmp_path):
     } == before
 
 
-def test_concurrent_queries_one_engine(spark, docs_small):
+def test_concurrent_queries_one_engine(spark, docs_small, tmp_path):
     """The serving claim behind the bench's engine_qps row: concurrent
     queries from multiple driver threads against ONE engine (shared
     Spark session, shared metadata/floor caches) return exactly the
@@ -204,7 +202,7 @@ def test_concurrent_queries_one_engine(spark, docs_small):
 
     eng = SearchEngine.build(
         spark, spark.createDataFrame(docs_small.head(150)),
-        with_shards=True, with_pagerank=False,
+        warehouse_dir=str(tmp_path / "wh"), with_pagerank=False,
     )
     queries = [
         ("dispatch buffer parse", True),

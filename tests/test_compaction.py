@@ -64,15 +64,20 @@ def _expected_reweight(spark, idx, postings, term_stats, n_docs):
     )
 
 
-def test_refresh_noop_when_no_drift(spark, corpus_small, index_small):
+def test_refresh_noop_when_no_drift(
+    spark, corpus_small, index_small, dim_small
+):
     """Current stats == encoded stats -> nothing drifts; EVERY block
     passes through byte-identical (the bounded-write property)."""
     n_docs = corpus_small.count()
+    doc_dim, _ = dim_small
     postings = index_small.postings.withColumn(
         "weight", F.col("bm25_weight")
     ).select("term", "field", "doc_id", "tf", "positions", "weight")
-    base = build_posting_shards(postings, n_docs, DEFAULT).cache()
-    dsk = key_doc_stats(index_small.doc_stats, None)
+    base = build_posting_shards(
+        postings, n_docs, DEFAULT, doc_dim=doc_dim
+    ).cache()
+    dsk = key_doc_stats(index_small.doc_stats, doc_dim)
     out = refresh_shard_stats(
         base, index_small.term_stats, dsk,
         index_small.corpus_stats.collect(), DEFAULT, drift_threshold=0.1,
@@ -81,15 +86,20 @@ def test_refresh_noop_when_no_drift(spark, corpus_small, index_small):
     base.unpersist()
 
 
-def test_refresh_drifted_subset(spark, corpus_small, index_small):
+def test_refresh_drifted_subset(
+    spark, corpus_small, index_small, dim_small
+):
     """Only the groups whose df drifted past the threshold are
     re-weighted (to exactly the weights a rebuild against the current
     stats would produce); everything else is byte-identical."""
     n_docs = corpus_small.count()
+    doc_dim, _ = dim_small
     postings = index_small.postings.withColumn(
         "weight", F.col("bm25_weight")
     ).select("term", "field", "doc_id", "tf", "positions", "weight").cache()
-    base = build_posting_shards(postings, n_docs, DEFAULT).cache()
+    base = build_posting_shards(
+        postings, n_docs, DEFAULT, doc_dim=doc_dim
+    ).cache()
 
     drift_terms = [
         r["term"]
@@ -105,7 +115,7 @@ def test_refresh_drifted_subset(spark, corpus_small, index_small):
             F.greatest((F.col("df") / 2).cast("long"), F.lit(1)),
         ).otherwise(F.col("df")),
     ).cache()
-    dsk = key_doc_stats(index_small.doc_stats, None)
+    dsk = key_doc_stats(index_small.doc_stats, doc_dim)
     stats_rows = index_small.corpus_stats.collect()
 
     out = refresh_shard_stats(
@@ -118,7 +128,9 @@ def test_refresh_drifted_subset(spark, corpus_small, index_small):
         spark, index_small, postings.filter(is_drifted),
         current.filter(is_drifted), n_docs,
     )
-    exp_shards = build_posting_shards(expected, n_docs, DEFAULT)
+    exp_shards = build_posting_shards(
+        expected, n_docs, DEFAULT, doc_dim=doc_dim
+    )
     assert _decoded_set(out.filter(is_drifted)) == _decoded_set(exp_shards)
     # and the refreshed weights actually CHANGED (df moved -> idf moved)
     assert _decoded_set(out.filter(is_drifted)) != _decoded_set(
@@ -129,42 +141,50 @@ def test_refresh_drifted_subset(spark, corpus_small, index_small):
 
 
 def test_refresh_all_on_zero_threshold_scaled_stats(
-    spark, corpus_small, index_small
+    spark, corpus_small, index_small, dim_small
 ):
     """Degenerate full re-weight: every group drifts (df doubled),
     refresh == independent rebuild against the scaled stats."""
     n_docs = corpus_small.count()
+    doc_dim, _ = dim_small
     postings = index_small.postings.withColumn(
         "weight", F.col("bm25_weight")
     ).select("term", "field", "doc_id", "tf", "positions", "weight").cache()
-    base = build_posting_shards(postings, n_docs, DEFAULT).cache()
+    base = build_posting_shards(
+        postings, n_docs, DEFAULT, doc_dim=doc_dim
+    ).cache()
     scaled = index_small.term_stats.withColumn(
         "df", F.col("df") * 2
     ).cache()
-    dsk = key_doc_stats(index_small.doc_stats, None)
+    dsk = key_doc_stats(index_small.doc_stats, doc_dim)
     out = refresh_shard_stats(
         base, scaled, dsk, index_small.corpus_stats.collect(), DEFAULT,
         drift_threshold=0.0,
     )
     expected = _expected_reweight(spark, index_small, postings, scaled, n_docs)
     assert _decoded_set(out) == _decoded_set(
-        build_posting_shards(expected, n_docs, DEFAULT)
+        build_posting_shards(expected, n_docs, DEFAULT, doc_dim=doc_dim)
     )
     for df_ in (postings, base, scaled):
         df_.unpersist()
 
 
-def test_refresh_never_deletes_orphan_postings(spark, corpus_small, index_small):
+def test_refresh_never_deletes_orphan_postings(
+    spark, corpus_small, index_small, dim_small
+):
     """A refresh is a weight-only repair: a posting in a drifted group
     whose doc is absent from the CURRENT doc stats (removed from the
     corpus but not yet tombstoned) must survive with its STORED weight —
     deletions flow only through merge tombstones. Guards the round-4
     advisory: the inner doc_stats join silently dropped such rows."""
     n_docs = corpus_small.count()
+    doc_dim, _ = dim_small
     postings = index_small.postings.withColumn(
         "weight", F.col("bm25_weight")
     ).select("term", "field", "doc_id", "tf", "positions", "weight").cache()
-    base = build_posting_shards(postings, n_docs, DEFAULT).cache()
+    base = build_posting_shards(
+        postings, n_docs, DEFAULT, doc_dim=doc_dim
+    ).cache()
 
     # force EVERY group to drift (df doubled) so the whole index is
     # re-weighted, then hand refresh doc stats MISSING a few docs
@@ -174,7 +194,7 @@ def test_refresh_never_deletes_orphan_postings(spark, corpus_small, index_small)
         for r in corpus_small.select("doc_id").orderBy("doc_id").limit(3).collect()
     ]
     dsk = key_doc_stats(
-        index_small.doc_stats.filter(~F.col("doc_id").isin(gone)), None
+        index_small.doc_stats.filter(~F.col("doc_id").isin(gone)), doc_dim
     )
     out = refresh_shard_stats(
         base, scaled, dsk, index_small.corpus_stats.collect(), DEFAULT,
@@ -190,9 +210,10 @@ def test_refresh_never_deletes_orphan_postings(spark, corpus_small, index_small)
 
     # orphan postings keep their stored weight bit-for-bit; the rest got
     # the re-derived (changed) weight
-    from spaghettisearch_spark.functions.hashing import term_hash60_py
-
-    gone_keys = {term_hash60_py(d) for d in gone}
+    gone_keys = {
+        r["doc_idx"]
+        for r in doc_dim.filter(F.col("doc_id").isin(gone)).collect()
+    }
     before = {
         (r["term"], r["field"], r["doc_key"]): r["weight"]
         for r in decode_shards(base).collect()
@@ -210,20 +231,21 @@ def test_refresh_never_deletes_orphan_postings(spark, corpus_small, index_small)
         df_.unpersist()
 
 
-def test_merge_upsert_group_invariant(spark, corpus_small, index_small):
+def test_merge_upsert_group_invariant(
+    spark, corpus_small, index_small, dim_small
+):
     """merge_posting_shards' caller contract: each side holds at most one
     posting per (term, field, doc_key), so the decoded union the upsert
     aggregates has group size <= 2. Assert it on a real merge input."""
-    from spaghettisearch_spark.functions.hashing import term_hash60_col
-
     n_docs = corpus_small.count()
+    doc_dim, _ = dim_small
     postings = index_small.postings.withColumn(
         "weight", F.col("bm25_weight")
     ).select("term", "field", "doc_id", "tf", "positions", "weight")
     changed = corpus_small.select("doc_id").orderBy("doc_id").limit(30)
     fresh = postings.join(changed, "doc_id", "left_semi")
-    base = build_posting_shards(postings, n_docs, DEFAULT)
-    delta = build_posting_shards(fresh, n_docs, DEFAULT)
+    base = build_posting_shards(postings, n_docs, DEFAULT, doc_dim=doc_dim)
+    delta = build_posting_shards(fresh, n_docs, DEFAULT, doc_dim=doc_dim)
     sides = base.withColumn("src", F.lit(0)).unionByName(
         delta.withColumn("src", F.lit(1))
     )
@@ -282,7 +304,7 @@ def test_resort_restores_doc_id_tie_break(spark):
 
     def order(sh, dm, k):
         res = wand_topk_from_shards(
-            spark, sh, dm, ["glacier", "marmot"], cfg, k=k, dense_keys=True
+            spark, sh, dm, ["glacier", "marmot"], cfg, k=k
         )
         return [r["doc_id"] for r in res.collect()]
 

@@ -43,7 +43,7 @@ K = 20
 def _serve(spark, shards, dim, terms):
     doc_map = dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
     return wand_topk_from_shards(
-        spark, shards, doc_map, terms, DEFAULT, k=K, dense_keys=True
+        spark, shards, doc_map, terms, DEFAULT, k=K
     ).collect()
 
 

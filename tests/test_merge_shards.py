@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from spaghettisearch_spark.config import DEFAULT
-from spaghettisearch_spark.functions.hashing import term_hash60_col
 from spaghettisearch_spark.operators.compression import (
     build_doc_dim,
     build_posting_shards,
@@ -28,8 +27,9 @@ def _decoded_set(spark, shards):
     }
 
 
-def test_merge_equals_scratch_build(spark, corpus_small, index_small):
+def test_merge_equals_scratch_build(spark, corpus_small, index_small, dim_small):
     n_docs = corpus_small.count()
+    doc_dim, _ = dim_small
     postings = index_small.postings.withColumn(
         "weight", F.col("bm25_weight")
     ).select("term", "field", "doc_id", "tf", "positions", "weight").cache()
@@ -53,16 +53,22 @@ def test_merge_equals_scratch_build(spark, corpus_small, index_small):
         fresh.orderBy("doc_id", "field", "term").limit(5)
         .withColumn("term", F.lit("zzstaleterm"))
     ).cache()
-    base = build_posting_shards(stale.unionByName(kept), n_docs, DEFAULT).cache()
-    delta = build_posting_shards(fresh, n_docs, DEFAULT).cache()
-    tombstones = stale.select(
-        "term", "field", term_hash60_col("doc_id").alias("doc_key")
+    base = build_posting_shards(
+        stale.unionByName(kept), n_docs, DEFAULT, doc_dim=doc_dim
+    ).cache()
+    delta = build_posting_shards(
+        fresh, n_docs, DEFAULT, doc_dim=doc_dim
+    ).cache()
+    tombstones = stale.join(doc_dim, "doc_id").select(
+        "term", "field", F.col("doc_idx").alias("doc_key")
     )
 
     merged = merge_posting_shards(
         base, delta, n_docs, DEFAULT, delete_postings=tombstones
     ).cache()
-    scratch = build_posting_shards(postings, n_docs, DEFAULT).cache()
+    scratch = build_posting_shards(
+        postings, n_docs, DEFAULT, doc_dim=doc_dim
+    ).cache()
 
     assert _decoded_set(spark, merged) == _decoded_set(spark, scratch)
     # the vanished term leaves no block behind
@@ -86,18 +92,21 @@ def test_merge_equals_scratch_build(spark, corpus_small, index_small):
         df_.unpersist()
 
 
-def test_merge_salt_reclassification(spark, corpus_small, index_small):
+def test_merge_salt_reclassification(spark, corpus_small, index_small, dim_small):
     """A term pushed over the hot-df threshold BY the delta gets salted
     at merge time (re-encoded groups re-derive salt from merged df)."""
     import spaghettisearch_spark.config as config_mod
 
     n_docs = corpus_small.count()
+    doc_dim, _ = dim_small
     postings = index_small.postings.withColumn(
         "weight", F.col("bm25_weight")
     ).select("term", "field", "doc_id", "tf", "positions", "weight")
     # synthetic cold term in base (1 doc), delta adds it to EVERY doc
     one = postings.limit(1).withColumn("term", F.lit("zzrare"))
-    base = build_posting_shards(postings.unionByName(one), n_docs, DEFAULT)
+    base = build_posting_shards(
+        postings.unionByName(one), n_docs, DEFAULT, doc_dim=doc_dim
+    )
     everywhere = (
         corpus_small.select("doc_id")
         .withColumn("term", F.lit("zzrare"))
@@ -106,7 +115,7 @@ def test_merge_salt_reclassification(spark, corpus_small, index_small):
         .withColumn("positions", F.array(F.lit(0)))
         .withColumn("weight", F.lit(1.0))
     )
-    delta = build_posting_shards(everywhere, n_docs, DEFAULT)
+    delta = build_posting_shards(everywhere, n_docs, DEFAULT, doc_dim=doc_dim)
     merged = merge_posting_shards(base, delta, n_docs, DEFAULT)
     salts = {
         r["salt"]
@@ -115,22 +124,25 @@ def test_merge_salt_reclassification(spark, corpus_small, index_small):
     assert len(salts) > 1  # hot now -> salted into multiple blocks
 
 
-def test_merge_partitions_only(spark, corpus_small, index_small):
+def test_merge_partitions_only(spark, corpus_small, index_small, dim_small):
     """partitions_only: the dynamic-partition-overwrite write set. Must
     equal the full merge restricted to the delta's shard partitions, and
     contain no rows from untouched partitions."""
     n_docs = corpus_small.count()
+    doc_dim, _ = dim_small
     postings = index_small.postings.withColumn(
         "weight", F.col("bm25_weight")
     ).select("term", "field", "doc_id", "tf", "positions", "weight")
     one_doc = postings.join(
         corpus_small.select("doc_id").orderBy("doc_id").limit(1), "doc_id"
     )
-    base = build_posting_shards(postings, n_docs, DEFAULT).cache()
+    base = build_posting_shards(
+        postings, n_docs, DEFAULT, doc_dim=doc_dim
+    ).cache()
     delta = build_posting_shards(
         one_doc.orderBy("term", "field").limit(5)
         .withColumn("tf", F.col("tf") + F.lit(1)),
-        n_docs, DEFAULT,
+        n_docs, DEFAULT, doc_dim=doc_dim,
     ).cache()
     ids = {r[0] for r in delta.select("shard").distinct().collect()}
     assert ids and len(ids) < DEFAULT.n_shards  # a real subset
@@ -147,13 +159,14 @@ def test_merge_partitions_only(spark, corpus_small, index_small):
         df_.unpersist()
 
 
-def test_merge_sequential_folds(spark, corpus_small, index_small):
+def test_merge_sequential_folds(spark, corpus_small, index_small, dim_small):
     """Streaming-maintenance shape: fold micro-batch segments into the
     standing shards one merge at a time. Batch 3 re-updates docs first
     seen (stale) in batch 1, with tombstones, ACROSS an intervening
     merge — the folded result must equal the one-shot build of the
     final postings."""
     n_docs = corpus_small.count()
+    doc_dim, _ = dim_small
     postings = index_small.postings.withColumn(
         "weight", F.col("bm25_weight")
     ).select("term", "field", "doc_id", "tf", "positions", "weight").cache()
@@ -173,11 +186,13 @@ def test_merge_sequential_folds(spark, corpus_small, index_small):
     # in merge_posting_shards' docstring (the merge plan references each
     # side several times; unmaterialized sides also compound the nested
     # plan tree until the plan STRING alone can exhaust driver heap)
-    s1 = build_posting_shards(p_a.unionByName(stale_c), n_docs, DEFAULT).cache()
-    s2 = build_posting_shards(p_b, n_docs, DEFAULT).cache()
-    s3 = build_posting_shards(p_c, n_docs, DEFAULT).cache()
-    tomb = stale_c.select(
-        "term", "field", term_hash60_col("doc_id").alias("doc_key")
+    s1 = build_posting_shards(
+        p_a.unionByName(stale_c), n_docs, DEFAULT, doc_dim=doc_dim
+    ).cache()
+    s2 = build_posting_shards(p_b, n_docs, DEFAULT, doc_dim=doc_dim).cache()
+    s3 = build_posting_shards(p_c, n_docs, DEFAULT, doc_dim=doc_dim).cache()
+    tomb = stale_c.join(doc_dim, "doc_id").select(
+        "term", "field", F.col("doc_idx").alias("doc_key")
     )
 
     fold1 = merge_posting_shards(s1, s2, n_docs, DEFAULT).cache()
@@ -185,13 +200,13 @@ def test_merge_sequential_folds(spark, corpus_small, index_small):
     folded = merge_posting_shards(
         fold1, s3, n_docs, DEFAULT, delete_postings=tomb,
     )
-    scratch = build_posting_shards(postings, n_docs, DEFAULT)
+    scratch = build_posting_shards(postings, n_docs, DEFAULT, doc_dim=doc_dim)
     assert _decoded_set(spark, folded) == _decoded_set(spark, scratch)
     for df_ in (postings, s1, s2, s3, fold1):
         df_.unpersist()
 
 
-def test_query_over_unmerged_segments(spark, corpus_small, index_small):
+def test_query_over_unmerged_segments(spark, corpus_small, index_small, dim_small):
     """LSM read path: an append-only delta segment serves BEFORE
     compaction — WAND over the UNION of segment frames equals WAND over
     the merged shards (segments are doc-disjoint, so no posting is
@@ -199,20 +214,21 @@ def test_query_over_unmerged_segments(spark, corpus_small, index_small):
     (term, field, salt) conservatively). This is what lets compaction be
     deferred/amortized while the delta is already queryable."""
     from spaghettisearch_spark.functions.tokenize import parse_query
-    from spaghettisearch_spark.operators.wand import (
-        build_doc_map,
-        wand_topk_from_shards,
-    )
+    from spaghettisearch_spark.operators.wand import wand_topk_from_shards
 
     n_docs = corpus_small.count()
+    doc_dim, doc_map = dim_small
     postings = index_small.postings.withColumn(
         "weight", F.col("bm25_weight")
     ).select("term", "field", "doc_id", "tf", "positions", "weight").cache()
     seg = F.pmod(F.xxhash64("doc_id"), F.lit(5))
-    base = build_posting_shards(postings.filter(seg != 0), n_docs, DEFAULT).cache()
-    delta = build_posting_shards(postings.filter(seg == 0), n_docs, DEFAULT).cache()
+    base = build_posting_shards(
+        postings.filter(seg != 0), n_docs, DEFAULT, doc_dim=doc_dim
+    ).cache()
+    delta = build_posting_shards(
+        postings.filter(seg == 0), n_docs, DEFAULT, doc_dim=doc_dim
+    ).cache()
     merged = merge_posting_shards(base, delta, n_docs, DEFAULT).cache()
-    doc_map = build_doc_map(corpus_small).cache()
     union = base.unionByName(delta)
     for query in ["parse buffer flush", "dispatch"]:
         terms, _ = parse_query(query)
@@ -225,18 +241,17 @@ def test_query_over_unmerged_segments(spark, corpus_small, index_small):
         assert [r["doc_id"] for r in a] == [r["doc_id"] for r in b], query
         for x, y in zip(a, b):
             assert x["score"] == pytest.approx(y["score"], rel=1e-9)
-    for df_ in (postings, base, delta, merged, doc_map):
+    for df_ in (postings, base, delta, merged):
         df_.unpersist()
 
 
-def test_recrawl_chain_equals_scratch(spark, corpus_small, index_small):
+def test_recrawl_chain_equals_scratch(spark, corpus_small, index_small, dim_small):
     """The composed incremental path (the reference's checkAndUpdate
     analog, indexer.go:420-641): a base index holding STALE versions of
     ~20% of docs (perturbed content incl. a vanished term) is repaired
     by diff_corpus (sha256 staleness) -> fresh-delta build -> tombstoned
     merge, and must equal the one-shot build of the true corpus. Mirrors
     the driver's _engine_shards construction with dense keys."""
-    from spaghettisearch_spark.operators.compression import build_doc_dim
     from spaghettisearch_spark.operators.incremental import diff_corpus
     from spaghettisearch_spark.operators.index_build import (
         build_postings,
@@ -245,7 +260,7 @@ def test_recrawl_chain_equals_scratch(spark, corpus_small, index_small):
     from spaghettisearch_spark.sources.corpus import ingest
 
     n_docs = corpus_small.count()
-    doc_dim = build_doc_dim(corpus_small).cache()
+    doc_dim, _ = dim_small
     raw = corpus_small.select("repo", "path", "commit", "lang", "content")
     stale_pred = F.pmod(F.xxhash64("doc_id"), F.lit(5)) == 0
     changed_ids = corpus_small.filter(stale_pred).select("doc_id").cache()
@@ -302,8 +317,8 @@ def test_recrawl_chain_equals_scratch(spark, corpus_small, index_small):
     )
     assert _decoded_set(spark, merged) == _decoded_set(spark, scratch)
     assert merged.filter(F.col("term") == "zzstaleterm").count() == 0
-    for df_ in (doc_dim, changed_ids, stale_corpus, stale_postings, base,
-                changed, delta):
+    for df_ in (changed_ids, stale_corpus, stale_postings, base, changed,
+                delta):
         df_.unpersist()
 
 

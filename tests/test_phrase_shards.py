@@ -9,21 +9,21 @@ from spaghettisearch_spark.config import DEFAULT
 from spaghettisearch_spark.functions.tokenize import parse_query
 
 
-def test_phrase_from_shards(spark, corpus_small, index_small):
+def test_phrase_from_shards(spark, corpus_small, index_small, dim_small):
     from spaghettisearch_spark.operators.compression import build_posting_shards
     from spaghettisearch_spark.operators.phrase import (
         phrase_matches,
         phrase_matches_from_shards,
     )
-    from spaghettisearch_spark.operators.wand import build_doc_map
 
     n_docs = corpus_small.count()
+    doc_dim, doc_map = dim_small
     shards = build_posting_shards(
         index_small.postings.withColumn("weight", F.col("bm25_weight")),
         n_docs,
         DEFAULT,
+        doc_dim=doc_dim,
     ).cache()
-    doc_map = build_doc_map(corpus_small).cache()
     _, phrases = parse_query('"hash table probe"')
     phrase = phrases[0]
     want = {
@@ -41,4 +41,4 @@ def test_phrase_from_shards(spark, corpus_small, index_small):
         assert got[key][0] == pytest.approx(c, rel=1e-9)
         assert got[key][1] == m
     assert len(want) > 0
-    shards.unpersist(); doc_map.unpersist()
+    shards.unpersist()

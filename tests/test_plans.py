@@ -92,22 +92,6 @@ def test_hydration_join_is_broadcast_not_smj(spark, wh_index):
     assert "BroadcastHashJoin" in plan
 
 
-def test_near_dup_plan_has_no_cartesian(spark):
-    """The default near-dup path must be a bucket equi-join, never a
-    cross/nested-loop product (the r01 all-pairs scale-killer)."""
-    from spaghettisearch_spark.operators.similarity import srp_near_dup_pairs
-
-    emb = spark.createDataFrame(
-        [(i, [float(i % 7), float(i % 3), 1.0]) for i in range(50)],
-        "vec_id int, embedding array<double>",
-    )
-    plan = _formatted_plan(
-        spark, srp_near_dup_pairs(emb, dim=3, threshold=0.9)
-    )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_broadcast_in_query_join(spark, wh_index):
     from spaghettisearch_spark.operators.bm25 import search
 
@@ -116,7 +100,7 @@ def test_broadcast_in_query_join(spark, wh_index):
 
 
 def test_dense_shard_hydration_is_broadcast(
-    spark, corpus_small, index_small, tmp_path
+    spark, corpus_small, index_small, dim_small, tmp_path
 ):
     """Dense-key shard path: the post-top-k doc_id hydration joins the
     k-row kernel output under an explicit broadcast hint — the
@@ -126,24 +110,17 @@ def test_dense_shard_hydration_is_broadcast(
     is the QUERY plan, not the build lineage — the build's
     postings-to-doc_dim shuffle join is intentional and would otherwise
     appear in the explain output of an inline-built frame."""
-    from pyspark.sql import functions as F
-
-    from spaghettisearch_spark.operators.compression import (
-        build_doc_dim,
-        build_posting_shards,
-    )
+    from spaghettisearch_spark.operators.compression import build_posting_shards
     from spaghettisearch_spark.config import DEFAULT
     from spaghettisearch_spark.operators.wand import wand_topk_from_shards
 
-    doc_dim = build_doc_dim(corpus_small).cache()
+    doc_dim, doc_map = dim_small
     build_posting_shards(
         index_small.postings, corpus_small.count(), DEFAULT,
         doc_dim=doc_dim, weight_col="bm25_weight",
     ).write.parquet(str(tmp_path / "shards"))
     shards = spark.read.parquet(str(tmp_path / "shards"))
-    doc_dim.select(F.col("doc_idx").alias("doc_key"), "doc_id").write.parquet(
-        str(tmp_path / "doc_map")
-    )
+    doc_map.write.parquet(str(tmp_path / "doc_map"))
     doc_map = spark.read.parquet(str(tmp_path / "doc_map"))
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -152,41 +129,36 @@ def test_dense_shard_hydration_is_broadcast(
             spark,
             wand_topk_from_shards(
                 spark, shards, doc_map, ["pars", "buffer"], DEFAULT,
-                k=10, dense_keys=True,
+                k=10,
             ),
         )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert "SortMergeJoin" not in plan, "dense hydration fell back to SMJ"
     assert "BroadcastHashJoin" in plan
-    doc_dim.unpersist()
 
 
-def test_shard_scan_partition_prunes(spark, corpus_small, index_small, tmp_path):
+def test_shard_scan_partition_prunes(
+    spark, corpus_small, index_small, dim_small, tmp_path
+):
     """North-rule storage layout: posting shards written
     partitionBy("shard") must partition-prune to the query terms' shard
     ids at the SCAN (the Spark analog of the reference's per-term point
     gets) — and non-queried columns must not be read."""
-    from pyspark.sql import functions as F
-
     from spaghettisearch_spark.config import DEFAULT
-    from spaghettisearch_spark.operators.compression import (
-        build_doc_dim,
-        build_posting_shards,
-    )
+    from spaghettisearch_spark.operators.compression import build_posting_shards
     from spaghettisearch_spark.operators.wand import wand_topk_from_shards
 
-    doc_dim = build_doc_dim(corpus_small).cache()
+    doc_dim, doc_map = dim_small
     build_posting_shards(
         index_small.postings, corpus_small.count(), DEFAULT,
         doc_dim=doc_dim, weight_col="bm25_weight",
     ).write.partitionBy("shard").parquet(str(tmp_path / "shards"))
     shards = spark.read.parquet(str(tmp_path / "shards"))
-    doc_map = doc_dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
     plan = _formatted_plan(
         spark,
         wand_topk_from_shards(
-            spark, shards, doc_map, ["pars"], DEFAULT, k=10, dense_keys=True
+            spark, shards, doc_map, ["pars"], DEFAULT, k=10
         ),
     )
     assert re.search(r"PartitionFilters:.*shard#\d+ (=|IN)", plan), (
@@ -208,11 +180,10 @@ def test_shard_scan_partition_prunes(spark, corpus_small, index_small, tmp_path)
         assert "positions" not in l and "pos_lens" not in l and "tfs" not in l, (
             "term-bag shard scan reads unneeded payload streams:\n" + l
         )
-    doc_dim.unpersist()
 
 
 def test_dense_phrase_serving_defers_doc_map(
-    spark, corpus_small, index_small, tmp_path
+    spark, corpus_small, index_small, dim_small, tmp_path
 ):
     """Dense-key search_from_shards (free terms + a phrase): scoring and
     position intersection run on long keys, and the corpus-sized
@@ -220,24 +191,17 @@ def test_dense_phrase_serving_defers_doc_map(
     with auto-broadcast disabled the full plan must contain no
     SortMergeJoin (a pre-scoring doc_map join would plan one against
     the decoded postings at scale)."""
-    from pyspark.sql import functions as F
-
     from spaghettisearch_spark.config import DEFAULT
     from spaghettisearch_spark.operators.bm25 import search_from_shards
-    from spaghettisearch_spark.operators.compression import (
-        build_doc_dim,
-        build_posting_shards,
-    )
+    from spaghettisearch_spark.operators.compression import build_posting_shards
 
-    doc_dim = build_doc_dim(corpus_small).cache()
+    doc_dim, doc_map = dim_small
     build_posting_shards(
         index_small.postings, corpus_small.count(), DEFAULT,
         doc_dim=doc_dim, weight_col="bm25_weight",
     ).write.parquet(str(tmp_path / "shards"))
     shards = spark.read.parquet(str(tmp_path / "shards"))
-    doc_dim.select(F.col("doc_idx").alias("doc_key"), "doc_id").write.parquet(
-        str(tmp_path / "doc_map")
-    )
+    doc_map.write.parquet(str(tmp_path / "doc_map"))
     doc_map = spark.read.parquet(str(tmp_path / "doc_map"))
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -246,7 +210,7 @@ def test_dense_phrase_serving_defers_doc_map(
             spark,
             search_from_shards(
                 spark, shards, doc_map, '"hash table" parse', DEFAULT,
-                k=10, skip_key_check=True, dense_keys=True,
+                k=10,
             ),
         )
     finally:

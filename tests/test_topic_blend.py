@@ -125,7 +125,7 @@ def test_engine_facade_topic_query(spark):
         SearchEngine(spark=spark, index=eng.index).query_df("needle", topic="nope")
 
 
-def test_engine_topic_query_shards_backend(spark):
+def test_engine_topic_query_shards_backend(spark, tmp_path):
     """Topic blending on the SHARDS backend with use_wand: each topic's
     PR vector has its own blend maximum, so the skip-planner cache must
     be per-topic (a shared cache reused a stale pr_max and could
@@ -145,7 +145,7 @@ def test_engine_topic_query_shards_backend(spark):
     )
     eng = SearchEngine.build(
         spark, raw, DEFAULT, with_pagerank=True, topics=topics,
-        with_shards=True,
+        warehouse_dir=str(tmp_path / "wh"),
     )
     for topic in ("small", "big", "small", None, "big"):
         mem = eng.query("needle", k=3, use_wand=True, topic=topic,
@@ -167,25 +167,3 @@ def test_engine_topic_query_shards_backend(spark):
     term_keys = [k for k in eng.meta_cache if not k.startswith("\x00")]
     assert len(term_keys) == len(set(term_keys))
 
-
-def test_search_from_shards_key_mode_guard(spark, corpus_small, index_small):
-    """Mismatched shards/doc_map key modes must raise, not silently
-    return empty results (the guard wand_topk_from_shards already has,
-    extended to the exhaustive serving path)."""
-    from spaghettisearch_spark.operators.bm25 import search_from_shards
-    from spaghettisearch_spark.operators.compression import (
-        build_doc_dim,
-        build_posting_shards,
-    )
-
-    n_docs = corpus_small.count()
-    hash_shards = build_posting_shards(
-        index_small.postings, n_docs, DEFAULT, weight_col="bm25_weight"
-    )
-    dense_map = build_doc_dim(corpus_small).select(
-        F.col("doc_idx").alias("doc_key"), "doc_id"
-    )
-    with pytest.raises(ValueError, match="doc_key modes"):
-        search_from_shards(
-            spark, hash_shards, dense_map, "parse", DEFAULT, k=5
-        ).collect()

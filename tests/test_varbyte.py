@@ -4,6 +4,7 @@ equivalence to the uncompressed postings (SURVEY.md §5.2 item 1/3)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -44,11 +45,12 @@ def test_delta_vb_roundtrip_sorted(xs):
 
 def test_shard_roundtrip_spark(spark, corpus_tiny):
     """build shards -> decode -> identical (term, field, doc, tf, weight,
-    positions) multiset as the uncompressed postings."""
+    positions) multiset as the uncompressed postings; postings with no
+    doc_key and no doc_dim are refused."""
     from pyspark.sql import functions as F
 
-    from spaghettisearch_spark.functions.hashing import term_hash60_col
     from spaghettisearch_spark.operators.compression import (
+        build_doc_dim,
         build_posting_shards,
         decode_shards,
     )
@@ -56,13 +58,16 @@ def test_shard_roundtrip_spark(spark, corpus_tiny):
 
     idx = build_index(corpus_tiny)
     n_docs = corpus_tiny.count()
-    shards = build_posting_shards(idx.postings, n_docs)
+    with pytest.raises(ValueError, match="doc_dim"):
+        build_posting_shards(idx.postings, n_docs)
+    dim = build_doc_dim(corpus_tiny).cache()
+    shards = build_posting_shards(idx.postings, n_docs, doc_dim=dim)
     decoded = decode_shards(shards)
 
-    orig = idx.postings.select(
+    orig = idx.postings.join(dim, "doc_id").select(
         "term",
         "field",
-        term_hash60_col("doc_id").alias("doc_key"),
+        F.col("doc_idx").alias("doc_key"),
         F.col("tf").cast("int").alias("tf"),
         F.round("weight", 9).alias("weight"),
         F.col("positions").cast("array<int>").alias("positions"),
@@ -80,6 +85,7 @@ def test_shard_roundtrip_spark(spark, corpus_tiny):
         (F.col("term") == HOT_TERMS[0]) & (F.col("field") == "body")
     ).count()
     assert hot_blocks > 1
+    dim.unpersist()
 
 
 @settings(max_examples=12, deadline=None)
@@ -107,9 +113,8 @@ def test_shard_roundtrip_property(spark, postings_spec):
     arbitrary posting sets — random term/doc/tf/positions/weight combos,
     including empty position lists, duplicate (term, doc) rows collapsed
     to one (the builder's input contract), and weight ties that push
-    groups onto the hash-salt fallback."""
+    groups onto the doc-key salt fallback."""
     from spaghettisearch_spark.config import DEFAULT
-    from spaghettisearch_spark.functions.hashing import term_hash60_py
     from spaghettisearch_spark.operators.compression import (
         build_posting_shards,
         decode_shards,
@@ -127,14 +132,18 @@ def test_shard_roundtrip_property(spark, postings_spec):
         "term string, field string, doc_id string, tf int, "
         "positions array<int>, weight double",
     )
-    shards = build_posting_shards(pdf, 61, DEFAULT)
+    # the dense doc_idx of sorted doc ids doc000..doc060 is the number
+    dim = spark.createDataFrame(
+        [(f"doc{d:03d}", d) for d in range(61)], "doc_id string, doc_idx long"
+    )
+    shards = build_posting_shards(pdf, 61, DEFAULT, doc_dim=dim)
     got = {
         (r["term"], r["doc_key"], r["tf"], round(r["weight"], 6),
          tuple(r["positions"]))
         for r in decode_shards(shards).collect()
     }
     want = {
-        (term, term_hash60_py(doc), tf, w, tuple(pos))
+        (term, int(doc[3:]), tf, w, tuple(pos))
         for (term, doc), (tf, pos, w) in seen.items()
     }
     assert got == want
@@ -212,7 +221,7 @@ def test_absolute_block_bound(spark):
     # WAND over sub-split blocks == python oracle
     doc_map = dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
     res = wand_topk_from_shards(
-        spark, shards, doc_map, ["hh", "cc"], cfg, k=5, dense_keys=True
+        spark, shards, doc_map, ["hh", "cc"], cfg, k=5
     ).collect()
     score: dict = {}
     for t, _f, d, _tf, _p, w in rows:

@@ -32,10 +32,12 @@ def test_wand_matches_exhaustive(spark, index_small, query, kernel):
     # the per-row DAAT heap kernel is a TEST-ONLY parity oracle — it is
     # injected as a callable and must not be reachable by name from any
     # production path (a string other than 'taat' raises)
-    if kernel == "daat_reference":
-        from daat_reference import make_daat_kernel as kernel
     k = 20
     terms, _ = parse_query(query)
+    if kernel == "daat_reference":
+        with pytest.raises(ValueError, match="vectorized kernel"):
+            wand_topk(spark, index_small, terms, DEFAULT, k=k, kernel="daat")
+        from daat_reference import make_daat_kernel as kernel
     want = _exhaustive(spark, index_small, query, k)
     got = wand_topk(
         spark, index_small, terms, DEFAULT, k=k, n_buckets=4, kernel=kernel
@@ -67,20 +69,23 @@ def test_wand_single_bucket_equals_many(spark, index_small):
     assert [r["doc_id"] for r in a] == [r["doc_id"] for r in b]
 
 
-def test_wand_from_shards_matches_exhaustive(spark, corpus_small, index_small):
+def test_wand_from_shards_matches_exhaustive(
+    spark, corpus_small, index_small, dim_small
+):
     """North-rule query path: pruned shard scan -> varbyte decode ->
     WAND == exhaustive DataFrame scoring."""
     from spaghettisearch_spark.operators.compression import build_posting_shards
-    from spaghettisearch_spark.operators.wand import build_doc_map, wand_topk_from_shards
+    from spaghettisearch_spark.operators.wand import wand_topk_from_shards
     from pyspark.sql import functions as F
 
     n_docs = corpus_small.count()
+    doc_dim, doc_map = dim_small
     shards = build_posting_shards(
         index_small.postings.withColumn("weight", F.col("bm25_weight")),
         n_docs,
         DEFAULT,
+        doc_dim=doc_dim,
     ).cache()
-    doc_map = build_doc_map(corpus_small).cache()
     for query in ["parse", "parse buffer flush", "dispatch"]:
         terms, _ = parse_query(query)
         want = _exhaustive(spark, index_small, query, 15)
@@ -90,32 +95,26 @@ def test_wand_from_shards_matches_exhaustive(spark, corpus_small, index_small):
         assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want], query
         for g, w in zip(got, want):
             assert g["score"] == pytest.approx(w["score"], rel=1e-9)
-    shards.unpersist(); doc_map.unpersist()
+    shards.unpersist()
 
 
-def test_wand_from_shards_dense_keys(spark, corpus_small, index_small):
+def test_wand_from_shards_dense_keys(spark, corpus_small, index_small, dim_small):
     """Deferred-hydration shard path: shards keyed by the dense doc_idx
     (build_doc_dim assigns it in global doc_id sort order, so scoring +
     tie-breaking on the long key is the same total order), doc_id strings
     joined only to the n_buckets*k kernel output. Must equal exhaustive,
     with and without the PageRank blend."""
-    from pyspark.sql import functions as F
-
-    from spaghettisearch_spark.operators.compression import (
-        build_doc_dim,
-        build_posting_shards,
-    )
+    from spaghettisearch_spark.operators.compression import build_posting_shards
     from spaghettisearch_spark.operators.links import extract_links
     from spaghettisearch_spark.operators.pagerank import compute_pagerank
     from spaghettisearch_spark.operators.wand import wand_topk_from_shards
 
     n_docs = corpus_small.count()
-    doc_dim = build_doc_dim(corpus_small).cache()
+    doc_dim, doc_map = dim_small
     shards = build_posting_shards(
         index_small.postings, n_docs, DEFAULT,
         doc_dim=doc_dim, weight_col="bm25_weight",
     ).cache()
-    doc_map = doc_dim.select(F.col("doc_idx").alias("doc_key"), "doc_id").cache()
     pr = compute_pagerank(
         spark, corpus_small, extract_links(corpus_small)
     ).cache()
@@ -129,94 +128,49 @@ def test_wand_from_shards_dense_keys(spark, corpus_small, index_small):
         want = _exhaustive(spark, index_small, query, 15, pagerank=prank)
         got = wand_topk_from_shards(
             spark, shards, doc_map, terms, DEFAULT, k=15, n_buckets=4,
-            pagerank=prank, dense_keys=True,
+            pagerank=prank,
         ).collect()
         assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want], query
         for g, w in zip(got, want):
             assert g["score"] == pytest.approx(w["score"], rel=1e-9)
-    import pytest as _pt
-
-    from daat_reference import make_daat_kernel
-
-    with _pt.raises(ValueError):
-        # injected reference kernels tie-break on strings -> refused
-        wand_topk_from_shards(
-            spark, shards, doc_map, ["parse"], DEFAULT, k=5,
-            dense_keys=True, kernel=make_daat_kernel,
-        ).collect()
-    with _pt.raises(ValueError, match="vectorized kernel"):
-        # no per-row kernel is reachable by NAME from production paths
-        wand_topk_from_shards(
-            spark, shards, doc_map, ["parse"], DEFAULT, k=5,
-            dense_keys=True, kernel="daat",
-        ).collect()
-    # keying-mismatch guard: hash-keyed shards + dense_keys must raise
-    # loudly instead of silently hydrating zero rows
-    hash_shards = build_posting_shards(
-        index_small.postings, n_docs, DEFAULT, weight_col="bm25_weight"
-    ).cache()
-    with _pt.raises(ValueError, match="hash keys"):
-        wand_topk_from_shards(
-            spark, hash_shards, doc_map, ["pars"], DEFAULT, k=5,
-            dense_keys=True,
-        )
-    hash_shards.unpersist()
-    shards.unpersist(); doc_map.unpersist(); doc_dim.unpersist(); pr.unpersist()
+    shards.unpersist(); pr.unpersist()
 
 
-def test_empty_bag_schema_matches_nonempty(spark, corpus_small, index_small):
+def test_empty_bag_schema_matches_nonempty(
+    spark, corpus_small, index_small, dim_small
+):
     """An empty bag returns the columns and types of a non-empty result,
-    from both shard entry points, in every key mode: dense keys without
-    a doc_map (the serving engine), dense keys with one, hash keys."""
-    from pyspark.sql import functions as F
-
+    from both shard entry points, with and without a doc_map: doc_key
+    without one (the serving engine), doc_id with one."""
     from spaghettisearch_spark.operators.bm25 import search_from_shards
-    from spaghettisearch_spark.operators.compression import (
-        build_doc_dim,
-        build_posting_shards,
-    )
-    from spaghettisearch_spark.operators.wand import (
-        build_doc_map,
-        wand_topk_from_shards,
-    )
+    from spaghettisearch_spark.operators.compression import build_posting_shards
+    from spaghettisearch_spark.operators.wand import wand_topk_from_shards
 
     n_docs = corpus_small.count()
-    doc_dim = build_doc_dim(corpus_small).cache()
-    dense = build_posting_shards(
+    doc_dim, dense_map = dim_small
+    shards = build_posting_shards(
         index_small.postings, n_docs, DEFAULT,
         doc_dim=doc_dim, weight_col="bm25_weight",
     ).cache()
-    dense_map = doc_dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
-    hashed = build_posting_shards(
-        index_small.postings, n_docs, DEFAULT, weight_col="bm25_weight"
-    ).cache()
-    hash_map = build_doc_map(corpus_small).cache()
     terms, _ = parse_query("parse")
-    for shards, doc_map, dense_keys, key in [
-        (dense, None, True, "doc_key"),
-        (dense, dense_map, True, "doc_id"),
-        (hashed, hash_map, False, "doc_id"),
-    ]:
+    for doc_map, key in [(None, "doc_key"), (dense_map, "doc_id")]:
         got = [
             wand_topk_from_shards(
                 spark, shards, doc_map, bag, DEFAULT, k=5,
-                dense_keys=dense_keys,
             ).dtypes
             for bag in ([], terms)
         ] + [
             search_from_shards(
                 spark, shards, doc_map, q, DEFAULT, k=5,
-                skip_key_check=True, dense_keys=dense_keys,
             ).dtypes
             for q in ("", "parse")
         ]
         assert got[0][0][0] == key
         assert all(g == got[0] for g in got), (key, got)
-    for f in (dense, hashed, hash_map, doc_dim):
-        f.unpersist()
+    shards.unpersist()
 
 
-def test_wand_shards_meta_cache(spark, corpus_small, index_small):
+def test_wand_shards_meta_cache(spark, corpus_small, index_small, dim_small):
     """meta_cache: the per-term block-metadata dictionary a serving node
     keeps. Cached and uncached planning must produce identical results;
     repeated queries must not re-collect already-cached terms (including
@@ -224,16 +178,14 @@ def test_wand_shards_meta_cache(spark, corpus_small, index_small):
     from pyspark.sql import functions as F
 
     from spaghettisearch_spark.operators.compression import build_posting_shards
-    from spaghettisearch_spark.operators.wand import (
-        build_doc_map,
-        wand_topk_from_shards,
-    )
+    from spaghettisearch_spark.operators.wand import wand_topk_from_shards
 
     n_docs = corpus_small.count()
+    doc_dim, doc_map = dim_small
     shards = build_posting_shards(
-        index_small.postings, n_docs, DEFAULT, weight_col="bm25_weight"
+        index_small.postings, n_docs, DEFAULT,
+        doc_dim=doc_dim, weight_col="bm25_weight",
     ).cache()
-    doc_map = build_doc_map(corpus_small).cache()
     cache: dict = {}
     for query in ["parse buffer", "dispatch", "parse zzzznotaword"]:
         terms, _ = parse_query(query)
@@ -250,10 +202,10 @@ def test_wand_shards_meta_cache(spark, corpus_small, index_small):
         assert cached == again
         for t in terms:
             assert t in cache  # missing-from-index terms cached as []
-    shards.unpersist(); doc_map.unpersist()
+    shards.unpersist()
 
 
-def test_wand_shards_pr_max_cached(spark, corpus_small, index_small):
+def test_wand_shards_pr_max_cached(spark, corpus_small, index_small, dim_small):
     """Blended shard queries cache the PageRank blend maximum alongside
     the term metadata: the repeat-query path runs NO driver aggregation
     on the pagerank frame (asserted by making .agg explode), and cached
@@ -265,15 +217,15 @@ def test_wand_shards_pr_max_cached(spark, corpus_small, index_small):
     from spaghettisearch_spark.operators.pagerank import compute_pagerank
     from spaghettisearch_spark.operators.wand import (
         _PR_MAX_KEY,
-        build_doc_map,
         wand_topk_from_shards,
     )
 
     n_docs = corpus_small.count()
+    doc_dim, doc_map = dim_small
     shards = build_posting_shards(
-        index_small.postings, n_docs, DEFAULT, weight_col="bm25_weight"
+        index_small.postings, n_docs, DEFAULT,
+        doc_dim=doc_dim, weight_col="bm25_weight",
     ).cache()
-    doc_map = build_doc_map(corpus_small).cache()
     pr = compute_pagerank(spark, corpus_small, extract_links(corpus_small)).cache()
     pr.count()
     terms, _ = parse_query("parse buffer")
@@ -301,10 +253,10 @@ def test_wand_shards_pr_max_cached(spark, corpus_small, index_small):
         del pr.agg
     assert [r["doc_id"] for r in first] == [r["doc_id"] for r in uncached]
     assert first == again
-    shards.unpersist(); doc_map.unpersist(); pr.unpersist()
+    shards.unpersist(); pr.unpersist()
 
 
-def test_wand_two_phase_planner(spark, corpus_small, index_small):
+def test_wand_two_phase_planner(spark, corpus_small, index_small, dim_small):
     """Two-phase skip planning (wave-1 exact partials as the threshold
     floor) must stay EXACT — identical ranking and scores to the
     single-phase and exhaustive paths — and can only tighten the kept
@@ -313,16 +265,14 @@ def test_wand_two_phase_planner(spark, corpus_small, index_small):
 
     from spaghettisearch_spark.operators import wand as wand_mod
     from spaghettisearch_spark.operators.compression import build_posting_shards
-    from spaghettisearch_spark.operators.wand import (
-        build_doc_map,
-        wand_topk_from_shards,
-    )
+    from spaghettisearch_spark.operators.wand import wand_topk_from_shards
 
     n_docs = corpus_small.count()
+    doc_dim, doc_map = dim_small
     shards = build_posting_shards(
-        index_small.postings, n_docs, DEFAULT, weight_col="bm25_weight"
+        index_small.postings, n_docs, DEFAULT,
+        doc_dim=doc_dim, weight_col="bm25_weight",
     ).cache()
-    doc_map = build_doc_map(corpus_small).cache()
     for query in ["dispatch buffer kernel", "parse buffer", "dispatch"]:
         terms, _ = parse_query(query)
         want = _exhaustive(spark, index_small, query, 10)
@@ -339,7 +289,7 @@ def test_wand_two_phase_planner(spark, corpus_small, index_small):
         for g, w in zip(two, want):
             assert g["score"] == pytest.approx(w["score"], rel=1e-9)
         assert kept_2p <= kept_1p, (query, kept_2p, kept_1p)
-    shards.unpersist(); doc_map.unpersist()
+    shards.unpersist()
 
 
 def test_two_phase_unlocks_multiterm_skipping(spark):
@@ -385,7 +335,7 @@ def test_two_phase_unlocks_multiterm_skipping(spark):
     one = [
         r["doc_id"]
         for r in wand_topk_from_shards(
-            spark, zshards, zmap, bag, zcfg, k=30, dense_keys=True,
+            spark, zshards, zmap, bag, zcfg, k=30,
             meta_cache=cache,
         ).collect()
     ]
@@ -393,7 +343,7 @@ def test_two_phase_unlocks_multiterm_skipping(spark):
     two = [
         r["doc_id"]
         for r in wand_topk_from_shards(
-            spark, zshards, zmap, bag, zcfg, k=30, dense_keys=True,
+            spark, zshards, zmap, bag, zcfg, k=30,
             meta_cache=cache, two_phase=True,
         ).collect()
     ]
@@ -413,14 +363,20 @@ def test_block_skip_before_decode(spark):
     so the threshold (435 = the strong docs' full blended score, fully
     visible in the two blocks' top-N samples) provably beats every other
     hot block's upper bound (290.029)."""
-    from spaghettisearch_spark.functions.hashing import term_hash60_py
+    from pyspark.sql import functions as F
+
     from spaghettisearch_spark.operators import wand as wand_mod
-    from spaghettisearch_spark.operators.compression import build_posting_shards
+    from spaghettisearch_spark.operators.compression import (
+        build_doc_dim,
+        build_posting_shards,
+    )
     from spaghettisearch_spark.operators.wand import wand_topk_from_shards
 
     cfg = DEFAULT
     doc_ids = [f"d{i:04d}" for i in range(400)]
-    salt0 = [d for d in doc_ids if term_hash60_py(d) % cfg.n_salts == 0]
+    # the tied hot weights fall back to doc-key salting (doc_key mod
+    # n_salts), and build_doc_dim keys these sorted ids by their index
+    salt0 = doc_ids[::cfg.n_salts]
     strong = sorted(salt0)[:8]
     rows = []
     for d in doc_ids:
@@ -438,10 +394,13 @@ def test_block_skip_before_decode(spark):
         "term string, field string, doc_id string, tf int, "
         "positions array<int>, weight double",
     )
-    shards = build_posting_shards(postings, len(doc_ids), cfg).cache()
-    doc_map = spark.createDataFrame(
-        [(term_hash60_py(d), d) for d in doc_ids], "doc_key long, doc_id string"
-    )
+    dim = build_doc_dim(
+        spark.createDataFrame([(d,) for d in doc_ids], "doc_id string")
+    ).cache()
+    shards = build_posting_shards(
+        postings, len(doc_ids), cfg, doc_dim=dim
+    ).cache()
+    doc_map = dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
     got = wand_topk_from_shards(
         spark, shards, doc_map, ["raresig", "hotterm"], cfg, k=8, n_buckets=4
     ).collect()
@@ -458,6 +417,7 @@ def test_block_skip_before_decode(spark):
     assert [r["doc_id"] for r in got] == [d for d, _ in want]
     for r, (_d, s) in zip(got, want):
         assert r["score"] == pytest.approx(s, rel=1e-9)
+    dim.unpersist()
     shards.unpersist()
 
 
@@ -502,7 +462,7 @@ def test_range_aware_planner_beats_global_bounds(spark):
     shards.count()
     doc_map = dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
     got = wand_topk_from_shards(
-        spark, shards, doc_map, ["terma", "termb"], cfg, k=5, dense_keys=True
+        spark, shards, doc_map, ["terma", "termb"], cfg, k=5
     ).collect()
     stats = dict(wand_mod.LAST_SKIP_STATS)
     # exact oracle: monotone sum, top-5 = lowest doc indexes
@@ -577,7 +537,6 @@ def test_candidate_doc_pruning(spark):
     doc_map = dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
     got = wand_topk_from_shards(
         spark, shards, doc_map, ["raresig", "hotterm"], cfg, k=5,
-        dense_keys=True,
     ).collect()
     stats = dict(wand_mod.LAST_SKIP_STATS)
     assert 0 < stats["cand_docs"] < n, stats
@@ -650,7 +609,6 @@ def test_candidate_pruning_sample_min_bound(spark):
     doc_map = dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
     got = wand_topk_from_shards(
         spark, shards, doc_map, ["raresig", "hotterm"], cfg, k=5,
-        dense_keys=True,
     ).collect()
     stats = dict(wand_mod.LAST_SKIP_STATS)
     assert 0 < stats["cand_docs"] < n, stats
@@ -721,7 +679,7 @@ def test_two_phase_auto(spark, docs_small, tmp_path):
         for r in search(spark, idx, "dispatch buffer parse", DEFAULT, k=10).collect()
     ]
     got = wand_topk_from_shards(
-        spark, shards, doc_map, terms, DEFAULT, k=10, dense_keys=True,
+        spark, shards, doc_map, terms, DEFAULT, k=10,
         two_phase="auto",
     ).collect()
     assert [r["doc_id"] for r in got] == want
@@ -729,7 +687,7 @@ def test_two_phase_auto(spark, docs_small, tmp_path):
     kept_1p = wand_mod.LAST_SKIP_STATS["kept"]
     eager = replace(DEFAULT, two_phase_auto_min_postings=0)
     got2 = wand_topk_from_shards(
-        spark, shards, doc_map, terms, eager, k=10, dense_keys=True,
+        spark, shards, doc_map, terms, eager, k=10,
         two_phase="auto",
     ).collect()
     assert [r["doc_id"] for r in got2] == want
@@ -739,7 +697,7 @@ def test_two_phase_auto(spark, docs_small, tmp_path):
     assert wand_mod.LAST_SKIP_STATS["cand_docs"] > 0
     assert wand_mod.LAST_SKIP_STATS["two_phase"] == 0
     got3 = wand_topk_from_shards(
-        spark, shards, doc_map, terms, eager, k=10, dense_keys=True,
+        spark, shards, doc_map, terms, eager, k=10,
         two_phase=True,
     ).collect()
     assert [r["doc_id"] for r in got3] == want
@@ -781,14 +739,14 @@ def test_floor_cache_repeat_query(spark, docs_small, tmp_path):
     # explicit two_phase=True: on this bag auto would skip the wave
     # (candidate pruning is admissible) and never cache a floor
     got1 = wand_topk_from_shards(
-        spark, shards, doc_map, terms, eager, k=10, dense_keys=True,
+        spark, shards, doc_map, terms, eager, k=10,
         two_phase=True, meta_cache=cache,
     ).collect()
     s1 = dict(wand_mod.LAST_SKIP_STATS)
     assert s1["two_phase"] == 1 and s1["floor_cached"] == 0
     assert any(key.startswith("\x00floor:") for key in cache)
     got2 = wand_topk_from_shards(
-        spark, shards, doc_map, terms, eager, k=10, dense_keys=True,
+        spark, shards, doc_map, terms, eager, k=10,
         two_phase="auto", meta_cache=cache,
     ).collect()
     s2 = dict(wand_mod.LAST_SKIP_STATS)
@@ -801,7 +759,7 @@ def test_floor_cache_repeat_query(spark, docs_small, tmp_path):
     # a different bag must not hit the cached floor
     other, _ = parse_query("buffer parse")
     wand_topk_from_shards(
-        spark, shards, doc_map, other, eager, k=10, dense_keys=True,
+        spark, shards, doc_map, other, eager, k=10,
         two_phase="auto", meta_cache=cache,
     ).collect()
     assert wand_mod.LAST_SKIP_STATS["floor_cached"] == 0
@@ -810,7 +768,7 @@ def test_floor_cache_repeat_query(spark, docs_small, tmp_path):
     # heavier weights would be an inadmissible threshold here)
     lighter = replace(eager, w_body=eager.w_body * 0.5)
     got3 = wand_topk_from_shards(
-        spark, shards, doc_map, terms, lighter, k=10, dense_keys=True,
+        spark, shards, doc_map, terms, lighter, k=10,
         two_phase="auto", meta_cache=cache,
     ).collect()
     assert wand_mod.LAST_SKIP_STATS["floor_cached"] == 0
@@ -864,7 +822,7 @@ def test_range_level_decode_pruning(spark):
     shards.count()
     doc_map = dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
     got = wand_topk_from_shards(
-        spark, shards, doc_map, ["terma", "termb"], cfg, k=5, dense_keys=True
+        spark, shards, doc_map, ["terma", "termb"], cfg, k=5
     ).collect()
     stats = dict(wand_mod.LAST_SKIP_STATS)
     score = {
@@ -947,14 +905,13 @@ def test_two_phase_string_guard_and_zero_weight_field(spark):
     doc_map = dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
     got = wand_topk_from_shards(
         spark, shards, doc_map, ["raresig", "hott"], cfg, k=5,
-        dense_keys=True,
     ).collect()
     # title weight 0 -> only raresig's body postings score
     assert [r["doc_id"] for r in got] == docs[3:8]
     with pytest.raises(ValueError, match="two_phase"):
         wand_topk_from_shards(
             spark, shards, doc_map, ["raresig"], cfg, k=5,
-            dense_keys=True, two_phase="Auto",
+            two_phase="Auto",
         )
     dim.unpersist()
     shards.unpersist()

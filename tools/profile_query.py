@@ -89,7 +89,7 @@ def main():
     # full query, warm cache
     def full():
         wand_topk_from_shards(
-            spark, shards, doc_map, wand_terms, cfg, k=50, dense_keys=True,
+            spark, shards, doc_map, wand_terms, cfg, k=50,
             meta_cache=meta,
         ).collect()
 
@@ -114,7 +114,7 @@ def main():
 
         def topk(c=c, cache=cache):
             wand_topk_from_shards(
-                spark, shards, None, wand_terms, c, k=50, dense_keys=True,
+                spark, shards, None, wand_terms, c, k=50,
                 meta_cache=cache, two_phase="auto",
             ).collect()
 
@@ -145,7 +145,7 @@ def main():
 
     # explain for the record
     df = wand_topk_from_shards(
-        spark, shards, doc_map, wand_terms, cfg, k=50, dense_keys=True,
+        spark, shards, doc_map, wand_terms, cfg, k=50,
         meta_cache=meta,
     )
     Path("plans/r06").mkdir(parents=True, exist_ok=True)
