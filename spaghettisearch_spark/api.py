@@ -21,6 +21,7 @@ from pyspark.sql import types as T
 
 from .config import DEFAULT, EngineConfig
 from .functions.snippets import make_summary_py
+from .functions.smalldf import isin_col
 from .functions.tokenize import parse_query
 from .operators.bm25 import search
 from .operators.index_build import Index, build_index
@@ -347,7 +348,7 @@ class SearchEngine:
         keys = [r[key] for r in ranked]
         cards = {
             c[key]: c.asDict(recursive=True)
-            for c in self.doc_cards.filter(F.col(key).isin(keys)).collect()
+            for c in self.doc_cards.filter(isin_col(key, keys)).collect()
         }
         out = []
         for r in ranked:
@@ -498,7 +499,7 @@ class SearchEngine:
         dimension count). Required whenever the delta references keys
         beyond the current dimension: a ranked key without a card would
         have no result to show, so that case raises loudly instead
-        (checked from the delta's block metadata, no payload decode).
+        (checked on the delta's decoded doc keys).
 
         ``new_corpus`` (ingested rows for the SAME new docs): the source
         of their cards, appended to ``doc_cards`` — metadata, top words
@@ -509,25 +510,15 @@ class SearchEngine:
         Both checks run BEFORE any state changes: a rejected merge
         leaves doc_cards, n_docs and the shards untouched."""
         from .functions.hashing import term_hash60_col
-        from .operators.compression import merge_posting_shards
+        from .operators.compression import decode_shards, merge_posting_shards
 
         self._require_warehouse()
-        # EXACT per-block maximum doc_key: range_bounds[-1] is the last
-        # (largest) key of the key-sorted block. top_doc_keys alone is
-        # NOT a max-key witness — it samples the top-32 postings BY
-        # WEIGHT, so a >32-posting block can reference keys beyond the
-        # dimension whose weights fall below every sampled one, and the
-        # guard would silently pass while those ranked rows have no
-        # card. Fall back to the sample only for pre-range-metadata
-        # frames (best effort, as before).
-        if "range_bounds" in delta.columns:
-            key_max = F.coalesce(
-                F.element_at("range_bounds", -1),
-                F.array_max("top_doc_keys"),
-            )
-        else:
-            key_max = F.array_max("top_doc_keys")
-        mx = delta.agg(F.max(key_max).alias("m")).first()["m"]
+        # EXACT maximum doc_key of the delta: decode its key streams (the
+        # delta is one batch). Block metadata is no witness — a
+        # sample-complete block stores none, and top_doc_keys samples
+        # the top-32 postings BY WEIGHT, so a key beyond the dimension
+        # can sit under every sampled weight.
+        mx = decode_shards(delta, fields=()).agg(F.max("doc_key")).first()[0]
         n_new = 0
         if new_doc_map is not None:
             if "doc_idx" in new_doc_map.columns:

@@ -22,6 +22,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .porter2 import stem_cached
+from .smalldf import in_sql
 
 _TOKEN_STRIP_RE = re.compile(r"[^a-zA-Z0-9]")
 _WS_RE = re.compile(r"\s+")
@@ -45,26 +46,30 @@ STOPWORDS = load_stopwords()
 # Spark-native side
 # ---------------------------------------------------------------------------
 
-def tokenize_col(col: Column | str, remove_stopwords: bool = True) -> Column:
-    """Raw text column -> array<string> of clean, unstemmed tokens.
+def tokenize_col(col: str, remove_stopwords: bool = True) -> Column:
+    """Raw text column (by name) -> array<string> of clean, unstemmed
+    tokens.
 
     Pure built-in functions; Catalyst keeps this inside whole-stage
     codegen, so tokenizing 100 TB of content never crosses into Python.
+    Written as ONE SQL expression: the Column API would create the
+    429-stopword list one py4j literal at a time (~0.2 s on the driver
+    per call, paid three times per build and once per ingest batch).
     """
-    c = F.col(col) if isinstance(col, str) else col
     # strip @link{...} markers first (fixture analog of <a href=...> — the
     # href itself is not body text; the anchor text around it is)
-    c = F.regexp_replace(c, r"@link\{[^}]*\}", " ")
-    toks = F.split(F.trim(F.regexp_replace(F.lower(c), "[^a-z0-9]+", " ")), " ")
-    toks = F.filter(toks, lambda t: t != "")
+    text = f"regexp_replace(`{col}`, '@link[{{][^}}]*[}}]', ' ')"
+    keep = "t != ''"
     if remove_stopwords:
         # NOTE: not array_except — that would dedupe and destroy tf counts.
-        # isin over 429 literals becomes an InSet (hash lookup) in codegen.
+        # IN over 429 literals becomes an InSet (hash lookup) in codegen.
         # Positions later index the post-filter stream, matching the
         # reference (parser.go:195-207 runs on Laundry output).
-        sw = sorted(STOPWORDS)
-        toks = F.filter(toks, lambda t: ~t.isin(sw))
-    return toks
+        keep += " AND NOT " + in_sql("t", sorted(STOPWORDS))
+    return F.expr(
+        f"filter(split(trim(regexp_replace(lower({text}), '[^a-z0-9]+', ' ')),"
+        f" ' '), t -> {keep})"
+    )
 
 
 # ---------------------------------------------------------------------------

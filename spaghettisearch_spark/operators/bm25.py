@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, EngineConfig
+from ..functions.smalldf import isin_col
 from ..functions.tokenize import parse_query
 from .index_build import FIELD_BODY, FIELD_TITLE, Index
 from .phrase import phrase_matches
@@ -98,7 +99,7 @@ def posting_hits(
     a broadcast of the pruned side.
     """
     term_set = list(set(terms))
-    hits = index.postings.filter(F.col("term").isin(term_set))
+    hits = index.postings.filter(isin_col("term", term_set))
     if "bucket" in hits.columns:
         # warehouse postings are partitioned by bucket = hash60(term) % n;
         # deriving the buckets driver-side turns the term filter into
@@ -106,7 +107,7 @@ def posting_hits(
         from ..functions.hashing import term_hash60_py
 
         buckets = sorted({term_hash60_py(t) % cfg.n_shards for t in term_set})
-        hits = hits.filter(F.col("bucket").isin(buckets))
+        hits = hits.filter(isin_col("bucket", buckets))
     if cfg.scorer == "bm25" and "bm25_weight" in hits.columns:
         # warehouse-loaded postings carry precomputed BM25 impact weights
         # (plans/build_pipeline.py) — no stats joins needed at query time

@@ -5,12 +5,19 @@ grouped DataFrame aggregations with explicit skew handling. The
 reference stores postings as JSON blobs per term
 (/root/reference/indexer/indexer.go:350-408); we store columnar shards:
 
-    posting_shards(term, field, shard, n_salts_used,
-                   df long, max_weight double,
-                   doc_idx binary,   -- delta+varbyte over dense doc indexes
-                   tfs binary,       -- varbyte
-                   positions binary, -- varbyte, per-doc position deltas
-                   pos_lens binary)  -- varbyte, positions-per-doc
+    posting_shards(term string, field string,
+                   shard int,                 -- partition directory
+                   salt int, df long,
+                   max_weight double,         -- skip metadata: NULL on
+                   top_doc_keys array<long>,  -- sample-complete blocks
+                   top_weights array<double>, -- (df <= BLOCK_SAMPLE_N),
+                   range_bounds array<long>,  -- rebuilt from doc_ids +
+                   range_maxw array<double>,  -- weights by term_block_meta
+                   doc_ids binary,    -- delta+varbyte over dense doc keys
+                   tfs binary,        -- varbyte
+                   weights binary,    -- big-endian float64 impact weights
+                   positions binary,  -- varbyte, per-doc position deltas
+                   pos_lens binary)   -- varbyte, positions-per-doc
 
 Layout: ``shard = term_hash60 % n_shards`` — written with
 ``partitionBy("shard")`` so a query's ``term IN (...)`` prunes to
@@ -45,12 +52,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import DEFAULT, EngineConfig
 from ..functions.hashing import term_hash60_col
+from ..functions.smalldf import isin_col
 
 # ---------------------------------------------------------------------------
 # numpy varbyte codec
@@ -144,6 +152,11 @@ SHARD_SCHEMA = T.StructType(
         T.StructField("shard", T.IntegerType()),
         T.StructField("salt", T.IntegerType()),
         T.StructField("df", T.LongType()),
+        # skip metadata (max_weight through range_maxw) is stored only
+        # on blocks with df > BLOCK_SAMPLE_N. On a sample-complete block
+        # it would be a reordered copy of the block's own keys and
+        # weights, so those rows hold NULL in all five columns and
+        # term_block_meta rebuilds them from doc_ids + weights.
         T.StructField("max_weight", T.DoubleType()),
         # block-max metadata: the block's top-N (doc_key, weight) sample,
         # readable without touching the varbyte payloads (parquet column
@@ -184,6 +197,31 @@ BLOCK_SAMPLE_N = 32
 # finely enough that a hot term's per-range max sits near its typical
 # high weight, not its single global outlier
 RANGE_SUB_N = 16
+
+SKIP_META_COLS = [
+    "max_weight", "top_doc_keys", "top_weights", "range_bounds", "range_maxw",
+]
+
+
+def block_skip_meta(keys: np.ndarray, weights: np.ndarray) -> dict:
+    """One block's skip metadata from its doc_key-sorted keys and their
+    weights: the block max, the top-BLOCK_SAMPLE_N sample in stable
+    ``-weight`` order, and ``min(n, RANGE_SUB_N)`` equi-depth sub-ranges
+    (each chunk's first key, then the block's last key; each chunk's
+    max weight). The encoder stores it for blocks with df >
+    BLOCK_SAMPLE_N; term_block_meta rebuilds it for the others, so both
+    sides use this one function."""
+    n = len(keys)
+    top = np.argsort(np.negative(weights), kind="stable")[:BLOCK_SAMPLE_N]
+    m = min(n, RANGE_SUB_N)
+    sub = (np.arange(m, dtype=np.int64) * n) // m
+    return {
+        "max_weight": float(weights.max()),
+        "top_doc_keys": keys[top].tolist(),
+        "top_weights": weights[top].tolist(),
+        "range_bounds": keys[sub].tolist() + [int(keys[-1])],
+        "range_maxw": np.maximum.reduceat(weights, sub).tolist(),
+    }
 
 
 def _encode_blocks(batch_iter):
@@ -324,31 +362,21 @@ def _encode_block_frame(pdf, cols):
             pos_ends = np.maximum.accumulate(pos_cuts)
         else:
             pos_ends = np.zeros(nb + 1, dtype=np.int64)
-        # per-block max weight
-        blk_max = np.maximum.reduceat(weights, starts)
-        # per-block top-N sample: one stable global sort by (block, -w)
-        order2 = np.lexsort((np.negative(weights), block_ids))
-        # equi-depth sub-range starts for every block, concatenated
-        n_subs = np.minimum(lens, RANGE_SUB_N).astype(np.int64)
-        sub_local = np.concatenate(
-            [(np.arange(int(m)) * int(n)) // int(m)
-             for m, n in zip(n_subs, lens)]
-        )
-        sub_global = sub_local + np.repeat(starts, n_subs)
-        rng_maxw_all = np.maximum.reduceat(weights, sub_global)
-        sub_cuts = np.cumsum(n_subs) - n_subs
         out = {
             "term": pdf["term"].to_numpy(),
             "field": pdf["field"].to_numpy(),
             "shard": pdf["shard"].astype("int32").to_numpy(),
             "salt": pdf["salt"].astype("int32").to_numpy(),
             "df": lens,
-            "max_weight": blk_max,
         }
-        tdk = np.empty(nb, dtype=object)
-        tw = np.empty(nb, dtype=object)
-        rb = np.empty(nb, dtype=object)
-        rm = np.empty(nb, dtype=object)
+        # skip metadata only where it is not the block itself: a
+        # sample-complete block (df <= BLOCK_SAMPLE_N) keeps NULLs
+        skip = {c: np.full(nb, None, dtype=object) for c in SKIP_META_COLS}
+        for b in np.flatnonzero(lens > BLOCK_SAMPLE_N):
+            s, e = int(starts[b]), int(starts[b] + lens[b])
+            for c, v in block_skip_meta(keys[s:e], weights[s:e]).items():
+                skip[c][b] = v
+        out.update(skip)
         dib = np.empty(nb, dtype=object)
         tfb = np.empty(nb, dtype=object)
         wb = np.empty(nb, dtype=object)
@@ -362,22 +390,11 @@ def _encode_block_frame(pdf, cols):
         for b in range(nb):
             s = int(starts[b])
             n = int(lens[b])
-            sel = order2[s:s + min(BLOCK_SAMPLE_N, n)]
-            tdk[b] = keys[sel].tolist()
-            tw[b] = weights[sel].tolist()
-            ss = int(sub_cuts[b])
-            m = int(n_subs[b])
-            rb[b] = keys[sub_global[ss:ss + m]].tolist() + [int(keys[s + n - 1])]
-            rm[b] = rng_maxw_all[ss:ss + m].tolist()
             dib[b] = bytes(kmv[key_cuts[b]:key_cuts[b + 1]])
             tfb[b] = bytes(tmv[tf_cuts[b]:tf_cuts[b + 1]])
             wb[b] = bytes(wmv[8 * s:8 * (s + n)])
             pb[b] = bytes(pmv[pos_ends[b]:pos_ends[b + 1]])
             plb[b] = bytes(plmv[pl_cuts[b]:pl_cuts[b + 1]])
-        out["top_doc_keys"] = tdk
-        out["top_weights"] = tw
-        out["range_bounds"] = rb
-        out["range_maxw"] = rm
         out["doc_ids"] = dib
         out["tfs"] = tfb
         out["weights"] = wb
@@ -787,10 +804,21 @@ def decode_shards(
     )
 
 
-BLOCK_META_COLS = [
-    "term", "field", "salt", "df", "max_weight",
-    "top_doc_keys", "top_weights",
-]
+BLOCK_META_COLS = ["term", "field", "salt", "df"] + SKIP_META_COLS
+
+
+def _block_meta_row(r) -> Row:
+    """One metadata row as the planner reads it: a sample-complete block
+    (df <= BLOCK_SAMPLE_N, decided by df alone) gets its skip metadata
+    rebuilt from its own doc_ids + weights; any other block keeps what
+    the encoder stored. The payload bytes are not kept."""
+    d = r.asDict()
+    doc_ids, weights = d.pop("doc_ids"), d.pop("weights")
+    if int(d["df"]) <= BLOCK_SAMPLE_N:
+        keys = np.cumsum(vb_decode(doc_ids))
+        w = np.frombuffer(weights, dtype=">f8").astype(np.float64)
+        d.update(block_skip_meta(keys, w))
+    return Row(**d)
 
 
 def term_block_meta(
@@ -799,27 +827,44 @@ def term_block_meta(
     cfg: EngineConfig,
     meta_cache: dict | None = None,
 ) -> list | None:
-    """The query terms' block-metadata rows (payload columns never
-    leave parquet), optionally through the caller's per-term cache —
-    the shared serving-node term dictionary (see
-    wand.wand_topk_from_shards's meta_cache contract). Returns None
-    when the shards frame predates block metadata."""
+    """The query terms' block-metadata rows (BLOCK_META_COLS),
+    optionally through the caller's per-term cache — the shared
+    serving-node term dictionary (see wand.wand_topk_from_shards's
+    meta_cache contract). Returns None when the shards frame predates
+    block metadata.
+
+    Sample-complete blocks (df <= BLOCK_SAMPLE_N) store no skip
+    metadata: the scan also projects their ``doc_ids`` and ``weights``
+    (NULL for every other block, so larger payloads never leave the
+    executors) and the five fields are rebuilt here with the encoder's
+    own block_skip_meta, before the cache stores the row. The scan
+    therefore reads those two column chunks of the row groups it
+    touches; the rows and the plan built from them equal what a stored
+    copy would give."""
     if "top_weights" not in shards.columns:
         return None
-    meta_cols = list(BLOCK_META_COLS)
-    if "range_bounds" in shards.columns:
-        meta_cols += ["range_bounds", "range_maxw"]
     term_list = sorted(set(terms))
-    if meta_cache is None:
-        return prune_shards(shards, term_list, cfg).select(*meta_cols).collect()
-    missing = [t for t in term_list if t not in meta_cache]
+    missing = (
+        term_list
+        if meta_cache is None
+        else [t for t in term_list if t not in meta_cache]
+    )
+    fetched: dict[str, list] = {t: [] for t in missing}
     if missing:
-        fetched: dict[str, list] = {t: [] for t in missing}
+        complete = F.col("df") <= F.lit(BLOCK_SAMPLE_N)
         for r in (
-            prune_shards(shards, missing, cfg).select(*meta_cols).collect()
+            prune_shards(shards, missing, cfg)
+            .select(
+                *BLOCK_META_COLS,
+                F.when(complete, F.col("doc_ids")).alias("doc_ids"),
+                F.when(complete, F.col("weights")).alias("weights"),
+            )
+            .collect()
         ):
-            fetched[r["term"]].append(r)
-        meta_cache.update(fetched)
+            fetched[r["term"]].append(_block_meta_row(r))
+    if meta_cache is None:
+        return [r for t in term_list for r in fetched[t]]
+    meta_cache.update(fetched)
     return [r for t in term_list for r in meta_cache.get(t, [])]
 
 
@@ -845,12 +890,12 @@ def prune_shards(shards: DataFrame, terms: list[str], cfg: EngineConfig) -> Data
     on the partitionBy("shard") layout). The shared front of every
     shard-backed query path."""
     term_set = sorted(set(terms))
-    pruned = shards.filter(F.col("term").isin(term_set))
+    pruned = shards.filter(isin_col("term", term_set))
     if "shard" in shards.columns:
         from ..functions.hashing import term_hash60_py
 
         ids = sorted({term_hash60_py(t) % cfg.n_shards for t in term_set})
-        pruned = pruned.filter(F.col("shard").isin(ids))
+        pruned = pruned.filter(isin_col("shard", ids))
     return pruned
 
 
@@ -1031,7 +1076,7 @@ def merge_posting_shards(
                 else set()
             )
         )
-        base = base.filter(F.col("shard").isin(ids))
+        base = base.filter(isin_col("shard", ids))
 
     untouched = base.join(touched, ["term", "field"], "left_anti")
     touched_base = base.join(touched, ["term", "field"], "left_semi")
@@ -1157,7 +1202,7 @@ def refresh_shard_stats(
                 ).distinct().collect()
             }
         )
-        shards = shards.filter(F.col("shard").isin(ids))
+        shards = shards.filter(isin_col("shard", ids))
     untouched = shards.join(drifted, ["term", "field"], "left_anti")
     touched = shards.join(drifted, ["term", "field"], "left_semi")
 

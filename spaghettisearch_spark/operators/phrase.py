@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
+from ..functions.smalldf import isin_col
 
 
 def phrase_matches(
@@ -102,7 +103,7 @@ def phrase_matches_from_hits(
     for i, t in enumerate(phrase):
         idx_of.setdefault(t, []).append(i)
     adj = (
-        hits.filter(F.col("term").isin(sorted(idx_of)))
+        hits.filter(isin_col("term", sorted(idx_of)))
         .withColumn("term_idx", F.explode(term_lookup(idx_of)))
         .select(
             "doc_id",

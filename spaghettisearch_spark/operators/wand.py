@@ -62,6 +62,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import DEFAULT, EngineConfig
+from ..functions.smalldf import in_sql
 from .bm25 import posting_hits, term_lookup
 from .index_build import FIELD_BODY, FIELD_TITLE, Index
 
@@ -444,9 +445,10 @@ def plan_blocks(
     extra_ub: float = 0.0,
     min_threshold: float | None = None,
 ) -> tuple:
-    """Block-max skip planner (driver-side, pure): given undecoded block
-    metadata rows (term, field, salt, df, max_weight, top_doc_keys,
-    top_weights, range_bounds, range_maxw), return
+    """Block-max skip planner (driver-side, pure): given the block
+    metadata rows of compression.term_block_meta (term, field, salt, df,
+    max_weight, top_doc_keys, top_weights, range_bounds, range_maxw),
+    return
 
       (keep, threshold, candidate_doc_keys, keep_ranges)
 
@@ -487,7 +489,9 @@ def plan_blocks(
 
     Doc-level candidate pruning (the at-scale complement of block
     skipping): a block with df <= BLOCK_SAMPLE_N is SAMPLE-COMPLETE —
-    its top-N sample IS its whole posting list — and a (term, field)
+    its top-N sample IS its whole posting list (so the shards store no
+    copy: term_block_meta rebuilds its rows from the block's own keys
+    and weights, with the encoder's rules) — and a (term, field)
     group all of whose blocks are complete contributes ZERO to any doc
     outside the sampled keys. So a doc appearing in NO block's sample
     scores at most U_out = sum over the INCOMPLETE groups of the max,
@@ -934,11 +938,10 @@ def wand_topk_from_shards(
         )
         if len(keep) < len(meta):
             keep_keys = [f"{t}\x01{f}\x01{s}" for t, f, s in sorted(keep)]
-            pruned = pruned.filter(
-                F.concat_ws(
-                    "\x01", "term", "field", F.col("salt").cast("string")
-                ).isin(keep_keys)
-            )
+            pruned = pruned.filter(F.expr(in_sql(
+                "concat_ws('\x01', term, field, CAST(salt AS STRING))",
+                keep_keys,
+            )))
         # scale-adaptive task sizing (guide §2.2): the planner knows the
         # decode volume, so size the decode stage and the bucket-kernel
         # shuffle from it — tiny queries collapse to 1-2 tasks per stage

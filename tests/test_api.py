@@ -311,13 +311,14 @@ def test_apply_merge_guards_unknown_doc_keys(spark, docs_small, tmp_path):
 def test_apply_merge_guard_catches_unsampled_key_and_leaves_state_intact(
     spark, docs_small, tmp_path
 ):
-    """The dimension guard must use the EXACT block max key
-    (range_bounds[-1]), not the weight-sampled top_doc_keys: a block
-    with >BLOCK_SAMPLE_N postings whose out-of-dimension key carries the
-    LOWEST weight is invisible to the sample, and the old guard passed
-    while the ranked row silently vanished at hydration. A rejected
-    merge must also leave the engine unmutated (doc_map parquet not
-    appended, n_docs/doc_meta unchanged)."""
+    """The dimension guard must use the EXACT max key of the delta, not
+    the weight-sampled top_doc_keys: a block with >BLOCK_SAMPLE_N
+    postings whose out-of-dimension key carries the LOWEST weight is
+    invisible to the sample, and a sample-based guard passed while the
+    ranked row silently vanished at hydration. A sample-complete block
+    stores no metadata, so its key must be caught too. A rejected merge
+    must also leave the engine unmutated (doc_map parquet not appended,
+    n_docs/doc_meta unchanged)."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
@@ -360,12 +361,24 @@ def test_apply_merge_guard_catches_unsampled_key_and_leaves_state_intact(
         F.max("k")
     ).first()[0]
     assert samp < n0 + 50, "fixture must keep the bad key out of the sample"
-    with _pytest.raises(ValueError, match="beyond the warehouse dimension"):
-        eng.apply_merge(delta)
-    # rejected merge left the engine untouched
-    assert eng.n_docs == n0
-    assert eng.doc_map.count() == map_rows0
-    assert eng.index.doc_meta.count() == meta_rows0
+    # a sample-complete block (df <= BLOCK_SAMPLE_N) stores no metadata
+    # at all, so its out-of-dimension key has no metadata witness
+    small = build_posting_shards(
+        bad_postings.filter(
+            (F.col("doc_key") < 4) | (F.col("doc_key") == n0 + 50)
+        ),
+        n0, cold_cfg,
+    ).localCheckpoint(eager=True)
+    small_rows = small.select("df", "range_bounds").collect()
+    assert [r["df"] for r in small_rows] == [5]
+    assert small_rows[0]["range_bounds"] is None
+    for bad in (delta, small):
+        with _pytest.raises(ValueError, match="beyond the warehouse dimension"):
+            eng.apply_merge(bad)
+        # rejected merge left the engine untouched
+        assert eng.n_docs == n0
+        assert eng.doc_map.count() == map_rows0
+        assert eng.index.doc_meta.count() == meta_rows0
 
 
 def _spark_jobs(spark, group, fn):

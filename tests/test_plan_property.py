@@ -32,6 +32,30 @@ class _Row(dict):
     __getattr__ = dict.__getitem__
 
 
+def reference_meta_row(term, field, salt, keys, weights):
+    """Encoder-faithful metadata of one block from its key-sorted
+    ``keys`` and their ``weights``, written out independently of
+    compression.block_skip_meta: top-N by weight (stable), equi-depth
+    chunk starts plus the last key, per-chunk maxima."""
+    n = len(keys)
+    top = np.argsort(-weights, kind="stable")[:BLOCK_SAMPLE_N]
+    n_sub = int(min(RANGE_SUB_N, n))
+    sub_starts = (np.arange(n_sub) * n) // n_sub
+    return _Row(
+        term=term,
+        field=field,
+        salt=salt,
+        df=n,
+        max_weight=float(weights.max()),
+        top_doc_keys=[int(keys[i]) for i in top],
+        top_weights=[float(weights[i]) for i in top],
+        range_bounds=[int(k) for k in keys[sub_starts]] + [int(keys[-1])],
+        range_maxw=[
+            float(m) for m in np.maximum.reduceat(weights, sub_starts)
+        ],
+    )
+
+
 def _meta_rows(rng, n_terms, n_docs, n_salts):
     """Random postings + encoder-faithful metadata. Returns (rows,
     postings) where postings maps (term, field, salt) -> (keys, weights)
@@ -47,30 +71,10 @@ def _meta_rows(rng, n_terms, n_docs, n_salts):
             keys = np.sort(keys_all[keys_all % n_salts == salt]).astype(
                 np.int64
             )
-            n = len(keys)
-            if n == 0:
+            if len(keys) == 0:
                 continue
-            weights = rng.uniform(0.01, 10.0, size=n)
-            top = np.argsort(-weights, kind="stable")[:BLOCK_SAMPLE_N]
-            n_sub = int(min(RANGE_SUB_N, n))
-            sub_starts = (np.arange(n_sub) * n) // n_sub
-            rows.append(
-                _Row(
-                    term=term,
-                    field="body",
-                    salt=salt,
-                    df=n,
-                    max_weight=float(weights.max()),
-                    top_doc_keys=[int(keys[i]) for i in top],
-                    top_weights=[float(weights[i]) for i in top],
-                    range_bounds=[int(k) for k in keys[sub_starts]]
-                    + [int(keys[-1])],
-                    range_maxw=[
-                        float(m)
-                        for m in np.maximum.reduceat(weights, sub_starts)
-                    ],
-                )
-            )
+            weights = rng.uniform(0.01, 10.0, size=len(keys))
+            rows.append(reference_meta_row(term, "body", salt, keys, weights))
             postings[(term, "body", salt)] = (keys, weights)
     return rows, postings
 

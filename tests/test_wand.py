@@ -436,6 +436,7 @@ def test_range_aware_planner_beats_global_bounds(spark):
     from spaghettisearch_spark.operators.compression import (
         build_doc_dim,
         build_posting_shards,
+        term_block_meta,
     )
     from spaghettisearch_spark.operators.wand import (
         plan_blocks,
@@ -477,18 +478,111 @@ def test_range_aware_planner_beats_global_bounds(spark):
     assert stats["kept"] <= 4 < stats["total"], stats
 
     qtf = {"terma": 1.0, "termb": 1.0}
-    meta_cols = [
-        "term", "field", "salt", "df", "max_weight",
-        "top_doc_keys", "top_weights",
+    # the planner's rows come from term_block_meta: these 25-posting
+    # blocks are sample-complete, so their shard rows store no metadata
+    meta = term_block_meta(shards, ["terma", "termb"], cfg)
+    keep_rng = plan_blocks(meta, cfg, qtf, 5)[0]
+    no_ranges = [
+        {c: v for c, v in r.asDict().items()
+         if c not in ("range_bounds", "range_maxw")}
+        for r in meta
     ]
-    keep_rng = plan_blocks(
-        shards.select(*(meta_cols + ["range_bounds", "range_maxw"])).collect(),
-        cfg, qtf, 5,
-    )[0]
-    keep_glob = plan_blocks(shards.select(*meta_cols).collect(), cfg, qtf, 5)[0]
+    keep_glob = plan_blocks(no_ranges, cfg, qtf, 5)[0]
     assert len(keep_rng) <= 4
     assert len(keep_glob) >= 4 * len(keep_rng), (len(keep_rng), len(keep_glob))
     dim.unpersist()
+    shards.unpersist()
+
+
+def test_block_meta_rebuilt_for_sample_complete_blocks(
+    spark, corpus_small, index_small, dim_small
+):
+    """Sample-complete blocks (df <= BLOCK_SAMPLE_N) store no skip
+    metadata; term_block_meta rebuilds it from the block's own postings.
+    On corpus_small plus a hot term in every doc, encoded with 4 salts so
+    the hot and common terms' blocks exceed BLOCK_SAMPLE_N while the rare
+    terms' do not, every block's metadata row must equal the reference
+    builder applied to its decoded postings, incomplete blocks must still
+    store theirs, and the planner must give the same plan on the rebuilt
+    rows as on the reference rows."""
+    from dataclasses import replace
+
+    import numpy as np
+    from pyspark.sql import functions as F
+    from test_plan_property import reference_meta_row
+
+    from spaghettisearch_spark.operators.compression import (
+        BLOCK_SAMPLE_N,
+        SKIP_META_COLS,
+        build_posting_shards,
+        decode_shards,
+        term_block_meta,
+    )
+    from spaghettisearch_spark.operators.wand import plan_blocks
+
+    cfg = replace(DEFAULT, n_salts=4)
+    doc_dim, _ = dim_small
+    cols = ["term", "field", "doc_id", "tf", "positions", "weight"]
+    postings = index_small.postings.withColumn("weight", F.col("bm25_weight"))
+    hot = corpus_small.select(
+        F.lit("hotterm").alias("term"),
+        F.lit("body").alias("field"),
+        "doc_id",
+        F.lit(1).alias("tf"),
+        F.array(F.lit(0)).alias("positions"),
+        (F.lit(0.5) + (F.abs(F.hash("doc_id")) % 997) / F.lit(100.0))
+        .alias("weight"),
+    )
+    shards = build_posting_shards(
+        postings.select(*cols).unionByName(hot),
+        corpus_small.count(), cfg, doc_dim=doc_dim,
+    ).cache()
+    stored = {
+        (r["term"], r["field"], r["salt"]): r
+        for r in shards.select("term", "field", "salt", "df", *SKIP_META_COLS)
+        .collect()
+    }
+    complete = {b for b, r in stored.items() if r["df"] <= BLOCK_SAMPLE_N}
+    assert complete and len(complete) < len(stored), "fixture needs both"
+    assert any(b[0] == "hotterm" for b in set(stored) - complete)
+
+    # reference rows from the decoded postings, key-sorted per block
+    dec = decode_shards(
+        shards, passthrough=("salt",), fields=("weight",)
+    ).toPandas().sort_values(["term", "field", "salt", "doc_key"])
+    ref = {
+        b: reference_meta_row(
+            *b, g["doc_key"].to_numpy(np.int64),
+            g["weight"].to_numpy(np.float64),
+        )
+        for b, g in dec.groupby(["term", "field", "salt"], sort=True)
+    }
+    terms = sorted({b[0] for b in stored})
+    got = {
+        (r["term"], r["field"], r["salt"]): r
+        for r in term_block_meta(shards, terms, cfg)
+    }
+    assert set(got) == set(ref) == set(stored)
+    for b, r in got.items():
+        for c in ["df"] + SKIP_META_COLS:
+            assert r[c] == ref[b][c], (b, c)
+        if b in complete:
+            assert all(stored[b][c] is None for c in SKIP_META_COLS), b
+        else:
+            for c in SKIP_META_COLS:
+                assert stored[b][c] == ref[b][c], (b, c)
+
+    got_rows = [got[b] for b in sorted(got)]
+    ref_rows = [ref[b] for b in sorted(ref)]
+    for q in ("hotterm parse", "dispatch buffer", "hotterm",
+              "flush kernel hotterm"):
+        qtf = {t: 1.0 for t in parse_query(q)[0]}
+        sel_got = [r for r in got_rows if r["term"] in qtf]
+        sel_ref = [r for r in ref_rows if r["term"] in qtf]
+        for k in (1, 5, 20):
+            assert plan_blocks(sel_got, cfg, qtf, k) == plan_blocks(
+                sel_ref, cfg, qtf, k
+            ), (q, k)
     shards.unpersist()
 
 
