@@ -295,23 +295,35 @@ def main() -> None:
     import shutil as _shutil
     import tempfile as _tempfile
 
+    from spaghettisearch_spark.sources.driver_read import read_back
+
     _shard_dir = _tempfile.mkdtemp(prefix="bench_shards_")
-    shards.write.mode("overwrite").partitionBy("shard").parquet(_shard_dir)
-    shards_pq = spark.read.parquet(_shard_dir)
+    shards.write.mode("overwrite").partitionBy("shard").parquet(
+        f"{_shard_dir}/posting_shards"
+    )
+    shards_pq, shard_files = read_back(spark, f"{_shard_dir}/posting_shards")
     shard_meta_pq: dict = {}
     qset["q_wand_shards_parquet"] = lambda: wand_topk_from_shards(
         spark, shards_pq, doc_map, wand_terms, cfg, k=50,
         meta_cache=shard_meta_pq,
     )
     # the same warehouse served through the SearchEngine facade (parse ->
-    # WAND over parquet shards -> one keyed doc_cards read + driver-side
+    # WAND over parquet shards -> driver-side read of the k doc_cards +
     # snippets) — the full serving path a query node runs
-    from spaghettisearch_spark.api import SearchEngine, build_doc_cards
+    from spaghettisearch_spark.api import (
+        SearchEngine,
+        _store_cards,
+        build_doc_cards,
+    )
 
+    cards, card_files = _store_cards(
+        spark, build_doc_cards(doc_map, corpus, idx.doc_meta), n_files,
+        f"{_shard_dir}/doc_cards",
+    )
     eng_wh = SearchEngine(
         spark=spark, index=idx, cfg=cfg, shards=shards_pq,
-        doc_cards=build_doc_cards(doc_map, corpus, idx.doc_meta).cache(),
-        warehouse_dir=_shard_dir, n_docs=n_files,
+        doc_cards=cards, warehouse_dir=_shard_dir, n_docs=n_files,
+        shard_files=shard_files, card_files=card_files,
     )
     qset["q_engine_warehouse"] = lambda: eng_wh.query_df(
         "spark query scan", k=50, use_wand=True, backend="shards"

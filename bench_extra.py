@@ -125,15 +125,26 @@ def main():
             import shutil as _sh
             import tempfile as _tmp
 
-            from spaghettisearch_spark.api import SearchEngine, build_doc_cards
+            from spaghettisearch_spark.api import (
+                SearchEngine,
+                _store_cards,
+                build_doc_cards,
+            )
+            from spaghettisearch_spark.sources.driver_read import read_back
 
             shard_dir = _tmp.mkdtemp(prefix="bx_shards_")
-            shards.write.mode("overwrite").partitionBy("shard").parquet(shard_dir)
-            shards_pq = spark.read.parquet(shard_dir)
+            shards.write.mode("overwrite").partitionBy("shard").parquet(
+                f"{shard_dir}/posting_shards"
+            )
+            shards_pq, shard_files = read_back(spark, f"{shard_dir}/posting_shards")
+            cards, card_files = _store_cards(
+                spark, build_doc_cards(doc_map, corpus, idx.doc_meta), n_files,
+                f"{shard_dir}/doc_cards",
+            )
             eng = SearchEngine(
                 spark=spark, index=idx, cfg=cfg, shards=shards_pq,
-                doc_cards=build_doc_cards(doc_map, corpus, idx.doc_meta).cache(),
-                warehouse_dir=shard_dir, n_docs=n_files,
+                doc_cards=cards, warehouse_dir=shard_dir, n_docs=n_files,
+                shard_files=shard_files, card_files=card_files,
             )
             out["q_engine_warehouse"] = best_of(
                 lambda: eng.query_df(

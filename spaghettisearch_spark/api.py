@@ -13,6 +13,9 @@ class; rank semantics are covered by the oracle tests.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+import weakref
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -21,7 +24,6 @@ from pyspark.sql import types as T
 
 from .config import DEFAULT, EngineConfig
 from .functions.snippets import make_summary_py
-from .functions.smalldf import isin_col
 from .functions.tokenize import parse_query
 from .operators.bm25 import search
 from .operators.index_build import Index, build_index
@@ -29,6 +31,7 @@ from .operators.links import extract_links
 from .operators.pagerank import compute_pagerank
 from .operators.wand import dense_vector, wand_topk
 from .sources.corpus import ingest
+from .sources.driver_read import read_back, read_rows, read_table
 
 # doc_cards: one row per document, keyed and clustered by the dense
 # doc_key — the reference's forward tables forw[1..4] (SURVEY §1) as one
@@ -90,32 +93,31 @@ def build_doc_cards(
 
 
 def _store_cards(
-    spark: SparkSession, cards: DataFrame, n: int, path: str | None,
+    spark: SparkSession, cards: DataFrame, n: int, path: str,
     mode: str = "overwrite",
-) -> DataFrame:
-    """Cluster ``n`` card rows by doc_key (one file / partition per
-    CARDS_PER_FILE keys, sorted within) and write them to ``path`` as
-    zstd parquet — returning the read-back frame — or, without a path,
-    cache them in memory."""
+) -> tuple[DataFrame, list[str]]:
+    """Cluster ``n`` card rows by doc_key (one file per CARDS_PER_FILE
+    keys, sorted within), write them to ``path`` as zstd parquet and
+    return the read-back frame with its file listing — the files the
+    engine's driver-side card reads open."""
     n_files = max(1, -(-n // CARDS_PER_FILE))
-    clustered = cards.repartition(
+    cards.repartition(
         n_files, F.floor(F.col("doc_key") / CARDS_PER_FILE)
-    ).sortWithinPartitions("doc_key")
-    if path is None:
-        clustered = clustered.cache()
-        clustered.count()
-        return clustered
-    clustered.write.mode(mode).option("compression", "zstd").parquet(path)
-    return spark.read.parquet(path)
+    ).sortWithinPartitions("doc_key").write.mode(mode).option(
+        "compression", "zstd"
+    ).parquet(path)
+    return read_back(spark, path)
 
 
 @dataclass
 class SearchEngine:
-    """The serving engine. A query is two Spark jobs: the top-k job (k
-    rows of key + score parts, PageRank folded into the bucket kernel)
-    and one keyed read of those k rows from ``doc_cards``; snippets are
-    computed on the driver from the card's content. A first-seen query
-    term adds one block-metadata fetch (``meta_cache``). A WAND bag
+    """The serving engine. A query is one Spark job, the top-k job (k
+    rows of key + score parts, PageRank folded into the bucket kernel).
+    The driver reads the rest itself with pyarrow, from the files the
+    read-back frames list (sources.driver_read): the block metadata of
+    first-seen query terms (then kept in ``meta_cache``) and the k
+    result cards, whose snippets it computes from the card's content.
+    Posting decode, scoring and the top-k stay in Spark. A WAND bag
     whose planned decode volume fits one task
     (``cfg.query_target_postings_per_task``) runs its top-k job as one
     stage of one task, decoding and scoring in one Python pass; larger
@@ -123,12 +125,13 @@ class SearchEngine:
     queries do so at any size.
 
     ``doc_cards`` (CARD_COLS, one row per doc, clustered by the dense
-    doc_key) is written once at build: zstd parquet under
-    ``warehouse_dir``, else cached in memory. ``doc_map`` is its
-    (doc_key, doc_id) projection. The PageRank vectors (global and per
-    topic) are dense float64 arrays indexed by doc_key, broadcast once
-    per cards version and swapped by reference, so a running query
-    keeps the vector it started with."""
+    doc_key) is written once at build as zstd parquet: under
+    ``warehouse_dir``, else in a temporary directory removed with the
+    last engine that serves it. ``doc_map`` is its (doc_key, doc_id)
+    projection. The PageRank vectors (global and per topic) are dense
+    float64 arrays indexed by doc_key, broadcast once per cards version
+    and swapped by reference, so a running query keeps the vector it
+    started with."""
 
     spark: SparkSession
     index: Index
@@ -141,6 +144,13 @@ class SearchEngine:
     # cache a serving node keeps across queries
     shards: DataFrame | None = None
     doc_cards: DataFrame | None = None
+    # the read-back frames' file listings (driver_read.read_back), taken
+    # whenever the engine sets ``shards`` or ``doc_cards``: the driver
+    # reads open exactly the files the frames' Spark jobs would. No
+    # shard listing (a direct caller's frame) keeps the Spark metadata
+    # scan.
+    shard_files: list[str] | None = None
+    card_files: list[str] = field(default_factory=list)
     # ONE shared cache: per-term block metadata is pagerank-invariant, so
     # every topic reuses the same term rows; only the cached PR blend
     # maximum is vector-specific (a stale pr_max under another topic's
@@ -177,7 +187,7 @@ class SearchEngine:
         blend (its computeTopicProbs is a no-op, SURVEY.md §3.1).
 
         Always writes ``doc_cards`` (the family is aggregated here,
-        once), cached in memory without ``warehouse_dir``. The shard
+        once), to a temporary directory without ``warehouse_dir``. The shard
         backend exists only with ``warehouse_dir``: persist the
         compressed shards as partitionBy("shard") zstd parquet and the
         cards as zstd parquet, and SERVE from the read-back frames —
@@ -203,13 +213,17 @@ class SearchEngine:
         doc_dim = build_doc_dim(corpus).cache()
         n_docs = doc_dim.count()
         doc_map = doc_dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
-        doc_cards = _store_cards(
+        tmp = tempfile.mkdtemp(prefix="doc_cards-") if warehouse_dir is None else None
+        doc_cards, card_files = _store_cards(
             spark,
             build_doc_cards(doc_map, corpus, idx.doc_meta, pr, links),
             n_docs,
-            f"{warehouse_dir}/doc_cards" if warehouse_dir is not None else None,
+            f"{warehouse_dir or tmp}/doc_cards",
         )
-        shards = None
+        if tmp is not None:
+            # every engine copy (dataclasses.replace) shares this frame
+            weakref.finalize(doc_cards, shutil.rmtree, tmp, ignore_errors=True)
+        shards = shard_files = None
         if warehouse_dir is not None:
             # warehouse-resident serving: dense-keyed compressed shards
             # (cfg must be bm25 — asserted at query time by the shard
@@ -229,12 +243,12 @@ class SearchEngine:
             # serve from the read-back frame: queries prune to the
             # terms' shard partitions and read only the metadata /
             # requested payload columns
-            shards = spark.read.parquet(shards_path)
+            shards, shard_files = read_back(spark, shards_path)
         doc_dim.unpersist()
         eng = cls(
             spark=spark, index=idx, cfg=cfg, pagerank=pr, topic_pagerank=tpr,
             shards=shards, doc_cards=doc_cards, warehouse_dir=warehouse_dir,
-            n_docs=n_docs,
+            n_docs=n_docs, shard_files=shard_files, card_files=card_files,
         )
         eng.pr_vectors = eng._build_pr_vectors()
         # the cards hold everything queries read of these two
@@ -251,15 +265,15 @@ class SearchEngine:
 
     def _build_pr_vectors(self) -> dict:
         """Dense doc_key-indexed PageRank vectors from the current cards
-        (global) and the topic artifact, each broadcast once. Called at
-        build and whenever the cards change — never from query threads."""
+        (global, read on the driver) and the topic artifact, each
+        broadcast once. Called at build and whenever the cards change —
+        never from query threads."""
         tables = {}
         if self.pagerank is not None:
-            pdf = (
-                self.doc_cards.filter(F.col("pagerank") != 0)
-                .select("doc_key", "pagerank").toPandas()
+            t = read_table(self.card_files, ["doc_key", "pagerank"])
+            tables[None] = dense_vector(
+                t["doc_key"].to_numpy(), t["pagerank"].to_numpy(), self.n_docs
             )
-            tables[None] = dense_vector(pdf["doc_key"], pdf["pagerank"], self.n_docs)
         if self.topic_pagerank is not None:
             pdf = (
                 self.topic_pagerank.join(self.doc_map, "doc_id")
@@ -308,6 +322,7 @@ class SearchEngine:
                     self.spark, self.shards, None, terms, self.cfg,
                     k=k, pagerank=pr,
                     meta_cache=self.meta_cache, pr_max_key=pr_key,
+                    shard_files=self.shard_files,
                     # planner decides per query whether the exact-floor
                     # wave pays (kept posting volume vs
                     # cfg.two_phase_auto_min_postings)
@@ -320,6 +335,7 @@ class SearchEngine:
                     self.spark, self.shards, None, q, self.cfg,
                     pagerank=pr, k=k,
                     meta_cache=self.meta_cache,  # sizes the decode stages
+                    shard_files=self.shard_files,
                 )
         else:
             key = "doc_id"
@@ -337,19 +353,19 @@ class SearchEngine:
         return topk.collect(), key, terms, phrases
 
     def _with_cards(self, ranked: list, key: str, terms, phrases) -> list[dict]:
-        """The card lookup: ONE keyed read of the k ranked rows' cards,
-        snippets computed here on the driver, rows in the final
-        (score desc, doc_id asc) order — dense keys merged in by
-        extend_doc_dim are not in doc_id order."""
+        """The card lookup: the k ranked rows' cards read on the driver
+        from the card files (a ``key`` filter prunes row groups),
+        snippets computed here, rows in the final (score desc, doc_id
+        asc) order — dense keys merged in by extend_doc_dim are not in
+        doc_id order. Cards are read after the top-k job from the
+        current listing; apply_merge appends cards before it publishes
+        shards, so they cover every key the shards can rank."""
         if not ranked:
             return []
-        if self.doc_cards is None:
+        if not self.card_files:
             raise ValueError("query needs doc_cards: build the engine with SearchEngine.build")
         keys = [r[key] for r in ranked]
-        cards = {
-            c[key]: c.asDict(recursive=True)
-            for c in self.doc_cards.filter(isin_col(key, keys)).collect()
-        }
+        cards = {c[key]: c for c in read_rows(self.card_files, CARD_COLS, key, keys)}
         out = []
         for r in ranked:
             card = cards.get(r[key])
@@ -375,8 +391,8 @@ class SearchEngine:
     ) -> DataFrame:
         """Top-k as a DataFrame: (doc_id, title_rank, body_rank,
         pagerank, score, CARD_META..., snippet), in (score desc, doc_id
-        asc) order. Runs the same two jobs as ``query`` and returns the
-        finished rows. ``topic`` blends that category's PageRank vector
+        asc) order. Runs the same top-k job and card read as ``query``
+        and returns the finished rows. ``topic`` blends that category's PageRank vector
         instead of the global one (requires a build with topics=...).
         ``backend="shards"`` serves the SAME query surface (terms,
         phrases, PR/topic blend, wand, cards, snippets) from the
@@ -481,7 +497,7 @@ class SearchEngine:
                     .option("compression", "zstd")
                     .parquet(f"{shards_path}/shard={sid}")
                 )
-        self.shards = self.spark.read.parquet(shards_path)
+        self.shards, self.shard_files = read_back(self.spark, shards_path)
         self.meta_cache.clear()
 
     def apply_merge(
@@ -548,7 +564,7 @@ class SearchEngine:
             cards = build_doc_cards(
                 new_doc_map, nc, build_doc_meta(nc, tokenize_fields(nc, cfg=self.cfg)),
             )
-            self.doc_cards = _store_cards(
+            self.doc_cards, self.card_files = _store_cards(
                 self.spark, cards, n_new, f"{self.warehouse_dir}/doc_cards",
                 mode="append",
             )

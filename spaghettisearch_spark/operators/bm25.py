@@ -308,6 +308,7 @@ def search_from_shards(
     pagerank=None,
     k: int | None = None,
     meta_cache: dict | None = None,
+    shard_files: list[str] | None = None,
 ) -> DataFrame:
     """The FULL query pipeline (free terms + phrases + field blend + PR)
     served from the COMPRESSED posting shards — the warehouse-resident
@@ -337,7 +338,9 @@ def search_from_shards(
     (guide §2.2: one decode task per ~query_target_postings_per_task
     postings instead of one near-empty Python task per scan partition);
     without it each call fetches the metadata once. Results are
-    identical with or without it.
+    identical with or without it. ``shard_files``: the frame's file
+    listing, so that fetch is a driver read instead of a Spark job
+    (same contract as wand_topk_from_shards).
     """
     from .compression import (
         decode_shards,
@@ -368,7 +371,7 @@ def search_from_shards(
     kernel_parts = query_decode_parts(
         term_block_meta(
             shards, free_terms + [t for p in phrase_lists for t in p], cfg,
-            cache,
+            cache, shard_files,
         ),
         cfg,
     )

@@ -57,8 +57,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import DEFAULT, EngineConfig
-from ..functions.hashing import term_hash60_col
+from ..functions.hashing import term_hash60_col, term_hash60_py
 from ..functions.smalldf import isin_col
+from ..sources.driver_read import partition_files, read_rows
 
 # ---------------------------------------------------------------------------
 # numpy varbyte codec
@@ -807,12 +808,11 @@ def decode_shards(
 BLOCK_META_COLS = ["term", "field", "salt", "df"] + SKIP_META_COLS
 
 
-def _block_meta_row(r) -> Row:
+def _block_meta_row(d: dict) -> Row:
     """One metadata row as the planner reads it: a sample-complete block
     (df <= BLOCK_SAMPLE_N, decided by df alone) gets its skip metadata
     rebuilt from its own doc_ids + weights; any other block keeps what
-    the encoder stored. The payload bytes are not kept."""
-    d = r.asDict()
+    the encoder stored. The payload bytes are popped from ``d``."""
     doc_ids, weights = d.pop("doc_ids"), d.pop("weights")
     if int(d["df"]) <= BLOCK_SAMPLE_N:
         keys = np.cumsum(vb_decode(doc_ids))
@@ -826,20 +826,26 @@ def term_block_meta(
     terms: list[str],
     cfg: EngineConfig,
     meta_cache: dict | None = None,
+    shard_files: list[str] | None = None,
 ) -> list | None:
-    """The query terms' block-metadata rows (BLOCK_META_COLS),
-    optionally through the caller's per-term cache — the shared
-    serving-node term dictionary (see wand.wand_topk_from_shards's
-    meta_cache contract). Returns None when the shards frame predates
-    block metadata.
+    """The query terms' block-metadata rows (BLOCK_META_COLS), each
+    term's rows in (field, salt) order, optionally through the caller's
+    per-term cache — the shared serving-node term dictionary (see
+    wand.wand_topk_from_shards's meta_cache contract). Returns None when
+    the shards frame predates block metadata.
+
+    ``shard_files``: the read-back frame's file listing
+    (driver_read.read_back). With it, the missing terms' rows are read
+    on the driver with pyarrow from the files of their
+    ``hash60(term) % n_shards`` partitions (a ``term`` filter prunes row
+    groups): no Spark job. Without it (a direct caller's in-memory
+    frame) one pruned Spark scan collects them; the two give equal rows.
 
     Sample-complete blocks (df <= BLOCK_SAMPLE_N) store no skip
-    metadata: the scan also projects their ``doc_ids`` and ``weights``
-    (NULL for every other block, so larger payloads never leave the
-    executors) and the five fields are rebuilt here with the encoder's
-    own block_skip_meta, before the cache stores the row. The scan
-    therefore reads those two column chunks of the row groups it
-    touches; the rows and the plan built from them equal what a stored
+    metadata: the read also takes their ``doc_ids`` and ``weights`` and
+    the five fields are rebuilt with the encoder's own block_skip_meta
+    (_block_meta_row, one rule for both reads) before the cache stores
+    the row. The rows and the plan built from them equal what a stored
     copy would give."""
     if "top_weights" not in shards.columns:
         return None
@@ -850,7 +856,14 @@ def term_block_meta(
         else [t for t in term_list if t not in meta_cache]
     )
     fetched: dict[str, list] = {t: [] for t in missing}
-    if missing:
+    if missing and shard_files is not None:
+        ids = {term_hash60_py(t) % cfg.n_shards for t in missing}
+        for d in read_rows(
+            partition_files(shard_files, ids),
+            [*BLOCK_META_COLS, "doc_ids", "weights"], "term", missing,
+        ):
+            fetched[d["term"]].append(_block_meta_row(d))
+    elif missing:
         complete = F.col("df") <= F.lit(BLOCK_SAMPLE_N)
         for r in (
             prune_shards(shards, missing, cfg)
@@ -861,7 +874,9 @@ def term_block_meta(
             )
             .collect()
         ):
-            fetched[r["term"]].append(_block_meta_row(r))
+            fetched[r["term"]].append(_block_meta_row(r.asDict()))
+    for rows in fetched.values():
+        rows.sort(key=lambda r: (r["field"], r["salt"]))
     if meta_cache is None:
         return [r for t in term_list for r in fetched[t]]
     meta_cache.update(fetched)
@@ -892,8 +907,6 @@ def prune_shards(shards: DataFrame, terms: list[str], cfg: EngineConfig) -> Data
     term_set = sorted(set(terms))
     pruned = shards.filter(isin_col("term", term_set))
     if "shard" in shards.columns:
-        from ..functions.hashing import term_hash60_py
-
         ids = sorted({term_hash60_py(t) % cfg.n_shards for t in term_set})
         pruned = pruned.filter(isin_col("shard", ids))
     return pruned

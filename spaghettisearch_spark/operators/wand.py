@@ -686,6 +686,7 @@ def wand_topk_from_shards(
     meta_cache: dict | None = None,
     two_phase: bool | str = False,
     pr_max_key: str = _PR_MAX_KEY,
+    shard_files: list[str] | None = None,
 ) -> DataFrame:
     """Exact top-k straight from the compressed posting shards: pruned
     shard scan -> varbyte decode (mapInPandas) -> block-max WAND. With
@@ -750,11 +751,17 @@ def wand_topk_from_shards(
 
     ``meta_cache``: optional dict owned by the caller, mapping term ->
     its block-metadata rows. A serving node queries the same shards
-    frame repeatedly; without the cache every query pays one extra
-    driver job just to fetch the (tiny) per-term block metadata for
-    skip planning. With it, only first-seen terms are collected — the
-    in-memory term dictionary every native engine keeps, made explicit.
-    The caller must drop the dict when the shards frame is rebuilt.
+    frame repeatedly; without the cache every query re-reads the (tiny)
+    per-term block metadata for skip planning. With it, only first-seen
+    terms are read — the in-memory term dictionary every native engine
+    keeps, made explicit. The caller must drop the dict when the shards
+    frame is rebuilt.
+
+    ``shard_files``: the shards frame's file listing when it is a bare
+    parquet read-back (driver_read.read_back). The metadata of
+    first-seen terms is then read on the driver from those files, and
+    the top-k job is the query's only Spark job; without it the read is
+    one pruned Spark scan (compression.term_block_meta).
 
     ``pr_max_key``: the meta_cache slot for the cached PageRank blend
     maximum. The per-term block rows are pagerank-INVARIANT, so a caller
@@ -790,7 +797,7 @@ def wand_topk_from_shards(
     # the planner then decodes everything, as before.)
     from .compression import term_block_meta
 
-    meta = term_block_meta(shards, term_list, cfg, meta_cache)
+    meta = term_block_meta(shards, term_list, cfg, meta_cache, shard_files)
     if meta is not None:
         extra_ub = 0.0
         if pagerank is not None:

@@ -227,6 +227,18 @@ def test_concurrent_queries_one_engine(spark, docs_small, tmp_path):
             assert got == want[q], q
 
 
+def _assert_driver_meta_matches(eng, terms):
+    """The driver read of ``terms``' block metadata from the engine's
+    shard listing equals the Spark scan over its read-back frame."""
+    from spaghettisearch_spark.operators.compression import term_block_meta
+
+    assert eng.shard_files
+    terms = sorted(set(terms))
+    driver = term_block_meta(eng.shards, terms, eng.cfg, shard_files=eng.shard_files)
+    assert driver == term_block_meta(eng.shards, terms, eng.cfg)
+    return driver
+
+
 def test_apply_merge_clears_emptied_partition(spark, docs_small, tmp_path):
     """Dynamic partition overwrite only rewrites partitions present in
     the written data — a touched partition whose merged output is EMPTY
@@ -249,9 +261,18 @@ def test_apply_merge_clears_emptied_partition(spark, docs_small, tmp_path):
         .select("term", "field", "doc_key")
         .localCheckpoint(eager=True)
     )
+    gone = sorted({r["term"] for r in dels.select("term").distinct().collect()})
+    kept = sorted({
+        r["term"] for r in eng.shards.filter(F.col("shard") != sid)
+        .select("term").distinct().collect()
+    })
+    assert _assert_driver_meta_matches(eng, gone[:20] + kept[:40])
     eng.apply_merge(eng.shards.limit(0), delete_postings=dels)
     assert eng.shards.filter(F.col("shard") == sid).count() == 0
     assert eng.shards.filter(F.col("shard") != sid).count() == before_other
+    # the emptied partition's terms have no rows in either read
+    meta = _assert_driver_meta_matches(eng, gone + kept[:40])
+    assert meta and not {r["term"] for r in meta} & set(gone)
 
 
 def test_apply_merge_guards_unknown_doc_keys(spark, docs_small, tmp_path):
@@ -413,12 +434,13 @@ def _assert_same_cards(got, want):
             assert a[key] == b[key], key
 
 
-def test_warehouse_query_is_two_jobs(spark, docs_tiny, tmp_path):
-    """A repeated shard query costs the top-k job plus one keyed read of
-    doc_cards — at most 3 Spark jobs for a WAND bag and for a phrase —
-    and its cards equal the memory backend's. A WAND bag this small
-    plans one task, so its top-k job is one stage of one task: decode
-    and score in one Python pass, no bucket shuffle."""
+def test_warehouse_query_is_one_job(spark, docs_tiny, tmp_path):
+    """A shard query runs exactly one Spark job, the top-k job: the
+    driver reads the block metadata of first-seen terms and the k cards
+    itself. That holds cold (cleared meta_cache) and warm, for a WAND
+    bag and for a phrase, and the cards equal the memory backend's. A
+    WAND bag this small plans one task, so its top-k job is one stage of
+    one task: decode and score in one Python pass, no bucket shuffle."""
     from spaghettisearch_spark.api import SearchEngine
 
     eng = SearchEngine.build(
@@ -429,16 +451,74 @@ def test_warehouse_query_is_two_jobs(spark, docs_tiny, tmp_path):
         [("parse buffer", True), ('"hash table" flush', False)]
     ):
         mem = eng.query(q, k=5, use_wand=wand, backend="memory")
-        first = eng.query(q, k=5, use_wand=wand, backend="shards")
-        again, n_jobs = _spark_jobs(
-            spark, f"two-jobs-{i}",
-            lambda: eng.query(q, k=5, use_wand=wand, backend="shards"),
-        )
-        assert n_jobs <= 3, (q, n_jobs)
-        if wand:
-            assert _job_stage_tasks(spark, f"two-jobs-{i}")[0] == [1]
-        assert again == first
-        _assert_same_cards(again, mem)
+        got = {}
+        for run in ("cold", "warm"):
+            if run == "cold":
+                eng.meta_cache.clear()
+            got[run], n_jobs = _spark_jobs(
+                spark, f"one-job-{i}-{run}",
+                lambda: eng.query(q, k=5, use_wand=wand, backend="shards"),
+            )
+            assert n_jobs == 1, (q, run, n_jobs)
+            if wand:
+                assert _job_stage_tasks(spark, f"one-job-{i}-{run}") == [[1]]
+        assert got["warm"] == got["cold"]
+        _assert_same_cards(got["warm"], mem)
+
+
+def test_driver_cards_equal_spark_rows(spark, docs_small, tmp_path):
+    """The cards ``query`` reads on the driver equal the doc_cards rows
+    a Spark read returns (Row.asDict(recursive=True)), field by field:
+    top_words a dict, parents, children and content_sha256 equal — with
+    and without a warehouse, and for cards appended by apply_merge."""
+    import gc
+    from pathlib import Path
+    from urllib.parse import urlparse
+
+    from pyspark.sql import functions as F
+
+    from spaghettisearch_spark.api import SearchEngine
+
+    def check(eng, cards):
+        assert cards
+        ids = [c["doc_id"] for c in cards]
+        rows = {
+            r["doc_id"]: r.asDict(recursive=True)
+            for r in eng.doc_cards.filter(F.col("doc_id").isin(ids)).collect()
+        }
+        for c in cards:
+            r = rows[c["doc_id"]]
+            assert isinstance(c["top_words"], dict)
+            assert c["top_words"] == r["top_words"]
+            assert c["parents"] == (r["parents_anchors"] or [])
+            assert c["children"] == (r["children_top5"] or [])
+            assert c["url"] == f"{r['repo']}/{r['path']}"
+            for key, col in (("content_sha256", "content_sha256"),
+                             ("page_size", "page_size"), ("mod_date", "commit"),
+                             ("pagerank", "pagerank")):
+                assert c[key] == r[col], key
+
+    mem_eng = SearchEngine.build(spark, spark.createDataFrame(docs_small.head(80)))
+    check(mem_eng, mem_eng.query("parse buffer", k=20))
+    # without a warehouse the cards live in a temporary directory that
+    # goes with the engine
+    tmp = Path(urlparse(mem_eng.card_files[0]).path).parents[1]
+    assert tmp.is_dir()
+    del mem_eng
+    gc.collect()
+    assert not tmp.exists()
+    eng = SearchEngine.build(
+        spark, spark.createDataFrame(docs_small.head(100)),
+        warehouse_dir=str(tmp_path / "wh"),
+    )
+    cards = eng.query("parse buffer", k=20, backend="shards")
+    assert any(c["parents"] for c in cards) and any(c["children"] for c in cards)
+    check(eng, cards)
+    delta, ext, nc = _merge_batch(spark, eng, [
+        ("rcard", "zzcard.py", "c1", "python", "zzcardsig parse buffer"),
+    ])
+    eng.apply_merge(delta, new_doc_map=ext, new_corpus=nc)
+    check(eng, eng.query("zzcardsig parse", k=20, use_wand=True, backend="shards"))
 
 
 def test_multi_task_tail_matches_one_task_and_oracle(
@@ -544,6 +624,11 @@ def test_apply_merge_appends_cards(spark, docs_small, tmp_path):
         assert c["snippet"] == content
         assert c["pagerank"] == 0.0
         assert c["parents"] == [] and c["children"] == []
+    from spaghettisearch_spark.functions.tokenize import parse_query
+
+    merged_terms = parse_query("zzmergesig zzmergesig1 parse buffer flush dispatch")[0]
+    assert "zzmergesig" in merged_terms
+    assert _assert_driver_meta_matches(eng, merged_terms)
     q = "zzmergesig parse buffer zzmergesig1"
     wand = eng.query(q, k=10, use_wand=True, backend="shards")
     exhaustive = eng.query(q, k=10, use_wand=False, backend="shards")

@@ -495,7 +495,7 @@ def test_range_aware_planner_beats_global_bounds(spark):
 
 
 def test_block_meta_rebuilt_for_sample_complete_blocks(
-    spark, corpus_small, index_small, dim_small
+    spark, corpus_small, index_small, dim_small, tmp_path
 ):
     """Sample-complete blocks (df <= BLOCK_SAMPLE_N) store no skip
     metadata; term_block_meta rebuilds it from the block's own postings.
@@ -504,7 +504,9 @@ def test_block_meta_rebuilt_for_sample_complete_blocks(
     terms' do not, every block's metadata row must equal the reference
     builder applied to its decoded postings, incomplete blocks must still
     store theirs, and the planner must give the same plan on the rebuilt
-    rows as on the reference rows."""
+    rows as on the reference rows. Written to parquet, the driver read
+    from the read-back's file listing returns the same rows as the Spark
+    scan of that frame."""
     from dataclasses import replace
 
     import numpy as np
@@ -519,6 +521,7 @@ def test_block_meta_rebuilt_for_sample_complete_blocks(
         term_block_meta,
     )
     from spaghettisearch_spark.operators.wand import plan_blocks
+    from spaghettisearch_spark.sources.driver_read import read_back
 
     cfg = replace(DEFAULT, n_salts=4)
     doc_dim, _ = dim_small
@@ -583,6 +586,19 @@ def test_block_meta_rebuilt_for_sample_complete_blocks(
             assert plan_blocks(sel_got, cfg, qtf, k) == plan_blocks(
                 sel_ref, cfg, qtf, k
             ), (q, k)
+
+    path = str(tmp_path / "shards")
+    shards.repartition("shard").write.partitionBy("shard").parquet(path)
+    pq, files = read_back(spark, path)
+    driver = term_block_meta(pq, terms, cfg, shard_files=files)
+    assert driver == term_block_meta(pq, terms, cfg)
+    assert driver == term_block_meta(shards, terms, cfg)
+    by_block = {(r["term"], r["field"], r["salt"]): r for r in driver}
+    assert set(by_block) == set(ref)
+    assert complete and set(by_block) - complete
+    cache: dict = {}
+    term_block_meta(pq, terms[::2], cfg, cache, files)
+    assert term_block_meta(pq, terms, cfg, cache, files) == driver
     shards.unpersist()
 
 

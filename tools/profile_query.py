@@ -1,6 +1,8 @@
 """Per-query latency breakdown for the shard-backed WAND path (guide §1).
 
 Builds the sf0.1 index + shards exactly like bench.py, then times:
+  - engine queries over a warehouse built from the same documents, cold
+    (``meta_cache`` cleared) and warm: wall time and Spark jobs per query
   - the session's fixed action floors: collect on a 1-row cached frame,
     and the same row through one ``mapInPandas`` Python crossing
   - the decode alone, and the engine's top-k job at the default task
@@ -34,6 +36,42 @@ def t(fn, n=5, warm=1):
     return min(times), sorted(times)[len(times) // 2]
 
 
+def engine_queries(spark, raw, queries, n=5):
+    """Cold (meta_cache cleared before each run) and warm
+    ``SearchEngine.query`` calls over a warehouse built from ``raw``
+    (repo, path, commit, lang, content): wall time (min, median) and the
+    Spark jobs each query started, counted through a job group."""
+    import tempfile
+
+    from spaghettisearch_spark.api import SearchEngine
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    with tempfile.TemporaryDirectory(prefix="profile-wh-") as wh:
+        eng = SearchEngine.build(spark, raw, warehouse_dir=wh)
+        for qi, (q, wand) in enumerate(queries):
+            def run():
+                eng.query(q, 10, use_wand=wand, backend="shards")
+
+            run()
+            for mode in ("cold", "warm"):
+                times, jobs = [], []
+                for i in range(n):
+                    if mode == "cold":
+                        eng.meta_cache.clear()
+                    group = f"engine-{qi}-{mode}-{i}"
+                    sc.setJobGroup(group, group)
+                    t0 = time.perf_counter()
+                    run()
+                    times.append(time.perf_counter() - t0)
+                    sc.setLocalProperty("spark.jobGroup.id", None)
+                    jobs.append(len(st.getJobIdsForGroup(group)))
+                times.sort()
+                print(f"engine_{mode} {q!r} wand={wand}: "
+                      f"{times[0] * 1000:.1f} / {times[n // 2] * 1000:.1f} ms "
+                      f"(min / median of {n}), spark jobs per query {jobs}")
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -58,6 +96,13 @@ def main():
     cfg = EngineConfig(stem=True)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(cpus * 2).cache()
     n_files = docs.count()
+    engine_queries(spark, docs.select(
+        F.col("source").alias("repo"),
+        F.col("doc_id").cast("string").alias("path"),
+        F.lit("HEAD").alias("commit"),
+        "lang",
+        F.col("text").alias("content"),
+    ), [("spark query scan", True), ('"value table" spark', False)])
     corpus = from_driver_documents(docs)
     idx = build_index(corpus, cfg)
     idx.postings.cache().count()
