@@ -321,10 +321,20 @@ def q_bm25_topk(spark, sf_dir):
 
 
 def q_wand_topk(spark, sf_dir):
-    from spaghettisearch_spark.operators.wand import wand_topk
+    """The served WAND path: SearchEngine.build over the documents (its
+    temporary warehouse; no PageRank, so the score is the BM25 blend
+    the mirror computes), then query_df(..., use_wand=True)."""
+    from spaghettisearch_spark.api import SearchEngine
 
-    idx = _engine_index(spark, sf_dir)
-    res = wand_topk(spark, idx, QUERY_TERMS, CFG, k=20, n_buckets=8)
+    d = _docs(spark, sf_dir)
+    eng = SearchEngine.build(spark, d.select(
+        F.col("source").alias("repo"),
+        F.col("doc_id").cast("string").alias("path"),
+        F.lit("HEAD").alias("commit"),
+        "lang",
+        F.col("text").alias("content"),
+    ), CFG, with_pagerank=False)
+    res = eng.query_df(" ".join(QUERY_TERMS), k=20, use_wand=True)
     return res.select(F.col("doc_id").alias("did"), _e("score", 100000).alias("score_e5"))
 
 
@@ -643,9 +653,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """The 22 search entries: indexing stats, BM25 / WAND / phrase
-    top-k (in-memory and warehouse shards), PageRank (global and
-    topic-sensitive), link families, snippets and the stats refresh.
-    Entries without an ``oracle_sql()`` mirror are rows-only."""
+    top-k (the exhaustive scorer, the SearchEngine and posting shards),
+    PageRank (global and topic-sensitive), link families, snippets and
+    the stats refresh. Entries without an ``oracle_sql()`` mirror are
+    rows-only."""
     return {
         "tf_postings": q_tf_postings,
         "doc_frequency": q_doc_frequency,

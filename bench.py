@@ -93,7 +93,6 @@ def main() -> None:
     from spaghettisearch_spark.config import EngineConfig
     from spaghettisearch_spark.operators.bm25 import search
     from spaghettisearch_spark.operators.index_build import build_index
-    from spaghettisearch_spark.operators.wand import wand_topk
     from spaghettisearch_spark.session import get_spark
     from spaghettisearch_spark.sources.corpus import from_driver_documents
 
@@ -160,11 +159,12 @@ def main() -> None:
     timings["pagerank_10iter"] = best_of(run_pagerank)
 
     # ---- queries ----
-    # wand_topk takes INDEX-VOCABULARY terms (bm25.search stems inside
-    # parse_query; the WAND entry points don't re-tokenize). This index
-    # is built with stem=True, so stem the bag first — passing raw
-    # "query"/"table" silently matched zero postings for those terms in
-    # earlier rounds and flattered every q_wand* number.
+    # wand_topk_from_shards takes INDEX-VOCABULARY terms (bm25.search
+    # stems inside parse_query; the WAND entry points don't
+    # re-tokenize). This index is built with stem=True, so stem the bag
+    # first — passing raw "query"/"table" silently matched zero postings
+    # for those terms in earlier rounds and flattered every q_wand*
+    # number.
     from spaghettisearch_spark.functions.porter2 import stem as p2stem
 
     wand_terms = [p2stem(t) for t in ["spark", "query", "scan"]]
@@ -177,14 +177,6 @@ def main() -> None:
         "q_phrase_terms": lambda: search(spark, idx, '"value table" spark', cfg, k=50),
         "q_blended_pr": lambda: search(
             spark, idx, "spark query", cfg, pagerank=pr, k=50
-        ),
-        "q_wand": lambda: wand_topk(
-            spark, idx, wand_terms, cfg, k=50, n_buckets=cpus
-        ),
-        # hot term (df ~ 1.0): the vectorized bucket kernel must keep WAND
-        # at-or-under the exhaustive path even when pruning can't skip
-        "q_wand_hot": lambda: wand_topk(
-            spark, idx, hot_term, cfg, k=50, n_buckets=cpus
         ),
     }
     # compressed path: build shards once, query via pruned decode + WAND
@@ -288,6 +280,11 @@ def main() -> None:
         spark, shards, doc_map, wand_terms, cfg, k=50,
         meta_cache=shard_meta,
     )
+    # hot term (df ~ 1.0): the vectorized bucket kernel must keep WAND
+    # at-or-under the exhaustive path even when pruning can't skip
+    qset["q_wand_shards_hot"] = lambda: wand_topk_from_shards(
+        spark, shards, doc_map, hot_term, cfg, k=50, meta_cache=shard_meta,
+    )
     # the same query against PARQUET-backed shards partitioned by shard id
     # (the warehouse layout): measures the real cold path — partition-
     # pruned scan + column-pruned metadata + weight-only decode off disk,
@@ -331,7 +328,7 @@ def main() -> None:
     # phrase + free term from the disk warehouse: position intersection
     # and scoring run on dense long keys, doc_map broadcast-joins the
     # k-row output only (plan-gated in test_plans); ranking hard-gated
-    # against the in-memory path below
+    # against the exhaustive bm25.search below
     qset["q_engine_warehouse_phrase"] = lambda: eng_wh.query_df(
         '"value table" spark', k=50, backend="shards"
     )
@@ -345,7 +342,7 @@ def main() -> None:
             '"value table" spark', k=50, backend="shards"
         ).collect()
     ]
-    assert wh_phrase == mem_phrase, "warehouse phrase ranking != in-memory"
+    assert wh_phrase == mem_phrase, "warehouse phrase ranking != exhaustive"
 
     # serving throughput under concurrency: ONE engine, one Spark
     # session, 4 driver threads issuing a mixed stream (term bags via
@@ -387,7 +384,6 @@ def main() -> None:
         for r in search(spark, idx, "spark query scan", cfg, k=50).collect()
     ]
     for q in (
-        wand_topk(spark, idx, wand_terms, cfg, k=50, n_buckets=cpus),
         wand_topk_from_shards(
             spark, shards, doc_map, wand_terms, cfg, k=50,
             meta_cache=shard_meta,
@@ -570,12 +566,6 @@ def main() -> None:
     )
     timings["zipf_q_exhaustive_single"] = best_of(
         lambda: search(spark, zidx, "zw00000", zcfg, k=50).collect(), n=reps
-    )
-    timings["zipf_q_wand_mem_hot"] = best_of(
-        lambda: wand_topk(
-            spark, zidx, hot_bag, zcfg, k=50, n_buckets=cpus
-        ).collect(),
-        n=reps,
     )
 
     # LSM on a real vocabulary: 10% doc delta. Three numbers to read

@@ -4,7 +4,8 @@ Isolated timings for the optimization work, with the same corpora and
 methodology as bench.py rows they mirror:
 
   engine   - warehouse SearchEngine: seq16 / conc16_t4 / per-query rows
-  queries  - q_* family against the in-memory index + cached shards
+  queries  - q_* family: the exhaustive scorer on the index, WAND on
+             cached shards
   build    - index build + shard build on the zipf corpora
   merge    - LSM merge rows on the zipf corpora
 
@@ -48,10 +49,7 @@ def main():
         merge_posting_shards,
     )
     from spaghettisearch_spark.operators.index_build import build_index
-    from spaghettisearch_spark.operators.wand import (
-        wand_topk,
-        wand_topk_from_shards,
-    )
+    from spaghettisearch_spark.operators.wand import wand_topk_from_shards
     from spaghettisearch_spark.session import get_spark
     from spaghettisearch_spark.sources.corpus import from_driver_documents
 
@@ -92,7 +90,7 @@ def main():
                 r["doc_id"]
                 for r in wand_topk_from_shards(
                     spark, shards, doc_map, wand_terms, cfg, k=50,
-                    dense_keys=True, meta_cache=meta,
+                    meta_cache=meta,
                 ).collect()
             ]
             assert got == exh, "WAND shards != exhaustive"
@@ -108,15 +106,10 @@ def main():
             out["q_phrase_terms"] = best_of(
                 lambda: search(spark, idx, '"value table" spark', cfg, k=50).collect()
             )
-            out["q_wand"] = best_of(
-                lambda: wand_topk(
-                    spark, idx, wand_terms, cfg, k=50, n_buckets=cpus
-                ).collect()
-            )
             out["q_wand_shards"] = best_of(
                 lambda: wand_topk_from_shards(
                     spark, shards, doc_map, wand_terms, cfg, k=50,
-                    dense_keys=True, meta_cache=meta,
+                    meta_cache=meta,
                 ).collect()
             )
 

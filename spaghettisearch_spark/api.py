@@ -13,9 +13,7 @@ class; rank semantics are covered by the oracle tests.
 
 from __future__ import annotations
 
-import shutil
 import tempfile
-import weakref
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,11 +23,10 @@ from pyspark.sql import types as T
 from .config import DEFAULT, EngineConfig
 from .functions.snippets import make_summary_py
 from .functions.tokenize import parse_query
-from .operators.bm25 import search
 from .operators.index_build import Index, build_index
 from .operators.links import extract_links
 from .operators.pagerank import compute_pagerank
-from .operators.wand import dense_vector, wand_topk
+from .operators.wand import dense_vector
 from .sources.corpus import ingest
 from .sources.driver_read import read_back, read_rows, read_table
 
@@ -124,14 +121,17 @@ class SearchEngine:
     plans shuffle postings to the bucket kernel, and phrase and non-WAND
     queries do so at any size.
 
-    ``doc_cards`` (CARD_COLS, one row per doc, clustered by the dense
-    doc_key) is written once at build as zstd parquet: under
-    ``warehouse_dir``, else in a temporary directory removed with the
-    last engine that serves it. ``doc_map`` is its (doc_key, doc_id)
+    Every engine serves from one warehouse: ``posting_shards``
+    (partitionBy("shard") zstd parquet) and ``doc_cards`` (CARD_COLS,
+    one row per doc, clustered by the dense doc_key), written at build
+    under ``warehouse_dir``, or under a temporary directory the engine
+    owns when none is given. ``doc_map`` is the cards' (doc_key, doc_id)
     projection. The PageRank vectors (global and per topic) are dense
     float64 arrays indexed by doc_key, broadcast once per cards version
     and swapped by reference, so a running query keeps the vector it
-    started with."""
+    started with. Scoring is BM25 (the shards store its impact weights);
+    ``bm25.search`` keeps the exhaustive scorer and its reference-exact
+    ``tfidf_cosine`` mode."""
 
     spark: SparkSession
     index: Index
@@ -139,7 +139,6 @@ class SearchEngine:
     pagerank: DataFrame | None = None
     # (doc_id, category, rank) from operators.topics.compute_topic_pagerank
     topic_pagerank: DataFrame | None = None
-    # compressed-warehouse serving backend (build(warehouse_dir=...)):
     # the read-back posting_shards frame + the per-term block-metadata
     # cache a serving node keeps across queries
     shards: DataFrame | None = None
@@ -157,9 +156,9 @@ class SearchEngine:
     # vector would break skip-planner admissibility), so that slot is
     # keyed per topic (pr_max_key=_PR_MAX_KEY + ":" + topic)
     meta_cache: dict = field(default_factory=dict)
-    # parquet warehouse root (build(..., warehouse_dir=...)): shards are
-    # served from the partitionBy("shard") read-back frame — partition
-    # pruning + column-pruned metadata reads, and the substrate the LSM
+    # parquet warehouse root: shards are served from the
+    # partitionBy("shard") read-back frame — partition pruning +
+    # column-pruned metadata reads, and the substrate the LSM
     # maintenance methods (apply_merge / refresh_stats) rewrite with
     # dynamic partition overwrite, I/O bounded by the touched shard
     # partitions
@@ -167,6 +166,10 @@ class SearchEngine:
     n_docs: int = 0
     # {None: global, topic: that topic's} Broadcast PageRank vector
     pr_vectors: dict = field(default_factory=dict)
+    # the temporary warehouse of a build without ``warehouse_dir``:
+    # every dataclasses.replace copy holds the same object, so the
+    # directory is removed once the last copy is collected
+    tmp_warehouse: tempfile.TemporaryDirectory | None = None
 
     # ------------------------------------------------------------------
     @classmethod
@@ -186,17 +189,31 @@ class SearchEngine:
         — the working version of the reference's dead topic-probability
         blend (its computeTopicProbs is a no-op, SURVEY.md §3.1).
 
-        Always writes ``doc_cards`` (the family is aggregated here,
-        once), to a temporary directory without ``warehouse_dir``. The shard
-        backend exists only with ``warehouse_dir``: persist the
-        compressed shards as partitionBy("shard") zstd parquet and the
-        cards as zstd parquet, and SERVE from the read-back frames —
-        queries then partition-prune to the query terms' shard
-        directories and read only the k result cards, and the engine
-        gains the LSM maintenance methods (apply_merge / refresh_stats)
-        that rewrite only touched partitions in place."""
+        Writes the warehouse — the compressed shards as
+        partitionBy("shard") zstd parquet and ``doc_cards`` (the family
+        aggregated here, once) as zstd parquet — under ``warehouse_dir``,
+        or under a temporary directory owned by the engine (removed with
+        its last copy) when it is None, and SERVES from the read-back
+        frames: queries partition-prune to the query terms' shard
+        directories and read only the k result cards, and the LSM
+        maintenance methods (apply_merge / refresh_stats) rewrite only
+        touched partitions in place.
+
+        ``cfg.scorer`` must be "bm25": the shards store BM25 impact
+        weights, and refresh_stats and merged deltas re-weight with BM25.
+        Any other scorer raises ValueError before any Spark job; the
+        reference-exact ``tfidf_cosine`` is served by ``bm25.search``."""
         from .operators.compression import build_doc_dim, build_posting_shards
 
+        if cfg.scorer != "bm25":
+            raise ValueError(
+                f"SearchEngine serves BM25 impact weights, not "
+                f"scorer={cfg.scorer!r}; use bm25.search for tfidf_cosine"
+            )
+        tmp = None
+        if warehouse_dir is None:
+            tmp = tempfile.TemporaryDirectory(prefix="warehouse-")
+            warehouse_dir = tmp.name
         corpus = ingest(documents).cache()
         links = extract_links(corpus, cfg).cache()
         idx = build_index(corpus, cfg, links=links)
@@ -213,42 +230,34 @@ class SearchEngine:
         doc_dim = build_doc_dim(corpus).cache()
         n_docs = doc_dim.count()
         doc_map = doc_dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
-        tmp = tempfile.mkdtemp(prefix="doc_cards-") if warehouse_dir is None else None
         doc_cards, card_files = _store_cards(
             spark,
             build_doc_cards(doc_map, corpus, idx.doc_meta, pr, links),
             n_docs,
-            f"{warehouse_dir or tmp}/doc_cards",
+            f"{warehouse_dir}/doc_cards",
         )
-        if tmp is not None:
-            # every engine copy (dataclasses.replace) shares this frame
-            weakref.finalize(doc_cards, shutil.rmtree, tmp, ignore_errors=True)
-        shards = shard_files = None
-        if warehouse_dir is not None:
-            # warehouse-resident serving: dense-keyed compressed shards
-            # (cfg must be bm25 — asserted at query time by the shard
-            # paths)
-            shards_path = f"{warehouse_dir}/posting_shards"
-            # cluster by shard before the partitioned write (guide §6):
-            # without this every upstream task writes its own file into
-            # every shard directory (tasks x shards tiny files);
-            # clustered, each directory holds one well-sized file and a
-            # term's pruned scan opens ONE file instead of dozens
-            build_posting_shards(
-                idx.postings, n_docs, cfg,
-                doc_dim=doc_dim, weight_col="bm25_weight",
-            ).repartition("shard").write.mode("overwrite").option(
-                "compression", "zstd"
-            ).partitionBy("shard").parquet(shards_path)
-            # serve from the read-back frame: queries prune to the
-            # terms' shard partitions and read only the metadata /
-            # requested payload columns
-            shards, shard_files = read_back(spark, shards_path)
+        shards_path = f"{warehouse_dir}/posting_shards"
+        # cluster by shard before the partitioned write (guide §6):
+        # without this every upstream task writes its own file into
+        # every shard directory (tasks x shards tiny files); clustered,
+        # each directory holds one well-sized file and a term's pruned
+        # scan opens ONE file instead of dozens
+        build_posting_shards(
+            idx.postings, n_docs, cfg,
+            doc_dim=doc_dim, weight_col="bm25_weight",
+        ).repartition("shard").write.mode("overwrite").option(
+            "compression", "zstd"
+        ).partitionBy("shard").parquet(shards_path)
+        # serve from the read-back frame: queries prune to the terms'
+        # shard partitions and read only the metadata / requested
+        # payload columns
+        shards, shard_files = read_back(spark, shards_path)
         doc_dim.unpersist()
         eng = cls(
             spark=spark, index=idx, cfg=cfg, pagerank=pr, topic_pagerank=tpr,
             shards=shards, doc_cards=doc_cards, warehouse_dir=warehouse_dir,
             n_docs=n_docs, shard_files=shard_files, card_files=card_files,
+            tmp_warehouse=tmp,
         )
         eng.pr_vectors = eng._build_pr_vectors()
         # the cards hold everything queries read of these two
@@ -292,69 +301,53 @@ class SearchEngine:
         use_wand: bool,
         topic: str | None,
         backend: str,
-    ) -> tuple[list, str, list, list]:
-        """The top-k job: (its k rows, their key column, the query's
-        free terms, its phrases). Shard rows are keyed by doc_key,
-        memory rows by doc_id."""
+    ) -> tuple[list, list, list]:
+        """The top-k job: (its k rows keyed by doc_key, the query's free
+        terms, its phrases)."""
+        if backend != "shards":
+            raise ValueError(
+                f'unknown backend {backend!r}: the only backend is "shards"'
+            )
         k = k or self.cfg.top_k
         terms, phrases = parse_query(q, self.cfg.remove_stopwords, self.cfg.stem)
         if topic is not None and self.topic_pagerank is None:
             raise ValueError("topic= requires a build(..., topics=...)")
-        if backend not in ("memory", "shards"):
-            raise ValueError(f"unknown backend {backend!r}")
-        if backend == "shards" and self.shards is None:
+        if self.shards is None:
             raise ValueError(
-                'backend="shards" requires a build(..., warehouse_dir=...)'
+                "query needs posting shards: build the engine with "
+                "SearchEngine.build"
             )
         if not terms and not phrases:
-            return [], "doc_id", terms, phrases
-        wandable = use_wand and not phrases and self.cfg.scorer == "bm25"
-        if backend == "shards":
-            key = "doc_key"
-            pr = self.pr_vectors.get(topic)
-            if wandable:
-                from .operators.wand import _PR_MAX_KEY, wand_topk_from_shards
+            return [], terms, phrases
+        pr = self.pr_vectors.get(topic)
+        if use_wand and not phrases:
+            from .operators.wand import _PR_MAX_KEY, wand_topk_from_shards
 
-                pr_key = (
-                    _PR_MAX_KEY if topic is None else f"{_PR_MAX_KEY}:{topic}"
-                )
-                topk = wand_topk_from_shards(
-                    self.spark, self.shards, None, terms, self.cfg,
-                    k=k, pagerank=pr,
-                    meta_cache=self.meta_cache, pr_max_key=pr_key,
-                    shard_files=self.shard_files,
-                    # planner decides per query whether the exact-floor
-                    # wave pays (kept posting volume vs
-                    # cfg.two_phase_auto_min_postings)
-                    two_phase="auto",
-                )
-            else:
-                from .operators.bm25 import search_from_shards
-
-                topk = search_from_shards(
-                    self.spark, self.shards, None, q, self.cfg,
-                    pagerank=pr, k=k,
-                    meta_cache=self.meta_cache,  # sizes the decode stages
-                    shard_files=self.shard_files,
-                )
+            pr_key = _PR_MAX_KEY if topic is None else f"{_PR_MAX_KEY}:{topic}"
+            topk = wand_topk_from_shards(
+                self.spark, self.shards, None, terms, self.cfg,
+                k=k, pagerank=pr,
+                meta_cache=self.meta_cache, pr_max_key=pr_key,
+                shard_files=self.shard_files,
+                # planner decides per query whether the exact-floor wave
+                # pays (kept posting volume vs
+                # cfg.two_phase_auto_min_postings)
+                two_phase="auto",
+            )
         else:
-            key = "doc_id"
-            pr = self.pagerank
-            if topic is not None:
-                pr = self.topic_pagerank.filter(
-                    F.col("category") == topic
-                ).select("doc_id", "rank")
-            if wandable:
-                topk = wand_topk(
-                    self.spark, self.index, terms, self.cfg, k=k, pagerank=pr
-                )
-            else:
-                topk = search(self.spark, self.index, q, self.cfg, pagerank=pr, k=k)
-        return topk.collect(), key, terms, phrases
+            from .operators.bm25 import search_from_shards
 
-    def _with_cards(self, ranked: list, key: str, terms, phrases) -> list[dict]:
+            topk = search_from_shards(
+                self.spark, self.shards, None, q, self.cfg,
+                pagerank=pr, k=k,
+                meta_cache=self.meta_cache,  # sizes the decode stages
+                shard_files=self.shard_files,
+            )
+        return topk.collect(), terms, phrases
+
+    def _with_cards(self, ranked: list, terms, phrases) -> list[dict]:
         """The card lookup: the k ranked rows' cards read on the driver
-        from the card files (a ``key`` filter prunes row groups),
+        from the card files (a doc_key filter prunes row groups),
         snippets computed here, rows in the final (score desc, doc_id
         asc) order — dense keys merged in by extend_doc_dim are not in
         doc_id order. Cards are read after the top-k job from the
@@ -364,13 +357,16 @@ class SearchEngine:
             return []
         if not self.card_files:
             raise ValueError("query needs doc_cards: build the engine with SearchEngine.build")
-        keys = [r[key] for r in ranked]
-        cards = {c[key]: c for c in read_rows(self.card_files, CARD_COLS, key, keys)}
+        keys = [r["doc_key"] for r in ranked]
+        cards = {
+            c["doc_key"]: c
+            for c in read_rows(self.card_files, CARD_COLS, "doc_key", keys)
+        }
         out = []
         for r in ranked:
-            card = cards.get(r[key])
+            card = cards.get(r["doc_key"])
             if card is None:
-                raise RuntimeError(f"no doc_cards row for {key}={r[key]!r}")
+                raise RuntimeError(f"no doc_cards row for doc_key={r['doc_key']!r}")
             content = card.pop("content")
             card.update({c: r[c] for c in _SCORE_COLS})
             card["snippet"] = (
@@ -387,18 +383,16 @@ class SearchEngine:
         k: int | None = None,
         use_wand: bool = False,
         topic: str | None = None,
-        backend: str = "memory",
+        backend: str = "shards",
     ) -> DataFrame:
         """Top-k as a DataFrame: (doc_id, title_rank, body_rank,
         pagerank, score, CARD_META..., snippet), in (score desc, doc_id
         asc) order. Runs the same top-k job and card read as ``query``
-        and returns the finished rows. ``topic`` blends that category's PageRank vector
-        instead of the global one (requires a build with topics=...).
-        ``backend="shards"`` serves the SAME query surface (terms,
-        phrases, PR/topic blend, wand, cards, snippets) from the
-        compressed posting shards — the warehouse-resident path
-        (requires build(..., warehouse_dir=...)); results are asserted
-        identical to the in-memory backend in test_api."""
+        and returns the finished rows. ``topic`` blends that category's
+        PageRank vector instead of the global one (requires a build with
+        topics=...). ``backend`` accepts only "shards", the one serving
+        path (any other value raises ValueError); results equal the
+        exhaustive ``bm25.search`` over the engine's index (test_api)."""
         cards = self._with_cards(*self._ranked(q, k, use_wand, topic, backend))
         cols = ["doc_id", *_SCORE_COLS, *CARD_META, "snippet"]
         types = {
@@ -421,11 +415,12 @@ class SearchEngine:
         k: int | None = None,
         use_wand: bool = False,
         topic: str | None = None,
-        backend: str = "memory",
+        backend: str = "shards",
     ) -> list[dict]:
         """Reference-JSON-shaped result cards (server.go:47-48 encodes
         []Rank_combined, incl. top-5 parents with their anchor terms and
-        top-5 children — retrieval/util.go:56-92, get_metadata.go:237-266)."""
+        top-5 children — retrieval/util.go:56-92, get_metadata.go:237-266).
+        ``backend`` accepts only "shards" (see ``query_df``)."""
         cards = self._with_cards(*self._ranked(q, k, use_wand, topic, backend))
         return [
             {
@@ -455,12 +450,6 @@ class SearchEngine:
     # at the read-back frame and drop the metadata cache (its block rows
     # are stale the moment the shards change).
     # ------------------------------------------------------------------
-    def _require_warehouse(self):
-        if self.warehouse_dir is None or self.shards is None:
-            raise ValueError(
-                "LSM maintenance requires a build(..., warehouse_dir=...)"
-            )
-
     def _overwrite_touched(self, frame, expect_shards=()) -> None:
         shards_path = f"{self.warehouse_dir}/posting_shards"
         # the touched frame READS shards_path (Spark refuses to overwrite
@@ -528,7 +517,6 @@ class SearchEngine:
         from .functions.hashing import term_hash60_col
         from .operators.compression import decode_shards, merge_posting_shards
 
-        self._require_warehouse()
         # EXACT maximum doc_key of the delta: decode its key streams (the
         # delta is one batch). Block metadata is no witness — a
         # sample-complete block stores none, and top_doc_keys samples
@@ -595,7 +583,6 @@ class SearchEngine:
         only; orphan postings keep their stored weight."""
         from .operators.compression import key_doc_stats, refresh_shard_stats
 
-        self._require_warehouse()
         doc_dim = self.doc_map.select(
             "doc_id", F.col("doc_key").alias("doc_idx")
         )

@@ -313,8 +313,8 @@ def search_from_shards(
     """The FULL query pipeline (free terms + phrases + field blend + PR)
     served from the COMPRESSED posting shards — the warehouse-resident
     serving path. Same semantics and (to float associativity) same
-    values as ``search`` on the in-memory index the shards were built
-    from; asserted in test_api.
+    values as the exhaustive ``search`` on the index the shards were
+    built from; asserted in test_api.
 
     The free-term and phrase rows (doc_key, field, contrib) run on the
     dense doc_key through the WAND paths' bucket kernel
@@ -329,8 +329,9 @@ def search_from_shards(
     wand.wand_topk_from_shards).
 
     BM25-only (blocks store precomputed impact weights; tfidf_cosine's
-    per-query normalization needs the in-memory path). Free terms decode
-    only the weight stream; phrases additionally decode positions.
+    per-query normalization is served only by the exhaustive ``search``).
+    Free terms decode only the weight stream; phrases additionally
+    decode positions.
 
     ``meta_cache``: same per-term block-metadata cache contract as
     wand_topk_from_shards — used here only to SIZE the decode stages
@@ -359,7 +360,7 @@ def search_from_shards(
     if cfg.scorer != "bm25":
         raise ValueError(
             "shard-backed serving requires bm25 impact weights; "
-            "tfidf_cosine needs the in-memory path"
+            "tfidf_cosine is served only by the exhaustive bm25.search"
         )
     k = k or cfg.top_k
     free_terms, phrase_lists = parse_query(
@@ -410,7 +411,7 @@ def search_from_shards(
     n_buckets = 16  # the WAND paths' default
     ranked = _wand_from_hits(
         rows, cfg, k, n_buckets,
-        pr_broadcast(spark, pagerank, doc_map, dense_keys=True),
+        pr_broadcast(spark, pagerank, doc_map),
         shuffle_parts=(
             None if kernel_parts is None else max(1, min(kernel_parts, n_buckets))
         ),

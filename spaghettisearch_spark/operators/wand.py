@@ -10,8 +10,8 @@ genuinely custom algorithmic pieces (SURVEY.md §4.2).
 Distributed shape (the part that must survive 100 TB):
 
   1. posting rows are fetched ONLY for the query terms (term-pruned scan
-     of posting_shards / postings — a few million rows for even the
-     hottest term, never the whole index);
+     of posting_shards — a few million rows for even the hottest term,
+     never the whole index);
   2. those rows are hash-partitioned by ``doc_bucket`` (one shuffle of
      candidate postings only), so each bucket holds the complete posting
      set of every query term for its doc range — the precondition for
@@ -22,14 +22,13 @@ Distributed shape (the part that must survive 100 TB):
      _score_bucket_vectorized for why this beats pointer-chasing once
      the data is in memory). The classic per-row document-at-a-time
      heap kernel lives in tests/daat_reference.py ONLY — a parity
-     oracle, deliberately unreachable from any production path (the
-     engine ships no per-row Python kernel); tests inject it via the
-     ``kernel`` callable parameter and cross-assert both against the
-     exhaustive scorer;
+     oracle that the tests run on a query's collected postings and
+     cross-assert against the exhaustive scorer; the engine ships no
+     per-row Python kernel and no hook to inject one;
   4. global top-k = TakeOrderedAndProject over n_buckets * k rows.
 
-  Shard queries score on the dense ``doc_key`` (build_doc_dim assigns it
-  in global doc_id order, so the long key tie-breaks like the string).
+  Queries score on the dense ``doc_key`` (build_doc_dim assigns it in
+  global doc_id order, so the long key tie-breaks like the string).
   The one-task case: when the skip planner sizes a shard query to ONE
   task (kept decode volume <=
   ``cfg.query_target_postings_per_task``; every WAND bag over the local
@@ -63,35 +62,26 @@ from pyspark.sql import types as T
 
 from ..config import DEFAULT, EngineConfig
 from ..functions.smalldf import in_sql
-from .bm25 import posting_hits, term_lookup
-from .index_build import FIELD_BODY, FIELD_TITLE, Index
-
-def _out_schema(key_type: T.DataType) -> T.StructType:
-    """Kernel output: (doc_id, title_rank, body_rank, pagerank, score);
-    ``doc_id`` carries the dense long doc_key on the shard paths."""
-    return T.StructType(
-        [T.StructField("doc_id", key_type)]
-        + [
-            T.StructField(c, T.DoubleType())
-            for c in ("title_rank", "body_rank", "pagerank", "score")
-        ]
-    )
-
+from .bm25 import term_lookup
+from .index_build import FIELD_BODY, FIELD_TITLE
 
 _OUT_COLS = ["doc_id", "title_rank", "body_rank", "pagerank", "score"]
+# kernel output; ``doc_id`` carries the dense long doc_key
+_OUT_SCHEMA = T.StructType(
+    [T.StructField("doc_id", T.LongType())]
+    + [T.StructField(c, T.DoubleType()) for c in _OUT_COLS[1:]]
+)
 
 
-def _pr_lookup(pr, keys) -> np.ndarray:
-    """PageRank of each key: ``pr`` is a dense float64 vector indexed by
-    doc_key (keys past its end score 0 — docs merged in after the
-    vector was built), or a doc_id-indexed Series (string keys)."""
-    if isinstance(pr, np.ndarray):
-        keys = np.asarray(keys, dtype=np.int64)
-        out = np.zeros(len(keys), dtype=np.float64)
-        ok = (keys >= 0) & (keys < len(pr))
-        out[ok] = pr[keys[ok]]
-        return out
-    return pr.reindex(keys).fillna(0.0).to_numpy(np.float64)
+def _pr_lookup(pr: np.ndarray, keys) -> np.ndarray:
+    """PageRank of each doc_key from the dense float64 vector ``pr``
+    (keys past its end score 0 — docs merged in after the vector was
+    built)."""
+    keys = np.asarray(keys, dtype=np.int64)
+    out = np.zeros(len(keys), dtype=np.float64)
+    ok = (keys >= 0) & (keys < len(pr))
+    out[ok] = pr[keys[ok]]
+    return out
 
 
 def _score_bucket_vectorized(k: int, cfg: EngineConfig, pr=None):
@@ -103,7 +93,8 @@ def _score_bucket_vectorized(k: int, cfg: EngineConfig, pr=None):
     score column over the WHOLE bucket, an O(n) k-th-score partition
     and a tiny (-score, doc_id) tie-break sort of the survivors.
 
-    ``pr`` (a Broadcast of a _pr_lookup table) folds the PageRank blend
+    ``pr`` (a Broadcast of a dense doc_key-indexed float64 vector, see
+    _pr_lookup) folds the PageRank blend
     into the kernel: each candidate gains ``w_pagerank * blend_scale *
     pr[doc]`` before the k-th-score cut, and the row carries the
     looked-up rank in its ``pagerank`` column. The candidate set is
@@ -167,33 +158,22 @@ def _score_bucket_vectorized(k: int, cfg: EngineConfig, pr=None):
     return kernel
 
 
-def pr_broadcast(
-    spark: SparkSession, pagerank, doc_map=None, dense_keys: bool = False
-):
-    """The bucket kernel's Broadcast PageRank lookup for ``pagerank``:
+def pr_broadcast(spark: SparkSession, pagerank, doc_map=None):
+    """The bucket kernel's Broadcast PageRank vector for ``pagerank``:
     None and an existing Broadcast pass through; a (doc_id, rank) frame
-    becomes a doc_id-indexed Series, or — for ``dense_keys``, through
-    the (doc_key, doc_id) map — a float64 vector indexed by doc_key. One
-    driver collect for ad-hoc callers; a serving engine builds its
-    vectors once (api.SearchEngine) and passes the Broadcast itself."""
+    is keyed through the (doc_key, doc_id) ``doc_map`` into a float64
+    vector indexed by doc_key. One driver collect for ad-hoc callers; a
+    serving engine builds its vectors once (api.SearchEngine) and passes
+    the Broadcast itself."""
     if pagerank is None or isinstance(pagerank, Broadcast):
         return pagerank
-    if dense_keys and doc_map is None:
+    if doc_map is None:
         raise ValueError(
             "a (doc_id, rank) PageRank frame needs the doc_map to key it "
             "by doc_key; pass the map or a Broadcast vector"
         )
-    if not dense_keys:
-        pdf = pagerank.select("doc_id", "rank").toPandas()
-        table = pd.Series(
-            pdf["rank"].to_numpy(np.float64), index=pdf["doc_id"].to_numpy()
-        )
-    else:
-        pdf = (
-            doc_map.join(pagerank, "doc_id").select("doc_key", "rank").toPandas()
-        )
-        table = dense_vector(pdf["doc_key"], pdf["rank"])
-    return spark.sparkContext.broadcast(table)
+    pdf = doc_map.join(pagerank, "doc_id").select("doc_key", "rank").toPandas()
+    return spark.sparkContext.broadcast(dense_vector(pdf["doc_key"], pdf["rank"]))
 
 
 def dense_vector(keys, values, n: int = 0) -> np.ndarray:
@@ -204,109 +184,25 @@ def dense_vector(keys, values, n: int = 0) -> np.ndarray:
     return vec
 
 
-def wand_topk(
-    spark: SparkSession,
-    index: Index,
-    query_terms: list[str],
-    cfg: EngineConfig = DEFAULT,
-    k: int | None = None,
-    n_buckets: int = 16,
-    pagerank: DataFrame | None = None,
-    kernel="taat",
-) -> DataFrame:
-    """Exact top-k for a bag of free terms via distributed block-max WAND.
-
-    Returns (doc_id, title_rank, body_rank, pagerank, score) — same shape
-    and (to float associativity) same values as bm25.search's exhaustive
-    path for term-only queries, asserted in tests. PageRank, when given,
-    is folded into the bucket kernel (a broadcast doc_id -> rank
-    lookup), so its mass enters each candidate's score before the
-    local top-k cut and results stay exact.
-    """
-    from collections import Counter
-
-    if cfg.scorer != "bm25":
-        raise ValueError(
-            "wand_topk scores precomputed impact weights; tfidf_cosine's "
-            "per-query normalization needs the exhaustive path (bm25.search)"
-        )
-    k = k or cfg.top_k
-    if not query_terms:
-        return empty_topk(spark, by_doc_id=True)
-    counts = Counter(query_terms)
-    terms = sorted(counts)
-    hits = posting_hits(index, terms, cfg).select(
-        "doc_id", "field",
-        term_lookup({t: i for i, t in enumerate(terms)}).alias("qterm_id"),
-        (F.col("contrib") * term_lookup(
-            {t: float(counts[t]) for t in terms}
-        )).alias("contrib"),
-    )
-    return _wand_from_hits(
-        hits, cfg, k, n_buckets, pr_broadcast(spark, pagerank), kernel
-    )
-
-
 def _wand_from_hits(
     hits: DataFrame,
     cfg: EngineConfig,
     k: int,
     n_buckets: int,
     pr=None,
-    kernel="taat",
     shuffle_parts: int | None = None,
 ) -> DataFrame:
-    """The shuffled top-k tail of the WAND and shard paths: ``hits``
-    carries (doc_id, field, contrib) with the query-term frequency
-    already multiplied into ``contrib`` (plus ``qterm_id`` for an
-    injected reference kernel); ``pr`` is the kernel's Broadcast
-    PageRank lookup (see _score_bucket_vectorized). The rows are
-    hash-partitioned by ``doc_bucket`` so each bucket holds every
-    posting of its docs, and each bucket cuts its exact local top-k.
-    ``shuffle_parts`` (shard paths) sizes the bucket-kernel exchange
-    from the planner-known decode volume — an explicit repartition by
-    doc_bucket that the groupBy reuses (one exchange, exact task count)
-    instead of the session-wide shuffle-partition default."""
-    long_keys = dict(hits.dtypes).get("doc_id") == "bigint"
-    if callable(kernel):
-        # an injected reference kernel (tests/daat_reference.py) walks
-        # document-at-a-time and needs ONE cursor per (doc, qterm): a
-        # doc can hit the same query term in BOTH fields, so collapse
-        # first, blending in Spark. The vectorized kernel's scatter-add
-        # collapses duplicates natively, so the production path skips
-        # this whole shuffle. Reference kernels score term postings
-        # only, so PageRank is refused.
-        if pr is not None:
-            raise ValueError(
-                "injected reference kernels score term postings only; "
-                "the PageRank blend requires the vectorized kernel"
-            )
-        is_t = F.col("field") == FIELD_TITLE
-        is_b = F.col("field") == FIELD_BODY
-        fw = (
-            F.when(is_t, F.lit(cfg.w_title))
-            .when(is_b, F.lit(cfg.w_body))
-            .otherwise(F.lit(0.0))
-        )
-        rows = hits.groupBy("doc_id", "qterm_id").agg(
-            F.sum(fw * F.col("contrib") * F.lit(cfg.blend_scale)).alias("contrib"),
-            F.sum(F.when(is_t, F.col("contrib")).otherwise(0.0)).alias("title_c"),
-            F.sum(F.when(is_b, F.col("contrib")).otherwise(0.0)).alias("body_c"),
-        )
-        ref = kernel(cfg, k)
-
-        def bucket_kernel(pdf):
-            return ref(pdf).assign(pagerank=0.0)[_OUT_COLS]
-    elif kernel == "taat":
-        rows = hits.select("doc_id", "field", "contrib")
-        bucket_kernel = _score_bucket_vectorized(k, cfg, pr)
-    else:
-        raise ValueError(
-            "only the vectorized kernel ships in the engine; pass a "
-            "callable (cfg, k) -> (pdf -> pdf) factory to inject a "
-            "reference kernel (see tests/daat_reference.py)"
-        )
-
+    """The shuffled top-k tail of the shard paths: ``hits`` carries
+    (doc_id = the long doc_key, field, contrib) with the query-term
+    frequency already multiplied into ``contrib``; ``pr`` is the
+    kernel's Broadcast PageRank vector (see _score_bucket_vectorized).
+    The rows are hash-partitioned by ``doc_bucket`` so each bucket holds
+    every posting of its docs, and each bucket cuts its exact local
+    top-k. ``shuffle_parts`` sizes the bucket-kernel exchange from the
+    planner-known decode volume — an explicit repartition by doc_bucket
+    that the groupBy reuses (one exchange, exact task count) instead of
+    the session-wide shuffle-partition default."""
+    rows = hits.select("doc_id", "field", "contrib")
     bucketed = rows.withColumn(
         "doc_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
     )
@@ -317,8 +213,7 @@ def _wand_from_hits(
         # to coalesce — the kernel stage runs exactly this many tasks
         bucketed = bucketed.repartition(shuffle_parts, "doc_bucket")
     local = bucketed.groupBy("doc_bucket").applyInPandas(
-        bucket_kernel,
-        _out_schema(T.LongType() if long_keys else T.StringType()),
+        _score_bucket_vectorized(k, cfg, pr), _OUT_SCHEMA
     )
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -352,7 +247,7 @@ def _one_task_topk(
 
     local = decode_shards(
         pruned, fields=("weight",),
-        consumer=(consume, _out_schema(T.LongType())), **decode_kw,
+        consumer=(consume, _OUT_SCHEMA), **decode_kw,
     )
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -785,7 +680,7 @@ def wand_topk_from_shards(
     term_list = sorted(counts)
     qtf = {t: float(counts[t]) for t in term_list}
     pruned = prune_shards(shards, term_list, cfg)
-    pr_bc = pr_broadcast(spark, pagerank, doc_map, dense_keys=True)
+    pr_bc = pr_broadcast(spark, pagerank, doc_map)
 
     cand_keys = None
     q_parts = None
@@ -997,8 +892,8 @@ def wand_topk_from_shards(
 
 def empty_topk(spark: SparkSession, by_doc_id: bool) -> DataFrame:
     """The zero-row top-k, keyed like a non-empty result: ``doc_id
-    string`` for rows that carry doc ids (the in-memory index, a shard
-    query given a doc_map), else ``doc_key long`` (the serving engine)."""
+    string`` for rows that carry doc ids (a shard query given a
+    doc_map), else ``doc_key long`` (the serving engine)."""
     key = "doc_id string" if by_doc_id else "doc_key long"
     return spark.createDataFrame(
         [], f"{key}, title_rank double, body_rank double, "

@@ -4,10 +4,11 @@ The classic per-row heap/pivot DAAT kernel (per-term cursors, upper-bound
 pivoting, a local top-k heap). It is deliberately NOT part of the engine:
 the production bucket kernel is the vectorized scatter-add in
 operators/wand.py (_score_bucket_vectorized), and per-row Python must not
-be reachable from any serving path. Tests inject this factory through the
-``kernel`` parameter of wand_topk / wand_topk_from_shards and assert both
-kernels equal the exhaustive scorer — keeping the cross-check without
-shipping the slow path.
+be reachable from any serving path — the engine has no hook to inject a
+kernel. tests/test_wand.py runs this kernel on the driver over a query's
+collected shard postings (one bucket holding every doc) and asserts it
+equals the exhaustive scorer, as the shard planner's kernel must —
+keeping the cross-check without shipping the slow path.
 
 Reference analog: the skipping form of retrieval/main_retrieve.go:50-97's
 candidate evaluation (the reference evaluates exhaustively; this is the
@@ -125,13 +126,3 @@ def make_daat_kernel(cfg, k: int):
         return pd.DataFrame(rows, columns=["doc_id", "title_rank", "body_rank", "score"])
 
     return kernel
-
-
-# Executors cannot import the tests directory (it is driver-side only, via
-# pytest's rootdir sys.path insertion) — ship this module's code inside
-# the task closure instead of by reference.
-import sys as _sys
-
-from pyspark import cloudpickle as _cloudpickle
-
-_cloudpickle.register_pickle_by_value(_sys.modules[__name__])

@@ -77,11 +77,30 @@ def shard_engine(spark, docs_tiny, tmp_path_factory):
     )
 
 
+def _assert_matches_search(eng, cards, q, k):
+    """``cards`` rank like the exhaustive bm25.search over the engine's
+    own index and PageRank frame: equal doc_ids, scores and their parts
+    within rel 1e-9."""
+    from spaghettisearch_spark.operators.bm25 import search
+
+    want = search(
+        eng.spark, eng.index, q, eng.cfg, pagerank=eng.pagerank, k=k
+    ).collect()
+    assert want, q
+    assert [c["doc_id"] for c in cards] == [r["doc_id"] for r in want], q
+    for c, r in zip(cards, want):
+        assert c["final_rank"] == pytest.approx(r["score"], rel=1e-9)
+        assert c["title_rank"] == pytest.approx(r["title_rank"], rel=1e-9, abs=1e-12)
+        assert c["body_rank"] == pytest.approx(r["body_rank"], rel=1e-9, abs=1e-12)
+        assert c["pagerank"] == pytest.approx(r["pagerank"], rel=1e-9, abs=1e-12)
+    return want
+
+
 def test_shard_backend_matches_memory(shard_engine):
-    """backend="shards" serves the FULL query surface from the
-    compressed warehouse layout with results identical to the in-memory
-    backend: free terms, phrases, phrase+terms, the WAND path, and the
-    PageRank blend — cards (ranks, scores, snippets, family) equal."""
+    """The engine serves the FULL query surface from the compressed
+    warehouse layout with results equal to the exhaustive bm25.search
+    over its index: free terms, phrases, phrase+terms, the WAND path,
+    and the PageRank blend."""
     queries = [
         ("parse buffer", False),
         ('"hash table probe"', False),
@@ -90,28 +109,49 @@ def test_shard_backend_matches_memory(shard_engine):
         ("dispatch", True),
     ]
     for q, wand in queries:
-        mem = shard_engine.query(q, k=5, use_wand=wand, backend="memory")
-        shd = shard_engine.query(q, k=5, use_wand=wand, backend="shards")
-        assert [c["doc_id"] for c in shd] == [c["doc_id"] for c in mem], (q, wand)
-        for a, b in zip(shd, mem):
-            assert a["final_rank"] == pytest.approx(b["final_rank"], rel=1e-9)
-            assert a["snippet"] == b["snippet"]
-            assert a["parents"] == b["parents"]
-    # unbuilt backend fails loudly
+        shd = shard_engine.query(q, k=5, use_wand=wand)
+        _assert_matches_search(shard_engine, shd, q, 5)
+    # an engine without posting shards fails loudly
     from spaghettisearch_spark.api import SearchEngine
 
     eng2 = SearchEngine(
         spark=shard_engine.spark, index=shard_engine.index,
         cfg=shard_engine.cfg,
     )
-    with pytest.raises(ValueError, match="warehouse_dir"):
-        eng2.query_df("parse", backend="shards")
+    with pytest.raises(ValueError, match="posting shards"):
+        eng2.query_df("parse")
+
+
+def test_query_backend_memory_raises(engine):
+    """"shards" is the only backend: any other value, "memory"
+    included, raises and names it."""
+    for backend in ("memory", "bogus"):
+        with pytest.raises(ValueError, match='"shards"'):
+            engine.query("parse", backend=backend)
+        with pytest.raises(ValueError, match='"shards"'):
+            engine.query_df("parse", backend=backend)
+
+
+def test_build_rejects_non_bm25_scorer(spark, docs_tiny):
+    """The engine serves BM25 impact weights only: a tfidf_cosine build
+    raises before any Spark job runs."""
+    from spaghettisearch_spark.api import SearchEngine
+    from spaghettisearch_spark.config import EngineConfig
+
+    docs = spark.createDataFrame(docs_tiny)
+
+    def build():
+        with pytest.raises(ValueError, match="tfidf_cosine"):
+            SearchEngine.build(spark, docs, EngineConfig(scorer="tfidf_cosine"))
+
+    _, n_jobs = _spark_jobs(spark, "tfidf-build", build)
+    assert n_jobs == 0
 
 
 def test_warehouse_engine_serves_and_compacts(spark, docs_tiny, tmp_path):
-    """warehouse_dir: the engine serves every backend="shards" query
-    from partitionBy("shard") parquet with cards identical to its
-    in-memory backend, and the LSM maintenance methods rewrite only the
+    """warehouse_dir: the engine serves every query from
+    partitionBy("shard") parquet with results equal to the exhaustive
+    bm25.search, and the LSM maintenance methods rewrite only the
     warehouse in place: apply_merge makes a delta segment searchable
     (and tombstones deletable), refresh_stats with no drift leaves
     results untouched."""
@@ -133,12 +173,8 @@ def test_warehouse_engine_serves_and_compacts(spark, docs_tiny, tmp_path):
         ("parse buffer", True),
         ("dispatch", True),
     ]:
-        mem = eng.query(q, k=5, use_wand=wand, backend="memory")
         wh_cards = eng.query(q, k=5, use_wand=wand, backend="shards")
-        assert [c["doc_id"] for c in wh_cards] == [c["doc_id"] for c in mem], q
-        for a, b in zip(wh_cards, mem):
-            assert a["final_rank"] == pytest.approx(b["final_rank"], rel=1e-9)
-            assert a["snippet"] == b["snippet"]
+        _assert_matches_search(eng, wh_cards, q, 5)
 
     # ---- apply_merge: a delta adding a brand-new term to two docs ----
     assert eng.query("qqnewsig", k=5, use_wand=True, backend="shards") == []
@@ -424,24 +460,16 @@ def _job_stage_tasks(spark, group):
     ]
 
 
-def _assert_same_cards(got, want):
-    assert [c["doc_id"] for c in got] == [c["doc_id"] for c in want]
-    for a, b in zip(got, want):
-        assert a["final_rank"] == pytest.approx(b["final_rank"], rel=1e-9)
-        assert a["pagerank"] == pytest.approx(b["pagerank"], rel=1e-9)
-        for key in ("url", "content_sha256", "snippet", "parents",
-                    "children", "top_words", "page_size"):
-            assert a[key] == b[key], key
-
-
 def test_warehouse_query_is_one_job(spark, docs_tiny, tmp_path):
     """A shard query runs exactly one Spark job, the top-k job: the
     driver reads the block metadata of first-seen terms and the k cards
     itself. That holds cold (cleared meta_cache) and warm, for a WAND
-    bag and for a phrase, and the cards equal the memory backend's. A
-    WAND bag this small plans one task, so its top-k job is one stage of
-    one task: decode and score in one Python pass, no bucket shuffle."""
+    bag and for a phrase, and the rows equal the exhaustive bm25.search
+    (hydrated: url, content_sha256, page_size and top words). A WAND bag
+    this small plans one task, so its top-k job is one stage of one
+    task: decode and score in one Python pass, no bucket shuffle."""
     from spaghettisearch_spark.api import SearchEngine
+    from spaghettisearch_spark.operators.bm25 import search
 
     eng = SearchEngine.build(
         spark, spark.createDataFrame(docs_tiny),
@@ -450,7 +478,6 @@ def test_warehouse_query_is_one_job(spark, docs_tiny, tmp_path):
     for i, (q, wand) in enumerate(
         [("parse buffer", True), ('"hash table" flush', False)]
     ):
-        mem = eng.query(q, k=5, use_wand=wand, backend="memory")
         got = {}
         for run in ("cold", "warm"):
             if run == "cold":
@@ -463,14 +490,29 @@ def test_warehouse_query_is_one_job(spark, docs_tiny, tmp_path):
             if wand:
                 assert _job_stage_tasks(spark, f"one-job-{i}-{run}") == [[1]]
         assert got["warm"] == got["cold"]
-        _assert_same_cards(got["warm"], mem)
+        want = _assert_matches_search(eng, got["warm"], q, 5)
+        hydrated = {
+            r["doc_id"]: r
+            for r in search(
+                spark, eng.index, q, eng.cfg, pagerank=eng.pagerank, k=5,
+                hydrate=True,
+            ).collect()
+        }
+        assert set(hydrated) == {r["doc_id"] for r in want}
+        for c in got["warm"]:
+            r = hydrated[c["doc_id"]]
+            assert c["url"] == f"{r['repo']}/{r['path']}"
+            assert (c["content_sha256"], c["page_size"], c["top_words"]) == (
+                r["content_sha256"], r["page_size"], r["top_words"]
+            )
 
 
 def test_driver_cards_equal_spark_rows(spark, docs_small, tmp_path):
     """The cards ``query`` reads on the driver equal the doc_cards rows
     a Spark read returns (Row.asDict(recursive=True)), field by field:
     top_words a dict, parents, children and content_sha256 equal — with
-    and without a warehouse, and for cards appended by apply_merge."""
+    a temporary and a given warehouse, and for cards appended by
+    apply_merge."""
     import gc
     from pathlib import Path
     from urllib.parse import urlparse
@@ -498,13 +540,13 @@ def test_driver_cards_equal_spark_rows(spark, docs_small, tmp_path):
                              ("pagerank", "pagerank")):
                 assert c[key] == r[col], key
 
-    mem_eng = SearchEngine.build(spark, spark.createDataFrame(docs_small.head(80)))
-    check(mem_eng, mem_eng.query("parse buffer", k=20))
-    # without a warehouse the cards live in a temporary directory that
-    # goes with the engine
-    tmp = Path(urlparse(mem_eng.card_files[0]).path).parents[1]
+    tmp_eng = SearchEngine.build(spark, spark.createDataFrame(docs_small.head(80)))
+    check(tmp_eng, tmp_eng.query("parse buffer", k=20))
+    # without a warehouse_dir the warehouse is a temporary directory
+    # that goes with the engine
+    tmp = Path(urlparse(tmp_eng.card_files[0]).path).parents[1]
     assert tmp.is_dir()
-    del mem_eng
+    del tmp_eng
     gc.collect()
     assert not tmp.exists()
     eng = SearchEngine.build(
@@ -583,6 +625,40 @@ def _merge_batch(spark, eng, rows):
         doc_dim=ext, weight_col="bm25_weight",
     ).localCheckpoint(eager=True)
     return delta, ext, nc
+
+
+def test_temp_warehouse_outlives_merge(spark, docs_small):
+    """An engine built without warehouse_dir serves, merges and
+    refreshes from its temporary warehouse. The directory outlives the
+    frames a merge replaces (the cards frame is re-read on append) and
+    every dataclasses.replace copy, and goes with the last copy."""
+    import gc
+    from dataclasses import replace
+    from pathlib import Path
+
+    from spaghettisearch_spark.api import SearchEngine
+
+    eng = SearchEngine.build(
+        spark, spark.createDataFrame(docs_small.head(60)), with_pagerank=False,
+    )
+    tmp = Path(eng.warehouse_dir)
+    assert (tmp / "posting_shards").is_dir() and (tmp / "doc_cards").is_dir()
+    copy = replace(eng, meta_cache={})
+    assert copy.query("parse buffer", k=5) == eng.query("parse buffer", k=5)
+    rows = [("rtmp", "zztmp.py", "c1", "python", "zztmpsig parse buffer")]
+    delta, ext, nc = _merge_batch(spark, eng, rows)
+    eng.apply_merge(delta, new_doc_map=ext, new_corpus=nc)
+    eng.refresh_stats(drift_threshold=0.5)
+    gc.collect()
+    hits = eng.query("zztmpsig", k=5, use_wand=True)
+    assert [c["url"] for c in hits] == ["rtmp/zztmp.py"]
+    assert hits[0]["snippet"] == rows[0][4]
+    del eng
+    gc.collect()
+    assert tmp.is_dir(), "a live copy still serves from the directory"
+    del copy
+    gc.collect()
+    assert not tmp.exists()
 
 
 def test_apply_merge_appends_cards(spark, docs_small, tmp_path):

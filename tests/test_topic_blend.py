@@ -130,8 +130,10 @@ def test_engine_topic_query_shards_backend(spark, tmp_path):
     PR vector has its own blend maximum, so the skip-planner cache must
     be per-topic (a shared cache reused a stale pr_max and could
     silently skip blocks that the bigger topic vector can still lift
-    into the top-k). Cards must match the memory backend per topic,
-    interleaved so cache reuse across topics would be exposed."""
+    into the top-k). Cards must match the exhaustive bm25.search with
+    the topic's rows of topic_pagerank (the global frame without a
+    topic), interleaved so cache reuse across topics would be
+    exposed."""
     from spaghettisearch_spark.api import SearchEngine
     from spaghettisearch_spark.operators.wand import _PR_MAX_KEY
 
@@ -148,13 +150,17 @@ def test_engine_topic_query_shards_backend(spark, tmp_path):
         warehouse_dir=str(tmp_path / "wh"),
     )
     for topic in ("small", "big", "small", None, "big"):
-        mem = eng.query("needle", k=3, use_wand=True, topic=topic,
-                        backend="memory")
+        want = search(
+            spark, eng.index, "needle", DEFAULT, k=3,
+            pagerank=eng.pagerank if topic is None else None,
+            topic_pagerank=eng.topic_pagerank, topic=topic,
+        ).collect()
         shd = eng.query("needle", k=3, use_wand=True, topic=topic,
                         backend="shards")
-        assert [c["doc_id"] for c in shd] == [c["doc_id"] for c in mem], topic
-        for a, b in zip(shd, mem):
-            assert a["final_rank"] == pytest.approx(b["final_rank"], rel=1e-9)
+        assert [c["doc_id"] for c in shd] == [r["doc_id"] for r in want], topic
+        for a, b in zip(shd, want):
+            assert a["final_rank"] == pytest.approx(b["score"], rel=1e-9)
+            assert a["pagerank"] == pytest.approx(b["pagerank"], rel=1e-9)
     # ONE shared cache: term metadata fetched once for all topics, but
     # each PR vector keeps its OWN pr_max slot (a stale pr_max under a
     # different vector would break skip admissibility) — on this fixture

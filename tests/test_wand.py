@@ -9,7 +9,7 @@ import pytest
 from spaghettisearch_spark.config import DEFAULT
 from spaghettisearch_spark.functions.tokenize import parse_query
 from spaghettisearch_spark.operators.bm25 import search
-from spaghettisearch_spark.operators.wand import wand_topk
+from spaghettisearch_spark.operators.wand import wand_topk_from_shards
 
 TERM_QUERIES = [
     "parse",
@@ -26,22 +26,81 @@ def _exhaustive(spark, index_small, query, k, pagerank=None):
     return search(spark, index_small, query, DEFAULT, pagerank=pagerank, k=k).collect()
 
 
+@pytest.fixture(scope="module")
+def shards_small(corpus_small, index_small, dim_small):
+    """corpus_small's posting shards, keyed by the dense dim_small keys."""
+    from spaghettisearch_spark.operators.compression import build_posting_shards
+
+    shards = build_posting_shards(
+        index_small.postings, corpus_small.count(), DEFAULT,
+        doc_dim=dim_small[0], weight_col="bm25_weight",
+    ).cache()
+    shards.count()
+    yield shards
+    shards.unpersist()
+
+
+def _daat_topk(spark, shards, doc_map, terms, k):
+    """Top-k of the reference DAAT kernel (tests/daat_reference.py) run
+    on the driver over the query's collected postings — one bucket
+    holding every doc — with the per-(doc, term) blend the kernel
+    expects: one cursor per (doc, qterm), both fields summed."""
+    from collections import Counter
+
+    from daat_reference import make_daat_kernel
+
+    from spaghettisearch_spark.operators.compression import (
+        decode_shards,
+        prune_shards,
+    )
+    from spaghettisearch_spark.operators.index_build import FIELD_BODY, FIELD_TITLE
+
+    qtf = Counter(terms)
+    bag = sorted(qtf)
+    pdf = (
+        decode_shards(prune_shards(shards, bag, DEFAULT), fields=("weight",))
+        .join(doc_map, "doc_key")
+        .select("doc_id", "term", "field", "weight")
+        .toPandas()
+    )
+    contrib = pdf["weight"] * pdf["term"].map(qtf).astype(float)
+    fw = pdf["field"].map({FIELD_TITLE: DEFAULT.w_title, FIELD_BODY: DEFAULT.w_body})
+    rows = (
+        pdf.assign(
+            qterm_id=pdf["term"].map({t: i for i, t in enumerate(bag)}),
+            contrib=fw.fillna(0.0) * contrib * DEFAULT.blend_scale,
+            title_c=contrib.where(pdf["field"] == FIELD_TITLE, 0.0),
+            body_c=contrib.where(pdf["field"] == FIELD_BODY, 0.0),
+        )
+        .groupby(["doc_id", "qterm_id"], as_index=False)[
+            ["contrib", "title_c", "body_c"]
+        ]
+        .sum()
+    )
+    out = make_daat_kernel(DEFAULT, k)(rows)
+    return out.sort_values(
+        ["score", "doc_id"], ascending=[False, True]
+    ).head(k).to_dict("records")
+
+
 @pytest.mark.parametrize("kernel", ["taat", "daat_reference"])
 @pytest.mark.parametrize("query", TERM_QUERIES)
-def test_wand_matches_exhaustive(spark, index_small, query, kernel):
-    # the per-row DAAT heap kernel is a TEST-ONLY parity oracle — it is
-    # injected as a callable and must not be reachable by name from any
-    # production path (a string other than 'taat' raises)
+def test_wand_matches_exhaustive(
+    spark, index_small, dim_small, shards_small, query, kernel
+):
+    # the production bucket kernel (taat) through the shard planner, and
+    # the per-row DAAT heap kernel — a TEST-ONLY parity oracle with no
+    # hook into the engine — over the same shards' postings
     k = 20
     terms, _ = parse_query(query)
-    if kernel == "daat_reference":
-        with pytest.raises(ValueError, match="vectorized kernel"):
-            wand_topk(spark, index_small, terms, DEFAULT, k=k, kernel="daat")
-        from daat_reference import make_daat_kernel as kernel
+    doc_map = dim_small[1]
     want = _exhaustive(spark, index_small, query, k)
-    got = wand_topk(
-        spark, index_small, terms, DEFAULT, k=k, n_buckets=4, kernel=kernel
-    ).collect()
+    if kernel == "taat":
+        got = wand_topk_from_shards(
+            spark, shards_small, doc_map, terms, DEFAULT, k=k, n_buckets=4
+        ).collect()
+    else:
+        got = _daat_topk(spark, shards_small, doc_map, terms, k)
     assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want], query
     for g, w in zip(got, want):
         assert g["score"] == pytest.approx(w["score"], rel=1e-9, abs=1e-12)
@@ -49,24 +108,42 @@ def test_wand_matches_exhaustive(spark, index_small, query, kernel):
         assert g["body_rank"] == pytest.approx(w["body_rank"], rel=1e-9, abs=1e-12)
 
 
-def test_wand_with_pagerank(spark, corpus_small, index_small):
+def test_wand_with_pagerank(spark, corpus_small, index_small, dim_small, shards_small):
     from spaghettisearch_spark.operators.links import extract_links
     from spaghettisearch_spark.operators.pagerank import compute_pagerank
 
     pr = compute_pagerank(spark, corpus_small, extract_links(corpus_small)).cache()
     terms, _ = parse_query("parse buffer")
     want = _exhaustive(spark, index_small, "parse buffer", 15, pagerank=pr)
-    got = wand_topk(spark, index_small, terms, DEFAULT, k=15, pagerank=pr).collect()
+    got = wand_topk_from_shards(
+        spark, shards_small, dim_small[1], terms, DEFAULT, k=15, pagerank=pr
+    ).collect()
     assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
     for g, w in zip(got, want):
         assert g["score"] == pytest.approx(w["score"], rel=1e-9)
+        assert g["pagerank"] == pytest.approx(w["pagerank"], rel=1e-9)
+    pr.unpersist()
 
 
-def test_wand_single_bucket_equals_many(spark, index_small):
+def test_wand_single_bucket_equals_many(spark, index_small, dim_small, shards_small):
+    """One bucket (the one-task pass) and 16 (a tiny per-task target
+    forces the shuffled bucket tail) rank alike, and like the
+    exhaustive scorer."""
+    from dataclasses import replace
+
     terms, _ = parse_query("parse buffer flush")
-    a = wand_topk(spark, index_small, terms, DEFAULT, k=10, n_buckets=1).collect()
-    b = wand_topk(spark, index_small, terms, DEFAULT, k=10, n_buckets=16).collect()
+    many = replace(DEFAULT, query_target_postings_per_task=1)
+    a = wand_topk_from_shards(
+        spark, shards_small, dim_small[1], terms, many, k=10, n_buckets=1
+    ).collect()
+    b = wand_topk_from_shards(
+        spark, shards_small, dim_small[1], terms, many, k=10, n_buckets=16
+    ).collect()
+    want = _exhaustive(spark, index_small, "parse buffer flush", 10)
     assert [r["doc_id"] for r in a] == [r["doc_id"] for r in b]
+    assert [r["doc_id"] for r in a] == [r["doc_id"] for r in want]
+    for g, w in zip(b, want):
+        assert g["score"] == pytest.approx(w["score"], rel=1e-9)
 
 
 def test_wand_from_shards_matches_exhaustive(

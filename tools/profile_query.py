@@ -2,14 +2,23 @@
 
 Builds the sf0.1 index + shards exactly like bench.py, then times:
   - engine queries over a warehouse built from the same documents, cold
-    (``meta_cache`` cleared) and warm: wall time and Spark jobs per query
+    (``meta_cache`` cleared) and warm: wall time and Spark jobs per query,
+    and for a phrase query a cProfile top-15 (cumulative) of one cold
+    and one warm ``bm25.search_from_shards`` call — the planning that
+    the benchmark's ``bm25.plan_ms`` times (the top-k job runs after it)
   - the session's fixed action floors: collect on a 1-row cached frame,
     and the same row through one ``mapInPandas`` Python crossing
   - the decode alone, and the engine's top-k job at the default task
     sizing and forced to several tasks (stages and tasks printed)
   - the full query under config variations (AQE on/off, shuffle partitions)
 
-Run:  python tools/profile_query.py [n_docs]
+Run:  python tools/profile_query.py
+      python tools/profile_query.py --docs 300 --seed 1
+
+With ``--docs N --seed S`` it only profiles the engine queries, over the
+first N documents of the benchmark's corpus generator
+(``perfbench/corpus.py``, a ``serve`` run's documents for that seed) and
+that run's phrase queries from its query pool.
 """
 
 from __future__ import annotations
@@ -34,6 +43,38 @@ def t(fn, n=5, warm=1):
         fn()
         times.append(time.time() - t0)
     return min(times), sorted(times)[len(times) // 2]
+
+
+def phrase_plan_profile(eng, q, top=15):
+    """cProfile of one cold (``meta_cache`` cleared) and one warm
+    ``search_from_shards`` call for ``q`` with the engine's arguments:
+    the top ``top`` functions by cumulative time. Only the planning
+    runs; the returned top-k frame is not collected."""
+    import cProfile
+    import io
+    import pstats
+
+    from spaghettisearch_spark.operators.bm25 import search_from_shards
+
+    def plan():
+        return search_from_shards(
+            eng.spark, eng.shards, None, q, eng.cfg,
+            pagerank=eng.pr_vectors.get(None), k=10,
+            meta_cache=eng.meta_cache, shard_files=eng.shard_files,
+        )
+
+    plan()
+    for mode in ("cold", "warm"):
+        if mode == "cold":
+            eng.meta_cache.clear()
+        prof = cProfile.Profile()
+        t0 = time.perf_counter()
+        prof.runcall(plan)
+        ms = (time.perf_counter() - t0) * 1000
+        out = io.StringIO()
+        pstats.Stats(prof, stream=out).sort_stats("cumulative").print_stats(top)
+        print(f"phrase_plan_{mode} {q!r}: {ms:.1f} ms under cProfile")
+        print(out.getvalue())
 
 
 def engine_queries(spark, raw, queries, n=5):
@@ -70,9 +111,47 @@ def engine_queries(spark, raw, queries, n=5):
                 print(f"engine_{mode} {q!r} wand={wand}: "
                       f"{times[0] * 1000:.1f} / {times[n // 2] * 1000:.1f} ms "
                       f"(min / median of {n}), spark jobs per query {jobs}")
+            if '"' in q:
+                phrase_plan_profile(eng, q)
+
+
+def serve_corpus_queries(n_docs, seed):
+    """Engine queries over a ``serve`` run's documents and the phrase
+    queries of its query pool, in a session sized like perfbench's."""
+    root = Path(__file__).resolve().parent.parent
+    sys.path.insert(0, str(root / "perfbench"))
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (str(root), os.environ.get("PYTHONPATH")) if p
+    )
+    # perfbench's heap cap, so a run leaves a shared host alone
+    os.environ.setdefault("SPARK_DRIVER_MEM", "2g")
+    import corpus as gen
+
+    from spaghettisearch_spark.session import get_spark
+
+    cores = len(os.sched_getaffinity(0))
+    spark = get_spark(
+        "profile-query", cores=cores, shuffle_partitions=2 * cores,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
+    docs = gen.make_corpus(spark, n_docs, seed, planted_from=n_docs)
+    pool = gen.make_query_pool(docs, 24, seed, n_docs)
+    engine_queries(
+        spark, spark.createDataFrame(docs.docs),
+        [(q, True) for q in pool if '"' in q],
+    )
 
 
 def main():
+    import argparse
+
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--docs", type=int)
+    ap.add_argument("--seed", type=int, default=1)
+    args = ap.parse_args()
+    if args.docs:
+        serve_corpus_queries(args.docs, args.seed)
+        return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     from spaghettisearch_spark.config import EngineConfig
@@ -84,10 +163,7 @@ def main():
         prune_shards,
     )
     from spaghettisearch_spark.operators.index_build import build_index
-    from spaghettisearch_spark.operators.wand import (
-        wand_topk,
-        wand_topk_from_shards,
-    )
+    from spaghettisearch_spark.operators.wand import wand_topk_from_shards
     from spaghettisearch_spark.session import get_spark
     from spaghettisearch_spark.sources.corpus import from_driver_documents
     from spaghettisearch_spark.functions.porter2 import stem as p2stem
@@ -176,8 +252,6 @@ def main():
     # exhaustive for comparison
     print("exhaustive_search", t(lambda: search(
         spark, idx, "spark query scan", cfg, k=50).collect()))
-    print("wand_mem", t(lambda: wand_topk(
-        spark, idx, wand_terms, cfg, k=50, n_buckets=cpus).collect()))
 
     # AQE off
     spark.conf.set("spark.sql.adaptive.enabled", "false")
