@@ -148,6 +148,7 @@ def _engine_shards(spark: SparkSession, sf_dir: str):
         from spaghettisearch_spark.operators.incremental import diff_corpus
         from spaghettisearch_spark.operators.index_build import (
             build_postings,
+            collect_corpus_stats,
             tokenize_fields,
         )
         from spaghettisearch_spark.sources.corpus import ingest
@@ -181,24 +182,27 @@ def _engine_shards(spark: SparkSession, sf_dir: str):
             ).otherwise(F.col("content")),
         ).select("repo", "path", "commit", "lang", "content")
         stale_corpus = ingest(stale_raw).cache()
-        # stale postings for the changed docs (weights irrelevant — every
-        # one of these rows is tombstoned and/or upserted by the delta)
-        stale_postings = build_postings(
-            tokenize_fields(
-                stale_corpus.join(changed_ids, "doc_id", "left_semi"), CFG
+        # stale postings for the changed docs (order and length
+        # irrelevant — every one of these rows is tombstoned and/or
+        # upserted by the delta, and the merge re-encodes their groups)
+        stale_postings = (
+            build_postings(
+                tokenize_fields(
+                    stale_corpus.join(changed_ids, "doc_id", "left_semi"), CFG
+                )
             )
-        ).withColumn("weight", F.lit(1.0)).cache()
+            .withColumn("dl", F.lit(1))
+            .withColumn("weight", F.lit(1.0))
+            .cache()
+        )
+        cols = ["term", "field", "doc_id", "tf", "positions", "dl", "weight"]
         true_keep = (
             idx.postings.join(changed_ids, "doc_id", "left_anti")
             .withColumn("weight", F.col("bm25_weight"))
-            .select("term", "field", "doc_id", "tf", "positions", "weight")
+            .select(*cols)
         )
         base = build_posting_shards(
-            true_keep.unionByName(
-                stale_postings.select(
-                    "term", "field", "doc_id", "tf", "positions", "weight"
-                )
-            ),
+            true_keep.unionByName(stale_postings.select(*cols)),
             n_docs, CFG, doc_dim=doc_dim, weight_col="weight",
         ).cache()
         # --- the re-crawl batch arrives: the true docs ---
@@ -210,20 +214,21 @@ def _engine_shards(spark: SparkSession, sf_dir: str):
         tombstones = stale_postings.join(doc_dim, "doc_id").select(
             "term", "field", F.col("doc_idx").alias("doc_key")
         )
-        shards = merge_posting_shards(
-            base, delta, n_docs, CFG, delete_postings=tombstones
-        ).cache()
-        shards.count()
         doc_map = doc_dim.select(
             F.col("doc_idx").alias("doc_key"), "doc_id"
         ).cache()
-        doc_map.count()
+        # the true corpus's statistics score the merged shards
+        stats = collect_corpus_stats(spark, idx.doc_stats, doc_map)
+        shards = merge_posting_shards(
+            base, delta, n_docs, CFG, delete_postings=tombstones, stats=stats,
+        ).cache()
+        shards.count()
         # only shards + doc_map serve queries; the build-time frames
         # (segments, dim, diff) must not pin executor storage
         for f in (base, delta, doc_dim, stale_corpus, stale_postings,
                   changed, changed_ids):
             f.unpersist()
-        _SHARDS_CACHE[sf_dir] = (shards, doc_map, {})
+        _SHARDS_CACHE[sf_dir] = (shards, doc_map, {}, stats)
     return _SHARDS_CACHE[sf_dir]
 
 
@@ -345,50 +350,10 @@ def q_wand_topk_shards(spark, sf_dir):
     by merge_posting_shards, so this row also gates the merge path."""
     from spaghettisearch_spark.operators.wand import wand_topk_from_shards
 
-    shards, doc_map, meta = _engine_shards(spark, sf_dir)
+    shards, doc_map, meta, stats = _engine_shards(spark, sf_dir)
     res = wand_topk_from_shards(
         spark, shards, doc_map, QUERY_TERMS, CFG, k=20, n_buckets=8,
-        meta_cache=meta,
-    )
-    return res.select(
-        F.col("doc_id").alias("did"), _e("score", 100000).alias("score_e5")
-    )
-
-
-def q_stats_refresh_topk(spark, sf_dir):
-    """In-place scorer-migration gate for refresh_shard_stats
-    (compression.py): shards are first built carrying the LEGACY tf-idf
-    weights (normTF*idf — the reference's original scorer,
-    ranking/term_weighting.go:37), then refresh_shard_stats with
-    drift_threshold=0 re-derives BM25 weights from the stored tfs + the
-    CURRENT index stats, postings untouched. The WAND top-k over the
-    refreshed shards must hash-match the same DuckDB BM25 oracle as the
-    clean-build paths — refreshed-from-another-scorer ==
-    built-from-scratch, weight-exact to 1e-5."""
-    from spaghettisearch_spark.operators.compression import (
-        build_doc_dim,
-        build_posting_shards,
-        key_doc_stats,
-        refresh_shard_stats,
-    )
-    from spaghettisearch_spark.operators.wand import wand_topk_from_shards
-
-    idx = _engine_index(spark, sf_dir)
-    corpus = idx._driver_corpus
-    dim = build_doc_dim(corpus).cache()
-    n_docs = dim.count()
-    # default weight_col="weight" = the tf-idf column — deliberately the
-    # WRONG scorer for WAND, to be repaired in place by the refresh
-    stale = build_posting_shards(idx.postings, n_docs, CFG, doc_dim=dim).cache()
-    stale.count()
-    refreshed = refresh_shard_stats(
-        stale, idx.term_stats, key_doc_stats(idx.doc_stats, dim),
-        idx.corpus_stats.collect(), CFG, drift_threshold=0.0,
-    )
-    res = wand_topk_from_shards(
-        spark, refreshed,
-        dim.select(F.col("doc_idx").alias("doc_key"), "doc_id"),
-        QUERY_TERMS, CFG, k=20, n_buckets=8,
+        meta_cache=meta, stats=stats,
     )
     return res.select(
         F.col("doc_id").alias("did"), _e("score", 100000).alias("score_e5")
@@ -401,8 +366,10 @@ def q_phrase_topk_shards(spark, sf_dir):
     oracle as phrase_topk."""
     from spaghettisearch_spark.operators.phrase import phrase_matches_from_shards
 
-    shards, doc_map, _meta = _engine_shards(spark, sf_dir)
-    m = phrase_matches_from_shards(spark, shards, doc_map, list(PHRASE), CFG)
+    shards, doc_map, meta, stats = _engine_shards(spark, sf_dir)
+    m = phrase_matches_from_shards(
+        spark, shards, doc_map, list(PHRASE), CFG, stats=stats,
+    )
     scored = (
         m.groupBy("doc_id")
         .pivot("field", ["title", "body"])
@@ -652,11 +619,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """The 22 search entries: indexing stats, BM25 / WAND / phrase
+    """The 21 search entries: indexing stats, BM25 / WAND / phrase
     top-k (the exhaustive scorer, the SearchEngine and posting shards),
-    PageRank (global and topic-sensitive), link families, snippets and
-    the stats refresh. Entries without an ``oracle_sql()`` mirror are
-    rows-only."""
+    PageRank (global and topic-sensitive), link families and snippets.
+    Entries without an ``oracle_sql()`` mirror are rows-only."""
     return {
         "tf_postings": q_tf_postings,
         "doc_frequency": q_doc_frequency,
@@ -680,7 +646,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "topic_term_stats": q_topic_term_stats,
         "topic_meta": q_topic_meta,
         "snippets": q_snippets,
-        "stats_refresh_topk": q_stats_refresh_topk,
     }
 
 
@@ -712,8 +677,6 @@ FROM tf JOIN mx USING (did) JOIN df USING (term)
     sqls["bm25_topk"] = _bm25_sql(QUERY_TERMS, 20)
     sqls["wand_topk"] = _bm25_sql(QUERY_TERMS, 20)
     sqls["wand_topk_shards"] = _bm25_sql(QUERY_TERMS, 20)
-    # refresh-from-tfidf must land on the SAME BM25 truth as a clean build
-    sqls["stats_refresh_topk"] = _bm25_sql(QUERY_TERMS, 20)
     t1, t2 = PHRASE
     sqls["phrase_topk"] = f"""
 WITH {_TOKS},

@@ -38,7 +38,7 @@ def _no_floor(cache: dict) -> dict:
     return {k: v for k, v in cache.items() if not k.startswith("\x00floor:")}
 
 
-def _oracle_skippable(shards, bag, cfg, k) -> dict:
+def _oracle_skippable(shards, bag, cfg, k, stats) -> dict:
     """Information-theoretic block-skip ceiling for a term bag: a block
     is skippable by ANY exact planner iff its best doc's TRUE total
     score (computed from the fully decoded shards) is below the true
@@ -46,11 +46,15 @@ def _oracle_skippable(shards, bag, cfg, k) -> dict:
     slack; total == kept means the query shape admits no skipping."""
     from pyspark.sql import functions as F
 
-    from spaghettisearch_spark.operators.compression import decode_shards
+    from spaghettisearch_spark.operators.compression import (
+        decode_shards,
+        term_block_meta,
+    )
 
     d = decode_shards(
         shards.filter(F.col("term").isin(bag)),
         passthrough=("salt",), fields=("weight",),
+        scoring=stats.scoring(term_block_meta(shards, bag, cfg), cfg),
     )
     fw = (
         F.when(F.col("field") == "title", F.lit(cfg.w_title))
@@ -189,8 +193,15 @@ def main() -> None:
     # dense doc dimension: shards keyed by doc_idx, doc_id strings joined
     # only to the kernel's n_buckets*k output rows (the at-scale shape —
     # the corpus-sized map never enters the per-query shuffle)
+    from spaghettisearch_spark.operators.index_build import collect_corpus_stats
+
     doc_dim = build_doc_dim(corpus).cache()
     doc_dim.count()
+    doc_map = doc_dim.select(
+        F.col("doc_idx").alias("doc_key"), "doc_id"
+    ).cache()
+    doc_map.count()
+    stats = collect_corpus_stats(spark, idx.doc_stats, doc_map)
     shards = None
     shard_meta: dict = {}  # per-term block metadata (serving-node dictionary)
 
@@ -226,7 +237,9 @@ def main() -> None:
             doc_dim=doc_dim, weight_col="bm25_weight",
         ).cache()
         try:
-            merge_posting_shards(base_90, delta, n_files, cfg).count()
+            merge_posting_shards(
+                base_90, delta, n_files, cfg, stats=stats
+            ).count()
         finally:
             delta.unpersist()
 
@@ -241,7 +254,9 @@ def main() -> None:
     # (an unordered limit would compare different deltas across rounds,
     # and reused terms could collide into duplicate doc_keys per block)
     _sample = (
-        idx.postings.select("field", "doc_id", "tf", "positions", "bm25_weight")
+        idx.postings.select(
+            "field", "doc_id", "tf", "positions", "dl", "bm25_weight"
+        )
         .orderBy("doc_id", "field", "tf")
         .limit(10)
         .collect()
@@ -249,11 +264,11 @@ def main() -> None:
     rare_delta = spark.createDataFrame(
         [
             (f"qzzrare{i}", r["field"], r["doc_id"], r["tf"],
-             r["positions"], r["bm25_weight"])
+             r["positions"], r["dl"], r["bm25_weight"])
             for i, r in enumerate(_sample)
         ],
         "term string, field string, doc_id string, tf int, "
-        "positions array<int>, bm25_weight double",
+        "positions array<int>, dl long, bm25_weight double",
     )
 
     def run_shard_merge_rare():
@@ -264,7 +279,8 @@ def main() -> None:
             # partitions_only: the dynamic-partition-overwrite write set
             # — compaction I/O bounded by touched shard partitions
             merge_posting_shards(
-                base_90, delta, n_files, cfg, partitions_only=True
+                base_90, delta, n_files, cfg, partitions_only=True,
+                stats=stats,
             ).count()
         finally:
             delta.unpersist()
@@ -272,18 +288,15 @@ def main() -> None:
     timings["shard_merge_rare"] = best_of(run_shard_merge_rare)
     base_90.unpersist()
 
-    doc_map = doc_dim.select(
-        F.col("doc_idx").alias("doc_key"), "doc_id"
-    ).cache()
-    doc_map.count()
     qset["q_wand_shards"] = lambda: wand_topk_from_shards(
         spark, shards, doc_map, wand_terms, cfg, k=50,
-        meta_cache=shard_meta,
+        meta_cache=shard_meta, stats=stats,
     )
     # hot term (df ~ 1.0): the vectorized bucket kernel must keep WAND
     # at-or-under the exhaustive path even when pruning can't skip
     qset["q_wand_shards_hot"] = lambda: wand_topk_from_shards(
         spark, shards, doc_map, hot_term, cfg, k=50, meta_cache=shard_meta,
+        stats=stats,
     )
     # the same query against PARQUET-backed shards partitioned by shard id
     # (the warehouse layout): measures the real cold path — partition-
@@ -302,7 +315,7 @@ def main() -> None:
     shard_meta_pq: dict = {}
     qset["q_wand_shards_parquet"] = lambda: wand_topk_from_shards(
         spark, shards_pq, doc_map, wand_terms, cfg, k=50,
-        meta_cache=shard_meta_pq,
+        meta_cache=shard_meta_pq, stats=stats,
     )
     # the same warehouse served through the SearchEngine facade (parse ->
     # WAND over parquet shards -> driver-side read of the k doc_cards +
@@ -314,13 +327,13 @@ def main() -> None:
     )
 
     cards, card_files = _store_cards(
-        spark, build_doc_cards(doc_map, corpus, idx.doc_meta), n_files,
-        f"{_shard_dir}/doc_cards",
+        spark, build_doc_cards(doc_map, corpus, idx.doc_meta, idx.doc_stats),
+        n_files, f"{_shard_dir}/doc_cards",
     )
     eng_wh = SearchEngine(
-        spark=spark, index=idx, cfg=cfg, shards=shards_pq,
+        spark=spark, cfg=cfg, shards=shards_pq,
         doc_cards=cards, warehouse_dir=_shard_dir, n_docs=n_files,
-        shard_files=shard_files, card_files=card_files,
+        shard_files=shard_files, card_files=card_files, stats=stats,
     )
     qset["q_engine_warehouse"] = lambda: eng_wh.query_df(
         "spark query scan", k=50, use_wand=True, backend="shards"
@@ -386,11 +399,11 @@ def main() -> None:
     for q in (
         wand_topk_from_shards(
             spark, shards, doc_map, wand_terms, cfg, k=50,
-            meta_cache=shard_meta,
+            meta_cache=shard_meta, stats=stats,
         ),
         wand_topk_from_shards(
             spark, shards_pq, doc_map, wand_terms, cfg, k=50,
-            meta_cache=shard_meta_pq,
+            meta_cache=shard_meta_pq, stats=stats,
         ),
     ):
         got = [r["doc_id"] for r in q.collect()]
@@ -418,14 +431,14 @@ def main() -> None:
     # keeps the floor out of shard_meta so the timed q_wand_shards
     # rows stay cold single-phase.
     skip_stats["main_multi_oracle"] = _oracle_skippable(
-        shards, wand_terms, cfg, 50
+        shards, wand_terms, cfg, 50, stats
     )
     mm_cache = dict(shard_meta)
     got_mm2p = [
         r["doc_id"]
         for r in wand_topk_from_shards(
             spark, shards, doc_map, wand_terms, cfg, k=50,
-            meta_cache=mm_cache, two_phase=True,
+            meta_cache=mm_cache, two_phase=True, stats=stats,
         ).collect()
     ]
     assert got_mm2p == exhaustive, "main 2-phase WAND != exhaustive"
@@ -483,6 +496,7 @@ def main() -> None:
     timings["zipf_shard_build"] = best_of(run_zipf_shard_build)
     zmap = zdim.select(F.col("doc_idx").alias("doc_key"), "doc_id").cache()
     zmap.count()
+    zstats = collect_corpus_stats(spark, zidx.doc_stats, zmap)
 
     hot_bag = ["zw00000", "zw00001", "zw00002"]
     mid_bag = ["zw00000", "zw00150", "zw02500"]
@@ -496,7 +510,7 @@ def main() -> None:
     def zq(bag, meta=zmeta, sh=None, two_phase=False, k=50):
         return wand_topk_from_shards(
             spark, sh if sh is not None else zshards, zmap, bag, zcfg,
-            k=k, meta_cache=meta, two_phase=two_phase,
+            k=k, meta_cache=meta, two_phase=two_phase, stats=zstats,
         )
 
     # hard exactness gate before timing anything
@@ -558,7 +572,9 @@ def main() -> None:
 
     # ORACLE skippability floor for the hot bag — the limit the planner
     # is judged against (see _oracle_skippable)
-    skip_stats["zipf_hot_oracle"] = _oracle_skippable(zshards, hot_bag, zcfg, 50)
+    skip_stats["zipf_hot_oracle"] = _oracle_skippable(
+        zshards, hot_bag, zcfg, 50, zstats
+    )
 
     timings["zipf_q_exhaustive_hot"] = best_of(
         lambda: search(spark, zidx, " ".join(hot_bag), zcfg, k=50).collect(),
@@ -585,7 +601,7 @@ def main() -> None:
             doc_dim=zdim, weight_col="bm25_weight",
         ).cache()
         try:
-            _merge(zbase, delta, zn, zcfg).count()
+            _merge(zbase, delta, zn, zcfg, stats=zstats).count()
         finally:
             delta.unpersist()
 
@@ -598,27 +614,6 @@ def main() -> None:
         ).count()
 
     timings["zipf_segment_append_10pct"] = best_of(run_zipf_append)
-
-    # stats-refresh compaction: the 90% base's block-encoded dfs lag the
-    # full-corpus term_stats by ~10% — refresh re-weights only the
-    # drifted groups (decode-touched-only, untouched blocks pass through
-    # undecoded). Read against zipf_shard_build: the cost of repairing
-    # weight staleness without a pipeline rebuild.
-    from spaghettisearch_spark.operators.compression import (
-        key_doc_stats,
-        refresh_shard_stats,
-    )
-
-    _dsk = key_doc_stats(zidx.doc_stats, zdim).cache()
-    _dsk.count()
-    _zstats_rows = zidx.corpus_stats.collect()
-    timings["zipf_stats_refresh"] = best_of(
-        lambda: refresh_shard_stats(
-            zbase, zidx.term_stats, _dsk, _zstats_rows, zcfg,
-            drift_threshold=0.05,
-        ).count()
-    )
-    _dsk.unpersist()
 
     zdelta = build_posting_shards(
         zidx.postings.filter(zseg == 0), zn, zcfg,
@@ -666,6 +661,9 @@ def main() -> None:
         timings["zipfL_index_build"] = round(time.time() - t0, 4)
         zldim = build_doc_dim(zlcorpus).cache()
         zldim.count()
+        zlmap = zldim.select(F.col("doc_idx").alias("doc_key"), "doc_id").cache()
+        zlmap.count()
+        zlstats = collect_corpus_stats(spark, zlidx.doc_stats, zlmap)
         t0 = time.time()
         zlshards = build_posting_shards(
             zlidx.postings, zl, zcfg, doc_dim=zldim, weight_col="bm25_weight"
@@ -687,28 +685,30 @@ def main() -> None:
         ).cache()
         zlbase.count()
         t0 = time.time()
-        _merge(zlbase, zldelta, zl, zcfg).count()
+        _merge(zlbase, zldelta, zl, zcfg, stats=zlstats).count()
         timings["zipfL_shard_merge_1pct"] = round(time.time() - t0, 4)
         _lsample = (
             zlidx.postings.select("field", "doc_id", "tf", "positions",
-                                  "bm25_weight")
+                                  "dl", "bm25_weight")
             .orderBy("doc_id", "field", "tf").limit(10).collect()
         )
         zlrare = spark.createDataFrame(
             [
                 (f"qzzrare{i}", r["field"], r["doc_id"], r["tf"],
-                 r["positions"], r["bm25_weight"])
+                 r["positions"], r["dl"], r["bm25_weight"])
                 for i, r in enumerate(_lsample)
             ],
             "term string, field string, doc_id string, tf int, "
-            "positions array<int>, bm25_weight double",
+            "positions array<int>, dl long, bm25_weight double",
         )
         zlrd = build_posting_shards(
             zlrare, zl, zcfg, doc_dim=zldim, weight_col="bm25_weight"
         ).cache()
         zlrd.count()
         t0 = time.time()
-        _merge(zlbase, zlrd, zl, zcfg, partitions_only=True).count()
+        _merge(
+            zlbase, zlrd, zl, zcfg, partitions_only=True, stats=zlstats
+        ).count()
         timings["zipfL_shard_merge_rare"] = round(time.time() - t0, 4)
 
         # ---- amortized LSM cycle, measured end-to-end (not derived):
@@ -743,7 +743,7 @@ def main() -> None:
         for s in zlsegs[1:]:
             delta4 = delta4.unionByName(s)
         t0 = time.time()
-        _merge(zlbase96, delta4, zl, zcfg).count()
+        _merge(zlbase96, delta4, zl, zcfg, stats=zlstats).count()
         t_merge = time.time() - t0
         timings["zipfL_lsm_cycle_merge4"] = round(t_merge, 4)
         # derived per-batch comparison (NOT a wall row — kept out of
@@ -759,15 +759,13 @@ def main() -> None:
 
         # queries at volume: long posting lists are where block skipping
         # and doc-level candidate pruning actually pay
-        zlmap = zldim.select(F.col("doc_idx").alias("doc_key"), "doc_id").cache()
-        zlmap.count()
         zlmeta: dict = {}
 
         def zlq(bag, k=50, two_phase=False, meta=None):
             return wand_topk_from_shards(
                 spark, zlshards, zlmap, bag, zcfg, k=k,
                 meta_cache=zlmeta if meta is None else meta,
-                two_phase=two_phase,
+                two_phase=two_phase, stats=zlstats,
             )
 
         exh_l = [

@@ -48,7 +48,10 @@ def main():
         build_posting_shards,
         merge_posting_shards,
     )
-    from spaghettisearch_spark.operators.index_build import build_index
+    from spaghettisearch_spark.operators.index_build import (
+        build_index,
+        collect_corpus_stats,
+    )
     from spaghettisearch_spark.operators.wand import wand_topk_from_shards
     from spaghettisearch_spark.session import get_spark
     from spaghettisearch_spark.sources.corpus import from_driver_documents
@@ -78,6 +81,7 @@ def main():
         shards.count()
         doc_map = doc_dim.select(F.col("doc_idx").alias("doc_key"), "doc_id").cache()
         doc_map.count()
+        stats = collect_corpus_stats(spark, idx.doc_stats, doc_map)
         meta: dict = {}
         wand_terms = [p2stem(t) for t in ["spark", "query", "scan"]]
 
@@ -90,7 +94,7 @@ def main():
                 r["doc_id"]
                 for r in wand_topk_from_shards(
                     spark, shards, doc_map, wand_terms, cfg, k=50,
-                    meta_cache=meta,
+                    meta_cache=meta, stats=stats,
                 ).collect()
             ]
             assert got == exh, "WAND shards != exhaustive"
@@ -109,7 +113,7 @@ def main():
             out["q_wand_shards"] = best_of(
                 lambda: wand_topk_from_shards(
                     spark, shards, doc_map, wand_terms, cfg, k=50,
-                    meta_cache=meta,
+                    meta_cache=meta, stats=stats,
                 ).collect()
             )
 
@@ -131,13 +135,14 @@ def main():
             )
             shards_pq, shard_files = read_back(spark, f"{shard_dir}/posting_shards")
             cards, card_files = _store_cards(
-                spark, build_doc_cards(doc_map, corpus, idx.doc_meta), n_files,
-                f"{shard_dir}/doc_cards",
+                spark,
+                build_doc_cards(doc_map, corpus, idx.doc_meta, idx.doc_stats),
+                n_files, f"{shard_dir}/doc_cards",
             )
             eng = SearchEngine(
-                spark=spark, index=idx, cfg=cfg, shards=shards_pq,
+                spark=spark, cfg=cfg, shards=shards_pq,
                 doc_cards=cards, warehouse_dir=shard_dir, n_docs=n_files,
-                shard_files=shard_files, card_files=card_files,
+                shard_files=shard_files, card_files=card_files, stats=stats,
             )
             out["q_engine_warehouse"] = best_of(
                 lambda: eng.query_df(
@@ -207,7 +212,13 @@ def main():
             ).cache()
             zlbase.count()
             t0 = time.time()
-            merge_posting_shards(zlbase, zldelta, zl_docs, zcfg).count()
+            zlstats = collect_corpus_stats(
+                spark, zlidx.doc_stats,
+                zldim.select(F.col("doc_idx").alias("doc_key"), "doc_id"),
+            )
+            merge_posting_shards(
+                zlbase, zldelta, zl_docs, zcfg, stats=zlstats
+            ).count()
             out["zipfL_shard_merge_1pct"] = round(time.time() - t0, 4)
 
     print(json.dumps(out, indent=1))

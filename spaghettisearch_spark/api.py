@@ -13,9 +13,12 @@ class; rank semantics are covered by the oracle tests.
 
 from __future__ import annotations
 
+import os
 import tempfile
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -23,12 +26,17 @@ from pyspark.sql import types as T
 from .config import DEFAULT, EngineConfig
 from .functions.snippets import make_summary_py
 from .functions.tokenize import parse_query
-from .operators.index_build import Index, build_index
+from .operators.index_build import (
+    FIELD_BODY,
+    FIELD_TITLE,
+    CorpusStats,
+    build_index,
+)
 from .operators.links import extract_links
 from .operators.pagerank import compute_pagerank
 from .operators.wand import dense_vector
 from .sources.corpus import ingest
-from .sources.driver_read import read_back, read_rows, read_table
+from .sources.driver_read import read_back, read_rows, read_table, write_table
 
 # doc_cards: one row per document, keyed and clustered by the dense
 # doc_key — the reference's forward tables forw[1..4] (SURVEY §1) as one
@@ -41,6 +49,15 @@ CARD_COLS = [
     "doc_key", "doc_id", *CARD_META, "pagerank", "parents_anchors",
     "children_top5", "content",
 ]
+# each doc's field lengths, the BM25 dl the engine scores with: stored
+# after CARD_COLS, read whole into the broadcast doc-length vectors and
+# never by the k-card read
+FIELDS = (FIELD_TITLE, FIELD_BODY)
+CARD_DL_COLS = [f"dl_{f}" for f in FIELDS]
+# corpus_stats: one row per field, (field, n_docs, sum_dl)
+STATS_SCHEMA = pa.schema(
+    [("field", pa.string()), ("n_docs", pa.int64()), ("sum_dl", pa.int64())]
+)
 _FAMILY_TYPES = {
     "parents_anchors": "array<struct<parent:string,terms:array<string>>>",
     "children_top5": "array<string>",
@@ -57,18 +74,29 @@ def build_doc_cards(
     doc_map: DataFrame,
     corpus: DataFrame,
     doc_meta: DataFrame,
+    doc_lengths: DataFrame,
     pagerank: DataFrame | None = None,
     links: DataFrame | None = None,
 ) -> DataFrame:
     """doc_cards rows for the (doc_key, doc_id) ``doc_map``: metadata and
-    top words from ``doc_meta``, the snippet source from ``corpus``,
-    PageRank (0 without a vector) and the family from ``links``
+    top words from ``doc_meta``, the snippet source from ``corpus``, the
+    field lengths from ``doc_lengths`` (doc_id, field, dl, as
+    index_build.build_doc_stats; 0 for a field without a row), PageRank
+    (0 without a vector) and the family from ``links``
     (incremental.family_top5, null without links). Left joins from the
     map, so every key gets exactly one card."""
+    dls = (
+        doc_lengths.groupBy("doc_id")
+        .pivot("field", list(FIELDS))
+        .agg(F.first("dl"))
+        .select("doc_id", *[F.col(f).alias(f"dl_{f}") for f in FIELDS])
+    )
     cards = (
         doc_map.select("doc_key", "doc_id")
         .join(doc_meta.select("doc_id", *CARD_META), "doc_id", "left")
         .join(corpus.select("doc_id", "content"), "doc_id", "left")
+        .join(dls, "doc_id", "left")
+        .fillna(0, CARD_DL_COLS)
     )
     if pagerank is None:
         cards = cards.withColumn("pagerank", F.lit(0.0))
@@ -86,7 +114,9 @@ def build_doc_cards(
         cards = cards.join(
             family_top5(links).select("doc_id", *_FAMILY_TYPES), "doc_id", "left"
         )
-    return cards.select(*CARD_COLS)
+    return cards.select(
+        *CARD_COLS, *[F.col(c).cast("long") for c in CARD_DL_COLS]
+    )
 
 
 def _store_cards(
@@ -104,6 +134,24 @@ def _store_cards(
         "compression", "zstd"
     ).parquet(path)
     return read_back(spark, path)
+
+
+def _stats_file(warehouse_dir: str) -> str:
+    """The one file of the ``corpus_stats`` table (absolute: the driver
+    reads and writes it through pyarrow.fs)."""
+    path = f"{warehouse_dir}/corpus_stats/part-00000.parquet"
+    return path if "://" in path else os.path.abspath(path)
+
+
+def _store_stats(warehouse_dir: str, totals: dict) -> None:
+    """Write the ``corpus_stats`` table: {field: (n_docs, sum_dl)}, one
+    row per field, replacing the previous file."""
+    fields = sorted(totals)
+    write_table(_stats_file(warehouse_dir), pa.table({
+        "field": fields,
+        "n_docs": [int(totals[f][0]) for f in fields],
+        "sum_dl": [int(totals[f][1]) for f in fields],
+    }, schema=STATS_SCHEMA))
 
 
 @dataclass
@@ -129,12 +177,14 @@ class SearchEngine:
     projection. The PageRank vectors (global and per topic) are dense
     float64 arrays indexed by doc_key, broadcast once per cards version
     and swapped by reference, so a running query keeps the vector it
-    started with. Scoring is BM25 (the shards store its impact weights);
-    ``bm25.search`` keeps the exhaustive scorer and its reference-exact
-    ``tfidf_cosine`` mode."""
+    started with. Scoring is BM25, computed when a query decodes the
+    stored tfs, with the live statistics ``stats``: the ``corpus_stats``
+    table's per-field (n_docs, sum_dl) and the cards' doc lengths,
+    broadcast like PageRank; each term's df is the sum of its block
+    dfs. ``bm25.search`` keeps the exhaustive scorer and its
+    reference-exact ``tfidf_cosine`` mode."""
 
     spark: SparkSession
-    index: Index
     cfg: EngineConfig = field(default_factory=lambda: DEFAULT)
     pagerank: DataFrame | None = None
     # (doc_id, category, rank) from operators.topics.compute_topic_pagerank
@@ -158,14 +208,16 @@ class SearchEngine:
     meta_cache: dict = field(default_factory=dict)
     # parquet warehouse root: shards are served from the
     # partitionBy("shard") read-back frame — partition pruning +
-    # column-pruned metadata reads, and the substrate the LSM
-    # maintenance methods (apply_merge / refresh_stats) rewrite with
-    # dynamic partition overwrite, I/O bounded by the touched shard
-    # partitions
+    # column-pruned metadata reads, and the substrate apply_merge
+    # rewrites with dynamic partition overwrite, I/O bounded by the
+    # touched shard partitions
     warehouse_dir: str | None = None
     n_docs: int = 0
     # {None: global, topic: that topic's} Broadcast PageRank vector
     pr_vectors: dict = field(default_factory=dict)
+    # the live BM25 statistics (doc-length vectors broadcast once per
+    # cards version), swapped by reference like pr_vectors
+    stats: CorpusStats | None = None
     # the temporary warehouse of a build without ``warehouse_dir``:
     # every dataclasses.replace copy holds the same object, so the
     # directory is removed once the last copy is collected
@@ -195,19 +247,21 @@ class SearchEngine:
         or under a temporary directory owned by the engine (removed with
         its last copy) when it is None, and SERVES from the read-back
         frames: queries partition-prune to the query terms' shard
-        directories and read only the k result cards, and the LSM
-        maintenance methods (apply_merge / refresh_stats) rewrite only
-        touched partitions in place.
+        directories and read only the k result cards, and apply_merge
+        rewrites only touched partitions in place. The per-field
+        statistics go to ``corpus_stats`` (field, n_docs, sum_dl) and
+        each doc's field lengths to its card. The build's in-memory
+        index is released once the shards and cards are written.
 
-        ``cfg.scorer`` must be "bm25": the shards store BM25 impact
-        weights, and refresh_stats and merged deltas re-weight with BM25.
-        Any other scorer raises ValueError before any Spark job; the
-        reference-exact ``tfidf_cosine`` is served by ``bm25.search``."""
+        ``cfg.scorer`` must be "bm25": queries score the stored tfs with
+        BM25. Any other scorer raises ValueError before any Spark job;
+        the reference-exact ``tfidf_cosine`` is served by
+        ``bm25.search``."""
         from .operators.compression import build_doc_dim, build_posting_shards
 
         if cfg.scorer != "bm25":
             raise ValueError(
-                f"SearchEngine serves BM25 impact weights, not "
+                f"SearchEngine scores BM25, not "
                 f"scorer={cfg.scorer!r}; use bm25.search for tfidf_cosine"
             )
         tmp = None
@@ -232,10 +286,18 @@ class SearchEngine:
         doc_map = doc_dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
         doc_cards, card_files = _store_cards(
             spark,
-            build_doc_cards(doc_map, corpus, idx.doc_meta, pr, links),
+            build_doc_cards(
+                doc_map, corpus, idx.doc_meta, idx.doc_stats, pr, links
+            ),
             n_docs,
             f"{warehouse_dir}/doc_cards",
         )
+        # the per-field totals of the cards' lengths, as
+        # build_corpus_stats counts them (every doc, sum of dl)
+        dl = read_table(card_files, CARD_DL_COLS)
+        _store_stats(warehouse_dir, {
+            f: (n_docs, pc.sum(dl[f"dl_{f}"]).as_py() or 0) for f in FIELDS
+        })
         shards_path = f"{warehouse_dir}/posting_shards"
         # cluster by shard before the partitioned write (guide §6):
         # without this every upstream task writes its own file into
@@ -253,16 +315,18 @@ class SearchEngine:
         # payload columns
         shards, shard_files = read_back(spark, shards_path)
         doc_dim.unpersist()
+        # the shards and cards hold everything queries read of these
+        idx.unpersist()
+        corpus.unpersist()
+        links.unpersist()
         eng = cls(
-            spark=spark, index=idx, cfg=cfg, pagerank=pr, topic_pagerank=tpr,
+            spark=spark, cfg=cfg, pagerank=pr, topic_pagerank=tpr,
             shards=shards, doc_cards=doc_cards, warehouse_dir=warehouse_dir,
             n_docs=n_docs, shard_files=shard_files, card_files=card_files,
             tmp_warehouse=tmp,
         )
         eng.pr_vectors = eng._build_pr_vectors()
-        # the cards hold everything queries read of these two
-        corpus.unpersist()
-        links.unpersist()
+        eng.stats = eng._build_stats()
         return eng
 
     @property
@@ -292,6 +356,26 @@ class SearchEngine:
                 tables[topic] = dense_vector(g["doc_key"], g["rank"], self.n_docs)
         bc = self.spark.sparkContext.broadcast
         return {t: bc(v) for t, v in tables.items()}
+
+    def _build_stats(self) -> CorpusStats:
+        """The live statistics: per-field (n_docs, sum_dl) from the
+        ``corpus_stats`` table and the cards' field lengths as dense
+        doc_key-indexed vectors, broadcast once. Read on the driver, at
+        build and whenever the cards change — never from query
+        threads."""
+        totals = read_table(
+            [_stats_file(self.warehouse_dir)], STATS_SCHEMA.names
+        ).to_pylist()
+        t = read_table(self.card_files, ["doc_key", *CARD_DL_COLS])
+        keys = t["doc_key"].to_numpy()
+        return CorpusStats(
+            n_docs={r["field"]: r["n_docs"] for r in totals},
+            sum_dl={r["field"]: r["sum_dl"] for r in totals},
+            dl=self.spark.sparkContext.broadcast({
+                f: dense_vector(keys, t[f"dl_{f}"].to_numpy(), self.n_docs)
+                for f in FIELDS
+            }),
+        )
 
     # ------------------------------------------------------------------
     def _ranked(
@@ -328,7 +412,7 @@ class SearchEngine:
                 self.spark, self.shards, None, terms, self.cfg,
                 k=k, pagerank=pr,
                 meta_cache=self.meta_cache, pr_max_key=pr_key,
-                shard_files=self.shard_files,
+                shard_files=self.shard_files, stats=self.stats,
                 # planner decides per query whether the exact-floor wave
                 # pays (kept posting volume vs
                 # cfg.two_phase_auto_min_postings)
@@ -340,8 +424,8 @@ class SearchEngine:
             topk = search_from_shards(
                 self.spark, self.shards, None, q, self.cfg,
                 pagerank=pr, k=k,
-                meta_cache=self.meta_cache,  # sizes the decode stages
-                shard_files=self.shard_files,
+                meta_cache=self.meta_cache,  # term dfs, decode sizing
+                shard_files=self.shard_files, stats=self.stats,
             )
         return topk.collect(), terms, phrases
 
@@ -392,7 +476,8 @@ class SearchEngine:
         PageRank vector instead of the global one (requires a build with
         topics=...). ``backend`` accepts only "shards", the one serving
         path (any other value raises ValueError); results equal the
-        exhaustive ``bm25.search`` over the engine's index (test_api)."""
+        exhaustive ``bm25.search`` over an index of the same corpus
+        (test_api)."""
         cards = self._with_cards(*self._ranked(q, k, use_wand, topic, backend))
         cols = ["doc_id", *_SCORE_COLS, *CARD_META, "snippet"]
         types = {
@@ -444,11 +529,11 @@ class SearchEngine:
         ]
 
     # ------------------------------------------------------------------
-    # LSM maintenance on the parquet warehouse: both methods compute the
-    # touched-partitions-only frame and rewrite JUST those shard
-    # directories (dynamic partition overwrite), then re-point serving
-    # at the read-back frame and drop the metadata cache (its block rows
-    # are stale the moment the shards change).
+    # LSM maintenance on the parquet warehouse: apply_merge computes the
+    # touched-partitions-only frame and rewrites JUST those shard
+    # directories (dynamic partition overwrite), then re-points serving
+    # at the read-back frame and drops the metadata cache (its block
+    # rows are stale the moment the shards change).
     # ------------------------------------------------------------------
     def _overwrite_touched(self, frame, expect_shards=()) -> None:
         shards_path = f"{self.warehouse_dir}/posting_shards"
@@ -509,20 +594,33 @@ class SearchEngine:
         ``new_corpus`` (ingested rows for the SAME new docs): the source
         of their cards, appended to ``doc_cards`` — metadata, top words
         and snippet source; PageRank 0 and no family until the next full
-        build. Required with ``new_doc_map``. The PageRank vectors are
-        then rebuilt for the grown key space and swapped by reference.
+        build. Required with ``new_doc_map``. A new doc's field lengths
+        are the sums of its delta postings' tfs, which the card stores
+        and ``corpus_stats`` adds to the per-field totals with the new
+        doc count; the PageRank vectors and the statistics are then
+        rebuilt for the grown key space and swapped by reference, the
+        statistics with the shards' publish. A delta that rewrites an
+        EXISTING doc keeps that doc's card length.
 
         Both checks run BEFORE any state changes: a rejected merge
         leaves doc_cards, n_docs and the shards untouched."""
         from .functions.hashing import term_hash60_col
         from .operators.compression import decode_shards, merge_posting_shards
 
-        # EXACT maximum doc_key of the delta: decode its key streams (the
-        # delta is one batch). Block metadata is no witness — a
-        # sample-complete block stores none, and top_doc_keys samples
-        # the top-32 postings BY WEIGHT, so a key beyond the dimension
-        # can sit under every sampled weight.
-        mx = decode_shards(delta, fields=()).agg(F.max("doc_key")).first()[0]
+        # each delta doc's field lengths (the sum of its tfs) and with
+        # them the EXACT maximum doc_key of the delta, from its decoded
+        # key and tf streams (the delta is one batch). Block metadata is
+        # no witness — a sample-complete block stores none, and
+        # top_doc_keys samples the top-32 postings by encode-time
+        # impact, so a key beyond the dimension can sit outside every
+        # sample.
+        lengths = (
+            decode_shards(delta, fields=("tf",))
+            .groupBy("doc_key", "field")
+            .agg(F.sum("tf").cast("long").alias("dl"))
+            .collect()
+        )
+        mx = max((r["doc_key"] for r in lengths), default=None)
         n_new = 0
         if new_doc_map is not None:
             if "doc_idx" in new_doc_map.columns:
@@ -545,12 +643,21 @@ class SearchEngine:
                 f"new_doc_map introduces {n_new} docs: pass their ingested "
                 "rows via new_corpus= so their cards can be written"
             )
+        stats = self.stats
         if n_new:
             from .operators.index_build import build_doc_meta, tokenize_fields
 
+            fresh = [
+                (int(r["doc_key"]), r["field"], int(r["dl"]))
+                for r in lengths if r["doc_key"] >= self.n_docs
+            ]
             nc = new_corpus.localCheckpoint(eager=True)
             cards = build_doc_cards(
-                new_doc_map, nc, build_doc_meta(nc, tokenize_fields(nc, cfg=self.cfg)),
+                new_doc_map, nc,
+                build_doc_meta(nc, tokenize_fields(nc, cfg=self.cfg)),
+                self.spark.createDataFrame(
+                    fresh, "doc_key long, field string, dl long"
+                ).join(new_doc_map, "doc_key"),
             )
             self.doc_cards, self.card_files = _store_cards(
                 self.spark, cards, n_new, f"{self.warehouse_dir}/doc_cards",
@@ -558,6 +665,14 @@ class SearchEngine:
             )
             self.n_docs += n_new
             self.pr_vectors = self._build_pr_vectors()
+            added = {f: 0 for f in FIELDS}
+            for _k, f, dl in fresh:
+                added[f] += dl
+            _store_stats(self.warehouse_dir, {
+                f: (self.n_docs, stats.sum_dl.get(f, 0) + added[f])
+                for f in FIELDS
+            })
+            stats = self._build_stats()
         # expected touched partitions, same derivation the merge uses —
         # so an emptied partition is still rewritten (see
         # _overwrite_touched)
@@ -572,42 +687,19 @@ class SearchEngine:
         touched = merge_posting_shards(
             self.shards, delta, self.n_docs, self.cfg,
             delete_postings=delete_postings, partitions_only=True,
+            stats=stats,
         )
+        # swapped by reference before the shards publish: the new
+        # vectors cover every key the old shards hold
+        self.stats = stats
         self._overwrite_touched(touched, expect_shards=ids)
-
-    def refresh_stats(self, drift_threshold: float = 0.1) -> None:
-        """Re-weight the (term, field) groups whose encoded df drifted
-        past ``drift_threshold`` against the engine's CURRENT index
-        stats — the weight-staleness repair that complements apply_merge
-        (which carries stored weights per segment). Touched partitions
-        only; orphan postings keep their stored weight."""
-        from .operators.compression import key_doc_stats, refresh_shard_stats
-
-        doc_dim = self.doc_map.select(
-            "doc_id", F.col("doc_key").alias("doc_idx")
-        )
-        touched = refresh_shard_stats(
-            self.shards,
-            self.index.term_stats,
-            key_doc_stats(self.index.doc_stats, doc_dim),
-            self.index.corpus_stats.collect(),
-            self.cfg,
-            drift_threshold=drift_threshold,
-            partitions_only=True,
-        )
-        self._overwrite_touched(touched)
 
     # ------------------------------------------------------------------
     def wordlist(self, prefix: str, limit: int = 100) -> list[str]:
         """Vocabulary prefix search — reference GET /wordlist/{pre}
-        (IterateInv, database/database.go:414-454): one pruned scan of the
-        vocab table instead of O(vocab) point lookups."""
-        rows = (
-            self.index.vocab.filter(F.col("term").startswith(prefix.lower()))
-            .select("term")
-            .distinct()
-            .orderBy("term")
-            .limit(limit)
-            .collect()
-        )
-        return [r["term"] for r in rows]
+        (IterateInv, database/database.go:414-454): the shards' term
+        column read on the driver from the engine's shard listing, no
+        Spark job."""
+        terms = read_table(self.shard_files, ["term"])["term"]
+        hits = pc.unique(terms.filter(pc.starts_with(terms, prefix.lower())))
+        return sorted(hits.to_pylist())[:limit]

@@ -37,7 +37,13 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT, EngineConfig
 from ..functions.smalldf import isin_col
 from ..functions.tokenize import parse_query
-from .index_build import FIELD_BODY, FIELD_TITLE, Index
+from .index_build import (
+    FIELD_BODY,
+    FIELD_TITLE,
+    Index,
+    bm25_weight_col,
+    require_stats,
+)
 from .phrase import phrase_matches
 
 
@@ -72,20 +78,6 @@ def term_lookup(values: dict) -> F.Column:
     return F.create_map(*pairs)[F.col("term")]
 
 
-def bm25_contrib_col(cfg: EngineConfig, n_docs: int, avgdl: float) -> F.Column:
-    """Per-posting BM25 contribution; expects columns tf, df, dl."""
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    tf_norm = (F.col("tf") * F.lit(cfg.k1 + 1.0)) / (
-        F.col("tf")
-        + F.lit(cfg.k1)
-        * (F.lit(1.0 - cfg.b) + F.lit(cfg.b) * F.col("dl") / F.lit(avgdl))
-    )
-    return idf * tf_norm
-
-
 def posting_hits(
     index: Index, terms: list[str], cfg: EngineConfig
 ) -> DataFrame:
@@ -114,19 +106,13 @@ def posting_hits(
         return hits.withColumn("contrib", F.col("bm25_weight"))
     if "df" not in hits.columns:
         hits = hits.join(index.term_stats, ["term", "field"], "left")
-    hits = hits.join(index.doc_stats, ["doc_id", "field"], "left")
-    stats = _corpus_stats_map(index)
+    if "dl" not in hits.columns:
+        hits = hits.join(index.doc_stats, ["doc_id", "field"], "left")
     if cfg.scorer == "bm25":
         # per-field avgdl/N
-        contrib = None
-        for field, (n_docs, avgdl) in stats.items():
-            c = bm25_contrib_col(cfg, n_docs, avgdl)
-            contrib = (
-                F.when(F.col("field") == field, c)
-                if contrib is None
-                else contrib.when(F.col("field") == field, c)
-            )
-        hits = hits.withColumn("contrib", contrib)
+        hits = hits.withColumn(
+            "contrib", bm25_weight_col(cfg, _corpus_stats_map(index))
+        )
     else:  # tfidf_cosine: the index already stores normTF*idf
         hits = hits.withColumn("contrib", F.col("weight"))
     return hits
@@ -309,12 +295,13 @@ def search_from_shards(
     k: int | None = None,
     meta_cache: dict | None = None,
     shard_files: list[str] | None = None,
+    stats=None,
 ) -> DataFrame:
     """The FULL query pipeline (free terms + phrases + field blend + PR)
     served from the COMPRESSED posting shards — the warehouse-resident
     serving path. Same semantics and (to float associativity) same
-    values as the exhaustive ``search`` on the index the shards were
-    built from; asserted in test_api.
+    values as the exhaustive ``search`` on the index of the same corpus;
+    asserted in test_api.
 
     The free-term and phrase rows (doc_key, field, contrib) run on the
     dense doc_key through the WAND paths' bucket kernel
@@ -328,15 +315,16 @@ def search_from_shards(
     rank) frame keyed through ``doc_map`` (see
     wand.wand_topk_from_shards).
 
-    BM25-only (blocks store precomputed impact weights; tfidf_cosine's
-    per-query normalization is served only by the exhaustive ``search``).
-    Free terms decode only the weight stream; phrases additionally
-    decode positions.
+    BM25-only (tfidf_cosine's per-query normalization is served only by
+    the exhaustive ``search``). ``stats`` (index_build.CorpusStats,
+    required): the live statistics the decode scores each posting's tf
+    with; each term's df is the sum of its block dfs. Free terms decode
+    the tf stream only; phrases additionally decode positions.
 
     ``meta_cache``: same per-term block-metadata cache contract as
-    wand_topk_from_shards — used here only to SIZE the decode stages
-    and the kernel exchange from the query terms' summed block df
-    (guide §2.2: one decode task per ~query_target_postings_per_task
+    wand_topk_from_shards — the query terms' block rows give their df
+    and SIZE the decode stages and the kernel exchange from their summed
+    df (guide §2.2: one decode task per ~query_target_postings_per_task
     postings instead of one near-empty Python task per scan partition);
     without it each call fetches the metadata once. Results are
     identical with or without it. ``shard_files``: the frame's file
@@ -359,33 +347,30 @@ def search_from_shards(
 
     if cfg.scorer != "bm25":
         raise ValueError(
-            "shard-backed serving requires bm25 impact weights; "
+            "shard-backed serving scores BM25 only; "
             "tfidf_cosine is served only by the exhaustive bm25.search"
         )
+    require_stats(stats, "search_from_shards")
     k = k or cfg.top_k
     free_terms, phrase_lists = parse_query(
         query, cfg.remove_stopwords, cfg.stem
     )
-    # one metadata fetch for the query's first-seen terms: it sizes the
-    # kernel's bucket exchange, and the per-part lookups below hit it
-    cache = {} if meta_cache is None else meta_cache
-    kernel_parts = query_decode_parts(
-        term_block_meta(
-            shards, free_terms + [t for p in phrase_lists for t in p], cfg,
-            cache, shard_files,
-        ),
-        cfg,
+    # one metadata fetch for the query's first-seen terms: it gives the
+    # terms' df and sizes the kernel's bucket exchange
+    meta = term_block_meta(
+        shards, free_terms + [t for p in phrase_lists for t in p], cfg,
+        meta_cache, shard_files,
     )
     parts: list[DataFrame] = []
     if free_terms:
         counts = Counter(free_terms)
-        pruned = prune_shards(shards, free_terms, cfg)
-        n_parts = query_decode_parts(
-            term_block_meta(shards, free_terms, cfg, cache), cfg
+        free_meta = [r for r in meta if r["term"] in counts]
+        decoded = decode_shards(
+            prune_shards(shards, free_terms, cfg).coalesce(
+                query_decode_parts(free_meta, cfg)
+            ),
+            fields=("weight",), scoring=stats.scoring(free_meta, cfg),
         )
-        if n_parts is not None:
-            pruned = pruned.coalesce(n_parts)
-        decoded = decode_shards(pruned, fields=("weight",))
         parts.append(
             decoded.withColumnRenamed("doc_key", "doc_id").select(
                 "doc_id",
@@ -397,10 +382,8 @@ def search_from_shards(
         )
     for phrase in phrase_lists:
         m = phrase_matches_from_shards(
-            spark, shards, None, phrase, cfg,
-            decode_parts=query_decode_parts(
-                term_block_meta(shards, phrase, cfg, cache), cfg
-            ),
+            spark, shards, None, phrase, cfg, stats=stats,
+            meta=[r for r in meta if r["term"] in phrase],
         )
         parts.append(m.select("doc_id", "field", "contrib"))
     if not parts:
@@ -412,9 +395,7 @@ def search_from_shards(
     ranked = _wand_from_hits(
         rows, cfg, k, n_buckets,
         pr_broadcast(spark, pagerank, doc_map),
-        shuffle_parts=(
-            None if kernel_parts is None else max(1, min(kernel_parts, n_buckets))
-        ),
+        shuffle_parts=max(1, min(query_decode_parts(meta, cfg), n_buckets)),
     )
     if doc_map is None:
         return ranked.withColumnRenamed("doc_id", "doc_key")

@@ -8,16 +8,20 @@ reference stores postings as JSON blobs per term
     posting_shards(term string, field string,
                    shard int,                 -- partition directory
                    salt int, df long,
-                   max_weight double,         -- skip metadata: NULL on
-                   top_doc_keys array<long>,  -- sample-complete blocks
-                   top_weights array<double>, -- (df <= BLOCK_SAMPLE_N),
-                   range_bounds array<long>,  -- rebuilt from doc_ids +
-                   range_maxw array<double>,  -- weights by term_block_meta
+                   top_doc_keys array<long>,  -- skip metadata: NULL on
+                   top_tfs array<int>,        -- sample-complete blocks
+                   range_bounds array<long>,  -- (df <= BLOCK_SAMPLE_N),
+                   impacts array<int>,        -- rebuilt from doc_ids + tfs
                    doc_ids binary,    -- delta+varbyte over dense doc keys
                    tfs binary,        -- varbyte
-                   weights binary,    -- big-endian float64 impact weights
                    positions binary,  -- varbyte, per-doc position deltas
                    pos_lens binary)   -- varbyte, positions-per-doc
+
+A shard stores (doc key, tf, positions) and nothing derived from corpus
+statistics: BM25 weights are computed from ``tfs`` when a query decodes
+a block, with the live statistics (index_build.CorpusStats), and the
+skip bounds are Pareto sets of (tf, dl) pairs, which bound a posting set
+under any statistics.
 
 Layout: ``shard = term_hash60 % n_shards`` — written with
 ``partitionBy("shard")`` so a query's ``term IN (...)`` prunes to
@@ -29,10 +33,12 @@ whole posting list through one reducer. Hot terms (df above
 ``salt_df_threshold`` fraction of docs) are salted into ``n_salts``
 sub-groups — each sub-group compresses independently into its own row
 (a posting-list *block*, exactly what block-max WAND wants). Since
-round 4 the salt is the WEIGHT-QUANTILE bucket (impact-ordered blocks:
-maxima decay across a term's blocks, so the skip planner can exclude
-the low-impact tail), with a per-group fallback to doc-hash salting
-when the weight distribution is too tied for distinct quantile bounds.
+round 4 the salt is the quantile bucket of an encode-time impact weight
+(impact-ordered blocks: maxima decay across a term's blocks, so the
+skip planner can exclude the low-impact tail), with a per-group
+fallback to doc-hash salting when the weights are too tied for
+distinct quantile bounds. The order is a heuristic only: it costs
+skipping, never correctness, when later statistics reorder postings.
 Cold terms take the single-group path. Since round 5 the bound is
 ABSOLUTE, not relative: any group whose expected block exceeds
 ``block_target_postings`` (a hot quantile bucket at ~df/n_salts, or a
@@ -153,33 +159,35 @@ SHARD_SCHEMA = T.StructType(
         T.StructField("shard", T.IntegerType()),
         T.StructField("salt", T.IntegerType()),
         T.StructField("df", T.LongType()),
-        # skip metadata (max_weight through range_maxw) is stored only
-        # on blocks with df > BLOCK_SAMPLE_N. On a sample-complete block
-        # it would be a reordered copy of the block's own keys and
-        # weights, so those rows hold NULL in all five columns and
-        # term_block_meta rebuilds them from doc_ids + weights.
-        T.StructField("max_weight", T.DoubleType()),
-        # block-max metadata: the block's top-N (doc_key, weight) sample,
-        # readable without touching the varbyte payloads (parquet column
-        # pruning). WAND's skip planner sums these partials per doc to get
-        # an exact LOWER bound on the k-th best score, then decodes only
-        # blocks whose max_weight-based upper bound can still beat it.
+        # skip metadata (top_doc_keys through impacts) is stored only on
+        # blocks with df > BLOCK_SAMPLE_N. On a sample-complete block it
+        # would be a copy of the block's own keys and tfs, so those rows
+        # hold NULL in all four columns and term_block_meta rebuilds the
+        # sample and ranges from doc_ids + tfs.
+        #
+        # the block's top-N postings by encode-time impact, as (doc_key,
+        # tf), readable without touching the varbyte payloads (parquet
+        # column pruning). WAND's skip planner scores them with the live
+        # statistics and sums them per doc to get an exact LOWER bound
+        # on the k-th best score.
         T.StructField("top_doc_keys", T.ArrayType(T.LongType())),
-        T.StructField("top_weights", T.ArrayType(T.DoubleType())),
-        # doc-range-aligned sub-maxima: equi-depth split of the block's
-        # doc_key-sorted postings into RANGE_SUB_N chunks; bounds[i] is
-        # chunk i's first key (bounds[-1] the block's last key) and
-        # range_maxw[i] its max weight. Lets the skip planner bound a
-        # block's docs by the OTHER terms' maxima restricted to the
-        # overlapping key range instead of their global maxima — the
-        # difference between "WAND exists" and "WAND pays off on
-        # multi-term queries" (a hot term's global max is one outlier
-        # posting; its max within 1/16th of the doc space usually isn't).
+        T.StructField("top_tfs", T.ArrayType(T.IntegerType())),
+        # equi-depth split of the block's doc_key-sorted postings into
+        # min(df, RANGE_SUB_N) chunks: range_bounds[i] is chunk i's first
+        # key (range_bounds[-1] the block's last key). impacts holds, for
+        # each chunk and then for the postings outside the sample, the
+        # Pareto set of their (tf, dl) pairs (Lucene's competitive
+        # impacts): [group count, pair count per group, then the pairs
+        # as tf, dl]. BM25 rises with tf and falls with dl, so under ANY
+        # (N, avgdl, df) a group's best posting scores like one of its
+        # pairs: the planner bounds a block's docs by the OTHER terms'
+        # bounds restricted to the overlapping key range (a hot term's
+        # max within 1/16th of the doc space, not its single global
+        # outlier), and an unsampled doc by its block's rest group.
         T.StructField("range_bounds", T.ArrayType(T.LongType())),
-        T.StructField("range_maxw", T.ArrayType(T.DoubleType())),
+        T.StructField("impacts", T.ArrayType(T.IntegerType())),
         T.StructField("doc_ids", T.BinaryType()),
         T.StructField("tfs", T.BinaryType()),
-        T.StructField("weights", T.BinaryType()),
         T.StructField("positions", T.BinaryType()),
         T.StructField("pos_lens", T.BinaryType()),
     ]
@@ -187,48 +195,73 @@ SHARD_SCHEMA = T.StructType(
 
 # per-block sample size for the skip planner's threshold estimate: big
 # enough that the top blocks' samples alone cover k=50 with near-true
-# k-th weights (tight threshold -> more skippable blocks), small enough
-# that block metadata stays ~1 KB (32 longs + 32 doubles). Raised 8->32
+# k-th scores (tight threshold -> more skippable blocks), small enough
+# that block metadata stays small (32 longs + 32 ints). Raised 8->32
 # in r4 alongside impact-ordered blocks: with decaying block maxima the
 # threshold quality directly bounds how much of the tail gets skipped.
 BLOCK_SAMPLE_N = 32
 
-# sub-ranges per block for the doc-range-aligned maxima: 16 keeps block
-# metadata small (~17 longs + 16 doubles) while splitting the doc space
-# finely enough that a hot term's per-range max sits near its typical
-# high weight, not its single global outlier
+# sub-ranges per block for the doc-range-aligned bounds: 16 keeps block
+# metadata small (~17 longs + 34 ints) while splitting the doc space
+# finely enough that a hot term's per-range bound sits near its typical
+# high impact, not its single global outlier
 RANGE_SUB_N = 16
 
-SKIP_META_COLS = [
-    "max_weight", "top_doc_keys", "top_weights", "range_bounds", "range_maxw",
-]
+SKIP_META_COLS = ["top_doc_keys", "top_tfs", "range_bounds", "impacts"]
 
 
-def block_skip_meta(keys: np.ndarray, weights: np.ndarray) -> dict:
-    """One block's skip metadata from its doc_key-sorted keys and their
-    weights: the block max, the top-BLOCK_SAMPLE_N sample in stable
-    ``-weight`` order, and ``min(n, RANGE_SUB_N)`` equi-depth sub-ranges
-    (each chunk's first key, then the block's last key; each chunk's
-    max weight). The encoder stores it for blocks with df >
-    BLOCK_SAMPLE_N; term_block_meta rebuilds it for the others, so both
-    sides use this one function."""
+def _pareto(tfs: np.ndarray, dls: np.ndarray) -> np.ndarray:
+    """The (tf, dl) pairs no other pair dominates (tf >= and dl <=), in
+    (tf desc, dl asc) order, as an (n, 2) array: the maximum of any
+    function rising in tf and falling in dl over the postings is
+    attained on one of them."""
+    o = np.lexsort((dls, -tfs))
+    t, d = tfs[o], dls[o]
+    keep = np.ones(len(t), dtype=bool)
+    keep[1:] = d[1:] < np.minimum.accumulate(d)[:-1]
+    return np.column_stack((t[keep], d[keep]))
+
+
+def block_skip_meta(keys: np.ndarray, tfs: np.ndarray, dls=None, order=None) -> dict:
+    """One block's skip metadata from its doc_key-sorted keys, tfs and,
+    for a block with df > BLOCK_SAMPLE_N, their doc lengths and
+    encode-time impact ``order``: the top-BLOCK_SAMPLE_N sample in
+    stable ``-order`` order, ``min(n, RANGE_SUB_N)`` equi-depth
+    sub-ranges (each chunk's first key, then the block's last key) and
+    the impacts (each chunk's Pareto (tf, dl) pairs, then the unsampled
+    postings'). Without ``dls`` the block is sample-complete: the sample
+    is the whole block in key order and there are no impacts (the
+    planner scores every posting exactly) — what term_block_meta
+    rebuilds for the blocks the encoder stores no metadata for."""
     n = len(keys)
-    top = np.argsort(np.negative(weights), kind="stable")[:BLOCK_SAMPLE_N]
     m = min(n, RANGE_SUB_N)
     sub = (np.arange(m, dtype=np.int64) * n) // m
-    return {
-        "max_weight": float(weights.max()),
-        "top_doc_keys": keys[top].tolist(),
-        "top_weights": weights[top].tolist(),
-        "range_bounds": keys[sub].tolist() + [int(keys[-1])],
-        "range_maxw": np.maximum.reduceat(weights, sub).tolist(),
-    }
+    meta = {"range_bounds": keys[sub].tolist() + [int(keys[-1])]}
+    if dls is None:
+        meta.update(top_doc_keys=keys.tolist(), top_tfs=tfs.tolist(), impacts=None)
+        return meta
+    top = np.argsort(np.negative(order), kind="stable")[:BLOCK_SAMPLE_N]
+    rest = np.ones(n, dtype=bool)
+    rest[top] = False
+    groups = [
+        _pareto(tfs[lo:hi], dls[lo:hi])
+        for lo, hi in zip(sub, np.append(sub[1:], n))
+    ] + [_pareto(tfs[rest], dls[rest])]
+    meta.update(
+        top_doc_keys=keys[top].tolist(),
+        top_tfs=tfs[top].tolist(),
+        impacts=[len(groups)] + [len(g) for g in groups]
+        + np.concatenate(groups).ravel().tolist(),
+    )
+    return meta
 
 
 def _encode_blocks(batch_iter):
     """Arrow batches of pre-grouped block rows (term, field, shard, salt,
-    doc_keys[], tfs_arr[], weights_arr[], pos_arr[][]) -> compressed
-    block rows.
+    doc_keys[], tfs_arr[], dls_arr[], weights_arr[], pos_arr[][]) ->
+    compressed block rows. ``weights_arr`` is the encode-time impact
+    order of the sample; ``dls_arr`` feeds the impacts. Neither is
+    stored.
 
     Group formation happens JVM-side (groupBy + collect_list partial
     aggregation), so Python sees ONE row per block and encodes hundreds
@@ -294,12 +327,16 @@ def _encode_block_frame(pdf, cols):
         weights = np.concatenate(
             [np.asarray(x, dtype=np.float64) for x in pdf["weights_arr"]]
         )
+        dls = np.concatenate(
+            [np.asarray(x, dtype=np.int64) for x in pdf["dls_arr"]]
+        )
         block_ids = np.repeat(np.arange(nb, dtype=np.int64), lens)
         # per-block stable key sort in one global lexsort
         order = np.lexsort((keys, block_ids))
         keys = keys[order]
         tfs = tfs[order]
         weights = weights[order]
+        dls = dls[order]
         # positions: reorder each block's per-posting lists by its slice
         # of the global permutation, then flatten once
         pos_lens = np.empty(total, dtype=np.int64)
@@ -341,7 +378,6 @@ def _encode_block_frame(pdf, cols):
         tf_cuts = np.concatenate(
             ([0], np.cumsum(np.add.reduceat(vb_nbytes(tfs), starts)))
         )
-        w_bytes = weights.astype(">f8").tobytes()
         pl_bytes = vb_encode(pos_lens)
         pl_cuts = np.concatenate(
             ([0], np.cumsum(np.add.reduceat(vb_nbytes(pos_lens), starts)))
@@ -375,30 +411,26 @@ def _encode_block_frame(pdf, cols):
         skip = {c: np.full(nb, None, dtype=object) for c in SKIP_META_COLS}
         for b in np.flatnonzero(lens > BLOCK_SAMPLE_N):
             s, e = int(starts[b]), int(starts[b] + lens[b])
-            for c, v in block_skip_meta(keys[s:e], weights[s:e]).items():
+            for c, v in block_skip_meta(
+                keys[s:e], tfs[s:e], dls[s:e], weights[s:e]
+            ).items():
                 skip[c][b] = v
         out.update(skip)
         dib = np.empty(nb, dtype=object)
         tfb = np.empty(nb, dtype=object)
-        wb = np.empty(nb, dtype=object)
         pb = np.empty(nb, dtype=object)
         plb = np.empty(nb, dtype=object)
         kmv = memoryview(key_bytes)
         tmv = memoryview(tf_bytes)
-        wmv = memoryview(w_bytes)
         pmv = memoryview(pos_bytes)
         plmv = memoryview(pl_bytes)
         for b in range(nb):
-            s = int(starts[b])
-            n = int(lens[b])
             dib[b] = bytes(kmv[key_cuts[b]:key_cuts[b + 1]])
             tfb[b] = bytes(tmv[tf_cuts[b]:tf_cuts[b + 1]])
-            wb[b] = bytes(wmv[8 * s:8 * (s + n)])
             pb[b] = bytes(pmv[pos_ends[b]:pos_ends[b + 1]])
             plb[b] = bytes(plmv[pl_cuts[b]:pl_cuts[b + 1]])
         out["doc_ids"] = dib
         out["tfs"] = tfb
-        out["weights"] = wb
         out["positions"] = pb
         out["pos_lens"] = plb
         return pd.DataFrame(out, columns=cols)
@@ -412,15 +444,17 @@ def build_posting_shards(
     doc_dim: DataFrame | None = None,
     weight_col: str = "weight",
 ) -> DataFrame:
-    """postings(term, field, doc_id, tf, positions, weight) -> compressed
-    block rows, one per (term, field, salt).
+    """postings(term, field, doc_id, tf, positions, dl, weight) ->
+    compressed block rows, one per (term, field, salt).
 
-    ``weight_col`` names the score column baked into the blocks. Index
-    postings carry BOTH ``weight`` (normTF*idf, the reference's tf-idf
-    mode) and ``bm25_weight``; WAND scoring expects the latter, so every
-    query-path caller must pass ``weight_col="bm25_weight"`` (or remap
-    beforehand) — sharding the tf-idf column silently produces a
-    differently-ranked top-k.
+    ``weight_col`` names the column that ORDERS postings: the hot-term
+    quantile salting and the choice of each block's sample. It is not
+    stored — queries score from tf with the live statistics — so any
+    order is correct, and one close to the BM25 impact (build_index's
+    ``bm25_weight``) skips the most. ``dl`` (the doc's field length)
+    feeds the blocks' (tf, dl) impacts; it must be the length
+    the engine scores with (its doc_cards), or the bounds would not
+    hold.
 
     Two-phase skew handling: hot terms (df > salt_df_threshold * n_docs)
     split into ``n_salts`` weight-quantile blocks (doc-hash fallback on
@@ -434,6 +468,11 @@ def build_posting_shards(
     ``doc_key`` (the merge path re-encoding decoded blocks) need none;
     any other call without ``doc_dim`` raises.
     """
+    if "dl" not in postings.columns:
+        raise ValueError(
+            "postings carry no dl: the blocks' impacts need each posting's "
+            "doc length (build_index keeps it)"
+        )
     if weight_col != "weight":
         postings = postings.withColumn("weight", F.col(weight_col))
     threshold = max(int(cfg.salt_df_threshold * n_docs), 1)
@@ -545,19 +584,23 @@ def build_posting_shards(
             .otherwise(F.pmod(F.col("doc_key"), F.col("sub")))
             .cast("int"),
         )
-        .select("term", "field", "shard", "salt", "doc_key", "tf", "positions", "weight")
+        .select(
+            "term", "field", "shard", "salt", "doc_key", "tf", "dl",
+            "positions", "weight",
+        )
     )
     grouped = (
         keyed.groupBy("term", "field", "shard", "salt")
         .agg(
             F.collect_list(
-                F.struct("doc_key", "tf", "weight", "positions")
+                F.struct("doc_key", "tf", "dl", "weight", "positions")
             ).alias("pl")
         )
         .select(
             "term", "field", "shard", "salt",
             F.col("pl.doc_key").alias("doc_keys"),
             F.col("pl.tf").alias("tfs_arr"),
+            F.col("pl.dl").alias("dls_arr"),
             F.col("pl.weight").alias("weights_arr"),
             F.col("pl.positions").alias("pos_arr"),
         )
@@ -575,19 +618,22 @@ DECODED_SCHEMA = T.StructType(
         T.StructField("field", T.StringType()),
         T.StructField("doc_key", T.LongType()),
         T.StructField("tf", T.IntegerType()),
+        T.StructField("dl", T.DoubleType()),
         T.StructField("weight", T.DoubleType()),
         T.StructField("positions", T.ArrayType(T.IntegerType())),
     ]
 )
+_DECODED_FIELDS = ("tf", "dl", "weight", "positions")
 
 
 def decode_shards(
     shards: DataFrame,
     passthrough: tuple[str, ...] = (),
-    fields: tuple[str, ...] = ("tf", "weight", "positions"),
+    fields: tuple[str, ...] = ("tf", "positions"),
     doc_keys=None,
     key_ranges: dict | None = None,
     consumer: tuple | None = None,
+    scoring=None,
 ) -> DataFrame:
     """posting_shards -> one row per (term, field, doc_key) — the
     round-trip inverse of build_posting_shards (modulo doc_id -> dense
@@ -596,12 +642,16 @@ def decode_shards(
     adds before a single union-then-decode stage); they must not collide
     with the decoded column names.
 
-    ``fields`` selects which payload streams to decode: term-bag WAND
-    needs only ``weight`` (impact scores are precomputed), so it skips
-    the varbyte decode of tfs + positions AND — the bigger cost — the
-    Arrow transfer of the per-doc position lists; the phrase path asks
-    for ``(weight, positions)``. Undecoded payload columns never leave
-    parquet (column pruning) and never cross Arrow.
+    ``fields`` selects which columns to decode: the stored ``tf`` and
+    ``positions``, and the derived ``weight`` (the posting's BM25
+    weight, computed from its tf in this task) and ``dl`` (its doc
+    length), which need ``scoring`` (index_build.Bm25Scoring: the live
+    statistics and the query terms' idf). Term-bag WAND asks only for
+    ``weight``, so it skips the varbyte decode of positions AND — the
+    bigger cost — the Arrow transfer of the per-doc position lists; the
+    phrase path asks for ``(weight, positions)``. Undecoded payload
+    columns never leave parquet (column pruning) and never cross
+    Arrow.
 
     ``doc_keys`` (optional int64 array/list): restrict the decoded rows
     to these keys — the skip planner's doc-level candidate pruning
@@ -617,7 +667,7 @@ def decode_shards(
     sub-ranges of the doc_key-sorted postings (the encoder's chunking:
     chunk i covers sorted positions [i*n//n_sub, (i+1)*n//n_sub)).
     ``n_sub`` is the chunk count the block was ENCODED with (the planner
-    reads it off the block's own range_maxw length), so the positional
+    reads it off the block's own range_bounds length), so the positional
     mapping stays exact even if RANGE_SUB_N changes between build and
     serve. Blocks absent from the dict decode whole; combines with
     ``doc_keys`` by intersection.
@@ -628,7 +678,12 @@ def decode_shards(
     ``schema``, instead of the decoded rows — decode and the consumer's
     work then cost one Python crossing (the one-task WAND top-k)."""
     extra = list(passthrough)
-    want = [f for f in ("tf", "weight", "positions") if f in fields]
+    want = [f for f in _DECODED_FIELDS if f in fields]
+    if scoring is None and {"dl", "weight"} & set(want):
+        raise ValueError(
+            "decode_shards: fields dl and weight need scoring= (the live "
+            "statistics, index_build.CorpusStats.scoring)"
+        )
     out_cols = ["term", "field", "doc_key"] + want + extra
     by_name = {f.name: f for f in DECODED_SCHEMA.fields}
     schema = T.StructType(
@@ -636,6 +691,7 @@ def decode_shards(
         + [shards.schema[c] for c in extra]
     )
     want_tf = "tf" in want
+    want_dl = "dl" in want
     want_w = "weight" in want
     want_pos = "positions" in want
     cand = (
@@ -748,12 +804,19 @@ def decode_shards(
                 ),
                 "doc_key": keys,
             }
+            if want_tf or want_w:
+                tfs = vb_decode(b"".join(pdf["tfs"]))
             if want_tf:
-                block["tf"] = vb_decode(b"".join(pdf["tfs"])).astype(np.int32)
+                block["tf"] = tfs.astype(np.int32)
+            if want_dl or want_w:
+                fields_b = pdf["field"].tolist()
+                dls = scoring.doc_lengths(fields_b, counts, keys)
+            if want_dl:
+                block["dl"] = dls
             if want_w:
-                block["weight"] = np.frombuffer(
-                    b"".join(pdf["weights"]), dtype=">f8"
-                ).astype(np.float64)
+                block["weight"] = scoring.weights(
+                    pdf["term"].tolist(), fields_b, counts, tfs, dls
+                )
             if want_pos:
                 pos_lens = vb_decode(b"".join(pdf["pos_lens"]))
                 flat = vb_decode(b"".join(pdf["positions"]))
@@ -783,7 +846,7 @@ def decode_shards(
             return pd.DataFrame(block, columns=out_cols)
 
     # only the REQUESTED payload columns cross Arrow — block metadata
-    # (salt, max_weight, the per-block top-N samples) is planner-side,
+    # (salt, the per-block samples and impacts) is planner-side,
     # and unrequested streams (e.g. positions for a term-bag query)
     # stay in parquet entirely
     need = ["term", "field", "doc_ids"]
@@ -791,10 +854,8 @@ def decode_shards(
         # the range filter is keyed by (term, field, salt); extra INPUT
         # columns are fine — mapInPandas' schema constrains output only
         need.append("salt")
-    if want_tf:
+    if want_tf or want_w:
         need.append("tfs")
-    if want_w:
-        need.append("weights")
     if want_pos:
         need += ["pos_lens", "positions"]
     if consumer is None:
@@ -810,14 +871,12 @@ BLOCK_META_COLS = ["term", "field", "salt", "df"] + SKIP_META_COLS
 
 def _block_meta_row(d: dict) -> Row:
     """One metadata row as the planner reads it: a sample-complete block
-    (df <= BLOCK_SAMPLE_N, decided by df alone) gets its skip metadata
-    rebuilt from its own doc_ids + weights; any other block keeps what
+    (df <= BLOCK_SAMPLE_N, decided by df alone) gets its sample and
+    ranges rebuilt from its own doc_ids + tfs; any other block keeps what
     the encoder stored. The payload bytes are popped from ``d``."""
-    doc_ids, weights = d.pop("doc_ids"), d.pop("weights")
+    doc_ids, tfs = d.pop("doc_ids"), d.pop("tfs")
     if int(d["df"]) <= BLOCK_SAMPLE_N:
-        keys = np.cumsum(vb_decode(doc_ids))
-        w = np.frombuffer(weights, dtype=">f8").astype(np.float64)
-        d.update(block_skip_meta(keys, w))
+        d.update(block_skip_meta(np.cumsum(vb_decode(doc_ids)), vb_decode(tfs)))
     return Row(**d)
 
 
@@ -827,12 +886,12 @@ def term_block_meta(
     cfg: EngineConfig,
     meta_cache: dict | None = None,
     shard_files: list[str] | None = None,
-) -> list | None:
+) -> list:
     """The query terms' block-metadata rows (BLOCK_META_COLS), each
     term's rows in (field, salt) order, optionally through the caller's
     per-term cache — the shared serving-node term dictionary (see
-    wand.wand_topk_from_shards's meta_cache contract). Returns None when
-    the shards frame predates block metadata.
+    wand.wand_topk_from_shards's meta_cache contract). The rows hold no
+    statistics, so they stay valid while the shards do.
 
     ``shard_files``: the read-back frame's file listing
     (driver_read.read_back). With it, the missing terms' rows are read
@@ -842,13 +901,10 @@ def term_block_meta(
     frame) one pruned Spark scan collects them; the two give equal rows.
 
     Sample-complete blocks (df <= BLOCK_SAMPLE_N) store no skip
-    metadata: the read also takes their ``doc_ids`` and ``weights`` and
-    the five fields are rebuilt with the encoder's own block_skip_meta
+    metadata: the read also takes their ``doc_ids`` and ``tfs`` and the
+    sample and ranges are rebuilt with the encoder's own block_skip_meta
     (_block_meta_row, one rule for both reads) before the cache stores
-    the row. The rows and the plan built from them equal what a stored
-    copy would give."""
-    if "top_weights" not in shards.columns:
-        return None
+    the row."""
     term_list = sorted(set(terms))
     missing = (
         term_list
@@ -860,7 +916,7 @@ def term_block_meta(
         ids = {term_hash60_py(t) % cfg.n_shards for t in missing}
         for d in read_rows(
             partition_files(shard_files, ids),
-            [*BLOCK_META_COLS, "doc_ids", "weights"], "term", missing,
+            [*BLOCK_META_COLS, "doc_ids", "tfs"], "term", missing,
         ):
             fetched[d["term"]].append(_block_meta_row(d))
     elif missing:
@@ -870,7 +926,7 @@ def term_block_meta(
             .select(
                 *BLOCK_META_COLS,
                 F.when(complete, F.col("doc_ids")).alias("doc_ids"),
-                F.when(complete, F.col("weights")).alias("weights"),
+                F.when(complete, F.col("tfs")).alias("tfs"),
             )
             .collect()
         ):
@@ -883,18 +939,11 @@ def term_block_meta(
     return [r for t in term_list for r in meta_cache.get(t, [])]
 
 
-def query_decode_parts(meta: list | None, cfg: EngineConfig) -> int | None:
+def query_decode_parts(meta: list, cfg: EngineConfig) -> int:
     """Scale-adaptive decode-task count from the terms' summed block df
     (guide §2.2): ~query_target_postings_per_task postings per task —
     tiny queries run one decode task, hot terms fan out."""
-    if meta is None:
-        return None
-    vol = 0
-    for r in meta:
-        try:
-            vol += int(r["df"] or 0)
-        except (ValueError, KeyError):
-            pass
+    vol = sum(int(r["df"]) for r in meta)
     target = max(int(cfg.query_target_postings_per_task), 1)
     return max(1, -(-vol // target))
 
@@ -1017,9 +1066,12 @@ def merge_posting_shards(
     cfg: EngineConfig = DEFAULT,
     delete_postings: DataFrame | None = None,
     partitions_only: bool = False,
+    stats=None,
 ) -> DataFrame:
     """Merge a delta shard set into a base shard set, decoding ONLY the
-    touched (term, field) groups.
+    touched (term, field) groups. ``stats`` (index_build.CorpusStats,
+    required) gives the re-encoded blocks their doc lengths: it must
+    already cover the delta's new docs.
 
     ``partitions_only=True`` returns ONLY the rows belonging to shard
     partitions the delta touches (merged + their pass-through rows) —
@@ -1046,12 +1098,11 @@ def merge_posting_shards(
       crossed the hot threshold gets salted now, not at the next full
       rebuild).
 
-    Weight semantics (the standard LSM trade): stored impact weights are
-    carried as-is per segment; global-stats drift (df/avgdl/N move as
-    docs arrive) is NOT retrofitted onto untouched blocks — the periodic
-    full pipeline rebuild refreshes them. Exactness on postings (doc
-    sets, tf, positions) is total; tests build both sides against the
-    same stats and assert merged == rebuilt-from-scratch.
+    No weights are stored, so no block goes stale when df/avgdl/N move:
+    untouched blocks pass through and every query scores with the live
+    statistics; their impacts bound them under any statistics. Exactness
+    on postings (doc sets, tf, positions) is total; tests assert merged
+    == rebuilt-from-scratch.
 
     Caller contract: each side holds AT MOST ONE posting per (term,
     field, doc_key) — true of anything build_posting_shards produced
@@ -1068,6 +1119,9 @@ def merge_posting_shards(
     decode), and Spark does not dedupe common subplans — an
     unmaterialized side gets recomputed per reference.
     """
+    from .index_build import require_stats
+
+    require_stats(stats, "merge_posting_shards")
     touched = delta.select("term", "field").distinct()
     if delete_postings is not None:
         touched = touched.unionByName(
@@ -1107,10 +1161,14 @@ def merge_posting_shards(
     # unchanged: a tombstoned base row dies, a delta row re-adding the
     # same key supersedes its own tombstone (it is not in drop_keys'
     # base-side application).
-    base_rows = decode_shards(touched_base)
+    fields = ("tf", "dl", "positions")
+    scoring = stats.scoring([], cfg)
+    base_rows = decode_shards(touched_base, fields=fields, scoring=scoring)
     # the delta's decoded rows feed both drop_keys and the union below:
     # materialize them once so the delta is decoded once
-    delta_rows = decode_shards(delta).localCheckpoint(eager=False)
+    delta_rows = decode_shards(
+        delta, fields=fields, scoring=scoring
+    ).localCheckpoint(eager=False)
     drop_keys = delta_rows.select("term", "field", "doc_key")
     if delete_postings is not None:
         drop_keys = drop_keys.unionByName(
@@ -1120,11 +1178,11 @@ def merge_posting_shards(
         F.broadcast(drop_keys.distinct()), ["term", "field", "doc_key"],
         "left_anti",
     ).unionByName(
-        delta_rows.select(
-            "term", "field", "doc_key", "tf", "weight", "positions"
-        )
+        delta_rows.select("term", "field", "doc_key", *fields)
     )
-    merged = merged.select("term", "field", "doc_key", "tf", "weight", "positions")
+    merged = _impact_order(
+        merged.select("term", "field", "doc_key", *fields), stats, cfg
+    )
     # the re-encode references its input twice (salt-stats pass + keyed
     # encode); without a materialization barrier the whole decode+upsert
     # pipeline above would run twice per action. Lazy localCheckpoint
@@ -1136,147 +1194,29 @@ def merge_posting_shards(
     return untouched.unionByName(reencoded)
 
 
-def refresh_shard_stats(
-    shards: DataFrame,
-    term_stats: DataFrame,
-    doc_stats_keyed: DataFrame,
-    corpus_stats_rows: list,
-    cfg: EngineConfig = DEFAULT,
-    drift_threshold: float = 0.1,
-    partitions_only: bool = False,
-) -> DataFrame:
-    """Recompute stale BM25 impact weights for ONLY the (term, field)
-    groups whose df drifted past ``drift_threshold`` since their blocks
-    were encoded — the complement of merge_posting_shards' documented
-    weight-drift trade (untouched blocks keep encode-time weights until
-    a refresh or full rebuild).
+def _impact_order(rows: DataFrame, stats, cfg: EngineConfig) -> DataFrame:
+    """Decoded (tf, dl) rows plus the ``weight`` build_posting_shards
+    orders them by: the BM25 tf saturation under the live avgdl. Within
+    a (term, field) group, the only scope the order is used in, it
+    orders like the BM25 weight (idf is the group's constant)."""
+    from .index_build import bm25_tf_norm
 
-    - stored df per group = sum of block dfs over its salts (readable
-      from block metadata, payloads untouched);
-    - drifted = |stored - current| / current > threshold, joined against
-      ``term_stats`` (the CURRENT (term, field, df) frame);
-    - drifted groups are decoded, re-weighted with the current stats
-      (df + dl + n_docs/avgdl via bm25_contrib_col — tf and positions
-      pass through unchanged), and re-encoded by the same block builder
-      (salt classification re-derived from current df);
-    - everything else passes through byte-identical (gated in tests).
-
-    A refresh NEVER deletes postings: a decoded row whose (doc_key,
-    field) is absent from the CURRENT doc stats (doc removed from the
-    corpus but not yet tombstoned, or a doc that lost a field) keeps its
-    STORED weight — deletions flow only through merge_posting_shards
-    tombstones. A decoded field absent from ``corpus_stats_rows`` while
-    its dl IS present fails loudly (raise_error) instead of encoding a
-    silent NULL weight.
-
-    ``doc_stats_keyed`` must be (doc_key, field, dl) keyed by the
-    shards' doc_dim (key_doc_stats);
-    ``corpus_stats_rows`` is the collected CURRENT corpus_stats (field,
-    n_docs, avgdl). Global-stats drift (n_docs/avgdl move too) is only
-    repaired on the groups this refresh touches — when global drift
-    alone matters (or the stored weights come from a different scorer
-    entirely, e.g. a legacy tf-idf index migrating to BM25 in place),
-    pass drift_threshold<=0 to refresh EVERY group: the degenerate full
-    re-weight, still cheaper than a pipeline rebuild (no tokenize, no
-    posting aggregation, one decode->join->encode pass).
-
-    Same bounded-write shape as the merge: ``partitions_only=True``
-    returns only the touched shard partitions' rows for dynamic
-    partition overwrite. Pass materialized inputs (the plan references
-    ``shards`` more than once).
-    """
-    from .bm25 import bm25_contrib_col
-
-    stored = shards.groupBy("term", "field").agg(
-        F.sum("df").alias("stored_df")
-    )
-    drifted = stored.join(term_stats, ["term", "field"])
-    if drift_threshold > 0:
-        drifted = drifted.filter(
-            (F.abs(F.col("stored_df") - F.col("df")) / F.col("df"))
-            > F.lit(float(drift_threshold))
-        )
-    # else: threshold <= 0 refreshes every group — stored df equal to
-    # the current df must NOT exempt a group (its weights can still be
-    # stale via n_docs/avgdl drift or a scorer migration)
-    drifted = (
-        drifted.select("term", "field")
-        # tiny (drifted group keys only), referenced up to three times
-        # below (partition-id collect, left_anti, left_semi) — without a
-        # barrier each reference re-runs the full shards groupBy
-        .localCheckpoint(eager=False)
-    )
-    if partitions_only:
-        ids = sorted(
-            {
-                r[0]
-                for r in drifted.select(
-                    (term_hash60_col("term") % cfg.n_shards).cast("int")
-                ).distinct().collect()
-            }
-        )
-        shards = shards.filter(isin_col("shard", ids))
-    untouched = shards.join(drifted, ["term", "field"], "left_anti")
-    touched = shards.join(drifted, ["term", "field"], "left_semi")
-
-    # the stored weight rides the decode as the orphan fallback (a
-    # posting with no current dl keeps it; 8 bytes/posting extra Arrow)
-    rows = decode_shards(touched).withColumnRenamed("weight", "stored_weight")
-    # salt-threshold base for the re-encode: the corpus-level doc count
-    # is the max over per-field counts (a field's n_docs counts only
-    # docs HAVING that field — taking row 0 arbitrarily undercounts
-    # whenever the first field is sparse)
-    n_docs = max(int(r["n_docs"]) for r in corpus_stats_rows)
-    contrib = None
-    for r in corpus_stats_rows:
-        c = bm25_contrib_col(cfg, int(r["n_docs"]), float(r["avgdl"]))
-        contrib = (
-            F.when(F.col("field") == r["field"], c)
-            if contrib is None
-            else contrib.when(F.col("field") == r["field"], c)
-        )
-    # loud failure on a field with a current dl but no corpus stats —
-    # the silent alternative is a NULL weight packed as NaN
-    contrib = contrib.otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("refresh_shard_stats: decoded field '"),
-                F.col("field"),
-                F.lit("' missing from corpus_stats_rows"),
-            )
-        )
-    )
-    reweighted = (
-        rows.join(F.broadcast(term_stats), ["term", "field"])
-        .join(doc_stats_keyed, ["doc_key", "field"], "left")
-        .withColumn(
-            "weight",
-            F.when(F.col("dl").isNull(), F.col("stored_weight")).otherwise(
-                contrib
-            ),
-        )
-        .select("term", "field", "doc_key", "tf", "positions", "weight")
-        # barrier: same double-reference economics as the merge path
-        .localCheckpoint(eager=False)
-    )
-    reencoded = build_posting_shards(reweighted, n_docs, cfg)
-    return untouched.unionByName(reencoded)
-
-
-def key_doc_stats(doc_stats: DataFrame, doc_dim: DataFrame) -> DataFrame:
-    """doc_stats(doc_id, field, dl) -> (doc_key, field, dl), keyed by the
-    dense doc_idx of ``doc_dim`` (doc_id, doc_idx)."""
-    return doc_stats.join(doc_dim, "doc_id").select(
-        F.col("doc_idx").alias("doc_key"), "field", "dl"
+    avgdl = F.create_map(
+        *[x for f in sorted(stats.n_docs) for x in (F.lit(f), F.lit(stats.avgdl(f)))]
+    )[F.col("field")]
+    return rows.withColumn(
+        "weight", bm25_tf_norm(F.col("tf"), F.col("dl"), avgdl, cfg.k1, cfg.b)
     )
 
 
 def resort_index(
-    shards: DataFrame, doc_dim: DataFrame, cfg: EngineConfig = DEFAULT
+    shards: DataFrame, doc_dim: DataFrame, cfg: EngineConfig = DEFAULT,
+    stats=None,
 ) -> tuple[DataFrame, DataFrame]:
     """Dense-dim compaction: re-derive a GLOBALLY doc_id-sorted dimension
     and remap every block's doc_keys onto it. Returns (new_dim,
-    new_shards).
+    new_shards). ``stats`` (index_build.CorpusStats over the OLD keys,
+    required) gives the re-encoded blocks their doc lengths.
 
     Why: extend_doc_dim appends new docs' indexes past the current max,
     so doc_idx order equals doc_id string order only within an ingest
@@ -1291,20 +1231,24 @@ def resort_index(
     expensive front of the pipeline (tokenize, posting aggregation,
     stats, weighting): one decode -> key-translate join -> encode pass
     with constant stage count, the periodic dim-compaction a dense-key
-    engine schedules alongside stats refresh. Weights/tf/positions pass
-    through bit-identical.
+    engine schedules. tf/positions pass through bit-identical.
     """
+    from .index_build import require_stats
+
+    require_stats(stats, "resort_index")
     n_docs_hint = doc_dim.count()
     new_dim = build_doc_dim(doc_dim.select("doc_id"))
     remap = doc_dim.join(new_dim.withColumnRenamed("doc_idx", "new_idx"), "doc_id")
-    rows = decode_shards(shards)
+    rows = decode_shards(
+        shards, fields=("tf", "dl", "positions"), scoring=stats.scoring([], cfg)
+    )
     rekeyed = (
-        rows.join(
+        _impact_order(rows, stats, cfg).join(
             remap.select(F.col("doc_idx").alias("doc_key"), "new_idx"), "doc_key"
         )
         .drop("doc_key")
         .withColumnRenamed("new_idx", "doc_key")
-        .select("term", "field", "doc_key", "tf", "positions", "weight")
+        .select("term", "field", "doc_key", "tf", "dl", "positions", "weight")
         # barrier: same double-reference economics as the merge path
         .localCheckpoint(eager=False)
     )

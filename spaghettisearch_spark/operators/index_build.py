@@ -9,11 +9,13 @@ hash aggregation with map-side combine automatically.
 Index tables produced (SURVEY.md §1.3):
 
     tokens       (doc_id, field, pos, term)           intermediate, one shuffle source
-    postings     (term, field, doc_id, tf, positions) normalized rows
+    postings     (term, field, doc_id, tf, positions, weight, df, dl,
+                 bm25_weight)                         normalized rows
     doc_stats    (doc_id, field, dl)                  BM25 doc length
     term_stats   (term, field, df)                    document frequency
     corpus_stats (field, n_docs, avgdl)               tiny, broadcastable
     vocab        (term_id, term)                      reference forw[0]
+                 (build_pipeline's table; build_vocab)
     doc_norms    (doc_id, field, magnitude)           reference forw[4],
                  tf-idf cosine mode (term_weighting.go:44,59-123)
 
@@ -32,9 +34,12 @@ terms explicitly).
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+import numpy as np
+from pyspark import Broadcast
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, EngineConfig
@@ -46,18 +51,149 @@ FIELD_TITLE = "title"
 FIELD_BODY = "body"
 
 
+def bm25_idf(df, n_docs, log=np.log):
+    """BM25 idf = ln(1 + (N - df + 0.5) / (df + 0.5)). With
+    bm25_tf_norm, the one BM25 formula: the same float64 operations in
+    the same order on Spark columns (``log=F.log``), numpy arrays and
+    Python floats, so the exhaustive scorer, the shard decode and the
+    skip planner agree to the last bit."""
+    return log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+def bm25_tf_norm(tf, dl, avgdl, k1: float, b: float):
+    """BM25 tf saturation with length normalisation:
+    tf (k1 + 1) / (tf + k1 (1 - b + b dl / avgdl)). It rises with tf
+    and falls with dl, so a posting set's best posting under any
+    statistics is one of its Pareto (tf, dl) pairs."""
+    return (tf * (k1 + 1.0)) / (tf + k1 * ((1.0 - b) + b * dl / avgdl))
+
+
+def bm25_weight_col(cfg: EngineConfig, stats: dict) -> F.Column:
+    """Per-posting BM25 weight of (field, tf, df, dl) rows, with each
+    field's (n_docs, avgdl) from ``stats`` ({field: (n_docs, avgdl)})."""
+    weight = None
+    for field, (n_docs, avgdl) in stats.items():
+        w = bm25_idf(F.col("df"), float(n_docs), F.log) * bm25_tf_norm(
+            F.col("tf"), F.col("dl"), float(avgdl), cfg.k1, cfg.b
+        )
+        on = F.col("field") == field
+        weight = F.when(on, w) if weight is None else weight.when(on, w)
+    return weight
+
+
+@dataclass(frozen=True)
+class CorpusStats:
+    """The live BM25 statistics a shard query scores with: per field the
+    doc count and summed doc length (avgdl = sum_dl / n_docs, as
+    build_corpus_stats), and per field the dense doc-length vector
+    indexed by doc_key: a Broadcast of {field: float64 vector} (the
+    serving engine's, one per cards version) or that dict itself.
+    Document frequencies are not here: a query sums its terms' block
+    dfs (scoring)."""
+
+    n_docs: dict
+    sum_dl: dict
+    dl: object
+
+    def avgdl(self, field: str) -> float:
+        return self.sum_dl[field] / self.n_docs[field]
+
+    def lengths(self) -> dict:
+        return self.dl.value if isinstance(self.dl, Broadcast) else self.dl
+
+    def scoring(self, meta_rows: list, cfg: EngineConfig) -> "Bm25Scoring":
+        """The scoring of a query whose terms' block-metadata rows are
+        ``meta_rows``: idf per (term, field) from the summed block df."""
+        df: dict = {}
+        for r in meta_rows:
+            key = (r["term"], r["field"])
+            df[key] = df.get(key, 0) + int(r["df"])
+        idf = {
+            key: bm25_idf(float(d), float(self.n_docs[key[1]]), math.log)
+            for key, d in df.items()
+        }
+        return Bm25Scoring(self, idf, cfg.k1, cfg.b)
+
+
+@dataclass(frozen=True)
+class Bm25Scoring:
+    """Per-query plan data of a shard decode: the statistics, the query
+    terms' idf and k1/b. Picklable; the doc lengths travel as the
+    statistics' Broadcast."""
+
+    stats: CorpusStats
+    idf: dict
+    k1: float
+    b: float
+
+    def doc_lengths(self, fields, counts, keys) -> np.ndarray:
+        """dl of each doc_key, in blocks of ``counts`` keys of one field
+        each (``fields`` names the blocks' fields)."""
+        rows = np.repeat(np.asarray(fields, dtype=object), counts)
+        keys = np.asarray(keys, dtype=np.int64)
+        lens = self.stats.lengths()
+        out = np.empty(len(rows), dtype=np.float64)
+        for f in set(fields):
+            sel = rows == f
+            out[sel] = lens[f][keys[sel]]
+        return out
+
+    def weights(self, terms, fields, counts, tf, dl) -> np.ndarray:
+        """BM25 weight of (tf, dl) rows, in blocks of ``counts`` rows of
+        one (term, field) each: a decoded block's postings, a sample, or
+        a block's impact pairs."""
+        idf = [self.idf[(t, f)] for t, f in zip(terms, fields)]
+        avgdl = [self.stats.avgdl(f) for f in fields]
+        return np.repeat(np.asarray(idf, dtype=np.float64), counts) * bm25_tf_norm(
+            np.asarray(tf, dtype=np.float64), np.asarray(dl, dtype=np.float64),
+            np.repeat(np.asarray(avgdl, dtype=np.float64), counts), self.k1, self.b,
+        )
+
+
+def require_stats(stats, caller: str) -> CorpusStats:
+    """``stats``, or a ValueError naming ``caller``'s missing argument."""
+    if stats is None:
+        raise ValueError(
+            f"{caller} needs stats= (index_build.CorpusStats): it scores "
+            "postings with the live statistics"
+        )
+    return stats
+
+
+def collect_corpus_stats(
+    spark: SparkSession, doc_stats: DataFrame, doc_map: DataFrame
+) -> CorpusStats:
+    """CorpusStats of an index for a direct caller of the shard paths:
+    ``doc_stats`` (doc_id, field, dl) keyed through ``doc_map`` (doc_key,
+    doc_id), n_docs the map's size, as build_corpus_stats counts it."""
+    n = doc_map.count()
+    pdf = doc_stats.join(doc_map, "doc_id").select("doc_key", "field", "dl").toPandas()
+    vecs, sums = {}, {}
+    for f, g in pdf.groupby("field"):
+        vecs[f] = np.zeros(n, dtype=np.float64)
+        vecs[f][g["doc_key"].to_numpy(np.int64)] = g["dl"].to_numpy(np.float64)
+        sums[f] = int(g["dl"].sum())
+    return CorpusStats({f: n for f in vecs}, sums, spark.sparkContext.broadcast(vecs))
+
+
 @dataclass
 class Index:
-    """Handles to the index tables (lazy DataFrames or loaded parquet)."""
+    """Handles to the index tables (lazy DataFrames or loaded parquet).
+    ``persisted``: the frames build_index persisted, released by
+    ``unpersist``."""
 
     tokens: DataFrame
     postings: DataFrame
     doc_stats: DataFrame
     term_stats: DataFrame
     corpus_stats: DataFrame
-    vocab: DataFrame
     doc_norms: DataFrame
     doc_meta: DataFrame
+    persisted: tuple = ()
+
+    def unpersist(self) -> None:
+        for frame in self.persisted:
+            frame.unpersist()
 
 
 def tokenize_fields(
@@ -294,30 +430,22 @@ def build_index(
     stats_rows = corpus_stats.collect()
     n_docs = int(stats_rows[0]["n_docs"])
     weighted = build_tfidf_weights(postings, term_stats, n_docs)
-    # precompute BM25 impact weights at build time (same as the parquet
-    # pipeline): query-time scoring becomes filter+broadcast-join+agg
-    # with NO stats joins
-    from .bm25 import bm25_contrib_col
-
+    # BM25 weights of the exhaustive bm25.search reference (and the
+    # impact order of the shard encoder): query-time scoring becomes
+    # filter+broadcast-join+agg with NO stats joins. dl stays: the shard
+    # encoder bounds blocks by their (tf, dl) pairs
     weighted = weighted.join(term_stats, ["term", "field"]).join(
         doc_stats, ["doc_id", "field"]
-    )
-    contrib = None
-    for r in stats_rows:
-        c = bm25_contrib_col(cfg, int(r["n_docs"]), float(r["avgdl"]))
-        contrib = (
-            F.when(F.col("field") == r["field"], c)
-            if contrib is None
-            else contrib.when(F.col("field") == r["field"], c)
-        )
-    weighted = weighted.withColumn("bm25_weight", contrib).drop("dl")
+    ).withColumn("bm25_weight", bm25_weight_col(cfg, {
+        r["field"]: (r["n_docs"], r["avgdl"]) for r in stats_rows
+    }))
     return Index(
         tokens=tokens,
         postings=weighted,
         doc_stats=doc_stats,
         term_stats=term_stats,
         corpus_stats=corpus_stats,
-        vocab=build_vocab(postings),
         doc_norms=build_doc_norms(weighted),
         doc_meta=build_doc_meta(corpus, tokens),
+        persisted=(tokens, postings) if persist else (),
     )

@@ -56,26 +56,42 @@ def phrase_matches_from_shards(
     doc_map,
     phrase: list[str],
     cfg: EngineConfig,
-    decode_parts: int | None = None,
+    stats=None,
+    meta: list | None = None,
 ):
     """Phrase matching straight off the compressed shards: pruned scan ->
     varbyte position decode -> offset-adjust -> intersect. ``contrib`` is
-    the stored impact weight (bm25 path).
+    the BM25 weight the decode computes from each posting's tf with the
+    live statistics ``stats`` (index_build.CorpusStats, required).
+    ``meta``: the phrase terms' block-metadata rows when the caller has
+    them (compression.term_block_meta, read here otherwise): their dfs
+    give the idf and size the decode.
 
     ``doc_map=None`` (the serving engine): position intersection needs no
     doc_id strings, so the match runs entirely on the long doc_key
     (returned in the ``doc_id`` column) and the corpus-sized map never
     enters the per-query plan — the caller hydrates after top-k, the
     only join shape that survives 10^12 docs."""
-    from .compression import decode_shards, prune_shards
+    from .compression import (
+        decode_shards,
+        prune_shards,
+        query_decode_parts,
+        term_block_meta,
+    )
+    from .index_build import require_stats
 
-    pruned = prune_shards(shards, list(set(phrase)), cfg)
-    if decode_parts is not None:
-        # scale-adaptive decode sizing from the caller's block metadata
-        # (coalesce only ever shrinks — no shuffle)
-        pruned = pruned.coalesce(decode_parts)
-    # phrase matching needs positions + weights but never tf
-    decoded = decode_shards(pruned, fields=("weight", "positions"))
+    require_stats(stats, "phrase_matches_from_shards")
+    if meta is None:
+        meta = term_block_meta(shards, phrase, cfg)
+    # scale-adaptive decode sizing from the block metadata (coalesce
+    # only ever shrinks — no shuffle); phrase matching needs positions +
+    # weights
+    decoded = decode_shards(
+        prune_shards(shards, list(set(phrase)), cfg).coalesce(
+            query_decode_parts(meta, cfg)
+        ),
+        fields=("weight", "positions"), scoring=stats.scoring(meta, cfg),
+    )
     if doc_map is not None:
         decoded = decoded.join(doc_map, "doc_key")
     else:

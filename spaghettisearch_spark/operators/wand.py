@@ -44,11 +44,16 @@ merge of true local top-k sets contains the true global top-k (with one
 task, its bucket is the whole candidate set). Pruning (upper-bound
 skipping) only ever discards docs that cannot enter the local heap.
 
-Scoring model: per-posting impact weights are precomputed at index time
-(BM25 weights need only tf, df, dl, avgdl — all known at build), so
-query-time score(d) = sum over query terms of stored weight * qtf. This
-matches the exhaustive bm25.py path bit-for-bit on the same floats, and
-is asserted so in tests/test_wand.py.
+Scoring model: the shards store each posting's tf, not a weight. The
+decode task scores it with the live statistics (index_build.CorpusStats:
+per-field N and avgdl and the doc lengths, broadcast once per cards
+version; each term's df is the sum of its block dfs, and reaches the
+task as a per-query idf literal), with the formula and operation order
+of the exhaustive bm25.py path (index_build.bm25_idf/bm25_tf_norm), so
+score(d) = sum over query terms of weight * qtf matches it to the last
+bits, after merges too — asserted in tests/test_wand.py and
+tests/test_api.py. Skip bounds are Pareto sets of (tf, dl) impact pairs,
+exact maxima under any statistics.
 """
 
 from __future__ import annotations
@@ -63,7 +68,7 @@ from pyspark.sql import types as T
 from ..config import DEFAULT, EngineConfig
 from ..functions.smalldf import in_sql
 from .bm25 import term_lookup
-from .index_build import FIELD_BODY, FIELD_TITLE
+from .index_build import FIELD_BODY, FIELD_TITLE, require_stats
 
 _OUT_COLS = ["doc_id", "title_rank", "body_rank", "pagerank", "score"]
 # kernel output; ``doc_id`` carries the dense long doc_key
@@ -86,9 +91,9 @@ def _pr_lookup(pr: np.ndarray, keys) -> np.ndarray:
 
 def _score_bucket_vectorized(k: int, cfg: EngineConfig, pr=None):
     """Vectorized exact per-bucket top-k over (doc_id, field, contrib)
-    posting rows, ``contrib`` = stored impact weight x query-term
-    frequency. The blend lives here, once: each posting's field weight
-    x ``blend_scale`` and its title/body split. Then it factorizes doc
+    posting rows, ``contrib`` = BM25 weight x query-term frequency. The
+    blend lives here, once: each posting's field weight x
+    ``blend_scale`` and its title/body split. Then it factorizes doc
     ids once, runs a single branchless ``np.bincount`` scatter-add per
     score column over the WHOLE bucket, an O(n) k-th-score partition
     and a tiny (-score, doc_id) tie-break sort of the survivors.
@@ -223,12 +228,13 @@ def _one_task_topk(
 ) -> DataFrame:
     """Top-k of a shard query whose kept postings fit in ONE
     task: ``pruned`` (coalesced to one partition) is decoded and scored
-    in one Python pass — decode_shards hands its frames straight to the
-    bucket kernel, with ``contrib = weight x qtf`` computed in between —
+    in one Python pass — decode_shards scores each posting from its tf
+    and hands its frames straight to the bucket kernel, with ``contrib =
+    weight x qtf`` computed in between —
     so the job is one stage, one task and one Python crossing, with no
     bucket exchange (one task already holds every posting of every
     doc). ``decode_kw`` is the planner's decode pruning (doc_keys,
-    key_ranges)."""
+    key_ranges) and its scoring."""
     from .compression import decode_shards
 
     score = _score_bucket_vectorized(k, cfg, pr)
@@ -294,34 +300,38 @@ _I64_MIN = np.iinfo(np.int64).min
 _I64_MAX = np.iinfo(np.int64).max
 
 
-def _row_ranges(r) -> tuple | None:
-    """(range_bounds, range_maxw) off a metadata row, or None when the
-    row predates the range-aligned schema (pre-round-5 shard frames)."""
-    try:
-        rb, rm = r["range_bounds"], r["range_maxw"]
-    except (ValueError, KeyError):
-        return None
-    if rb is None or rm is None or len(rb) != len(rm) + 1:
-        return None
-    return rb, rm
+def _row_bounds(r, w: np.ndarray, scoring) -> tuple:
+    """(per-range bounds, unsampled-rest bound) of a metadata row whose
+    sample scores ``w`` under ``scoring``, both unblended. A
+    sample-complete row (no impacts) bounds each range by its postings'
+    exact maximum and has no rest; any other row scores the Pareto
+    (tf, dl) pairs of each impact group and takes each group's maximum.
+    One range covers the block when the row has no range_bounds."""
+    rb = r["range_bounds"]
+    if r["impacts"] is None:
+        m = len(rb) - 1 if rb is not None else 1
+        return np.maximum.reduceat(w, (np.arange(m) * len(w)) // m), None
+    imp = np.asarray(r["impacts"], dtype=np.float64)
+    g = int(imp[0])
+    counts = imp[1:1 + g].astype(np.int64)
+    pairs = imp[1 + g:].reshape(-1, 2)
+    b = np.maximum.reduceat(
+        scoring.weights(
+            [r["term"]], [r["field"]], [len(pairs)], pairs[:, 0], pairs[:, 1]
+        ),
+        np.cumsum(counts) - counts,
+    )
+    return b[:-1], float(b[-1])
 
 
 def _plan_df(meta_rows: list, keep: set | None) -> int:
     """Summed df of the metadata rows in ``keep`` (all rows when None) —
     the posting volume a plan implies, used both for the two-phase auto
-    decision and the decode-volume telemetry. Rows predating the df
-    column count as 0."""
-    total = 0
-    for r in meta_rows:
-        if keep is not None and (
-            r["term"], r["field"], int(r["salt"]),
-        ) not in keep:
-            continue
-        try:
-            total += int(r["df"] or 0)
-        except (ValueError, KeyError):
-            pass
-    return total
+    decision and the decode-volume telemetry."""
+    return sum(
+        int(r["df"]) for r in meta_rows
+        if keep is None or (r["term"], r["field"], int(r["salt"])) in keep
+    )
 
 
 def _range_counts(df: int, n_sub: int) -> np.ndarray:
@@ -339,11 +349,12 @@ def plan_blocks(
     k: int,
     extra_ub: float = 0.0,
     min_threshold: float | None = None,
+    stats=None,
 ) -> tuple:
     """Block-max skip planner (driver-side, pure): given the block
     metadata rows of compression.term_block_meta (term, field, salt, df,
-    max_weight, top_doc_keys, top_weights, range_bounds, range_maxw),
-    return
+    top_doc_keys, top_tfs, range_bounds, impacts) and the live
+    statistics ``stats`` (index_build.CorpusStats, required), return
 
       (keep, threshold, candidate_doc_keys, keep_ranges)
 
@@ -358,107 +369,112 @@ def plan_blocks(
     - ``keep_ranges``: {(term, field, salt) -> (n_sub, kept chunk
       indices)} for kept blocks whose decode can drop at least one
       sub-range — ``n_sub`` is the chunk count the block was ENCODED
-      with (len of its range_maxw), which the decode needs to map the
-      positional indices exactly (see the range-pruning note at the
-      keep loop); blocks absent from the dict decode whole.
+      with (len of its range_bounds minus one), which the decode needs
+      to map the positional indices exactly (see the range-pruning note
+      at the keep loop); blocks absent from the dict decode whole.
 
-    Threshold: each block's top-N (doc_key, weight) sample yields partial
-    blended scores per doc (a lower bound of the doc's full score, since
-    contributions are non-negative); T = k-th largest partial.
+    Scores: each sampled (doc_key, tf) is scored EXACTLY with the live
+    statistics (idf from the terms' summed block df, the doc's length
+    from the stats' vectors), the same formula the decode applies. Each
+    sub-range is bounded by the best of its Pareto (tf, dl) impact pairs
+    scored the same way: BM25 rises with tf and falls with dl, so the
+    range's best posting scores like one of its pairs under ANY
+    statistics, including ones that reorder postings after the block
+    was encoded — the bound is the range's exact maximum. A sample-complete
+    block (df <= BLOCK_SAMPLE_N: its sample IS its posting list, so the
+    shards store no copy and term_block_meta rebuilds it from the
+    block's keys and tfs) is bounded per range by its exact maxima.
+
+    Threshold: each block's sample yields partial blended scores per doc
+    (a lower bound of the doc's full score, since contributions are
+    non-negative); T = k-th largest partial.
 
     Doc-range-aligned bound: a doc in sub-range i of block B (doc_key in
-    [bounds[i], bounds[i+1]]) scores at most B's sub-range max, plus for
-    every OTHER (term, field) group the max over that group's sub-range
-    triples whose key interval INTERSECTS [bounds[i], bounds[i+1]] (the
-    doc's posting in that group, if any, lies inside such a triple), plus
-    ``extra_ub`` (e.g. the PageRank blend maximum). B is skippable iff
-    that bound is strictly below T for EVERY sub-range: each of its docs
-    then provably misses the top-k, so dropping their contributions
-    cannot corrupt it (top-k docs appear only in kept blocks, so their
-    scores stay exact). Strict inequality keeps tie-on-T blocks. This is
-    what makes multi-term skipping bite: the admissible cross-term bound
-    uses a term's max within ~1/16th of the doc space — typically its
-    bulk high weight — instead of its single global outlier. A row
-    without range metadata degrades to one (-inf, +inf, max_weight)
-    triple, which reproduces the round-4 global-maxima bound exactly.
+    [bounds[i], bounds[i+1]]) scores at most B's sub-range bound, plus
+    for every OTHER (term, field) group the max over that group's
+    sub-range triples whose key interval INTERSECTS [bounds[i],
+    bounds[i+1]] (the doc's posting in that group, if any, lies inside
+    such a triple), plus ``extra_ub`` (e.g. the PageRank blend maximum).
+    B is skippable iff that bound is strictly below T for EVERY
+    sub-range: each of its docs then provably misses the top-k, so
+    dropping their contributions cannot corrupt it (top-k docs appear
+    only in kept blocks, so their scores stay exact). Strict inequality
+    keeps tie-on-T blocks. This is what makes multi-term skipping bite:
+    the admissible cross-term bound uses a term's bound within ~1/16th
+    of the doc space instead of its single global outlier. A row without
+    range_bounds degrades to one (-inf, +inf, block bound) triple, the
+    global-maxima bound.
 
     Doc-level candidate pruning (the at-scale complement of block
-    skipping): a block with df <= BLOCK_SAMPLE_N is SAMPLE-COMPLETE —
-    its top-N sample IS its whole posting list (so the shards store no
-    copy: term_block_meta rebuilds its rows from the block's own keys
-    and weights, with the encoder's rules) — and a (term, field)
-    group all of whose blocks are complete contributes ZERO to any doc
-    outside the sampled keys. So a doc appearing in NO block's sample
-    scores at most U_out = sum over the INCOMPLETE groups of the max,
-    over each group's incomplete blocks, of the block's MINIMUM sampled
-    blended weight, + extra_ub (admissible because samples are each
-    block's top-N postings by weight and salt assigns a doc's posting
-    in a group to exactly one block — an unsampled doc therefore sits
-    under some incomplete block's sample minimum, which is far below
-    the hot term's global max_weight). When U_out < threshold, every top-k doc is
-    provably among the sampled keys, and the decode can drop all other
-    postings: computed scores stay exact for candidates (only
-    non-candidate rows are dropped, and block skipping already
-    guarantees top-k docs live in kept blocks), and a dropped doc's
-    true score < threshold <= true k-th, so it cannot displace anyone.
-    This is what pays on the rare-term + hot-term bag — the dominant
-    shape where block granularity is too coarse (every hot block spans
-    the whole doc space) but the candidate set is tiny: decode, Arrow
-    transfer, and the bucket shuffle then scale with |candidates|, not
-    with the hot term's df.
+    skipping): a (term, field) group all of whose blocks are
+    sample-complete contributes ZERO to any doc outside the sampled
+    keys. So a doc appearing in NO block's sample scores at most U_out =
+    sum over the INCOMPLETE groups of the max, over each group's
+    incomplete blocks, of the block's unsampled-rest bound (its
+    impacts' last group, over exactly the postings outside its sample),
+    + extra_ub (admissible because salt assigns a doc's posting in a
+    group to exactly one block, where an unsampled doc sits among the
+    rest). When U_out < threshold, every top-k doc is provably among the
+    sampled keys, and the decode can drop all other postings: computed
+    scores stay exact for candidates (only non-candidate rows are
+    dropped, and block skipping already guarantees top-k docs live in
+    kept blocks), and a dropped doc's true score < threshold <= true
+    k-th, so it cannot displace anyone. This is what pays on the
+    rare-term + hot-term bag — the dominant shape where block
+    granularity is too coarse (every hot block spans the whole doc
+    space) but the candidate set is tiny: decode, Arrow transfer, and
+    the bucket shuffle then scale with |candidates|, not with the hot
+    term's df.
 
     Intervals are int64 end-to-end: doc_keys are exact integers, and a
     float boundary rounded the wrong way could silently drop a true
     overlap (inadmissible)."""
-    from .compression import BLOCK_SAMPLE_N
+    require_stats(stats, "plan_blocks")
+    scoring = stats.scoring(meta_rows, cfg)
     fw = {FIELD_TITLE: cfg.w_title, FIELD_BODY: cfg.w_body}
 
     def factor(field: str, term: str) -> float:
         return fw.get(field, 0.0) * qtf.get(term, 0.0) * cfg.blend_scale
 
-    # threshold from the per-block top-N samples + per-group blended
-    # sub-range triples (lo, hi, max) for the range-aware cross bound
+    # threshold from the per-block samples + per-group blended sub-range
+    # triples (lo, hi, bound) for the range-aware cross bound
     partials: dict[int, float] = {}
     tri: dict[tuple[str, str], tuple[list, list, list]] = {}
     unsampled_ub: dict[tuple[str, str], float] = {}
     incomplete: set[tuple[str, str]] = set()
+    row_subs: list[list] = []
     for r in meta_rows:
         f = factor(r["field"], r["term"])
         key = (r["term"], r["field"])
-        ub = float(r["max_weight"]) * f
-        try:
-            df = r["df"]
-        except (ValueError, KeyError):
-            df = None
-        if df is None or int(df) > BLOCK_SAMPLE_N:
+        keys = np.asarray(r["top_doc_keys"], dtype=np.int64)
+        blk = ([r["term"]], [r["field"]], [len(keys)])
+        w = scoring.weights(
+            *blk, r["top_tfs"], scoring.doc_lengths(*blk[1:], keys)
+        )
+        for dk, x in zip(keys.tolist(), w.tolist()):
+            partials[dk] = partials.get(dk, 0.0) + x * f
+        bounds, rest = _row_bounds(r, w, scoring)
+        if rest is not None:
+            # salt partitions a (term, field) group by doc, so an
+            # unsampled doc's posting lives in exactly one (necessarily
+            # incomplete) block, among that block's rest
             incomplete.add(key)
-            # samples are the block's top-N postings BY WEIGHT
-            # (compression.py argsort(-weights)[:N]), so a doc NOT in
-            # this block's sample weighs at most the sample's minimum —
-            # a much tighter unsampled-doc bound than max_weight. Salt
-            # partitions a (term, field) group by doc, so an unsampled
-            # doc's posting lives in exactly one (necessarily
-            # incomplete) block: bound the group by the max over its
-            # incomplete blocks' sample minima.
-            tw = r["top_weights"] or []
-            blk_ub = (
-                float(min(tw)) * f if len(tw) >= BLOCK_SAMPLE_N else ub
-            )
-            if blk_ub > unsampled_ub.get(key, 0.0):
-                unsampled_ub[key] = blk_ub
-        for dk, w in zip(r["top_doc_keys"] or [], r["top_weights"] or []):
-            partials[dk] = partials.get(dk, 0.0) + float(w) * f
-        los, his, ms = tri.setdefault(key, ([], [], []))
-        rng = _row_ranges(r)
-        if rng is not None:
-            rb, rm = rng
-            los.extend(rb[:-1])
-            his.extend(rb[1:])
-            ms.extend(float(m) * f for m in rm)
+            if rest * f > unsampled_ub.get(key, 0.0):
+                unsampled_ub[key] = rest * f
+        rb = r["range_bounds"]
+        if rb is None:
+            subs = [(_I64_MIN, _I64_MAX, float(bounds.max()) * f, -1)]
         else:
-            los.append(_I64_MIN)
-            his.append(_I64_MAX)
-            ms.append(ub)
+            subs = [
+                (int(rb[i]), int(rb[i + 1]), float(bounds[i]) * f, i)
+                for i in range(len(bounds))
+            ]
+        row_subs.append(subs)
+        los, his, ms = tri.setdefault(key, ([], [], []))
+        for lo, hi, m, _i in subs:
+            los.append(lo)
+            his.append(hi)
+            ms.append(m)
     if len(partials) < k:
         if min_threshold is None:
             keep_all = {
@@ -501,12 +517,12 @@ def plan_blocks(
     # the kept equi-depth chunk indices for kept blocks that shed at
     # least one range (absent = decode the whole block).
     keep_ranges: dict[tuple[str, str, int], tuple[int, list[int]]] = {}
-    # float-noise slack: the wave-1 floor and the sample partials are
-    # computed with Spark-side association ((fw*w)*qtf)*bs while the
-    # bounds here multiply rm*((fw*qtf)*bs) — a few ULPs apart. A true
-    # k-th doc whose own sub-range max IS its weight could otherwise
-    # fall a hair below an exact floor and be pruned. Relative 1e-9 is
-    # ~1e7 ULPs of headroom and costs nothing measurable in pruning.
+    # float-noise slack: the wave-1 floor and the kernel's scores are
+    # computed with association ((fw*w)*qtf)*bs while the partials and
+    # bounds here multiply w*((fw*qtf)*bs) — a few ULPs apart. A true
+    # k-th doc whose own range bound IS its weight could otherwise fall
+    # a hair below an exact floor and be pruned. Relative 1e-9 is ~1e7
+    # ULPs of headroom and costs nothing measurable in pruning.
     thr_eps = threshold - abs(threshold) * 1e-9
     # a union-of-segments frame carries multiple block rows per
     # (term, field, salt); positional chunk indices are only meaningful
@@ -518,19 +534,8 @@ def plan_blocks(
     bkey_counts = _Counter(
         (r["term"], r["field"], int(r["salt"])) for r in meta_rows
     )
-    for r in meta_rows:
-        key = (r["term"], r["field"])
-        f = factor(r["field"], r["term"])
-        rng = _row_ranges(r)
-        if rng is not None:
-            rb, rm = rng
-            subs = [
-                (int(rb[i]), int(rb[i + 1]), float(rm[i]) * f, i)
-                for i in range(len(rm))
-            ]
-        else:
-            subs = [(_I64_MIN, _I64_MAX, float(r["max_weight"]) * f, -1)]
-        others = others_of[key]
+    for r, subs in zip(meta_rows, row_subs):
+        others = others_of[(r["term"], r["field"])]
         kept_subs: list[int] = []
         for lo, hi, m, i in subs:
             bound = m + extra_ub
@@ -544,28 +549,26 @@ def plan_blocks(
             bkey = (r["term"], r["field"], int(r["salt"]))
             keep.add(bkey)
             if (
-                rng is not None
+                r["range_bounds"] is not None
                 and len(kept_subs) < len(subs)
                 and bkey_counts[bkey] == 1
             ):
-                # carry the block's OWN chunk count (len(range_maxw))
-                # so the decode maps indices with the n_sub this block
-                # was encoded with, never a module constant that may
-                # have changed between build and serve
+                # carry the block's OWN chunk count so the decode maps
+                # indices with the n_sub this block was encoded with,
+                # never a module constant that may have changed between
+                # build and serve
                 keep_ranges[bkey] = (len(subs), kept_subs)
 
     # doc-level candidate pruning: admissible iff any unsampled doc's
-    # best case (incomplete groups' maxima + PR mass) provably misses
-    # the threshold
+    # best case (incomplete groups' rest bounds + PR mass) provably
+    # misses the threshold
     cand: list[int] | None = None
     # .get: a group whose blended factor is 0 (e.g. w_title=0 body-only
     # ranking) lands in `incomplete` with bound 0.0, which the `>` guard
     # above never inserted — its contribution to u_out is rightly zero
     u_out = sum(unsampled_ub.get(g, 0.0) for g in incomplete) + extra_ub
     if u_out < thr_eps:
-        cand = sorted(
-            {dk for r in meta_rows for dk in (r["top_doc_keys"] or [])}
-        )
+        cand = sorted({dk for r in meta_rows for dk in r["top_doc_keys"]})
     return keep, threshold, cand, keep_ranges
 
 
@@ -582,9 +585,15 @@ def wand_topk_from_shards(
     two_phase: bool | str = False,
     pr_max_key: str = _PR_MAX_KEY,
     shard_files: list[str] | None = None,
+    stats=None,
 ) -> DataFrame:
     """Exact top-k straight from the compressed posting shards: pruned
-    shard scan -> varbyte decode (mapInPandas) -> block-max WAND. With
+    shard scan -> varbyte decode and BM25 scoring from the stored tfs
+    (mapInPandas) -> block-max WAND. ``stats`` (index_build.CorpusStats,
+    required) holds the live statistics every posting and skip bound is
+    scored with: per-field (N, avgdl) and doc lengths, while each term's
+    df is the sum of its block dfs and reaches the decode task as a
+    per-query idf literal. With
     a plan that fits one task (the planner's decode volume vs
     ``cfg.query_target_postings_per_task``), decode and the bucket
     kernel share one Python pass and the top-k job is one stage
@@ -669,10 +678,11 @@ def wand_topk_from_shards(
     """
     from collections import Counter
 
-    from .compression import decode_shards, prune_shards
+    from .compression import decode_shards, prune_shards, term_block_meta
 
     if cfg.scorer != "bm25":
-        raise ValueError("shard-backed WAND requires bm25 impact weights")
+        raise ValueError("shard-backed WAND scores BM25 only")
+    require_stats(stats, "wand_topk_from_shards")
     k = k or cfg.top_k
     if not query_terms:
         return empty_topk(spark, by_doc_id=doc_map is not None)
@@ -682,194 +692,180 @@ def wand_topk_from_shards(
     pruned = prune_shards(shards, term_list, cfg)
     pr_bc = pr_broadcast(spark, pagerank, doc_map)
 
-    cand_keys = None
-    q_parts = None
     # block-max skipping BEFORE decode: read ONLY the block metadata
     # columns (parquet column pruning — the varbyte payloads stay on
-    # disk), derive an exact threshold from the per-block top-N
-    # samples, and decode only blocks whose upper bound can beat it.
-    # (term_block_meta degrades to None on pre-metadata shard frames —
-    # the planner then decodes everything, as before.)
-    from .compression import term_block_meta
-
+    # disk), derive an exact threshold from the per-block samples, and
+    # decode only blocks whose upper bound can beat it
     meta = term_block_meta(shards, term_list, cfg, meta_cache, shard_files)
-    if meta is not None:
-        extra_ub = 0.0
-        if pagerank is not None:
-            # cache the PR blend maximum alongside the term metadata, so
-            # the repeat-query path never touches the lookup table on the
-            # driver. The reserved key can't collide: the tokenizer never
-            # emits NUL.
-            if not pr_max_key.startswith("\x00"):
-                raise ValueError("pr_max_key must start with NUL")
-            if meta_cache is not None and pr_max_key in meta_cache:
-                pr_max = meta_cache[pr_max_key]
-            else:
-                table = pr_bc.value
-                pr_max = float(table.max()) if len(table) else 0.0
-                if meta_cache is not None:
-                    meta_cache[pr_max_key] = pr_max
-            extra_ub = cfg.w_pagerank * cfg.blend_scale * float(pr_max or 0.0)
-        # exact-floor cache: the wave-1 floor is a pure function of
-        # (shards, bag, k) AND the scoring weights the wave multiplies
-        # in (w_title/w_body/blend_scale — so those are part of the
-        # key: a floor computed under heavier field weights would be an
-        # INADMISSIBLE threshold for a lighter cfg sharing the cache).
-        # PR-independent (wave scores omit PR mass). A serving node
-        # sees the same hot bags over and over; caching the floor
-        # beside the term metadata gives repeat queries the near-oracle
-        # two-phase plan at single-phase cost (zero extra jobs). The
-        # cache dies with meta_cache, which the caller must drop
-        # whenever the shards frame changes — exactly the invalidation
-        # the floor needs for admissibility.
-        floor_key = (
-            "\x00floor:" + repr((
-                tuple(sorted(qtf.items())), k,
-                cfg.w_title, cfg.w_body, cfg.blend_scale,
-            ))
-            if meta_cache is not None
-            else None
-        )
-        cached_floor = (
-            meta_cache.get(floor_key) if floor_key is not None else None
-        )
-        LAST_SKIP_STATS["floor_cached"] = int(cached_floor is not None)
-        keep, _thr, cand_keys, keep_ranges = plan_blocks(
-            meta, cfg, qtf, k, extra_ub, min_threshold=cached_floor
-        )
-        if cached_floor is not None:
-            # the cached floor IS what the wave would recompute — same
-            # shards, same bag, same k — so the wave adds nothing
-            run_wave = False
-        elif two_phase == "auto":
-            # decide from the plan itself: the kept blocks' total df IS
-            # the decode volume the exact-floor wave can cut, and it is
-            # already on the driver — no extra action. Below the
-            # threshold the wave's fixed job cost dominates any saving
-            # (the measured local regime); above it, skipped posting
-            # volume grows with the corpus while the wave cost stays
-            # O(|samples| x |groups|). When DOC-level candidate pruning
-            # is already admissible, phase 2 scales with |candidates|
-            # regardless of kept blocks — the wave would be a strictly
-            # wasteful extra decode pass, so skip it.
-            run_wave = (
-                cand_keys is None
-                and _plan_df(meta, keep) >= cfg.two_phase_auto_min_postings
-            )
-        elif isinstance(two_phase, str):
-            # loud guard: "Auto"/"off"/any other string would silently
-            # bool() to True — enabling the wave a caller tried to
-            # disable is the worst possible misread
-            raise ValueError(
-                f"two_phase={two_phase!r}: expected True, False, or 'auto'"
-            )
+    scoring = stats.scoring(meta, cfg)
+    extra_ub = 0.0
+    if pagerank is not None:
+        # cache the PR blend maximum alongside the term metadata, so
+        # the repeat-query path never touches the lookup table on the
+        # driver. The reserved key can't collide: the tokenizer never
+        # emits NUL.
+        if not pr_max_key.startswith("\x00"):
+            raise ValueError("pr_max_key must start with NUL")
+        if meta_cache is not None and pr_max_key in meta_cache:
+            pr_max = meta_cache[pr_max_key]
         else:
-            run_wave = bool(two_phase)
-        LAST_SKIP_STATS["two_phase"] = int(run_wave)
-        if run_wave and meta:
-            # wave 1: exact scores for every SAMPLED doc — decode all
-            # query-term blocks restricted to the sample-union keys, so
-            # each sampled doc's cross-term score is complete (vs the
-            # single-phase partials, which miss a doc's weight in blocks
-            # where it wasn't sampled). Arrow transfer and aggregation
-            # are O(|samples| * |groups|), never posting-volume.
-            sample_keys = sorted(
-                {dk for r in meta for dk in (r["top_doc_keys"] or [])}
-            )
-            fw1 = (
-                F.when(F.col("field") == FIELD_TITLE, F.lit(cfg.w_title))
-                .when(F.col("field") == FIELD_BODY, F.lit(cfg.w_body))
-                .otherwise(F.lit(0.0))
-            )
-            d1 = decode_shards(
-                pruned, fields=("weight",), doc_keys=sample_keys
-            )
-            rows1 = (
-                d1.groupBy("doc_key")
-                .agg(
-                    F.sum(
-                        fw1 * F.col("weight") * term_lookup(qtf)
-                        * F.lit(cfg.blend_scale)
-                    ).alias("s")
-                )
-                .orderBy(F.desc("s"))
-                .limit(k)
-                .collect()
-            )
-            if len(rows1) == k:
-                # exact partial scores are lower bounds (PR and undecoded
-                # blocks only add non-negative mass)
-                floor = float(rows1[-1]["s"])
-                if floor_key is not None:
-                    meta_cache[floor_key] = floor
-                keep, _thr, cand_keys, keep_ranges = plan_blocks(
-                    meta, cfg, qtf, k, extra_ub, min_threshold=floor
-                )
-        LAST_SKIP_STATS["total"] = len(meta)
-        LAST_SKIP_STATS["kept"] = len(keep)
-        LAST_SKIP_STATS["total_df"] = _plan_df(meta, None)
-        LAST_SKIP_STATS["kept_df"] = _plan_df(meta, keep)
-        # range-level telemetry: sub-ranges kept vs total, and the
-        # DECODED posting volume after range pruning — the number that
-        # scales with the corpus (equi-depth chunk counts derived from
-        # each block's df, matching the decode's positional filter)
-        n_rng = n_rng_kept = rng_df = 0
-        for r in meta:
-            rngs = _row_ranges(r)
-            n_sub = len(rngs[1]) if rngs is not None else 1
-            n_rng += n_sub
-            bkey = (r["term"], r["field"], int(r["salt"]))
-            if bkey not in keep:
-                continue
-            try:
-                df_r = int(r["df"] or 0)
-            except (ValueError, KeyError):
-                df_r = 0
-            sel = keep_ranges.get(bkey)
-            if sel is None or rngs is None:
-                n_rng_kept += n_sub
-                rng_df += df_r
-            else:
-                n_rng_kept += len(sel[1])
-                rng_df += int(_range_counts(df_r, sel[0])[sel[1]].sum())
-        LAST_SKIP_STATS["total_ranges"] = n_rng
-        LAST_SKIP_STATS["kept_ranges"] = n_rng_kept
-        LAST_SKIP_STATS["decoded_df"] = rng_df
-        LAST_SKIP_STATS["cand_docs"] = (
-            len(cand_keys) if cand_keys is not None else -1
+            table = pr_bc.value
+            pr_max = float(table.max()) if len(table) else 0.0
+            if meta_cache is not None:
+                meta_cache[pr_max_key] = pr_max
+        extra_ub = cfg.w_pagerank * cfg.blend_scale * float(pr_max or 0.0)
+    # exact-floor cache: the wave-1 floor is a pure function of
+    # (shards, statistics, bag, k) AND the scoring weights the wave
+    # multiplies in (w_title/w_body/blend_scale — so those are part of
+    # the key: a floor computed under heavier field weights would be an
+    # INADMISSIBLE threshold for a lighter cfg sharing the cache).
+    # PR-independent (wave scores omit PR mass). A serving node sees the
+    # same hot bags over and over; caching the floor beside the term
+    # metadata gives repeat queries the near-oracle two-phase plan at
+    # single-phase cost (zero extra jobs). The cache dies with
+    # meta_cache, which the caller must drop whenever the shards or
+    # statistics change — exactly the invalidation the floor needs for
+    # admissibility.
+    floor_key = (
+        "\x00floor:" + repr((
+            tuple(sorted(qtf.items())), k,
+            cfg.w_title, cfg.w_body, cfg.blend_scale,
+        ))
+        if meta_cache is not None
+        else None
+    )
+    cached_floor = meta_cache.get(floor_key) if floor_key is not None else None
+    LAST_SKIP_STATS["floor_cached"] = int(cached_floor is not None)
+    keep, _thr, cand_keys, keep_ranges = plan_blocks(
+        meta, cfg, qtf, k, extra_ub, min_threshold=cached_floor, stats=stats
+    )
+    if cached_floor is not None:
+        # the cached floor IS what the wave would recompute — same
+        # shards, same bag, same k — so the wave adds nothing
+        run_wave = False
+    elif two_phase == "auto":
+        # decide from the plan itself: the kept blocks' total df IS the
+        # decode volume the exact-floor wave can cut, and it is already
+        # on the driver — no extra action. Below the threshold the
+        # wave's fixed job cost dominates any saving (the measured local
+        # regime); above it, skipped posting volume grows with the
+        # corpus while the wave cost stays O(|samples| x |groups|). When
+        # DOC-level candidate pruning is already admissible, phase 2
+        # scales with |candidates| regardless of kept blocks — the wave
+        # would be a strictly wasteful extra decode pass, so skip it.
+        run_wave = (
+            cand_keys is None
+            and _plan_df(meta, keep) >= cfg.two_phase_auto_min_postings
         )
-        if len(keep) < len(meta):
-            keep_keys = [f"{t}\x01{f}\x01{s}" for t, f, s in sorted(keep)]
-            pruned = pruned.filter(F.expr(in_sql(
-                "concat_ws('\x01', term, field, CAST(salt AS STRING))",
-                keep_keys,
-            )))
-        # scale-adaptive task sizing (guide §2.2): the planner knows the
-        # decode volume, so size the decode stage and the bucket-kernel
-        # shuffle from it — tiny queries collapse to 1-2 tasks per stage
-        # (per-task scheduling + Python round-trips dominate them), hot
-        # queries over long posting lists fan out, from the same rule.
-        vol = rng_df
-        if cand_keys is not None:
-            n_groups = len({(r["term"], r["field"]) for r in meta})
-            vol = min(vol, len(cand_keys) * max(n_groups, 1))
-        target = max(int(cfg.query_target_postings_per_task), 1)
-        q_parts = max(1, min(-(-vol // target), n_buckets))
-        # coalesce is narrow (no shuffle) and only ever shrinks: kept
-        # blocks spread over scan partitions merge into ~q_parts decode
-        # tasks instead of one near-empty Python task per partition
-        pruned = pruned.coalesce(int(q_parts))
+    elif isinstance(two_phase, str):
+        # loud guard: "Auto"/"off"/any other string would silently
+        # bool() to True — enabling the wave a caller tried to disable
+        # is the worst possible misread
+        raise ValueError(
+            f"two_phase={two_phase!r}: expected True, False, or 'auto'"
+        )
+    else:
+        run_wave = bool(two_phase)
+    LAST_SKIP_STATS["two_phase"] = int(run_wave)
+    if run_wave and meta:
+        # wave 1: exact scores for every SAMPLED doc — decode all
+        # query-term blocks restricted to the sample-union keys, so each
+        # sampled doc's cross-term score is complete (vs the
+        # single-phase partials, which miss a doc's weight in blocks
+        # where it wasn't sampled). Arrow transfer and aggregation are
+        # O(|samples| * |groups|), never posting-volume.
+        sample_keys = sorted({dk for r in meta for dk in r["top_doc_keys"]})
+        fw1 = (
+            F.when(F.col("field") == FIELD_TITLE, F.lit(cfg.w_title))
+            .when(F.col("field") == FIELD_BODY, F.lit(cfg.w_body))
+            .otherwise(F.lit(0.0))
+        )
+        d1 = decode_shards(
+            pruned, fields=("weight",), doc_keys=sample_keys, scoring=scoring
+        )
+        rows1 = (
+            d1.groupBy("doc_key")
+            .agg(
+                F.sum(
+                    fw1 * F.col("weight") * term_lookup(qtf)
+                    * F.lit(cfg.blend_scale)
+                ).alias("s")
+            )
+            .orderBy(F.desc("s"))
+            .limit(k)
+            .collect()
+        )
+        if len(rows1) == k:
+            # exact partial scores are lower bounds (PR and undecoded
+            # blocks only add non-negative mass)
+            floor = float(rows1[-1]["s"])
+            if floor_key is not None:
+                meta_cache[floor_key] = floor
+            keep, _thr, cand_keys, keep_ranges = plan_blocks(
+                meta, cfg, qtf, k, extra_ub, min_threshold=floor, stats=stats
+            )
+    LAST_SKIP_STATS["total"] = len(meta)
+    LAST_SKIP_STATS["kept"] = len(keep)
+    LAST_SKIP_STATS["total_df"] = _plan_df(meta, None)
+    LAST_SKIP_STATS["kept_df"] = _plan_df(meta, keep)
+    # range-level telemetry: sub-ranges kept vs total, and the DECODED
+    # posting volume after range pruning — the number that scales with
+    # the corpus (equi-depth chunk counts derived from each block's df,
+    # matching the decode's positional filter)
+    n_rng = n_rng_kept = rng_df = 0
+    for r in meta:
+        n_sub = len(r["range_bounds"]) - 1
+        n_rng += n_sub
+        bkey = (r["term"], r["field"], int(r["salt"]))
+        if bkey not in keep:
+            continue
+        sel = keep_ranges.get(bkey)
+        if sel is None:
+            n_rng_kept += n_sub
+            rng_df += int(r["df"])
+        else:
+            n_rng_kept += len(sel[1])
+            rng_df += int(_range_counts(int(r["df"]), sel[0])[sel[1]].sum())
+    LAST_SKIP_STATS["total_ranges"] = n_rng
+    LAST_SKIP_STATS["kept_ranges"] = n_rng_kept
+    LAST_SKIP_STATS["decoded_df"] = rng_df
+    LAST_SKIP_STATS["cand_docs"] = (
+        len(cand_keys) if cand_keys is not None else -1
+    )
+    if len(keep) < len(meta):
+        keep_keys = [f"{t}\x01{f}\x01{s}" for t, f, s in sorted(keep)]
+        pruned = pruned.filter(F.expr(in_sql(
+            "concat_ws('\x01', term, field, CAST(salt AS STRING))",
+            keep_keys,
+        )))
+    # scale-adaptive task sizing (guide §2.2): the planner knows the
+    # decode volume, so size the decode stage and the bucket-kernel
+    # shuffle from it — tiny queries collapse to 1-2 tasks per stage
+    # (per-task scheduling + Python round-trips dominate them), hot
+    # queries over long posting lists fan out, from the same rule.
+    vol = rng_df
+    if cand_keys is not None:
+        n_groups = len({(r["term"], r["field"]) for r in meta})
+        vol = min(vol, len(cand_keys) * max(n_groups, 1))
+    target = max(int(cfg.query_target_postings_per_task), 1)
+    q_parts = max(1, min(-(-vol // target), n_buckets))
+    # coalesce is narrow (no shuffle) and only ever shrinks: kept blocks
+    # spread over scan partitions merge into ~q_parts decode tasks
+    # instead of one near-empty Python task per partition
+    pruned = pruned.coalesce(int(q_parts))
 
-    # term-bag scoring needs ONLY the precomputed impact weights: skip
-    # the tf/positions varbyte decode and their Arrow transfer entirely;
-    # when the planner proved doc-level pruning admissible, only the
-    # candidate postings survive the decode (everything downstream —
-    # Arrow, bucket shuffle, kernel — scales with |candidates|), and
-    # kept blocks additionally shed their provably-sub-threshold
-    # sub-ranges (range-level pruning — see plan_blocks)
+    # term-bag scoring needs ONLY the weights, which the decode computes
+    # from the tf stream: skip the positions varbyte decode and its
+    # Arrow transfer entirely; when the planner proved doc-level pruning
+    # admissible, only the candidate postings survive the decode
+    # (everything downstream — Arrow, bucket shuffle, kernel — scales
+    # with |candidates|), and kept blocks additionally shed their
+    # provably-sub-threshold sub-ranges (range-level pruning — see
+    # plan_blocks)
     decode_kw = {
         "doc_keys": cand_keys,
-        "key_ranges": (keep_ranges or None) if meta is not None else None,
+        "key_ranges": keep_ranges or None,
+        "scoring": scoring,
     }
     if q_parts == 1:
         # the planned volume fits one task, which then holds every

@@ -51,7 +51,6 @@ class BuiltIndex:
             doc_stats=rd("doc_stats"),
             term_stats=rd("term_stats"),
             corpus_stats=rd("corpus_stats"),
-            vocab=rd("vocab"),
             doc_norms=rd("doc_norms"),
             doc_meta=rd("doc_meta"),
         )
@@ -157,19 +156,12 @@ def build_all(
         df = weighted.join(term_stats, ["term", "field"]).join(
             doc_stats, ["doc_id", "field"]
         )
-        from ..operators.bm25 import bm25_contrib_col
-
-        contrib = None
-        for fld, (nd, avgdl) in stats.items():
-            c = bm25_contrib_col(cfg, nd, avgdl)
-            contrib = (
-                F.when(F.col("field") == fld, c)
-                if contrib is None
-                else contrib.when(F.col("field") == fld, c)
-            )
-        return df.withColumn("bm25_weight", contrib).withColumn(
+        # dl stays: the shard encoder bounds blocks by their (tf, dl) pairs
+        return df.withColumn(
+            "bm25_weight", ib.bm25_weight_col(cfg, stats)
+        ).withColumn(
             "bucket", F.pmod(term_hash60_col("term"), F.lit(n_buckets)).cast("int")
-        ).drop("dl")
+        )
 
     postings = stage(
         "postings", _weighted, input_fingerprint=fp,

@@ -1,4 +1,5 @@
-"""Driver-side reads of a few rows from the warehouse's parquet files.
+"""Driver-side reads of a few rows from the warehouse's parquet files
+(and the write of its one-row-per-field statistics table).
 
 A query needs two small reads besides its top-k job: the block-metadata
 rows of its first-seen terms (~20-50 rows) and its k result cards. As
@@ -16,10 +17,12 @@ the files the frame's Spark jobs would. Paths are URIs opened through
 
 from __future__ import annotations
 
+import os
 import re
 
 import pyarrow as pa
 import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 
@@ -73,3 +76,12 @@ def read_rows(files: list[str], columns: list[str], key: str, values) -> list[di
             if r[c] is not None:
                 r[c] = dict(r[c])
     return rows
+
+
+def write_table(path: str, table: pa.Table) -> None:
+    """Write ``table`` as the parquet file ``path`` (a URI or an
+    absolute path), replacing it: a one-row-per-field table needs no
+    Spark job."""
+    fs, p = pafs.FileSystem.from_uri(path)
+    fs.create_dir(os.path.dirname(p))
+    pq.write_table(table, p, filesystem=fs)

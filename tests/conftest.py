@@ -82,3 +82,12 @@ def dim_small(spark, corpus_small):
     doc_map = doc_dim.select(F.col("doc_idx").alias("doc_key"), "doc_id").cache()
     doc_map.count()
     return doc_dim, doc_map
+
+
+@pytest.fixture(scope="session")
+def stats_small(spark, index_small, dim_small):
+    """The live BM25 statistics of corpus_small over dim_small's keys:
+    what the shard paths score index_small's shards with."""
+    from spaghettisearch_spark.operators.index_build import collect_corpus_stats
+
+    return collect_corpus_stats(spark, index_small.doc_stats, dim_small[1])

@@ -77,14 +77,29 @@ def shard_engine(spark, docs_tiny, tmp_path_factory):
     )
 
 
-def _assert_matches_search(eng, cards, q, k):
-    """``cards`` rank like the exhaustive bm25.search over the engine's
-    own index and PageRank frame: equal doc_ids, scores and their parts
-    within rel 1e-9."""
+@pytest.fixture(scope="module")
+def ref_tiny(spark, docs_tiny):
+    """The exhaustive scorer's reference for engines built on docs_tiny:
+    a from-scratch index of the same documents, with their links."""
+    from spaghettisearch_spark.operators.index_build import build_index
+    from spaghettisearch_spark.operators.links import extract_links
+    from spaghettisearch_spark.sources.corpus import ingest
+
+    corpus = ingest(spark.createDataFrame(docs_tiny)).cache()
+    idx = build_index(corpus, links=extract_links(corpus).cache())
+    idx.postings.cache().count()
+    return idx
+
+
+def _assert_matches_search(eng, ref, cards, q, k):
+    """``cards`` rank like the exhaustive bm25.search over ``ref`` (a
+    from-scratch index of the engine's documents) and the engine's
+    PageRank frame: equal doc_ids, scores and their parts within rel
+    1e-9."""
     from spaghettisearch_spark.operators.bm25 import search
 
     want = search(
-        eng.spark, eng.index, q, eng.cfg, pagerank=eng.pagerank, k=k
+        eng.spark, ref, q, eng.cfg, pagerank=eng.pagerank, k=k
     ).collect()
     assert want, q
     assert [c["doc_id"] for c in cards] == [r["doc_id"] for r in want], q
@@ -96,7 +111,7 @@ def _assert_matches_search(eng, cards, q, k):
     return want
 
 
-def test_shard_backend_matches_memory(shard_engine):
+def test_shard_backend_matches_memory(shard_engine, ref_tiny):
     """The engine serves the FULL query surface from the compressed
     warehouse layout with results equal to the exhaustive bm25.search
     over its index: free terms, phrases, phrase+terms, the WAND path,
@@ -110,14 +125,11 @@ def test_shard_backend_matches_memory(shard_engine):
     ]
     for q, wand in queries:
         shd = shard_engine.query(q, k=5, use_wand=wand)
-        _assert_matches_search(shard_engine, shd, q, 5)
+        _assert_matches_search(shard_engine, ref_tiny, shd, q, 5)
     # an engine without posting shards fails loudly
     from spaghettisearch_spark.api import SearchEngine
 
-    eng2 = SearchEngine(
-        spark=shard_engine.spark, index=shard_engine.index,
-        cfg=shard_engine.cfg,
-    )
+    eng2 = SearchEngine(spark=shard_engine.spark, cfg=shard_engine.cfg)
     with pytest.raises(ValueError, match="posting shards"):
         eng2.query_df("parse")
 
@@ -133,8 +145,8 @@ def test_query_backend_memory_raises(engine):
 
 
 def test_build_rejects_non_bm25_scorer(spark, docs_tiny):
-    """The engine serves BM25 impact weights only: a tfidf_cosine build
-    raises before any Spark job runs."""
+    """The engine scores BM25 only: a tfidf_cosine build raises before
+    any Spark job runs."""
     from spaghettisearch_spark.api import SearchEngine
     from spaghettisearch_spark.config import EngineConfig
 
@@ -148,13 +160,14 @@ def test_build_rejects_non_bm25_scorer(spark, docs_tiny):
     assert n_jobs == 0
 
 
-def test_warehouse_engine_serves_and_compacts(spark, docs_tiny, tmp_path):
+def test_warehouse_engine_serves_and_compacts(
+    spark, docs_tiny, ref_tiny, tmp_path
+):
     """warehouse_dir: the engine serves every query from
     partitionBy("shard") parquet with results equal to the exhaustive
-    bm25.search, and the LSM maintenance methods rewrite only the
-    warehouse in place: apply_merge makes a delta segment searchable
-    (and tombstones deletable), refresh_stats with no drift leaves
-    results untouched."""
+    bm25.search, and apply_merge rewrites only the warehouse in place:
+    it makes a delta segment searchable (and tombstones deletable)
+    without moving unrelated queries."""
     from pyspark.sql import functions as F
 
     from spaghettisearch_spark.api import SearchEngine
@@ -174,7 +187,7 @@ def test_warehouse_engine_serves_and_compacts(spark, docs_tiny, tmp_path):
         ("dispatch", True),
     ]:
         wh_cards = eng.query(q, k=5, use_wand=wand, backend="shards")
-        _assert_matches_search(eng, wh_cards, q, 5)
+        _assert_matches_search(eng, ref_tiny, wh_cards, q, 5)
 
     # ---- apply_merge: a delta adding a brand-new term to two docs ----
     assert eng.query("qqnewsig", k=5, use_wand=True, backend="shards") == []
@@ -183,9 +196,9 @@ def test_warehouse_engine_serves_and_compacts(spark, docs_tiny, tmp_path):
         for r in eng.doc_map.orderBy("doc_key").limit(2).collect()
     ]
     delta_postings = spark.createDataFrame(
-        [("qqnewsig", "body", int(dk), 1, [0], 7.5) for dk in target],
+        [("qqnewsig", "body", int(dk), 1, [0], 1, 7.5) for dk in target],
         "term string, field string, doc_key long, tf int, "
-        "positions array<int>, weight double",
+        "positions array<int>, dl long, weight double",
     )
     delta = build_posting_shards(delta_postings, eng.n_docs, eng.cfg)
     before = {
@@ -217,14 +230,6 @@ def test_warehouse_engine_serves_and_compacts(spark, docs_tiny, tmp_path):
     eng.apply_merge(empty_delta, delete_postings=dels)
     left = eng.query("qqnewsig", k=5, use_wand=True, backend="shards")
     assert len(left) == 1
-
-    # ---- refresh_stats: nothing drifted for untouched terms ----
-    eng.refresh_stats(drift_threshold=0.5)
-    assert {
-        c["doc_id"]: c["final_rank"]
-        for c in eng.query("parse buffer", k=5, use_wand=True,
-                           backend="shards")
-    } == before
 
 
 def test_concurrent_queries_one_engine(spark, docs_small, tmp_path):
@@ -375,7 +380,7 @@ def test_apply_merge_guard_catches_unsampled_key_and_leaves_state_intact(
     ranked row silently vanished at hydration. A sample-complete block
     stores no metadata, so its key must be caught too. A rejected merge
     must also leave the engine unmutated (doc_map parquet not appended,
-    n_docs/doc_meta unchanged)."""
+    n_docs and the statistics unchanged)."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
@@ -391,18 +396,18 @@ def test_apply_merge_guard_catches_unsampled_key_and_leaves_state_intact(
     )
     n0 = eng.n_docs
     map_rows0 = eng.doc_map.count()
-    meta_rows0 = eng.index.doc_meta.count()
+    stats0 = eng.stats
     # one cold block, BLOCK_SAMPLE_N + 8 postings; the out-of-dimension
     # key gets the smallest weight so the top-N weight sample misses it
     n_post = BLOCK_SAMPLE_N + 8
     rows = [
-        ("qqguardterm", "body", int(k), 1, [1], 1.0)
+        ("qqguardterm", "body", int(k), 1, [1], 1, 1.0)
         for k in range(n_post - 1)
-    ] + [("qqguardterm", "body", int(n0 + 50), 1, [1], 0.001)]
+    ] + [("qqguardterm", "body", int(n0 + 50), 1, [1], 1, 0.001)]
     bad_postings = spark.createDataFrame(
         rows,
         "term string, field string, doc_key long, tf int, "
-        "positions array<int>, weight double",
+        "positions array<int>, dl long, weight double",
     )
     from dataclasses import replace as _replace
 
@@ -435,7 +440,7 @@ def test_apply_merge_guard_catches_unsampled_key_and_leaves_state_intact(
         # rejected merge left the engine untouched
         assert eng.n_docs == n0
         assert eng.doc_map.count() == map_rows0
-        assert eng.index.doc_meta.count() == meta_rows0
+        assert eng.stats is stats0
 
 
 def _spark_jobs(spark, group, fn):
@@ -460,7 +465,7 @@ def _job_stage_tasks(spark, group):
     ]
 
 
-def test_warehouse_query_is_one_job(spark, docs_tiny, tmp_path):
+def test_warehouse_query_is_one_job(spark, docs_tiny, ref_tiny, tmp_path):
     """A shard query runs exactly one Spark job, the top-k job: the
     driver reads the block metadata of first-seen terms and the k cards
     itself. That holds cold (cleared meta_cache) and warm, for a WAND
@@ -490,11 +495,11 @@ def test_warehouse_query_is_one_job(spark, docs_tiny, tmp_path):
             if wand:
                 assert _job_stage_tasks(spark, f"one-job-{i}-{run}") == [[1]]
         assert got["warm"] == got["cold"]
-        want = _assert_matches_search(eng, got["warm"], q, 5)
+        want = _assert_matches_search(eng, ref_tiny, got["warm"], q, 5)
         hydrated = {
             r["doc_id"]: r
             for r in search(
-                spark, eng.index, q, eng.cfg, pagerank=eng.pagerank, k=5,
+                spark, ref_tiny, q, eng.cfg, pagerank=eng.pagerank, k=5,
                 hydrate=True,
             ).collect()
         }
@@ -628,8 +633,8 @@ def _merge_batch(spark, eng, rows):
 
 
 def test_temp_warehouse_outlives_merge(spark, docs_small):
-    """An engine built without warehouse_dir serves, merges and
-    refreshes from its temporary warehouse. The directory outlives the
+    """An engine built without warehouse_dir serves and merges from its
+    temporary warehouse. The directory outlives the
     frames a merge replaces (the cards frame is re-read on append) and
     every dataclasses.replace copy, and goes with the last copy."""
     import gc
@@ -648,7 +653,6 @@ def test_temp_warehouse_outlives_merge(spark, docs_small):
     rows = [("rtmp", "zztmp.py", "c1", "python", "zztmpsig parse buffer")]
     delta, ext, nc = _merge_batch(spark, eng, rows)
     eng.apply_merge(delta, new_doc_map=ext, new_corpus=nc)
-    eng.refresh_stats(drift_threshold=0.5)
     gc.collect()
     hits = eng.query("zztmpsig", k=5, use_wand=True)
     assert [c["url"] for c in hits] == ["rtmp/zztmp.py"]
@@ -789,3 +793,113 @@ def test_concurrent_queries_across_merge(spark, docs_small, tmp_path):
     assert {phase for phase, _q, _g in results} == {"old", "new"}
     for phase, q, got in results:
         assert got == want[phase][q], (phase, q)
+
+
+def test_merged_docs_score_with_live_statistics(spark, tmp_path):
+    """After a merge, with no refresh of any kind, every query scores
+    with the merged corpus's statistics: an engine built on 200 docs
+    that merges docs 200-239 the way the benchmark's batch does ranks
+    like bm25.search over a from-scratch index of the 240 docs (doc ids,
+    scores within rel 1e-9) and like the pandas oracle (within 1e-6),
+    on both shard paths. The corpus has no links, so no anchor credit
+    crosses the batch boundary."""
+    import re
+
+    from spaghettisearch_spark.api import SearchEngine
+    from spaghettisearch_spark.fixtures import make_documents
+    from spaghettisearch_spark.operators.bm25 import search
+    from spaghettisearch_spark.operators.index_build import build_index
+    from spaghettisearch_spark.oracle.pandas_oracle import (
+        build_oracle_index,
+        oracle_search,
+    )
+    from spaghettisearch_spark.sources.corpus import ingest
+
+    docs = make_documents(300)[:240].copy()
+    docs["content"] = docs["content"].map(
+        lambda c: re.sub(r"@link\{[^}]*\}", "", c)
+    )
+    eng = SearchEngine.build(
+        spark, spark.createDataFrame(docs[:200]),
+        warehouse_dir=str(tmp_path / "wh"), with_pagerank=False,
+    )
+    delta, ext, nc = _merge_batch(
+        spark, eng, list(docs[200:].itertuples(index=False, name=None))
+    )
+    eng.apply_merge(delta, new_doc_map=ext, new_corpus=nc)
+    assert eng.n_docs == 240
+    assert set(eng.stats.n_docs.values()) == {240}
+
+    full = ingest(spark.createDataFrame(docs)).cache()
+    ref = build_index(full, eng.cfg)
+    oracle = build_oracle_index(docs, eng.cfg)
+    queries = ["parse buffer", "dispatch", "buffer flush", "sorted merge",
+               "parse", '"hash table" probe']
+    for q in queries:
+        want = search(spark, ref, q, eng.cfg, k=10).collect()
+        ora = oracle_search(oracle, q, eng.cfg, k=10)
+        assert [r["doc_id"] for r in want] == list(ora["doc_id"]), q
+        for use_wand in (True, False):
+            got = eng.query(q, k=10, use_wand=use_wand)
+            assert [c["doc_id"] for c in got] == [r["doc_id"] for r in want], (
+                q, use_wand,
+            )
+            for c, r, o in zip(got, want, ora["score"]):
+                assert c["final_rank"] == pytest.approx(r["score"], rel=1e-9)
+                assert c["title_rank"] == pytest.approx(
+                    r["title_rank"], rel=1e-9, abs=1e-12
+                )
+                assert c["body_rank"] == pytest.approx(
+                    r["body_rank"], rel=1e-9, abs=1e-12
+                )
+                assert c["final_rank"] == pytest.approx(o, abs=1e-6)
+    ref.unpersist()
+    full.unpersist()
+
+
+def test_merged_zipf_engine_skips_blocks_exactly(spark, tmp_path):
+    """On a Zipf corpus whose hot terms have sample-incomplete blocks,
+    an engine that merged a batch (no refresh) still skips blocks with
+    the impact bounds — the WAND plan keeps fewer blocks than it sees —
+    and ranks like the exhaustive shard path and like bm25.search over
+    a from-scratch index of the merged corpus."""
+    from pyspark.sql import functions as F
+
+    from spaghettisearch_spark.api import SearchEngine
+    from spaghettisearch_spark.config import EngineConfig
+    from spaghettisearch_spark.fixtures import make_zipf_documents
+    from spaghettisearch_spark.operators import wand as wand_mod
+    from spaghettisearch_spark.operators.bm25 import search
+    from spaghettisearch_spark.operators.compression import BLOCK_SAMPLE_N
+    from spaghettisearch_spark.operators.index_build import build_index
+    from spaghettisearch_spark.sources.corpus import ingest
+
+    cfg = EngineConfig(stem=False)
+    rows = [
+        (r["source"], str(r["doc_id"]), "HEAD", r["lang"], r["text"])
+        for r in make_zipf_documents(spark, 800, vocab_size=2000)
+        .orderBy("doc_id").collect()
+    ]
+    schema = (
+        "repo string, path string, commit string, lang string, "
+        "content string"
+    )
+    eng = SearchEngine.build(
+        spark, spark.createDataFrame(rows[:700], schema), cfg,
+        with_pagerank=False, warehouse_dir=str(tmp_path / "wh"),
+    )
+    delta, ext, nc = _merge_batch(spark, eng, rows[700:])
+    eng.apply_merge(delta, new_doc_map=ext, new_corpus=nc)
+    assert eng.shards.filter(F.col("df") > BLOCK_SAMPLE_N).count() > 0
+
+    ref = build_index(ingest(spark.createDataFrame(rows, schema)), cfg)
+    q = "zw00000 zw00001 zw00002"
+    got = eng.query(q, k=30, use_wand=True)
+    skip = dict(wand_mod.LAST_SKIP_STATS)
+    assert skip["kept"] < skip["total"], skip
+    exhaustive = eng.query(q, k=30, use_wand=False)
+    want = search(spark, ref, q, cfg, k=30).collect()
+    assert [c["doc_id"] for c in got] == [c["doc_id"] for c in exhaustive]
+    assert [c["doc_id"] for c in got] == [r["doc_id"] for r in want]
+    for c, r in zip(got, want):
+        assert c["final_rank"] == pytest.approx(r["score"], rel=1e-9)

@@ -3,9 +3,13 @@ asserted against the semantically-right oracle at EVERY stage:
 
   stream ingest -> serve segment 1
     -> extend_doc_dim + append-only segment 2 -> serve over 2 segments
-    -> re-drop changed docs -> tombstoned merge -> serve merged
-    -> refresh_shard_stats (full re-weight) == from-scratch CURRENT oracle
+    -> re-drop changed docs -> tombstoned merge -> serve merged, with no
+       refresh of any kind == from-scratch CURRENT oracle
     -> resort_index -> doc_id tie order restored, results unchanged.
+
+Every stage serves with the live statistics of its corpus (the shards
+store tfs, not weights), so every stage equals the exhaustive scorer
+over a from-scratch index of that corpus.
 
 The individual pieces are gated elsewhere (test_merge_shards,
 test_compaction, test_streaming); this walks the composed chain on the
@@ -25,12 +29,13 @@ from spaghettisearch_spark.operators.compression import (
     build_doc_dim,
     build_posting_shards,
     extend_doc_dim,
-    key_doc_stats,
     merge_posting_shards,
-    refresh_shard_stats,
     resort_index,
 )
-from spaghettisearch_spark.operators.index_build import build_index
+from spaghettisearch_spark.operators.index_build import (
+    build_index,
+    collect_corpus_stats,
+)
 from spaghettisearch_spark.operators.wand import wand_topk_from_shards
 from spaghettisearch_spark.streaming.ingest import (
     live_corpus,
@@ -40,10 +45,18 @@ from spaghettisearch_spark.streaming.ingest import (
 K = 20
 
 
-def _serve(spark, shards, dim, terms):
-    doc_map = dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
+def _map(dim):
+    return dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
+
+
+def _stats(spark, idx, dim):
+    """The live statistics of ``idx``'s corpus over ``dim``'s keys."""
+    return collect_corpus_stats(spark, idx.doc_stats, _map(dim))
+
+
+def _serve(spark, shards, dim, terms, stats):
     return wand_topk_from_shards(
-        spark, shards, doc_map, terms, DEFAULT, k=K
+        spark, shards, _map(dim), terms, DEFAULT, k=K, stats=stats
     ).collect()
 
 
@@ -83,15 +96,16 @@ def test_lsm_lifecycle_stream_to_resort(spark, tmp_path):
         idx1.postings, n1, DEFAULT, doc_dim=dim1, weight_col="bm25_weight"
     ).cache()
     seg1.count()
-    got_a = _serve(spark, seg1, dim1, terms)
+    got_a = _serve(spark, seg1, dim1, terms, _stats(spark, idx1, dim1))
     want_a = search(spark, idx1, "dispatch buffer", DEFAULT, k=K).collect()
     assert _ranked(got_a) == _ranked(want_a)
 
     # ---- stage B: 40 NEW docs arrive; extend the dim, append a
-    # segment, serve over BOTH segments before any compaction.
-    # Weight semantics at this stage: per-segment stored weights (the
-    # documented LSM trade), so the oracle is a from-scratch build of
-    # the same mixed-stats postings — not the current-stats index. ----
+    # segment, serve over BOTH segments before any compaction, with the
+    # grown corpus's statistics: segment 1's blocks need no re-encode to
+    # score like the current-stats index. Tie ORDER may differ: dim2 is
+    # extend-appended, so dense-key ties rank by segment age until the
+    # re-sort (stage D). ----
     spark.createDataFrame(docs.iloc[80:]).coalesce(1).write.mode(
         "append"
     ).parquet(in_dir)
@@ -111,22 +125,14 @@ def test_lsm_lifecycle_stream_to_resort(spark, tmp_path):
     ).cache()
     seg2.count()
     two_seg = seg1.unionByName(seg2)
-    got_b = _serve(spark, two_seg, dim2, terms)
-    mixed = (
-        idx1.postings.withColumn("weight", F.col("bm25_weight"))
-        .select("term", "field", "doc_id", "tf", "positions", "weight")
-        .unionByName(
-            delta2.withColumn("weight", F.col("bm25_weight")).select(
-                "term", "field", "doc_id", "tf", "positions", "weight"
-            )
-        )
-    )
-    ref_b = build_posting_shards(mixed, n2, DEFAULT, doc_dim=dim2)
-    want_b = _serve(spark, ref_b, dim2, terms)
-    assert _ranked(got_b) == _ranked(want_b)
+    got_b = _serve(spark, two_seg, dim2, terms, _stats(spark, idx2, dim2))
+    want_b = search(spark, idx2, "dispatch buffer", DEFAULT, k=K).collect()
+    assert _norm(got_b) == _norm(want_b)
 
     # ---- stage C: 5 docs change and RE-DROP through the stream; the
-    # re-crawl delta merges in with tombstones for the stale postings ----
+    # re-crawl delta merges in with tombstones for the stale postings,
+    # and with no refresh the merged shards serve like the from-scratch
+    # CURRENT-stats oracle ----
     changed = docs.iloc[:5].copy()
     changed["content"] = changed["content"] + " dispatch freshsig"
     spark.createDataFrame(changed).coalesce(1).write.mode("append").parquet(
@@ -160,53 +166,31 @@ def test_lsm_lifecycle_stream_to_resort(spark, tmp_path):
         n2, DEFAULT, doc_dim=dim2, weight_col="bm25_weight",
     ).cache()
     delta3.count()
+    stats3 = _stats(spark, idx3, dim2)
     merged = merge_posting_shards(
-        two_seg, delta3, n2, DEFAULT, delete_postings=tomb
+        two_seg, delta3, n2, DEFAULT, delete_postings=tomb, stats=stats3,
     ).cache()
     merged.count()
-    got_c = _serve(spark, merged, dim2, terms)
-    # mixed-stats oracle: unchanged old docs keep idx1 weights, batch-2
-    # docs keep idx2 weights, changed docs carry idx3 (current) weights
-    mixed_c = (
-        mixed.join(changed_ids, "doc_id", "left_anti")
-        .unionByName(
-            idx3.postings.join(changed_ids, "doc_id", "left_semi")
-            .withColumn("weight", F.col("bm25_weight"))
-            .select("term", "field", "doc_id", "tf", "positions", "weight")
-        )
-    )
-    ref_c = build_posting_shards(mixed_c, n2, DEFAULT, doc_dim=dim2)
-    want_c = _serve(spark, ref_c, dim2, terms)
-    assert _ranked(got_c) == _ranked(want_c)
+    got_c = _serve(spark, merged, dim2, terms, stats3)
+    want_c = search(spark, idx3, "dispatch buffer", DEFAULT, k=K).collect()
+    assert _norm(got_c) == _norm(want_c)
 
-    # ---- stage D: stats refresh (full re-weight) — NOW the served
-    # results must equal the from-scratch CURRENT-stats oracle. Tie
-    # ORDER may differ: dim2 is extend-appended, so dense-key ties rank
-    # by segment age until the re-sort (stage E). ----
-    refreshed = refresh_shard_stats(
-        merged, idx3.term_stats, key_doc_stats(idx3.doc_stats, dim2),
-        idx3.corpus_stats.collect(), DEFAULT, drift_threshold=0.0,
-    ).cache()
-    refreshed.count()
-    got_d = _serve(spark, refreshed, dim2, terms)
-    want_d = search(spark, idx3, "dispatch buffer", DEFAULT, k=K).collect()
-    assert _norm(got_d) == _norm(want_d)
-
-    # ---- stage E: dim re-sort restores doc_id tie order — full rank
+    # ---- stage D: dim re-sort restores doc_id tie order — full rank
     # equality with the from-scratch oracle, scores unchanged ----
-    dim3, sorted_shards = resort_index(refreshed, dim2, DEFAULT)
+    dim3, sorted_shards = resort_index(merged, dim2, DEFAULT, stats=stats3)
     dim3.cache()
     sorted_shards = sorted_shards.cache()
     sorted_shards.count()
-    got_e = _serve(spark, sorted_shards, dim3, terms)
-    assert _ranked(got_e) == _ranked(want_d)
+    stats_sorted = _stats(spark, idx3, dim3)
+    got_d = _serve(spark, sorted_shards, dim3, terms, stats_sorted)
+    assert _ranked(got_d) == _ranked(want_c)
     # the fixture's identical doc pair must tie-break by doc_id on the
     # re-sorted dim exactly as the exhaustive path does
     tie_terms, _ = parse_query("sorted merge")
-    got_tie = _serve(spark, sorted_shards, dim3, tie_terms)
+    got_tie = _serve(spark, sorted_shards, dim3, tie_terms, stats_sorted)
     want_tie = search(spark, idx3, "sorted merge", DEFAULT, k=K).collect()
     assert _ranked(got_tie) == _ranked(want_tie)
 
-    for df_ in (dim1, dim2, dim3, seg1, seg2, delta3, merged, refreshed,
+    for df_ in (dim1, dim2, dim3, seg1, seg2, delta3, merged,
                 sorted_shards, changed_ids):
         df_.unpersist()

@@ -21,18 +21,19 @@ from spaghettisearch_spark.operators.compression import (
 
 def _decoded_set(spark, shards):
     return {
-        (r["term"], r["field"], r["doc_key"], r["tf"],
-         round(r["weight"], 9), tuple(r["positions"]))
+        (r["term"], r["field"], r["doc_key"], r["tf"], tuple(r["positions"]))
         for r in decode_shards(shards).collect()
     }
 
 
-def test_merge_equals_scratch_build(spark, corpus_small, index_small, dim_small):
+def test_merge_equals_scratch_build(
+    spark, corpus_small, index_small, dim_small, stats_small
+):
     n_docs = corpus_small.count()
     doc_dim, _ = dim_small
     postings = index_small.postings.withColumn(
         "weight", F.col("bm25_weight")
-    ).select("term", "field", "doc_id", "tf", "positions", "weight").cache()
+    ).select("term", "field", "doc_id", "tf", "positions", "dl", "weight").cache()
 
     # pick ~20% of docs as the "changed" segment
     changed_ids = (
@@ -64,7 +65,8 @@ def test_merge_equals_scratch_build(spark, corpus_small, index_small, dim_small)
     )
 
     merged = merge_posting_shards(
-        base, delta, n_docs, DEFAULT, delete_postings=tombstones
+        base, delta, n_docs, DEFAULT, delete_postings=tombstones,
+        stats=stats_small,
     ).cache()
     scratch = build_posting_shards(
         postings, n_docs, DEFAULT, doc_dim=doc_dim
@@ -83,16 +85,19 @@ def test_merge_equals_scratch_build(spark, corpus_small, index_small, dim_small)
     untouched_base = base.join(touched, ["term", "field"], "left_anti")
     untouched_merged = merged.join(touched, ["term", "field"], "left_anti")
     key = lambda r: (r["term"], r["field"], r["salt"])
-    blocks_b = {key(r): (bytes(r["doc_ids"]), bytes(r["tfs"]), bytes(r["weights"]))
+    payload = ("doc_ids", "tfs", "positions")
+    blocks_b = {key(r): tuple(bytes(r[c]) for c in payload)
                 for r in untouched_base.collect()}
-    blocks_m = {key(r): (bytes(r["doc_ids"]), bytes(r["tfs"]), bytes(r["weights"]))
+    blocks_m = {key(r): tuple(bytes(r[c]) for c in payload)
                 for r in untouched_merged.collect()}
     assert blocks_b and blocks_b == blocks_m
     for df_ in (base, delta, merged, scratch, postings, changed_ids, stale):
         df_.unpersist()
 
 
-def test_merge_salt_reclassification(spark, corpus_small, index_small, dim_small):
+def test_merge_salt_reclassification(
+    spark, corpus_small, index_small, dim_small, stats_small
+):
     """A term pushed over the hot-df threshold BY the delta gets salted
     at merge time (re-encoded groups re-derive salt from merged df)."""
     import spaghettisearch_spark.config as config_mod
@@ -101,7 +106,7 @@ def test_merge_salt_reclassification(spark, corpus_small, index_small, dim_small
     doc_dim, _ = dim_small
     postings = index_small.postings.withColumn(
         "weight", F.col("bm25_weight")
-    ).select("term", "field", "doc_id", "tf", "positions", "weight")
+    ).select("term", "field", "doc_id", "tf", "positions", "dl", "weight")
     # synthetic cold term in base (1 doc), delta adds it to EVERY doc
     one = postings.limit(1).withColumn("term", F.lit("zzrare"))
     base = build_posting_shards(
@@ -113,10 +118,13 @@ def test_merge_salt_reclassification(spark, corpus_small, index_small, dim_small
         .withColumn("field", F.lit("body"))
         .withColumn("tf", F.lit(1))
         .withColumn("positions", F.array(F.lit(0)))
+        .withColumn("dl", F.lit(1))
         .withColumn("weight", F.lit(1.0))
     )
     delta = build_posting_shards(everywhere, n_docs, DEFAULT, doc_dim=doc_dim)
-    merged = merge_posting_shards(base, delta, n_docs, DEFAULT)
+    merged = merge_posting_shards(
+        base, delta, n_docs, DEFAULT, stats=stats_small
+    )
     salts = {
         r["salt"]
         for r in merged.filter(F.col("term") == "zzrare").collect()
@@ -124,7 +132,9 @@ def test_merge_salt_reclassification(spark, corpus_small, index_small, dim_small
     assert len(salts) > 1  # hot now -> salted into multiple blocks
 
 
-def test_merge_partitions_only(spark, corpus_small, index_small, dim_small):
+def test_merge_partitions_only(
+    spark, corpus_small, index_small, dim_small, stats_small
+):
     """partitions_only: the dynamic-partition-overwrite write set. Must
     equal the full merge restricted to the delta's shard partitions, and
     contain no rows from untouched partitions."""
@@ -132,7 +142,7 @@ def test_merge_partitions_only(spark, corpus_small, index_small, dim_small):
     doc_dim, _ = dim_small
     postings = index_small.postings.withColumn(
         "weight", F.col("bm25_weight")
-    ).select("term", "field", "doc_id", "tf", "positions", "weight")
+    ).select("term", "field", "doc_id", "tf", "positions", "dl", "weight")
     one_doc = postings.join(
         corpus_small.select("doc_id").orderBy("doc_id").limit(1), "doc_id"
     )
@@ -147,9 +157,12 @@ def test_merge_partitions_only(spark, corpus_small, index_small, dim_small):
     ids = {r[0] for r in delta.select("shard").distinct().collect()}
     assert ids and len(ids) < DEFAULT.n_shards  # a real subset
 
-    full = merge_posting_shards(base, delta, n_docs, DEFAULT).cache()
+    full = merge_posting_shards(
+        base, delta, n_docs, DEFAULT, stats=stats_small
+    ).cache()
     part = merge_posting_shards(
-        base, delta, n_docs, DEFAULT, partitions_only=True
+        base, delta, n_docs, DEFAULT, partitions_only=True,
+        stats=stats_small,
     ).cache()
     assert {r[0] for r in part.select("shard").distinct().collect()} <= ids
     want = _decoded_set(spark, full.filter(F.col("shard").isin(list(ids))))
@@ -159,7 +172,9 @@ def test_merge_partitions_only(spark, corpus_small, index_small, dim_small):
         df_.unpersist()
 
 
-def test_merge_sequential_folds(spark, corpus_small, index_small, dim_small):
+def test_merge_sequential_folds(
+    spark, corpus_small, index_small, dim_small, stats_small
+):
     """Streaming-maintenance shape: fold micro-batch segments into the
     standing shards one merge at a time. Batch 3 re-updates docs first
     seen (stale) in batch 1, with tombstones, ACROSS an intervening
@@ -169,7 +184,7 @@ def test_merge_sequential_folds(spark, corpus_small, index_small, dim_small):
     doc_dim, _ = dim_small
     postings = index_small.postings.withColumn(
         "weight", F.col("bm25_weight")
-    ).select("term", "field", "doc_id", "tf", "positions", "weight").cache()
+    ).select("term", "field", "doc_id", "tf", "positions", "dl", "weight").cache()
 
     ids = [r["doc_id"] for r in
            corpus_small.select("doc_id").orderBy("doc_id").collect()]
@@ -195,10 +210,12 @@ def test_merge_sequential_folds(spark, corpus_small, index_small, dim_small):
         "term", "field", F.col("doc_idx").alias("doc_key")
     )
 
-    fold1 = merge_posting_shards(s1, s2, n_docs, DEFAULT).cache()
+    fold1 = merge_posting_shards(
+        s1, s2, n_docs, DEFAULT, stats=stats_small
+    ).cache()
     fold1.count()
     folded = merge_posting_shards(
-        fold1, s3, n_docs, DEFAULT, delete_postings=tomb,
+        fold1, s3, n_docs, DEFAULT, delete_postings=tomb, stats=stats_small,
     )
     scratch = build_posting_shards(postings, n_docs, DEFAULT, doc_dim=doc_dim)
     assert _decoded_set(spark, folded) == _decoded_set(spark, scratch)
@@ -206,7 +223,9 @@ def test_merge_sequential_folds(spark, corpus_small, index_small, dim_small):
         df_.unpersist()
 
 
-def test_query_over_unmerged_segments(spark, corpus_small, index_small, dim_small):
+def test_query_over_unmerged_segments(
+    spark, corpus_small, index_small, dim_small, stats_small
+):
     """LSM read path: an append-only delta segment serves BEFORE
     compaction — WAND over the UNION of segment frames equals WAND over
     the merged shards (segments are doc-disjoint, so no posting is
@@ -220,7 +239,7 @@ def test_query_over_unmerged_segments(spark, corpus_small, index_small, dim_smal
     doc_dim, doc_map = dim_small
     postings = index_small.postings.withColumn(
         "weight", F.col("bm25_weight")
-    ).select("term", "field", "doc_id", "tf", "positions", "weight").cache()
+    ).select("term", "field", "doc_id", "tf", "positions", "dl", "weight").cache()
     seg = F.pmod(F.xxhash64("doc_id"), F.lit(5))
     base = build_posting_shards(
         postings.filter(seg != 0), n_docs, DEFAULT, doc_dim=doc_dim
@@ -228,15 +247,19 @@ def test_query_over_unmerged_segments(spark, corpus_small, index_small, dim_smal
     delta = build_posting_shards(
         postings.filter(seg == 0), n_docs, DEFAULT, doc_dim=doc_dim
     ).cache()
-    merged = merge_posting_shards(base, delta, n_docs, DEFAULT).cache()
+    merged = merge_posting_shards(
+        base, delta, n_docs, DEFAULT, stats=stats_small
+    ).cache()
     union = base.unionByName(delta)
     for query in ["parse buffer flush", "dispatch"]:
         terms, _ = parse_query(query)
         a = wand_topk_from_shards(
-            spark, union, doc_map, terms, DEFAULT, k=15
+            spark, union, doc_map, terms, DEFAULT, k=15,
+            stats=stats_small,
         ).collect()
         b = wand_topk_from_shards(
-            spark, merged, doc_map, terms, DEFAULT, k=15
+            spark, merged, doc_map, terms, DEFAULT, k=15,
+            stats=stats_small,
         ).collect()
         assert [r["doc_id"] for r in a] == [r["doc_id"] for r in b], query
         for x, y in zip(a, b):
@@ -245,7 +268,9 @@ def test_query_over_unmerged_segments(spark, corpus_small, index_small, dim_smal
         df_.unpersist()
 
 
-def test_recrawl_chain_equals_scratch(spark, corpus_small, index_small, dim_small):
+def test_recrawl_chain_equals_scratch(
+    spark, corpus_small, index_small, dim_small, stats_small
+):
     """The composed incremental path (the reference's checkAndUpdate
     analog, indexer.go:420-641): a base index holding STALE versions of
     ~20% of docs (perturbed content incl. a vanished term) is repaired
@@ -275,16 +300,16 @@ def test_recrawl_chain_equals_scratch(spark, corpus_small, index_small, dim_smal
     stale_corpus = ingest(stale_raw).cache()
     stale_postings = build_postings(
         tokenize_fields(stale_corpus.join(changed_ids, "doc_id", "left_semi"))
-    ).withColumn("weight", F.lit(1.0)).cache()
+    ).withColumn("dl", F.lit(1)).withColumn("weight", F.lit(1.0)).cache()
     true_keep = (
         index_small.postings.join(changed_ids, "doc_id", "left_anti")
         .withColumn("weight", F.col("bm25_weight"))
-        .select("term", "field", "doc_id", "tf", "positions", "weight")
+        .select("term", "field", "doc_id", "tf", "positions", "dl", "weight")
     )
     base = build_posting_shards(
         true_keep.unionByName(
             stale_postings.select(
-                "term", "field", "doc_id", "tf", "positions", "weight"
+                "term", "field", "doc_id", "tf", "positions", "dl", "weight"
             )
         ),
         n_docs, DEFAULT, doc_dim=doc_dim,
@@ -301,18 +326,19 @@ def test_recrawl_chain_equals_scratch(spark, corpus_small, index_small, dim_smal
         index_small.postings
         .join(changed.select("doc_id"), "doc_id", "left_semi")
         .withColumn("weight", F.col("bm25_weight"))
-        .select("term", "field", "doc_id", "tf", "positions", "weight"),
+        .select("term", "field", "doc_id", "tf", "positions", "dl", "weight"),
         n_docs, DEFAULT, doc_dim=doc_dim,
     ).cache()
     tombstones = stale_postings.join(doc_dim, "doc_id").select(
         "term", "field", F.col("doc_idx").alias("doc_key")
     )
     merged = merge_posting_shards(
-        base, delta, n_docs, DEFAULT, delete_postings=tombstones
+        base, delta, n_docs, DEFAULT, delete_postings=tombstones,
+        stats=stats_small,
     )
     scratch = build_posting_shards(
         index_small.postings.withColumn("weight", F.col("bm25_weight"))
-        .select("term", "field", "doc_id", "tf", "positions", "weight"),
+        .select("term", "field", "doc_id", "tf", "positions", "dl", "weight"),
         n_docs, DEFAULT, doc_dim=doc_dim,
     )
     assert _decoded_set(spark, merged) == _decoded_set(spark, scratch)

@@ -9,7 +9,9 @@ from spaghettisearch_spark.config import DEFAULT
 from spaghettisearch_spark.functions.tokenize import parse_query
 
 
-def test_phrase_from_shards(spark, corpus_small, index_small, dim_small):
+def test_phrase_from_shards(
+    spark, corpus_small, index_small, dim_small, stats_small
+):
     from spaghettisearch_spark.operators.compression import build_posting_shards
     from spaghettisearch_spark.operators.phrase import (
         phrase_matches,
@@ -33,7 +35,7 @@ def test_phrase_from_shards(spark, corpus_small, index_small, dim_small):
     got = {
         (r["doc_id"], r["field"]): (r["contrib"], r["n_matches"])
         for r in phrase_matches_from_shards(
-            spark, shards, doc_map, phrase, DEFAULT
+            spark, shards, doc_map, phrase, DEFAULT, stats=stats_small
         ).collect()
     }
     assert set(got) == set(want)

@@ -100,7 +100,7 @@ def test_broadcast_in_query_join(spark, wh_index):
 
 
 def test_dense_shard_hydration_is_broadcast(
-    spark, corpus_small, index_small, dim_small, tmp_path
+    spark, corpus_small, index_small, dim_small, stats_small, tmp_path
 ):
     """Dense-key shard path: the post-top-k doc_id hydration joins the
     k-row kernel output under an explicit broadcast hint — the
@@ -129,7 +129,7 @@ def test_dense_shard_hydration_is_broadcast(
             spark,
             wand_topk_from_shards(
                 spark, shards, doc_map, ["pars", "buffer"], DEFAULT,
-                k=10,
+                k=10, stats=stats_small,
             ),
         )
     finally:
@@ -139,7 +139,7 @@ def test_dense_shard_hydration_is_broadcast(
 
 
 def test_shard_scan_partition_prunes(
-    spark, corpus_small, index_small, dim_small, tmp_path
+    spark, corpus_small, index_small, dim_small, stats_small, tmp_path
 ):
     """North-rule storage layout: posting shards written
     partitionBy("shard") must partition-prune to the query terms' shard
@@ -158,7 +158,8 @@ def test_shard_scan_partition_prunes(
     plan = _formatted_plan(
         spark,
         wand_topk_from_shards(
-            spark, shards, doc_map, ["pars"], DEFAULT, k=10
+            spark, shards, doc_map, ["pars"], DEFAULT, k=10,
+            stats=stats_small,
         ),
     )
     assert re.search(r"PartitionFilters:.*shard#\d+ (=|IN)", plan), (
@@ -168,22 +169,23 @@ def test_shard_scan_partition_prunes(
     assert re.search(
         r"PushedFilters:.*(In|EqualTo)\(term", plan
     ), "term filter not pushed"
-    # fields=("weight",) decode (the term-bag path): the position streams
-    # and tfs must be pruned OFF the parquet scan — a term query never
-    # reads them (README "non-phrase queries never read the positions
-    # column", now enforced at the shard layout too)
+    # fields=("weight",) decode (the term-bag path): the weights come
+    # from the tf stream, and the position streams must be pruned OFF
+    # the parquet scan — a term query never reads them (README
+    # "non-phrase queries never read the positions column", now enforced
+    # at the shard layout too)
     scan_lines = [
         l for l in plan.splitlines() if "ReadSchema" in l
     ]
     assert scan_lines, "no ReadSchema in plan"
     for l in scan_lines:
-        assert "positions" not in l and "pos_lens" not in l and "tfs" not in l, (
+        assert "positions" not in l and "pos_lens" not in l, (
             "term-bag shard scan reads unneeded payload streams:\n" + l
         )
 
 
 def test_dense_phrase_serving_defers_doc_map(
-    spark, corpus_small, index_small, dim_small, tmp_path
+    spark, corpus_small, index_small, dim_small, stats_small, tmp_path
 ):
     """Dense-key search_from_shards (free terms + a phrase): scoring and
     position intersection run on long keys, and the corpus-sized
@@ -210,7 +212,7 @@ def test_dense_phrase_serving_defers_doc_map(
             spark,
             search_from_shards(
                 spark, shards, doc_map, '"hash table" parse', DEFAULT,
-                k=10,
+                k=10, stats=stats_small,
             ),
         )
     finally:

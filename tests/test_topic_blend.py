@@ -122,7 +122,7 @@ def test_engine_facade_topic_query(spark):
     assert len(cards) == 2
     assert {c["doc_id"] for c in cards} == {ids["x"], ids["y"]}
     with pytest.raises(ValueError):
-        SearchEngine(spark=spark, index=eng.index).query_df("needle", topic="nope")
+        SearchEngine(spark=spark).query_df("needle", topic="nope")
 
 
 def test_engine_topic_query_shards_backend(spark, tmp_path):
@@ -135,6 +135,7 @@ def test_engine_topic_query_shards_backend(spark, tmp_path):
     topic), interleaved so cache reuse across topics would be
     exposed."""
     from spaghettisearch_spark.api import SearchEngine
+    from spaghettisearch_spark.operators.index_build import build_index
     from spaghettisearch_spark.operators.wand import _PR_MAX_KEY
 
     corpus, links, ids = _mini_corpus(spark)
@@ -149,9 +150,12 @@ def test_engine_topic_query_shards_backend(spark, tmp_path):
         spark, raw, DEFAULT, with_pagerank=True, topics=topics,
         warehouse_dir=str(tmp_path / "wh"),
     )
+    # the exhaustive reference: a from-scratch index of the same corpus,
+    # built the way the engine builds its shards
+    ref = build_index(corpus, DEFAULT, links=extract_links(corpus))
     for topic in ("small", "big", "small", None, "big"):
         want = search(
-            spark, eng.index, "needle", DEFAULT, k=3,
+            spark, ref, "needle", DEFAULT, k=3,
             pagerank=eng.pagerank if topic is None else None,
             topic_pagerank=eng.topic_pagerank, topic=topic,
         ).collect()

@@ -44,9 +44,9 @@ def test_delta_vb_roundtrip_sorted(xs):
 
 
 def test_shard_roundtrip_spark(spark, corpus_tiny):
-    """build shards -> decode -> identical (term, field, doc, tf, weight,
+    """build shards -> decode -> identical (term, field, doc, tf,
     positions) multiset as the uncompressed postings; postings with no
-    doc_key and no doc_dim are refused."""
+    doc_key and no doc_dim, or with no doc length, are refused."""
     from pyspark.sql import functions as F
 
     from spaghettisearch_spark.operators.compression import (
@@ -61,6 +61,8 @@ def test_shard_roundtrip_spark(spark, corpus_tiny):
     with pytest.raises(ValueError, match="doc_dim"):
         build_posting_shards(idx.postings, n_docs)
     dim = build_doc_dim(corpus_tiny).cache()
+    with pytest.raises(ValueError, match="dl"):
+        build_posting_shards(idx.postings.drop("dl"), n_docs, doc_dim=dim)
     shards = build_posting_shards(idx.postings, n_docs, doc_dim=dim)
     decoded = decode_shards(shards)
 
@@ -69,12 +71,9 @@ def test_shard_roundtrip_spark(spark, corpus_tiny):
         "field",
         F.col("doc_idx").alias("doc_key"),
         F.col("tf").cast("int").alias("tf"),
-        F.round("weight", 9).alias("weight"),
         F.col("positions").cast("array<int>").alias("positions"),
     )
-    got = decoded.select(
-        "term", "field", "doc_key", "tf", F.round("weight", 9).alias("weight"), "positions"
-    )
+    got = decoded.select("term", "field", "doc_key", "tf", "positions")
     assert got.count() == orig.count()
     assert got.exceptAll(orig).count() == 0
     assert orig.exceptAll(got).count() == 0
@@ -110,10 +109,11 @@ def test_shard_roundtrip_spark(spark, corpus_tiny):
 )
 def test_shard_roundtrip_property(spark, postings_spec):
     """Property: build_posting_shards ∘ decode_shards is the identity on
-    arbitrary posting sets — random term/doc/tf/positions/weight combos,
-    including empty position lists, duplicate (term, doc) rows collapsed
-    to one (the builder's input contract), and weight ties that push
-    groups onto the doc-key salt fallback."""
+    arbitrary posting sets — random term/doc/tf/positions combos under
+    random encode-time order weights, including empty position lists,
+    duplicate (term, doc) rows collapsed to one (the builder's input
+    contract), and weight ties that push groups onto the doc-key salt
+    fallback."""
     from spaghettisearch_spark.config import DEFAULT
     from spaghettisearch_spark.operators.compression import (
         build_posting_shards,
@@ -124,13 +124,13 @@ def test_shard_roundtrip_property(spark, postings_spec):
     for t, d, tf, pos, w in postings_spec:
         seen[(f"t{t}", f"doc{d:03d}")] = (tf, sorted(set(pos)), round(w, 6))
     rows = [
-        (term, "body", doc, tf, pos, w)
+        (term, "body", doc, tf, pos, 10, w)
         for (term, doc), (tf, pos, w) in seen.items()
     ]
     pdf = spark.createDataFrame(
         rows,
         "term string, field string, doc_id string, tf int, "
-        "positions array<int>, weight double",
+        "positions array<int>, dl long, weight double",
     )
     # the dense doc_idx of sorted doc ids doc000..doc060 is the number
     dim = spark.createDataFrame(
@@ -138,15 +138,15 @@ def test_shard_roundtrip_property(spark, postings_spec):
     )
     shards = build_posting_shards(pdf, 61, DEFAULT, doc_dim=dim)
     got = {
-        (r["term"], r["doc_key"], r["tf"], round(r["weight"], 6),
-         tuple(r["positions"]))
+        (r["term"], r["doc_key"], r["tf"], tuple(r["positions"]))
         for r in decode_shards(shards).collect()
     }
     want = {
-        (term, int(doc[3:]), tf, w, tuple(pos))
-        for (term, doc), (tf, pos, w) in seen.items()
+        (term, int(doc[3:]), tf, tuple(pos))
+        for (term, doc), (tf, pos, _w) in seen.items()
     }
     assert got == want
+
 
 def test_absolute_block_bound(spark):
     """``block_target_postings`` bounds every encode group ABSOLUTELY
@@ -158,11 +158,10 @@ def test_absolute_block_bound(spark):
     layout is identical to the unbounded one."""
     from dataclasses import replace
 
-    from pyspark.sql import functions as F
+    from synthetic import synthetic_shards
 
     from spaghettisearch_spark.config import DEFAULT
     from spaghettisearch_spark.operators.compression import (
-        build_doc_dim,
         build_posting_shards,
         decode_shards,
     )
@@ -170,28 +169,14 @@ def test_absolute_block_bound(spark):
 
     n = 2000
     docs = [f"d{i:05d}" for i in range(n)]
-    rows = [
-        ("hh", "body", d, 1, [0], 1.0 + i * 0.001)  # hot: df == n
-        for i, d in enumerate(docs)
-    ]
-    rows += [
-        ("cc", "body", d, 1, [1], 5.0 + i * 0.01)  # cold but > target
-        for i, d in enumerate(docs[:150])
-    ]
-    rows += [("ss", "body", d, 1, [2], 9.0) for d in docs[:10]]  # small
-    postings = spark.createDataFrame(
-        rows,
-        "term string, field string, doc_id string, tf int, "
-        "positions array<int>, weight double",
-    )
-    dim = build_doc_dim(
-        spark.createDataFrame([(d,) for d in docs], "doc_id string")
-    ).cache()
-    dim.count()
+    rows = [("hh", "body", d, 1) for d in docs]  # hot: df == n
+    rows += [("cc", "body", d, 2) for d in docs[:150]]  # cold but > target
+    rows += [("ss", "body", d, 3) for d in docs[:10]]  # small
+    # varied lengths give the hot term distinct quantile bounds
+    dl = {"body": {d: 10 + i % 97 for i, d in enumerate(docs)}}
     cfg = replace(DEFAULT, block_target_postings=32)
-    shards = build_posting_shards(
-        postings, n, cfg, doc_dim=dim, weight_col="weight"
-    ).cache()
+    fx = synthetic_shards(spark, rows, dl, cfg)
+    shards = fx.shards
     meta = shards.select("term", "field", "salt", "df").collect()
     by_term: dict = {}
     for r in meta:
@@ -206,44 +191,33 @@ def test_absolute_block_bound(spark):
     assert max(by_term["cc"]) <= 2 * 32, max(by_term["cc"])
     # round-trip: decoded multiset == input
     got = {
-        (r["term"], r["doc_key"], r["tf"], round(r["weight"], 6),
-         tuple(r["positions"]))
+        (r["term"], r["doc_key"], r["tf"], tuple(r["positions"]))
         for r in decode_shards(shards).collect()
     }
-    idx_of = {
-        r["doc_id"]: r["doc_idx"] for r in dim.collect()
-    }
-    want = {
-        (t, idx_of[d], tf, round(w, 6), tuple(p))
-        for t, _f, d, tf, p, w in rows
-    }
+    idx_of = {r["doc_id"]: r["doc_idx"] for r in fx.dim.collect()}
+    want = {(t, idx_of[d], tf, (0,)) for t, _f, d, tf in rows}
     assert got == want
     # WAND over sub-split blocks == python oracle
-    doc_map = dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
     res = wand_topk_from_shards(
-        spark, shards, doc_map, ["hh", "cc"], cfg, k=5
+        spark, shards, fx.doc_map, ["hh", "cc", "ss"], cfg, k=5,
+        stats=fx.stats,
     ).collect()
-    score: dict = {}
-    for t, _f, d, _tf, _p, w in rows:
-        if t in ("hh", "cc"):
-            score[d] = score.get(d, 0.0) + cfg.w_body * cfg.blend_scale * w
-    top = sorted(score.items(), key=lambda kv: (-kv[1], kv[0]))[:5]
-    assert [r["doc_id"] for r in res] == [d for d, _ in top]
+    assert [r["doc_id"] for r in res] == [d for d, _ in fx.ranked[:5]]
+    for r, (_d, s) in zip(res, fx.ranked):
+        assert r["score"] == pytest.approx(s, rel=1e-9)
     # default target: sub == 1 everywhere here -> layout identical to a
     # build with the bound effectively off
-    base = build_posting_shards(
-        postings, n, DEFAULT, doc_dim=dim, weight_col="weight"
-    )
+    base = build_posting_shards(fx.postings, n, DEFAULT, doc_dim=fx.dim)
     huge = build_posting_shards(
-        postings, n, replace(DEFAULT, block_target_postings=1 << 40),
-        doc_dim=dim, weight_col="weight",
+        fx.postings, n, replace(DEFAULT, block_target_postings=1 << 40),
+        doc_dim=fx.dim,
     )
     key = lambda df_: sorted(
         (r["term"], r["field"], int(r["salt"]), int(r["df"]))
         for r in df_.select("term", "field", "salt", "df").collect()
     )
     assert key(base) == key(huge)
-    dim.unpersist()
+    fx.dim.unpersist()
     shards.unpersist()
 
 
@@ -262,7 +236,7 @@ def test_decode_chunk_of_60bit_hash_key_blocks(spark):
     for t in range(40):
         keys = np.unique(rng.integers(1 << 59, 1 << 60, size=5))
         rows += [
-            (f"term{t}", "body", int(dk), 1, [0], 1.0 + i)
+            (f"term{t}", "body", int(dk), 1, [0], 10, 1.0 + i)
             for i, dk in enumerate(keys)
         ]
     assert sum(min(dk for tm, _f, dk, *_ in rows if tm == f"term{t}")
@@ -270,11 +244,11 @@ def test_decode_chunk_of_60bit_hash_key_blocks(spark):
     postings = spark.createDataFrame(
         rows,
         "term string, field string, doc_key long, tf int, "
-        "positions array<int>, weight double",
+        "positions array<int>, dl long, weight double",
     )
     shards = build_posting_shards(postings, 1000, DEFAULT)
     got = sorted(
         (r["term"], r["doc_key"])
-        for r in decode_shards(shards.coalesce(1), fields=("weight",)).collect()
+        for r in decode_shards(shards.coalesce(1), fields=("tf",)).collect()
     )
     assert got == sorted((r[0], r[2]) for r in rows)

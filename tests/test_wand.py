@@ -10,6 +10,7 @@ from spaghettisearch_spark.config import DEFAULT
 from spaghettisearch_spark.functions.tokenize import parse_query
 from spaghettisearch_spark.operators.bm25 import search
 from spaghettisearch_spark.operators.wand import wand_topk_from_shards
+from synthetic import synthetic_shards
 
 TERM_QUERIES = [
     "parse",
@@ -40,7 +41,7 @@ def shards_small(corpus_small, index_small, dim_small):
     shards.unpersist()
 
 
-def _daat_topk(spark, shards, doc_map, terms, k):
+def _daat_topk(spark, shards, doc_map, terms, k, stats):
     """Top-k of the reference DAAT kernel (tests/daat_reference.py) run
     on the driver over the query's collected postings — one bucket
     holding every doc — with the per-(doc, term) blend the kernel
@@ -52,13 +53,18 @@ def _daat_topk(spark, shards, doc_map, terms, k):
     from spaghettisearch_spark.operators.compression import (
         decode_shards,
         prune_shards,
+        term_block_meta,
     )
     from spaghettisearch_spark.operators.index_build import FIELD_BODY, FIELD_TITLE
 
     qtf = Counter(terms)
     bag = sorted(qtf)
+    scoring = stats.scoring(term_block_meta(shards, bag, DEFAULT), DEFAULT)
     pdf = (
-        decode_shards(prune_shards(shards, bag, DEFAULT), fields=("weight",))
+        decode_shards(
+            prune_shards(shards, bag, DEFAULT), fields=("weight",),
+            scoring=scoring,
+        )
         .join(doc_map, "doc_key")
         .select("doc_id", "term", "field", "weight")
         .toPandas()
@@ -83,10 +89,16 @@ def _daat_topk(spark, shards, doc_map, terms, k):
     ).head(k).to_dict("records")
 
 
+def _assert_topk(got, ranked, k):
+    assert [r["doc_id"] for r in got] == [d for d, _ in ranked[:k]]
+    for r, (_d, s) in zip(got, ranked):
+        assert r["score"] == pytest.approx(s, rel=1e-9)
+
+
 @pytest.mark.parametrize("kernel", ["taat", "daat_reference"])
 @pytest.mark.parametrize("query", TERM_QUERIES)
 def test_wand_matches_exhaustive(
-    spark, index_small, dim_small, shards_small, query, kernel
+    spark, index_small, dim_small, stats_small, shards_small, query, kernel
 ):
     # the production bucket kernel (taat) through the shard planner, and
     # the per-row DAAT heap kernel — a TEST-ONLY parity oracle with no
@@ -97,10 +109,11 @@ def test_wand_matches_exhaustive(
     want = _exhaustive(spark, index_small, query, k)
     if kernel == "taat":
         got = wand_topk_from_shards(
-            spark, shards_small, doc_map, terms, DEFAULT, k=k, n_buckets=4
+            spark, shards_small, doc_map, terms, DEFAULT, k=k, n_buckets=4,
+            stats=stats_small,
         ).collect()
     else:
-        got = _daat_topk(spark, shards_small, doc_map, terms, k)
+        got = _daat_topk(spark, shards_small, doc_map, terms, k, stats_small)
     assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want], query
     for g, w in zip(got, want):
         assert g["score"] == pytest.approx(w["score"], rel=1e-9, abs=1e-12)
@@ -108,7 +121,9 @@ def test_wand_matches_exhaustive(
         assert g["body_rank"] == pytest.approx(w["body_rank"], rel=1e-9, abs=1e-12)
 
 
-def test_wand_with_pagerank(spark, corpus_small, index_small, dim_small, shards_small):
+def test_wand_with_pagerank(
+    spark, corpus_small, index_small, dim_small, stats_small, shards_small
+):
     from spaghettisearch_spark.operators.links import extract_links
     from spaghettisearch_spark.operators.pagerank import compute_pagerank
 
@@ -116,7 +131,8 @@ def test_wand_with_pagerank(spark, corpus_small, index_small, dim_small, shards_
     terms, _ = parse_query("parse buffer")
     want = _exhaustive(spark, index_small, "parse buffer", 15, pagerank=pr)
     got = wand_topk_from_shards(
-        spark, shards_small, dim_small[1], terms, DEFAULT, k=15, pagerank=pr
+        spark, shards_small, dim_small[1], terms, DEFAULT, k=15, pagerank=pr,
+        stats=stats_small,
     ).collect()
     assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
     for g, w in zip(got, want):
@@ -125,7 +141,9 @@ def test_wand_with_pagerank(spark, corpus_small, index_small, dim_small, shards_
     pr.unpersist()
 
 
-def test_wand_single_bucket_equals_many(spark, index_small, dim_small, shards_small):
+def test_wand_single_bucket_equals_many(
+    spark, index_small, dim_small, stats_small, shards_small
+):
     """One bucket (the one-task pass) and 16 (a tiny per-task target
     forces the shuffled bucket tail) rank alike, and like the
     exhaustive scorer."""
@@ -134,10 +152,12 @@ def test_wand_single_bucket_equals_many(spark, index_small, dim_small, shards_sm
     terms, _ = parse_query("parse buffer flush")
     many = replace(DEFAULT, query_target_postings_per_task=1)
     a = wand_topk_from_shards(
-        spark, shards_small, dim_small[1], terms, many, k=10, n_buckets=1
+        spark, shards_small, dim_small[1], terms, many, k=10, n_buckets=1,
+        stats=stats_small,
     ).collect()
     b = wand_topk_from_shards(
-        spark, shards_small, dim_small[1], terms, many, k=10, n_buckets=16
+        spark, shards_small, dim_small[1], terms, many, k=10, n_buckets=16,
+        stats=stats_small,
     ).collect()
     want = _exhaustive(spark, index_small, "parse buffer flush", 10)
     assert [r["doc_id"] for r in a] == [r["doc_id"] for r in b]
@@ -147,7 +167,7 @@ def test_wand_single_bucket_equals_many(spark, index_small, dim_small, shards_sm
 
 
 def test_wand_from_shards_matches_exhaustive(
-    spark, corpus_small, index_small, dim_small
+    spark, corpus_small, index_small, dim_small, stats_small
 ):
     """North-rule query path: pruned shard scan -> varbyte decode ->
     WAND == exhaustive DataFrame scoring."""
@@ -167,7 +187,8 @@ def test_wand_from_shards_matches_exhaustive(
         terms, _ = parse_query(query)
         want = _exhaustive(spark, index_small, query, 15)
         got = wand_topk_from_shards(
-            spark, shards, doc_map, terms, DEFAULT, k=15, n_buckets=4
+            spark, shards, doc_map, terms, DEFAULT, k=15, n_buckets=4,
+            stats=stats_small,
         ).collect()
         assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want], query
         for g, w in zip(got, want):
@@ -175,7 +196,9 @@ def test_wand_from_shards_matches_exhaustive(
     shards.unpersist()
 
 
-def test_wand_from_shards_dense_keys(spark, corpus_small, index_small, dim_small):
+def test_wand_from_shards_dense_keys(
+    spark, corpus_small, index_small, dim_small, stats_small
+):
     """Deferred-hydration shard path: shards keyed by the dense doc_idx
     (build_doc_dim assigns it in global doc_id sort order, so scoring +
     tie-breaking on the long key is the same total order), doc_id strings
@@ -205,7 +228,7 @@ def test_wand_from_shards_dense_keys(spark, corpus_small, index_small, dim_small
         want = _exhaustive(spark, index_small, query, 15, pagerank=prank)
         got = wand_topk_from_shards(
             spark, shards, doc_map, terms, DEFAULT, k=15, n_buckets=4,
-            pagerank=prank,
+            pagerank=prank, stats=stats_small,
         ).collect()
         assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want], query
         for g, w in zip(got, want):
@@ -214,7 +237,7 @@ def test_wand_from_shards_dense_keys(spark, corpus_small, index_small, dim_small
 
 
 def test_empty_bag_schema_matches_nonempty(
-    spark, corpus_small, index_small, dim_small
+    spark, corpus_small, index_small, dim_small, stats_small
 ):
     """An empty bag returns the columns and types of a non-empty result,
     from both shard entry points, with and without a doc_map: doc_key
@@ -233,12 +256,12 @@ def test_empty_bag_schema_matches_nonempty(
     for doc_map, key in [(None, "doc_key"), (dense_map, "doc_id")]:
         got = [
             wand_topk_from_shards(
-                spark, shards, doc_map, bag, DEFAULT, k=5,
+                spark, shards, doc_map, bag, DEFAULT, k=5, stats=stats_small,
             ).dtypes
             for bag in ([], terms)
         ] + [
             search_from_shards(
-                spark, shards, doc_map, q, DEFAULT, k=5,
+                spark, shards, doc_map, q, DEFAULT, k=5, stats=stats_small,
             ).dtypes
             for q in ("", "parse")
         ]
@@ -247,7 +270,9 @@ def test_empty_bag_schema_matches_nonempty(
     shards.unpersist()
 
 
-def test_wand_shards_meta_cache(spark, corpus_small, index_small, dim_small):
+def test_wand_shards_meta_cache(
+    spark, corpus_small, index_small, dim_small, stats_small
+):
     """meta_cache: the per-term block-metadata dictionary a serving node
     keeps. Cached and uncached planning must produce identical results;
     repeated queries must not re-collect already-cached terms (including
@@ -267,13 +292,16 @@ def test_wand_shards_meta_cache(spark, corpus_small, index_small, dim_small):
     for query in ["parse buffer", "dispatch", "parse zzzznotaword"]:
         terms, _ = parse_query(query)
         plain = wand_topk_from_shards(
-            spark, shards, doc_map, terms, DEFAULT, k=10
+            spark, shards, doc_map, terms, DEFAULT, k=10,
+            stats=stats_small,
         ).collect()
         cached = wand_topk_from_shards(
-            spark, shards, doc_map, terms, DEFAULT, k=10, meta_cache=cache
+            spark, shards, doc_map, terms, DEFAULT, k=10, meta_cache=cache,
+            stats=stats_small,
         ).collect()
         again = wand_topk_from_shards(
-            spark, shards, doc_map, terms, DEFAULT, k=10, meta_cache=cache
+            spark, shards, doc_map, terms, DEFAULT, k=10, meta_cache=cache,
+            stats=stats_small,
         ).collect()
         assert [r["doc_id"] for r in cached] == [r["doc_id"] for r in plain]
         assert cached == again
@@ -282,7 +310,9 @@ def test_wand_shards_meta_cache(spark, corpus_small, index_small, dim_small):
     shards.unpersist()
 
 
-def test_wand_shards_pr_max_cached(spark, corpus_small, index_small, dim_small):
+def test_wand_shards_pr_max_cached(
+    spark, corpus_small, index_small, dim_small, stats_small
+):
     """Blended shard queries cache the PageRank blend maximum alongside
     the term metadata: the repeat-query path runs NO driver aggregation
     on the pagerank frame (asserted by making .agg explode), and cached
@@ -309,11 +339,12 @@ def test_wand_shards_pr_max_cached(spark, corpus_small, index_small, dim_small):
 
     cache: dict = {}
     uncached = wand_topk_from_shards(
-        spark, shards, doc_map, terms, DEFAULT, k=10, pagerank=pr
+        spark, shards, doc_map, terms, DEFAULT, k=10, pagerank=pr,
+        stats=stats_small,
     ).collect()
     first = wand_topk_from_shards(
         spark, shards, doc_map, terms, DEFAULT, k=10, pagerank=pr,
-        meta_cache=cache,
+        meta_cache=cache, stats=stats_small,
     ).collect()
     assert _PR_MAX_KEY in cache
 
@@ -324,7 +355,7 @@ def test_wand_shards_pr_max_cached(spark, corpus_small, index_small, dim_small):
     try:
         again = wand_topk_from_shards(
             spark, shards, doc_map, terms, DEFAULT, k=10, pagerank=pr,
-            meta_cache=cache,
+            meta_cache=cache, stats=stats_small,
         ).collect()
     finally:
         del pr.agg
@@ -333,7 +364,9 @@ def test_wand_shards_pr_max_cached(spark, corpus_small, index_small, dim_small):
     shards.unpersist(); pr.unpersist()
 
 
-def test_wand_two_phase_planner(spark, corpus_small, index_small, dim_small):
+def test_wand_two_phase_planner(
+    spark, corpus_small, index_small, dim_small, stats_small
+):
     """Two-phase skip planning (wave-1 exact partials as the threshold
     floor) must stay EXACT — identical ranking and scores to the
     single-phase and exhaustive paths — and can only tighten the kept
@@ -354,11 +387,13 @@ def test_wand_two_phase_planner(spark, corpus_small, index_small, dim_small):
         terms, _ = parse_query(query)
         want = _exhaustive(spark, index_small, query, 10)
         one = wand_topk_from_shards(
-            spark, shards, doc_map, terms, DEFAULT, k=10
+            spark, shards, doc_map, terms, DEFAULT, k=10,
+            stats=stats_small,
         ).collect()
         kept_1p = wand_mod.LAST_SKIP_STATS["kept"]
         two = wand_topk_from_shards(
-            spark, shards, doc_map, terms, DEFAULT, k=10, two_phase=True
+            spark, shards, doc_map, terms, DEFAULT, k=10, two_phase=True,
+            stats=stats_small,
         ).collect()
         kept_2p = wand_mod.LAST_SKIP_STATS["kept"]
         assert [r["doc_id"] for r in two] == [r["doc_id"] for r in want], query
@@ -385,7 +420,10 @@ def test_two_phase_unlocks_multiterm_skipping(spark):
         build_doc_dim,
         build_posting_shards,
     )
-    from spaghettisearch_spark.operators.index_build import build_index
+    from spaghettisearch_spark.operators.index_build import (
+        build_index,
+        collect_corpus_stats,
+    )
     from spaghettisearch_spark.operators.wand import wand_topk_from_shards
     from spaghettisearch_spark.sources.corpus import from_driver_documents
 
@@ -403,6 +441,7 @@ def test_two_phase_unlocks_multiterm_skipping(spark):
     ).cache()
     zshards.count()
     zmap = zdim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
+    zstats = collect_corpus_stats(spark, zidx.doc_stats, zmap)
     bag = ["zw00000", "zw00001", "zw00002"]
     exh = [
         r["doc_id"]
@@ -413,7 +452,7 @@ def test_two_phase_unlocks_multiterm_skipping(spark):
         r["doc_id"]
         for r in wand_topk_from_shards(
             spark, zshards, zmap, bag, zcfg, k=30,
-            meta_cache=cache,
+            meta_cache=cache, stats=zstats,
         ).collect()
     ]
     s1 = dict(wand_mod.LAST_SKIP_STATS)
@@ -421,7 +460,7 @@ def test_two_phase_unlocks_multiterm_skipping(spark):
         r["doc_id"]
         for r in wand_topk_from_shards(
             spark, zshards, zmap, bag, zcfg, k=30,
-            meta_cache=cache, two_phase=True,
+            meta_cache=cache, two_phase=True, stats=zstats,
         ).collect()
     ]
     s2 = dict(wand_mod.LAST_SKIP_STATS)
@@ -433,21 +472,14 @@ def test_two_phase_unlocks_multiterm_skipping(spark):
 
 def test_block_skip_before_decode(spark):
     """Skip planner: on a skewed fixture (a hot term whose salted blocks
-    have very different max weights), the shard path decodes FEWER blocks
+    have very different bounds), the shard path decodes FEWER blocks
     than exist while returning the exact top-k. Construction: 8 'strong'
-    docs carry raresig(10.0) + hotterm(5.0); the rest of the hot-salt-0
-    docs carry hotterm(4.0); every other salt group carries ~0 weight —
-    so the threshold (435 = the strong docs' full blended score, fully
-    visible in the two blocks' top-N samples) provably beats every other
-    hot block's upper bound (290.029)."""
-    from pyspark.sql import functions as F
-
+    docs carry raresig + hotterm at tf 5; the rest of the hot-salt-0
+    docs carry hotterm at tf 4; every other salt group carries it at
+    tf 1 — so the threshold (the strong docs' full blended score, fully
+    visible in the two blocks' samples) provably beats every other hot
+    block's bound (raresig's weight plus hotterm's at tf 1)."""
     from spaghettisearch_spark.operators import wand as wand_mod
-    from spaghettisearch_spark.operators.compression import (
-        build_doc_dim,
-        build_posting_shards,
-    )
-    from spaghettisearch_spark.operators.wand import wand_topk_from_shards
 
     cfg = DEFAULT
     doc_ids = [f"d{i:04d}" for i in range(400)]
@@ -455,135 +487,85 @@ def test_block_skip_before_decode(spark):
     # n_salts), and build_doc_dim keys these sorted ids by their index
     salt0 = doc_ids[::cfg.n_salts]
     strong = sorted(salt0)[:8]
-    rows = []
-    for d in doc_ids:
-        if d in strong:
-            w = 5.0
-        elif d in salt0:
-            w = 4.0
-        else:
-            w = 0.001
-        rows.append(("hotterm", "body", d, 1, [0], w))
-    for d in strong:
-        rows.append(("raresig", "body", d, 1, [1], 10.0))
-    postings = spark.createDataFrame(
-        rows,
-        "term string, field string, doc_id string, tf int, "
-        "positions array<int>, weight double",
-    )
-    dim = build_doc_dim(
-        spark.createDataFrame([(d,) for d in doc_ids], "doc_id string")
-    ).cache()
-    shards = build_posting_shards(
-        postings, len(doc_ids), cfg, doc_dim=dim
-    ).cache()
-    doc_map = dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
+    rows = [
+        ("hotterm", "body", d, 5 if d in strong else 4 if d in salt0 else 1)
+        for d in doc_ids
+    ] + [("raresig", "body", d, 1) for d in strong]
+    fx = synthetic_shards(spark, rows, {"body": {d: 10 for d in doc_ids}}, cfg)
+    shards, doc_map, stats, ranked = fx.shards, fx.doc_map, fx.stats, fx.ranked
     got = wand_topk_from_shards(
-        spark, shards, doc_map, ["raresig", "hotterm"], cfg, k=8, n_buckets=4
+        spark, shards, doc_map, ["raresig", "hotterm"], cfg, k=8,
+        n_buckets=4, stats=stats,
     ).collect()
-    stats = dict(wand_mod.LAST_SKIP_STATS)
-    assert stats["kept"] < stats["total"], stats
-    assert stats["kept"] <= 2, stats  # rare block + hot salt-0 block only
-    # exact python oracle
-    from collections import defaultdict
-
-    score: dict[str, float] = defaultdict(float)
-    for _term, _field, d, _tf, _pos, w in rows:
-        score[d] += cfg.w_body * cfg.blend_scale * w
-    want = sorted(score.items(), key=lambda kv: (-kv[1], kv[0]))[:8]
-    assert [r["doc_id"] for r in got] == [d for d, _ in want]
-    for r, (_d, s) in zip(got, want):
-        assert r["score"] == pytest.approx(s, rel=1e-9)
-    dim.unpersist()
+    skip = dict(wand_mod.LAST_SKIP_STATS)
+    assert skip["kept"] < skip["total"], skip
+    assert skip["kept"] <= 2, skip  # rare block + hot salt-0 block only
+    _assert_topk(got, ranked, 8)
     shards.unpersist()
 
 
-def test_range_aware_planner_beats_global_bounds(spark):
-    """Doc-range-aligned sub-maxima: two terms whose weights are
-    monotone in doc index in OPPOSITE directions. The global cross-term
-    bound (own max + other term's corpus-wide max) keeps most blocks —
-    termb's corpus max leaks into every terma block's bound and vice
-    versa — while the range-aware bound sees that termb is weak exactly
-    where terma is strong, and prunes down to the two blocks that hold
-    the true top-k. Same metadata rows stripped of the range columns
-    reproduce the old global behavior (back-compat degradation)."""
-    from pyspark.sql import functions as F
+def _opposed_terms(spark):
+    """Two terms in every one of 400 docs whose weights are monotone in
+    doc index in OPPOSITE directions: terma (body) falls as the body
+    grows with the index, termb (title) rises as the title shrinks."""
+    docs = [f"d{i:04d}" for i in range(400)]
+    rows = [("terma", "body", d, 1) for d in docs]
+    rows += [("termb", "title", d, 1) for d in docs]
+    dl = {
+        "body": {d: 10 + i for i, d in enumerate(docs)},
+        "title": {d: 410 - i for i, d in enumerate(docs)},
+    }
+    fx = synthetic_shards(spark, rows, dl)
+    return fx.shards, fx.doc_map, fx.stats, fx.ranked
 
+
+def test_range_aware_planner_beats_global_bounds(spark):
+    """Doc-range-aligned bounds: two terms whose weights are monotone in
+    doc index in OPPOSITE directions. The global cross-term bound (own
+    max + other term's corpus-wide max) keeps most blocks — termb's
+    corpus max leaks into every terma block's bound and vice versa —
+    while the range-aware bound sees that termb is weak exactly where
+    terma is strong, and prunes down to the blocks that hold the true
+    top-k. The same metadata rows without range_bounds reproduce the
+    global behavior."""
     from spaghettisearch_spark.operators import wand as wand_mod
-    from spaghettisearch_spark.operators.compression import (
-        build_doc_dim,
-        build_posting_shards,
-        term_block_meta,
-    )
-    from spaghettisearch_spark.operators.wand import (
-        plan_blocks,
-        wand_topk_from_shards,
-    )
+    from spaghettisearch_spark.operators.compression import term_block_meta
+    from spaghettisearch_spark.operators.wand import plan_blocks
 
     cfg = DEFAULT
-    docs = [f"d{i:04d}" for i in range(400)]
-    rows = []
-    for i, d in enumerate(docs):
-        rows.append(("terma", "body", d, 1, [0], 10.0 - 0.02 * i))
-        rows.append(("termb", "body", d, 1, [1], 0.005 * (i + 1)))
-    postings = spark.createDataFrame(
-        rows,
-        "term string, field string, doc_id string, tf int, "
-        "positions array<int>, weight double",
-    )
-    ids = spark.createDataFrame([(d,) for d in docs], "doc_id string")
-    dim = build_doc_dim(ids).cache()
-    dim.count()
-    shards = build_posting_shards(
-        postings, len(docs), cfg, doc_dim=dim, weight_col="weight"
-    ).cache()
-    shards.count()
-    doc_map = dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
+    shards, doc_map, stats, ranked = _opposed_terms(spark)
     got = wand_topk_from_shards(
-        spark, shards, doc_map, ["terma", "termb"], cfg, k=5
+        spark, shards, doc_map, ["terma", "termb"], cfg, k=5, stats=stats,
     ).collect()
-    stats = dict(wand_mod.LAST_SKIP_STATS)
-    # exact oracle: monotone sum, top-5 = lowest doc indexes
-    score = {
-        d: (10.0 - 0.02 * i + 0.005 * (i + 1)) * cfg.w_body * cfg.blend_scale
-        for i, d in enumerate(docs)
-    }
-    want = sorted(score.items(), key=lambda kv: (-kv[1], kv[0]))[:5]
-    assert [r["doc_id"] for r in got] == [d for d, _ in want]
-    for r, (_d, s) in zip(got, want):
-        assert r["score"] == pytest.approx(s, rel=1e-9)
-    assert stats["kept"] <= 4 < stats["total"], stats
+    skip = dict(wand_mod.LAST_SKIP_STATS)
+    _assert_topk(got, ranked, 5)
+    assert skip["kept"] <= 4 < skip["total"], skip
 
     qtf = {"terma": 1.0, "termb": 1.0}
     # the planner's rows come from term_block_meta: these 25-posting
     # blocks are sample-complete, so their shard rows store no metadata
     meta = term_block_meta(shards, ["terma", "termb"], cfg)
-    keep_rng = plan_blocks(meta, cfg, qtf, 5)[0]
-    no_ranges = [
-        {c: v for c, v in r.asDict().items()
-         if c not in ("range_bounds", "range_maxw")}
-        for r in meta
-    ]
-    keep_glob = plan_blocks(no_ranges, cfg, qtf, 5)[0]
+    keep_rng = plan_blocks(meta, cfg, qtf, 5, stats=stats)[0]
+    no_ranges = [{**r.asDict(), "range_bounds": None} for r in meta]
+    keep_glob = plan_blocks(no_ranges, cfg, qtf, 5, stats=stats)[0]
     assert len(keep_rng) <= 4
     assert len(keep_glob) >= 4 * len(keep_rng), (len(keep_rng), len(keep_glob))
-    dim.unpersist()
     shards.unpersist()
 
 
 def test_block_meta_rebuilt_for_sample_complete_blocks(
-    spark, corpus_small, index_small, dim_small, tmp_path
+    spark, corpus_small, index_small, dim_small, stats_small, tmp_path
 ):
     """Sample-complete blocks (df <= BLOCK_SAMPLE_N) store no skip
-    metadata; term_block_meta rebuilds it from the block's own postings.
-    On corpus_small plus a hot term in every doc, encoded with 4 salts so
-    the hot and common terms' blocks exceed BLOCK_SAMPLE_N while the rare
-    terms' do not, every block's metadata row must equal the reference
-    builder applied to its decoded postings, incomplete blocks must still
-    store theirs, and the planner must give the same plan on the rebuilt
-    rows as on the reference rows. Written to parquet, the driver read
-    from the read-back's file listing returns the same rows as the Spark
-    scan of that frame."""
+    metadata; term_block_meta rebuilds it from the block's own keys and
+    tfs. On corpus_small plus a hot term in every doc, encoded with 4
+    salts so the hot and common terms' blocks exceed BLOCK_SAMPLE_N
+    while the rare terms' do not, every block's metadata row must equal
+    the reference builder applied to its postings, incomplete blocks
+    must still store theirs, and the planner must give the same plan on
+    the rebuilt rows as on the reference rows. Written to parquet, the
+    driver read from the read-back's file listing returns the same rows
+    as the Spark scan of that frame."""
     from dataclasses import replace
 
     import numpy as np
@@ -601,21 +583,24 @@ def test_block_meta_rebuilt_for_sample_complete_blocks(
     from spaghettisearch_spark.sources.driver_read import read_back
 
     cfg = replace(DEFAULT, n_salts=4)
-    doc_dim, _ = dim_small
-    cols = ["term", "field", "doc_id", "tf", "positions", "weight"]
+    doc_dim, doc_map = dim_small
+    cols = ["term", "field", "doc_id", "tf", "positions", "dl", "weight"]
     postings = index_small.postings.withColumn("weight", F.col("bm25_weight"))
-    hot = corpus_small.select(
+    hot = corpus_small.join(
+        index_small.doc_stats.filter(F.col("field") == "body"), "doc_id"
+    ).select(
         F.lit("hotterm").alias("term"),
         F.lit("body").alias("field"),
         "doc_id",
         F.lit(1).alias("tf"),
         F.array(F.lit(0)).alias("positions"),
+        "dl",
         (F.lit(0.5) + (F.abs(F.hash("doc_id")) % 997) / F.lit(100.0))
         .alias("weight"),
     )
+    inputs = postings.select(*cols).unionByName(hot).cache()
     shards = build_posting_shards(
-        postings.select(*cols).unionByName(hot),
-        corpus_small.count(), cfg, doc_dim=doc_dim,
+        inputs, corpus_small.count(), cfg, doc_dim=doc_dim,
     ).cache()
     stored = {
         (r["term"], r["field"], r["salt"]): r
@@ -626,14 +611,23 @@ def test_block_meta_rebuilt_for_sample_complete_blocks(
     assert complete and len(complete) < len(stored), "fixture needs both"
     assert any(b[0] == "hotterm" for b in set(stored) - complete)
 
-    # reference rows from the decoded postings, key-sorted per block
-    dec = decode_shards(
-        shards, passthrough=("salt",), fields=("weight",)
-    ).toPandas().sort_values(["term", "field", "salt", "doc_key"])
+    # reference rows from each block's postings (decoded keys and tfs,
+    # the input's dl and encode-time order), key-sorted per block
+    dec = (
+        decode_shards(shards, passthrough=("salt",), fields=("tf",))
+        .join(
+            inputs.join(doc_map, "doc_id").select(
+                "term", "field", "doc_key", "dl", "weight"
+            ),
+            ["term", "field", "doc_key"],
+        )
+        .toPandas()
+        .sort_values(["term", "field", "salt", "doc_key"])
+    )
     ref = {
         b: reference_meta_row(
-            *b, g["doc_key"].to_numpy(np.int64),
-            g["weight"].to_numpy(np.float64),
+            *b, g["doc_key"].to_numpy(np.int64), g["tf"].to_numpy(np.int64),
+            g["dl"].to_numpy(np.int64), g["weight"].to_numpy(np.float64),
         )
         for b, g in dec.groupby(["term", "field", "salt"], sort=True)
     }
@@ -660,9 +654,9 @@ def test_block_meta_rebuilt_for_sample_complete_blocks(
         sel_got = [r for r in got_rows if r["term"] in qtf]
         sel_ref = [r for r in ref_rows if r["term"] in qtf]
         for k in (1, 5, 20):
-            assert plan_blocks(sel_got, cfg, qtf, k) == plan_blocks(
-                sel_ref, cfg, qtf, k
-            ), (q, k)
+            assert plan_blocks(
+                sel_got, cfg, qtf, k, stats=stats_small
+            ) == plan_blocks(sel_ref, cfg, qtf, k, stats=stats_small), (q, k)
 
     path = str(tmp_path / "shards")
     shards.repartition("shard").write.partitionBy("shard").parquet(path)
@@ -677,136 +671,97 @@ def test_block_meta_rebuilt_for_sample_complete_blocks(
     term_block_meta(pq, terms[::2], cfg, cache, files)
     assert term_block_meta(pq, terms, cfg, cache, files) == driver
     shards.unpersist()
+    inputs.unpersist()
 
 
 def test_candidate_doc_pruning(spark):
     """Doc-level candidate pruning: a rare high-impact term (its blocks
     sample-complete) plus a hot flat term (incomplete). Every unsampled
-    doc's best case (hot max only) provably misses the threshold, so the
-    planner restricts the decode to sampled doc keys — the at-scale path
-    where decode/shuffle volume follows |candidates|, not the hot df.
-    Results stay exact vs a python oracle."""
-    from collections import defaultdict
-
+    doc's best case (the hot blocks' rest bound only) provably misses
+    the threshold, so the planner restricts the decode to sampled doc
+    keys — the at-scale path where decode/shuffle volume follows
+    |candidates|, not the hot df. Results stay exact vs a python
+    oracle."""
     from pyspark.sql import functions as F
 
     from spaghettisearch_spark.operators import wand as wand_mod
-    from spaghettisearch_spark.operators.compression import (
-        BLOCK_SAMPLE_N,
-        build_doc_dim,
-        build_posting_shards,
-    )
-    from spaghettisearch_spark.operators.wand import wand_topk_from_shards
+    from spaghettisearch_spark.operators.compression import BLOCK_SAMPLE_N
 
     cfg = DEFAULT
     n = 1000  # hot blocks get ~62 postings > BLOCK_SAMPLE_N -> incomplete
     docs = [f"d{i:04d}" for i in range(n)]
-    strong = docs[5:13]
-    rows = [("hotterm", "body", d, 1, [0], 1.0) for d in docs]
-    rows += [("raresig", "body", d, 1, [1], 10.0) for d in strong]
-    postings = spark.createDataFrame(
-        rows,
-        "term string, field string, doc_id string, tf int, "
-        "positions array<int>, weight double",
-    )
-    ids = spark.createDataFrame([(d,) for d in docs], "doc_id string")
-    dim = build_doc_dim(ids).cache()
-    dim.count()
-    shards = build_posting_shards(
-        postings, n, cfg, doc_dim=dim, weight_col="weight"
-    ).cache()
+    rows = [("hotterm", "body", d, 1) for d in docs]
+    rows += [("raresig", "body", d, 1) for d in docs[5:13]]
+    fx = synthetic_shards(spark, rows, {"body": {d: 10 for d in docs}}, cfg)
+    shards, doc_map, stats, ranked = fx.shards, fx.doc_map, fx.stats, fx.ranked
     assert (
         shards.filter(
             (F.col("term") == "hotterm") & (F.col("df") > BLOCK_SAMPLE_N)
         ).count()
         > 0
     ), "fixture must make the hot group sample-incomplete"
-    doc_map = dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
     got = wand_topk_from_shards(
-        spark, shards, doc_map, ["raresig", "hotterm"], cfg, k=5,
+        spark, shards, doc_map, ["raresig", "hotterm"], cfg, k=5, stats=stats,
     ).collect()
-    stats = dict(wand_mod.LAST_SKIP_STATS)
-    assert 0 < stats["cand_docs"] < n, stats
-    score = defaultdict(float)
-    for _t, _f, d, _tf, _p, w in rows:
-        score[d] += cfg.w_body * cfg.blend_scale * w
-    want = sorted(score.items(), key=lambda kv: (-kv[1], kv[0]))[:5]
-    assert [r["doc_id"] for r in got] == [d for d, _ in want]
-    for r, (_d, s) in zip(got, want):
-        assert r["score"] == pytest.approx(s, rel=1e-9)
-    dim.unpersist()
+    skip = dict(wand_mod.LAST_SKIP_STATS)
+    assert 0 < skip["cand_docs"] < n, skip
+    _assert_topk(got, ranked, 5)
     shards.unpersist()
 
 
 def test_candidate_pruning_sample_min_bound(spark):
-    """The unsampled-doc bound uses each incomplete block's MINIMUM
-    sampled weight (samples are the block's top-N by weight, and salt
-    maps a doc's posting in a group to exactly one block), not the
-    group's global max_weight. On a steeply-decaying hot term the two
-    differ by ~30x: the old global-max bound provably cannot fire here
-    (hot max 100 > any k-th partial), while the sample-min bound does —
-    and results stay exact vs the python oracle."""
-    from collections import defaultdict
+    """The unsampled-doc bound is each incomplete block's REST impacts
+    — the Pareto (tf, dl) pairs of exactly the postings outside its
+    sample, admissible under any statistics — not the group's global
+    bound. A cold hot-ish term (one 80-posting block) decays along doc
+    index; docs 5-12 also carry a weak title term. The block's global
+    bound (doc 0's weight) exceeds the true k-th score, so a global-max
+    bound cannot let pruning fire, while the rest bound (doc 32's
+    weight) sits below it — and results stay exact vs the python
+    oracle."""
+    import math
 
     from pyspark.sql import functions as F
 
     from spaghettisearch_spark.operators import wand as wand_mod
-    from spaghettisearch_spark.operators.compression import (
-        BLOCK_SAMPLE_N,
-        build_doc_dim,
-        build_posting_shards,
-    )
-    from spaghettisearch_spark.operators.wand import wand_topk_from_shards
+    from spaghettisearch_spark.operators.compression import BLOCK_SAMPLE_N
 
     cfg = DEFAULT
     n = 1000
     docs = [f"d{i:04d}" for i in range(n)]
-    # hot term in every doc, weight 100/(i+1): group max 100, but the
-    # top impact-ordered block's 32-sample minimum is ~100/32 ~ 3 — the
-    # gap the sample-min bound exploits
-    rows = [
-        ("hotterm", "body", d, 1, [0], 100.0 / (i + 1))
-        for i, d in enumerate(docs)
-    ]
-    rows += [("raresig", "body", d, 1, [1], 10.0) for d in docs[5:13]]
-    postings = spark.createDataFrame(
-        rows,
-        "term string, field string, doc_id string, tf int, "
-        "positions array<int>, weight double",
-    )
-    ids = spark.createDataFrame([(d,) for d in docs], "doc_id string")
-    dim = build_doc_dim(ids).cache()
-    dim.count()
-    shards = build_posting_shards(
-        postings, n, cfg, doc_dim=dim, weight_col="weight"
-    ).cache()
+    rows = [("hotterm", "body", d, max(1, 10 - i)) for i, d in enumerate(docs[:80])]
+    rows += [("raresig", "title", d, 1) for d in docs[5:13]]
+    dl = {
+        "body": {d: 10 + 5 * i for i, d in enumerate(docs)},
+        "title": {d: 200 if d in docs[5:13] else 1 for d in docs},
+    }
+    fx = synthetic_shards(spark, rows, dl, cfg)
+    shards, doc_map, stats, ranked = fx.shards, fx.doc_map, fx.stats, fx.ranked
     meta = shards.filter(F.col("term") == "hotterm").select(
-        "df", "max_weight", "top_weights"
+        "df", "impacts"
     ).collect()
-    assert any(int(r["df"]) > BLOCK_SAMPLE_N for r in meta)
-    # the old bound (group max) provably exceeds any admissible
-    # threshold here, so only the sample-min bound can let pruning fire
-    group_max = max(float(r["max_weight"]) for r in meta)
-    sample_min_ub = max(
-        min(r["top_weights"])
-        for r in meta
-        if int(r["df"]) > BLOCK_SAMPLE_N
-    )
-    assert sample_min_ub * 20 < group_max, (sample_min_ub, group_max)
-    doc_map = dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
+    assert [int(r["df"]) for r in meta] == [80] and 80 > BLOCK_SAMPLE_N
+
+    def blended(tf, length):
+        avgdl = sum(dl["body"].values()) / n
+        idf = math.log(1.0 + (n - 80 + 0.5) / (80 + 0.5))
+        denom = tf + cfg.k1 * (1 - cfg.b + cfg.b * length / avgdl)
+        return cfg.w_body * cfg.blend_scale * idf * tf * (cfg.k1 + 1.0) / denom
+
+    impacts = meta[0]["impacts"]
+    groups = impacts[0]
+    n_rest = impacts[groups]
+    pairs = list(zip(impacts[1 + groups::2], impacts[2 + groups::2]))
+    group_max = max(blended(tf, length) for tf, length in pairs)
+    rest_ub = max(blended(tf, length) for tf, length in pairs[-n_rest:])
+    kth = ranked[4][1]
+    assert rest_ub < kth < group_max, (rest_ub, kth, group_max)
     got = wand_topk_from_shards(
-        spark, shards, doc_map, ["raresig", "hotterm"], cfg, k=5,
+        spark, shards, doc_map, ["raresig", "hotterm"], cfg, k=5, stats=stats,
     ).collect()
-    stats = dict(wand_mod.LAST_SKIP_STATS)
-    assert 0 < stats["cand_docs"] < n, stats
-    score = defaultdict(float)
-    for _t, _f, d, _tf, _p, w in rows:
-        score[d] += cfg.w_body * cfg.blend_scale * w
-    want = sorted(score.items(), key=lambda kv: (-kv[1], kv[0]))[:5]
-    assert [r["doc_id"] for r in got] == [d for d, _ in want]
-    for r, (_d, s) in zip(got, want):
-        assert r["score"] == pytest.approx(s, rel=1e-9)
-    dim.unpersist()
+    skip = dict(wand_mod.LAST_SKIP_STATS)
+    assert 0 < skip["cand_docs"] < n, skip
+    _assert_topk(got, ranked, 5)
     shards.unpersist()
 
 
@@ -814,6 +769,7 @@ def test_wand_from_warehouse_shards_dense_ids(spark, docs_small, tmp_path):
     """Pipeline shards use dense doc_idx keys; shard-backed WAND from the
     warehouse == exhaustive scoring on the same index."""
     from spaghettisearch_spark.operators.bm25 import search
+    from spaghettisearch_spark.operators.index_build import collect_corpus_stats
     from spaghettisearch_spark.operators.wand import wand_topk_from_shards
     from spaghettisearch_spark.plans.build_pipeline import build_all
 
@@ -824,11 +780,12 @@ def test_wand_from_warehouse_shards_dense_ids(spark, docs_small, tmp_path):
     idx = built.load(spark)
     shards = built.shards(spark)
     doc_map = built.doc_map(spark)
+    stats = collect_corpus_stats(spark, idx.doc_stats, doc_map)
     for query in ["parse", "parse buffer flush"]:
         terms, _ = parse_query(query)
         want = search(spark, idx, query, DEFAULT, k=15).collect()
         got = wand_topk_from_shards(
-            spark, shards, doc_map, terms, DEFAULT, k=15
+            spark, shards, doc_map, terms, DEFAULT, k=15, stats=stats,
         ).collect()
         assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want], query
         for g, w in zip(got, want):
@@ -849,6 +806,7 @@ def test_two_phase_auto(spark, docs_small, tmp_path):
 
     from spaghettisearch_spark.operators import wand as wand_mod
     from spaghettisearch_spark.operators.bm25 import search
+    from spaghettisearch_spark.operators.index_build import collect_corpus_stats
     from spaghettisearch_spark.operators.wand import wand_topk_from_shards
     from spaghettisearch_spark.plans.build_pipeline import build_all
 
@@ -860,6 +818,7 @@ def test_two_phase_auto(spark, docs_small, tmp_path):
     idx = built.load(spark)
     shards = built.shards(spark)
     doc_map = built.doc_map(spark)
+    stats = collect_corpus_stats(spark, idx.doc_stats, doc_map)
     terms, _ = parse_query("dispatch buffer parse")
     want = [
         r["doc_id"]
@@ -867,7 +826,7 @@ def test_two_phase_auto(spark, docs_small, tmp_path):
     ]
     got = wand_topk_from_shards(
         spark, shards, doc_map, terms, DEFAULT, k=10,
-        two_phase="auto",
+        two_phase="auto", stats=stats,
     ).collect()
     assert [r["doc_id"] for r in got] == want
     assert wand_mod.LAST_SKIP_STATS["two_phase"] == 0  # volume below threshold
@@ -875,7 +834,7 @@ def test_two_phase_auto(spark, docs_small, tmp_path):
     eager = replace(DEFAULT, two_phase_auto_min_postings=0)
     got2 = wand_topk_from_shards(
         spark, shards, doc_map, terms, eager, k=10,
-        two_phase="auto",
+        two_phase="auto", stats=stats,
     ).collect()
     assert [r["doc_id"] for r in got2] == want
     # this bag admits candidate pruning on this corpus, so auto SKIPS
@@ -885,7 +844,7 @@ def test_two_phase_auto(spark, docs_small, tmp_path):
     assert wand_mod.LAST_SKIP_STATS["two_phase"] == 0
     got3 = wand_topk_from_shards(
         spark, shards, doc_map, terms, eager, k=10,
-        two_phase=True,
+        two_phase=True, stats=stats,
     ).collect()
     assert [r["doc_id"] for r in got3] == want
     assert wand_mod.LAST_SKIP_STATS["two_phase"] == 1  # explicit wave ran
@@ -903,6 +862,7 @@ def test_floor_cache_repeat_query(spark, docs_small, tmp_path):
 
     from spaghettisearch_spark.operators import wand as wand_mod
     from spaghettisearch_spark.operators.bm25 import search
+    from spaghettisearch_spark.operators.index_build import collect_corpus_stats
     from spaghettisearch_spark.operators.wand import wand_topk_from_shards
     from spaghettisearch_spark.plans.build_pipeline import build_all
 
@@ -914,6 +874,7 @@ def test_floor_cache_repeat_query(spark, docs_small, tmp_path):
     idx = built.load(spark)
     shards = built.shards(spark)
     doc_map = built.doc_map(spark)
+    stats = collect_corpus_stats(spark, idx.doc_stats, doc_map)
     terms, _ = parse_query("dispatch buffer parse")
     want = [
         r["doc_id"]
@@ -927,14 +888,14 @@ def test_floor_cache_repeat_query(spark, docs_small, tmp_path):
     # (candidate pruning is admissible) and never cache a floor
     got1 = wand_topk_from_shards(
         spark, shards, doc_map, terms, eager, k=10,
-        two_phase=True, meta_cache=cache,
+        two_phase=True, meta_cache=cache, stats=stats,
     ).collect()
     s1 = dict(wand_mod.LAST_SKIP_STATS)
     assert s1["two_phase"] == 1 and s1["floor_cached"] == 0
     assert any(key.startswith("\x00floor:") for key in cache)
     got2 = wand_topk_from_shards(
         spark, shards, doc_map, terms, eager, k=10,
-        two_phase="auto", meta_cache=cache,
+        two_phase="auto", meta_cache=cache, stats=stats,
     ).collect()
     s2 = dict(wand_mod.LAST_SKIP_STATS)
     assert s2["two_phase"] == 0 and s2["floor_cached"] == 1
@@ -947,7 +908,7 @@ def test_floor_cache_repeat_query(spark, docs_small, tmp_path):
     other, _ = parse_query("buffer parse")
     wand_topk_from_shards(
         spark, shards, doc_map, other, eager, k=10,
-        two_phase="auto", meta_cache=cache,
+        two_phase="auto", meta_cache=cache, stats=stats,
     ).collect()
     assert wand_mod.LAST_SKIP_STATS["floor_cached"] == 0
     # ...and neither must a different scoring cfg sharing the cache:
@@ -956,7 +917,7 @@ def test_floor_cache_repeat_query(spark, docs_small, tmp_path):
     lighter = replace(eager, w_body=eager.w_body * 0.5)
     got3 = wand_topk_from_shards(
         spark, shards, doc_map, terms, lighter, k=10,
-        two_phase="auto", meta_cache=cache,
+        two_phase="auto", meta_cache=cache, stats=stats,
     ).collect()
     assert wand_mod.LAST_SKIP_STATS["floor_cached"] == 0
     want3 = [
@@ -973,56 +934,29 @@ def test_range_level_decode_pruning(spark):
     threshold equi-depth sub-ranges, so the decoded posting volume
     (decoded_df) drops below the kept blocks' full df (kept_df) while
     the top-k stays exact. Fixture: two monotone terms in opposite
-    directions — every kept terma block is strong only at its low-key
-    end, so its high-key sub-ranges fall under the threshold and are
-    dropped from the decode. Also checks the decode filter directly:
-    key_ranges={block: [0]} yields exactly the block's first equi-depth
-    chunk in doc_key order."""
+    directions — every kept block is strong only at one end, so its
+    far sub-ranges fall under the threshold and are dropped from the
+    decode. Also checks the decode filter directly: key_ranges={block:
+    [0]} yields exactly the block's first equi-depth chunk in doc_key
+    order."""
     from pyspark.sql import functions as F
 
     from spaghettisearch_spark.operators import wand as wand_mod
     from spaghettisearch_spark.operators.compression import (
         RANGE_SUB_N,
-        build_doc_dim,
-        build_posting_shards,
         decode_shards,
     )
-    from spaghettisearch_spark.operators.wand import wand_topk_from_shards
 
     cfg = DEFAULT
-    docs = [f"d{i:04d}" for i in range(400)]
-    rows = []
-    for i, d in enumerate(docs):
-        rows.append(("terma", "body", d, 1, [0], 10.0 - 0.02 * i))
-        rows.append(("termb", "body", d, 1, [1], 0.005 * (i + 1)))
-    postings = spark.createDataFrame(
-        rows,
-        "term string, field string, doc_id string, tf int, "
-        "positions array<int>, weight double",
-    )
-    ids = spark.createDataFrame([(d,) for d in docs], "doc_id string")
-    dim = build_doc_dim(ids).cache()
-    dim.count()
-    shards = build_posting_shards(
-        postings, len(docs), cfg, doc_dim=dim, weight_col="weight"
-    ).cache()
-    shards.count()
-    doc_map = dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
+    shards, doc_map, stats, ranked = _opposed_terms(spark)
     got = wand_topk_from_shards(
-        spark, shards, doc_map, ["terma", "termb"], cfg, k=5
+        spark, shards, doc_map, ["terma", "termb"], cfg, k=5, stats=stats,
     ).collect()
-    stats = dict(wand_mod.LAST_SKIP_STATS)
-    score = {
-        d: (10.0 - 0.02 * i + 0.005 * (i + 1)) * cfg.w_body * cfg.blend_scale
-        for i, d in enumerate(docs)
-    }
-    want = sorted(score.items(), key=lambda kv: (-kv[1], kv[0]))[:5]
-    assert [r["doc_id"] for r in got] == [d for d, _ in want]
-    for r, (_d, s) in zip(got, want):
-        assert r["score"] == pytest.approx(s, rel=1e-9)
+    skip = dict(wand_mod.LAST_SKIP_STATS)
+    _assert_topk(got, ranked, 5)
     # kept blocks decoded strictly fewer postings than they hold
-    assert 0 < stats["decoded_df"] < stats["kept_df"], stats
-    assert stats["kept_ranges"] < stats["total_ranges"], stats
+    assert 0 < skip["decoded_df"] < skip["kept_df"], skip
+    assert skip["kept_ranges"] < skip["total_ranges"], skip
 
     # direct decode-filter check: first chunk only, positional semantics
     blk = shards.filter(F.col("term") == "terma").select(
@@ -1032,21 +966,16 @@ def test_range_level_decode_pruning(spark):
     one = shards.filter(
         (F.col("term") == bkey[0]) & (F.col("salt") == bkey[2])
     )
-    full = (
-        decode_shards(one, fields=("weight",))
-        .orderBy("doc_key")
-        .collect()
-    )
+    full = decode_shards(one, fields=("tf",)).orderBy("doc_key").collect()
     n = int(blk["df"])
     n_sub = min(RANGE_SUB_N, n)
     first_chunk = decode_shards(
-        one, fields=("weight",), key_ranges={bkey: (n_sub, [0])}
+        one, fields=("tf",), key_ranges={bkey: (n_sub, [0])}
     ).orderBy("doc_key").collect()
     want_n = ((1 * n) // n_sub) - ((0 * n) // n_sub)
     assert [r["doc_key"] for r in first_chunk] == [
         r["doc_key"] for r in full[:want_n]
     ]
-    dim.unpersist()
     shards.unpersist()
 
 
@@ -1060,45 +989,30 @@ def test_two_phase_string_guard_and_zero_weight_field(spark):
 
     from pyspark.sql import functions as F
 
-    from spaghettisearch_spark.operators.compression import (
-        BLOCK_SAMPLE_N,
-        build_doc_dim,
-        build_posting_shards,
-    )
-    from spaghettisearch_spark.operators.wand import wand_topk_from_shards
+    from spaghettisearch_spark.operators.compression import BLOCK_SAMPLE_N
 
     cfg = replace(DEFAULT, w_title=0.0)
     n = 1000  # hot blocks ~62 postings > BLOCK_SAMPLE_N -> incomplete
     docs = [f"d{i:04d}" for i in range(n)]
-    rows = [("hott", "title", d, 1, [0], 1.0) for d in docs]
-    rows += [("raresig", "body", d, 1, [1], 10.0) for d in docs[3:9]]
-    postings = spark.createDataFrame(
-        rows,
-        "term string, field string, doc_id string, tf int, "
-        "positions array<int>, weight double",
-    )
-    ids = spark.createDataFrame([(d,) for d in docs], "doc_id string")
-    dim = build_doc_dim(ids).cache()
-    dim.count()
-    shards = build_posting_shards(
-        postings, n, cfg, doc_dim=dim, weight_col="weight"
-    ).cache()
+    rows = [("hott", "title", d, 1) for d in docs]
+    rows += [("raresig", "body", d, 1) for d in docs[3:9]]
+    dl = {f: {d: 10 for d in docs} for f in ("title", "body")}
+    fx = synthetic_shards(spark, rows, dl, cfg)
+    shards, doc_map, stats = fx.shards, fx.doc_map, fx.stats
     assert (
         shards.filter(
             (F.col("term") == "hott") & (F.col("df") > BLOCK_SAMPLE_N)
         ).count()
         > 0
     ), "fixture must make the zero-weight hot group sample-incomplete"
-    doc_map = dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
     got = wand_topk_from_shards(
-        spark, shards, doc_map, ["raresig", "hott"], cfg, k=5,
+        spark, shards, doc_map, ["raresig", "hott"], cfg, k=5, stats=stats,
     ).collect()
     # title weight 0 -> only raresig's body postings score
     assert [r["doc_id"] for r in got] == docs[3:8]
     with pytest.raises(ValueError, match="two_phase"):
         wand_topk_from_shards(
             spark, shards, doc_map, ["raresig"], cfg, k=5,
-            two_phase="Auto",
+            two_phase="Auto", stats=stats,
         )
-    dim.unpersist()
     shards.unpersist()

@@ -61,6 +61,7 @@ def phrase_plan_profile(eng, q, top=15):
             eng.spark, eng.shards, None, q, eng.cfg,
             pagerank=eng.pr_vectors.get(None), k=10,
             meta_cache=eng.meta_cache, shard_files=eng.shard_files,
+            stats=eng.stats,
         )
 
     plan()
@@ -161,8 +162,12 @@ def main():
         build_posting_shards,
         decode_shards,
         prune_shards,
+        term_block_meta,
     )
-    from spaghettisearch_spark.operators.index_build import build_index
+    from spaghettisearch_spark.operators.index_build import (
+        build_index,
+        collect_corpus_stats,
+    )
     from spaghettisearch_spark.operators.wand import wand_topk_from_shards
     from spaghettisearch_spark.session import get_spark
     from spaghettisearch_spark.sources.corpus import from_driver_documents
@@ -194,6 +199,7 @@ def main():
     shards.count()
     doc_map = doc_dim.select(F.col("doc_idx").alias("doc_key"), "doc_id").cache()
     doc_map.count()
+    stats = collect_corpus_stats(spark, idx.doc_stats, doc_map)
     meta: dict = {}
 
     wand_terms = [p2stem(x) for x in ["spark", "query", "scan"]]
@@ -211,15 +217,16 @@ def main():
     def full():
         wand_topk_from_shards(
             spark, shards, doc_map, wand_terms, cfg, k=50,
-            meta_cache=meta,
+            meta_cache=meta, stats=stats,
         ).collect()
 
     print("full_q_wand_shards", t(full))
 
     # stage 1: pruned metadata already cached; decode only
     pruned = prune_shards(shards, wand_terms, cfg)
+    scoring = stats.scoring(term_block_meta(shards, wand_terms, cfg), cfg)
     print("decode_only_collect", t(lambda: decode_shards(
-        pruned, fields=("weight",)).collect()))
+        pruned, fields=("weight",), scoring=scoring).collect()))
 
     # the engine's top-k job (no card read), timed at the default task
     # sizing (one task: decode and score in one Python pass) and forced
@@ -236,7 +243,7 @@ def main():
         def topk(c=c, cache=cache):
             wand_topk_from_shards(
                 spark, shards, None, wand_terms, c, k=50,
-                meta_cache=cache, two_phase="auto",
+                meta_cache=cache, two_phase="auto", stats=stats,
             ).collect()
 
         print(name, t(topk))
@@ -265,7 +272,7 @@ def main():
     # explain for the record
     df = wand_topk_from_shards(
         spark, shards, doc_map, wand_terms, cfg, k=50,
-        meta_cache=meta,
+        meta_cache=meta, stats=stats,
     )
     Path("plans/r06").mkdir(parents=True, exist_ok=True)
     with open("plans/r06/profile_wand_shards_plan.txt", "w") as f:

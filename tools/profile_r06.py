@@ -64,20 +64,13 @@ def main():
     stats_rows = ph("corpus_stats_collect", lambda: corpus_stats.collect())
     n_docs = int(stats_rows[0]["n_docs"])
     weighted = ib.build_tfidf_weights(postings, term_stats, n_docs)
-    from spaghettisearch_spark.operators.bm25 import bm25_contrib_col
-
     weighted = weighted.join(term_stats, ["term", "field"]).join(
         doc_stats, ["doc_id", "field"]
     )
-    contrib = None
-    for r in stats_rows:
-        c = bm25_contrib_col(cfg, int(r["n_docs"]), float(r["avgdl"]))
-        contrib = (
-            F.when(F.col("field") == r["field"], c)
-            if contrib is None
-            else contrib.when(F.col("field") == r["field"], c)
-        )
-    weighted = weighted.withColumn("bm25_weight", contrib).drop("dl").persist(
+    contrib = ib.bm25_weight_col(
+        cfg, {r["field"]: (r["n_docs"], r["avgdl"]) for r in stats_rows}
+    )
+    weighted = weighted.withColumn("bm25_weight", contrib).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     ph("weighted_postings_count", lambda: weighted.count())
@@ -129,9 +122,15 @@ def main():
         p.filter(zseg == 0), n_docs, cfg, doc_dim=dim, weight_col="bm25_weight"
     ).persist(StorageLevel.MEMORY_AND_DISK)
     ph("delta1_build_count", lambda: delta.count())
+    stats = ib.collect_corpus_stats(
+        spark, doc_stats,
+        dim.select(F.col("doc_idx").alias("doc_key"), "doc_id"),
+    )
     ph(
         "merge_1pct",
-        lambda: merge_posting_shards(base, delta, n_docs, cfg).count(),
+        lambda: merge_posting_shards(
+            base, delta, n_docs, cfg, stats=stats
+        ).count(),
     )
     print("done")
 
