@@ -15,10 +15,13 @@ from __future__ import annotations
 
 import os
 import tempfile
+import time
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -154,6 +157,61 @@ def _store_stats(warehouse_dir: str, totals: dict) -> None:
     }, schema=STATS_SCHEMA))
 
 
+class _Phases:
+    """The build's phases. ``start`` runs one on a driver thread that
+    inherits the caller's Spark local properties (its job group
+    included), ``run`` runs one on the calling thread; either way the
+    phase's jobs go to the FAIR pool named after it (session.py) and
+    its interval, in seconds from the build's start, goes to
+    ``profile``. Leaving the ``with`` block joins every phase thread, so
+    a phase's error leaves ``build`` only once no phase runs; a phase
+    that failed is raised by the next ``start`` or ``run``."""
+
+    def __init__(self, spark: SparkSession, width: int):
+        self.spark = spark
+        self.t0 = time.perf_counter()
+        self.profile: dict = {}
+        self._threads = ThreadPoolExecutor(width, thread_name_prefix="build")
+        self._started: list[Future] = []
+
+    def __enter__(self) -> "_Phases":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self._threads.shutdown(wait=True)
+
+    def _timed(self, name: str, fn, *args):
+        sc = self.spark.sparkContext
+        prev = sc.getLocalProperty("spark.scheduler.pool")
+        sc.setLocalProperty("spark.scheduler.pool", name)
+        start = time.perf_counter() - self.t0
+        try:
+            return fn(*args)
+        finally:
+            self.profile[name] = {
+                "pool": name, "start_s": start,
+                "end_s": time.perf_counter() - self.t0,
+            }
+            sc.setLocalProperty("spark.scheduler.pool", prev)
+
+    def _raise_failed(self) -> None:
+        for run in self._started:
+            if run.done():
+                run.result()
+
+    def start(self, name: str, fn, *args) -> Future:
+        self._raise_failed()
+        run = self._threads.submit(
+            inheritable_thread_target(self.spark)(self._timed), name, fn, *args
+        )
+        self._started.append(run)
+        return run
+
+    def run(self, name: str, fn, *args):
+        self._raise_failed()
+        return self._timed(name, fn, *args)
+
+
 @dataclass
 class SearchEngine:
     """The serving engine. A query is one Spark job, the top-k job (k
@@ -222,6 +280,9 @@ class SearchEngine:
     # every dataclasses.replace copy holds the same object, so the
     # directory is removed once the last copy is collected
     tmp_warehouse: tempfile.TemporaryDirectory | None = None
+    # what ``build`` did: {"phases": {name: {"pool", "start_s", "end_s"}},
+    # "total_s"}, offsets in seconds from the call
+    build_profile: dict = field(default_factory=dict)
 
     # ------------------------------------------------------------------
     @classmethod
@@ -253,6 +314,24 @@ class SearchEngine:
         each doc's field lengths to its card. The build's in-memory
         index is released once the shards and cards are written.
 
+        The phases form a DAG and independent ones run at once, on
+        driver threads: after the (cached, lazy) ingest and link
+        extraction, ``pagerank`` and ``doc_dim`` start on their own
+        threads while the calling thread builds the ``index`` through its
+        statistics collect. Once the index and doc_dim are ready,
+        ``shards`` (encode and partitioned write) runs on a thread, and
+        the calling thread waits for PageRank, starts ``topic_pagerank``
+        (with ``topics``; it caches and unpersists PageRank's node and
+        edge frames, so it does not run beside PageRank) and writes the
+        ``cards`` and ``corpus_stats``. Each
+        phase submits its jobs to the FAIR pool of its name (session.py;
+        the caller's other jobs keep their pool) from a thread that
+        inherits the caller's local properties, job group included. Every
+        table is the same as a phase-by-phase build's. A phase's error
+        is raised once every phase thread is joined: no thread outlives
+        the call. The engine's ``build_profile`` holds each phase's pool
+        and its start and end in seconds from the call, and the total.
+
         ``cfg.scorer`` must be "bm25": queries score the stored tfs with
         BM25. Any other scorer raises ValueError before any Spark job;
         the reference-exact ``tfidf_cosine`` is served by
@@ -268,48 +347,75 @@ class SearchEngine:
         if warehouse_dir is None:
             tmp = tempfile.TemporaryDirectory(prefix="warehouse-")
             warehouse_dir = tmp.name
+        shards_path = f"{warehouse_dir}/posting_shards"
         corpus = ingest(documents).cache()
         links = extract_links(corpus, cfg).cache()
-        idx = build_index(corpus, cfg, links=links)
-        pr = (
-            compute_pagerank(spark, corpus, links, cfg).cache()
-            if with_pagerank
-            else None
-        )
-        tpr = None
-        if topics is not None:
+
+        def doc_dim_phase():
+            dim = build_doc_dim(corpus).cache()
+            return dim, dim.count()
+
+        def shards_phase(idx, doc_dim, n_docs):
+            # cluster by shard before the partitioned write (guide §6):
+            # without this every upstream task writes its own file into
+            # every shard directory (tasks x shards tiny files); clustered,
+            # each directory holds one well-sized file and a term's pruned
+            # scan opens ONE file instead of dozens
+            build_posting_shards(
+                idx.postings, n_docs, cfg,
+                doc_dim=doc_dim, weight_col="bm25_weight",
+            ).repartition("shard").write.mode("overwrite").option(
+                "compression", "zstd"
+            ).partitionBy("shard").parquet(shards_path)
+
+        def cards_phase(idx, doc_dim, n_docs, pr):
+            doc_map = doc_dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
+            cards, files = _store_cards(
+                spark,
+                build_doc_cards(
+                    doc_map, corpus, idx.doc_meta, idx.doc_stats, pr, links
+                ),
+                n_docs,
+                f"{warehouse_dir}/doc_cards",
+            )
+            # the per-field totals of the cards' lengths, as
+            # build_corpus_stats counts them (every doc, sum of dl)
+            dl = read_table(files, CARD_DL_COLS)
+            _store_stats(warehouse_dir, {
+                f: (n_docs, pc.sum(dl[f"dl_{f}"]).as_py() or 0) for f in FIELDS
+            })
+            return cards, files
+
+        def topic_phase():
             from .operators.topics import compute_topic_pagerank
 
-            tpr = compute_topic_pagerank(spark, corpus, links, topics, cfg).cache()
-        doc_dim = build_doc_dim(corpus).cache()
-        n_docs = doc_dim.count()
-        doc_map = doc_dim.select(F.col("doc_idx").alias("doc_key"), "doc_id")
-        doc_cards, card_files = _store_cards(
-            spark,
-            build_doc_cards(
-                doc_map, corpus, idx.doc_meta, idx.doc_stats, pr, links
-            ),
-            n_docs,
-            f"{warehouse_dir}/doc_cards",
-        )
-        # the per-field totals of the cards' lengths, as
-        # build_corpus_stats counts them (every doc, sum of dl)
-        dl = read_table(card_files, CARD_DL_COLS)
-        _store_stats(warehouse_dir, {
-            f: (n_docs, pc.sum(dl[f"dl_{f}"]).as_py() or 0) for f in FIELDS
-        })
-        shards_path = f"{warehouse_dir}/posting_shards"
-        # cluster by shard before the partitioned write (guide §6):
-        # without this every upstream task writes its own file into
-        # every shard directory (tasks x shards tiny files); clustered,
-        # each directory holds one well-sized file and a term's pruned
-        # scan opens ONE file instead of dozens
-        build_posting_shards(
-            idx.postings, n_docs, cfg,
-            doc_dim=doc_dim, weight_col="bm25_weight",
-        ).repartition("shard").write.mode("overwrite").option(
-            "compression", "zstd"
-        ).partitionBy("shard").parquet(shards_path)
+            return compute_topic_pagerank(spark, corpus, links, topics, cfg).cache()
+
+        # the phase DAG: PageRank, doc_dim and the index start together;
+        # shards need the index and doc_dim, cards the index, doc_dim and
+        # PageRank. Its width: the doc_dim thread (then shards) and the
+        # PageRank thread (then topic PageRank)
+        with _Phases(spark, 1 + bool(with_pagerank or topics is not None)) as ph:
+            pr_run = ph.start(
+                "pagerank",
+                lambda: compute_pagerank(spark, corpus, links, cfg).cache(),
+            ) if with_pagerank else None
+            dim_run = ph.start("doc_dim", doc_dim_phase)
+            idx = ph.run("index", lambda: build_index(corpus, cfg, links=links))
+            doc_dim, n_docs = dim_run.result()
+            shards_run = ph.start("shards", shards_phase, idx, doc_dim, n_docs)
+            pr = pr_run.result() if pr_run else None
+            # after PageRank: both PageRank operators cache, then
+            # unpersist, the same node and edge frames
+            tpr_run = (
+                ph.start("topic_pagerank", topic_phase) if topics is not None
+                else None
+            )
+            doc_cards, card_files = ph.run(
+                "cards", cards_phase, idx, doc_dim, n_docs, pr
+            )
+            shards_run.result()
+            tpr = tpr_run.result() if tpr_run else None
         # serve from the read-back frame: queries prune to the terms'
         # shard partitions and read only the metadata / requested
         # payload columns
@@ -327,6 +433,9 @@ class SearchEngine:
         )
         eng.pr_vectors = eng._build_pr_vectors()
         eng.stats = eng._build_stats()
+        eng.build_profile = {
+            "phases": ph.profile, "total_s": time.perf_counter() - ph.t0,
+        }
         return eng
 
     @property

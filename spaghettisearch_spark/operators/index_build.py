@@ -312,31 +312,49 @@ def build_vocab(postings: DataFrame) -> DataFrame:
     )
 
 
-def build_tfidf_weights(
-    postings: DataFrame, term_stats: DataFrame, n_docs: int
-) -> DataFrame:
-    """Reference-exact term weighting: normTF * idf.
+def build_tfidf_weights(postings: DataFrame, n_docs: int) -> DataFrame:
+    """Reference-exact term weighting of postings that carry their
+    term's ``df``: adds ``weight`` = normTF * idf.
 
     normTF = tf / maxTF(doc,field)      (indexer.go:362, getMaxFreq 410-418)
     idf    = log2(N / df)               (term_weighting.go:37)
 
     maxTF via a window over (doc_id, field) — map-side-combinable and
-    doc-bounded, no skew.
+    doc-bounded, no skew. A plan that replaces ``weight`` (the shard
+    encoder's) prunes the window.
     """
     from pyspark.sql import Window
 
     w = Window.partitionBy("doc_id", "field")
-    weighted = (
-        postings.withColumn("max_tf", F.max("tf").over(w))
-        .join(term_stats, ["term", "field"])
-        .withColumn(
-            "weight",
-            (F.col("tf") / F.col("max_tf"))
-            * F.log2(F.lit(float(n_docs)) / F.col("df")),
-        )
+    return postings.withColumn(
+        "weight",
+        (F.col("tf") / F.max("tf").over(w))
+        * F.log2(F.lit(float(n_docs)) / F.col("df")),
     )
-    return weighted.select(
-        "term", "field", "doc_id", "tf", "positions", "weight"
+
+
+def build_weighted_postings(
+    postings: DataFrame,
+    term_stats: DataFrame,
+    doc_stats: DataFrame,
+    stats_rows: list,
+    cfg: EngineConfig = DEFAULT,
+) -> DataFrame:
+    """postings -> (doc_id, field, term, tf, positions, weight, df, dl,
+    bm25_weight): the tf-idf ``weight`` and the BM25 ``bm25_weight``
+    of the exhaustive scorer, from ONE term_stats join (df) and one
+    doc_stats join (dl), with each field's (n_docs, avgdl) from
+    ``stats_rows`` (the collected corpus_stats)."""
+    bm25 = (
+        postings.join(term_stats, ["term", "field"])
+        .join(doc_stats, ["doc_id", "field"])
+        .withColumn("bm25_weight", bm25_weight_col(cfg, {
+            r["field"]: (r["n_docs"], r["avgdl"]) for r in stats_rows
+        }))
+    )
+    return build_tfidf_weights(bm25, int(stats_rows[0]["n_docs"])).select(
+        "doc_id", "field", "term", "tf", "positions", "weight", "df", "dl",
+        "bm25_weight",
     )
 
 
@@ -427,18 +445,13 @@ def build_index(
     doc_stats = build_doc_stats(tokens)
     term_stats = build_term_stats(postings)
     corpus_stats = build_corpus_stats(corpus, doc_stats)
-    stats_rows = corpus_stats.collect()
-    n_docs = int(stats_rows[0]["n_docs"])
-    weighted = build_tfidf_weights(postings, term_stats, n_docs)
     # BM25 weights of the exhaustive bm25.search reference (and the
     # impact order of the shard encoder): query-time scoring becomes
     # filter+broadcast-join+agg with NO stats joins. dl stays: the shard
     # encoder bounds blocks by their (tf, dl) pairs
-    weighted = weighted.join(term_stats, ["term", "field"]).join(
-        doc_stats, ["doc_id", "field"]
-    ).withColumn("bm25_weight", bm25_weight_col(cfg, {
-        r["field"]: (r["n_docs"], r["avgdl"]) for r in stats_rows
-    }))
+    weighted = build_weighted_postings(
+        postings, term_stats, doc_stats, corpus_stats.collect(), cfg
+    )
     return Index(
         tokens=tokens,
         postings=weighted,

@@ -147,18 +147,10 @@ def build_all(
     n_docs = int(corpus_stats.select(F.first("n_docs")).first()[0])
 
     def _weighted():
-        weighted = ib.build_tfidf_weights(postings_raw, term_stats, n_docs)
-        # precompute BM25 impact weights too (WAND scores from storage)
-        stats = {
-            r["field"]: (int(r["n_docs"]), float(r["avgdl"]))
-            for r in corpus_stats.collect()
-        }
-        df = weighted.join(term_stats, ["term", "field"]).join(
-            doc_stats, ["doc_id", "field"]
-        )
-        # dl stays: the shard encoder bounds blocks by their (tf, dl) pairs
-        return df.withColumn(
-            "bm25_weight", ib.bm25_weight_col(cfg, stats)
+        # tf-idf and BM25 weights; dl stays: the shard encoder bounds
+        # blocks by their (tf, dl) pairs
+        return ib.build_weighted_postings(
+            postings_raw, term_stats, doc_stats, corpus_stats.collect(), cfg
         ).withColumn(
             "bucket", F.pmod(term_hash60_col("term"), F.lit(n_buckets)).cast("int")
         )

@@ -160,6 +160,98 @@ def test_build_rejects_non_bm25_scorer(spark, docs_tiny):
     assert n_jobs == 0
 
 
+def _warehouse_rows(spark, wh):
+    """Each warehouse table's rows, sorted by the table's key."""
+    return {
+        table: spark.read.parquet(f"{wh}/{table}").orderBy(*key).collect()
+        for table, key in (
+            ("posting_shards", ("term", "field", "shard", "salt")),
+            ("doc_cards", ("doc_key",)),
+            ("corpus_stats", ("field",)),
+        )
+    }
+
+
+@pytest.fixture(scope="module")
+def twice_small(spark, docs_small, tmp_path_factory):
+    """Two builds of docs_small (with its links and PageRank) into two
+    warehouses."""
+    from spaghettisearch_spark.api import SearchEngine
+
+    docs = spark.createDataFrame(docs_small)
+    return [
+        SearchEngine.build(
+            spark, docs, warehouse_dir=str(tmp_path_factory.mktemp(f"twice{i}"))
+        )
+        for i in range(2)
+    ]
+
+
+def test_build_is_deterministic(spark, twice_small):
+    """The build's phases overlap on driver threads, but two builds of
+    one corpus write the same rows: shard blocks, cards (PageRank
+    compared exactly) and corpus_stats."""
+    a, b = (_warehouse_rows(spark, e.warehouse_dir) for e in twice_small)
+    assert len(a["doc_cards"]) == 300
+    assert any(r["pagerank"] > 0 for r in a["doc_cards"])
+    for table in a:
+        assert a[table] == b[table], table
+
+
+def test_build_phases_overlap(spark, docs_tiny, twice_small):
+    """``build_profile`` names each phase with its pool and interval;
+    PageRank runs while the index or the shards are built. Without
+    PageRank there is no pagerank phase."""
+    from spaghettisearch_spark.api import SearchEngine
+
+    import xml.etree.ElementTree as ET
+
+    from spaghettisearch_spark.session import POOLS_FILE
+
+    prof = twice_small[0].build_profile
+    phases = prof["phases"]
+    assert set(phases) == {"index", "pagerank", "doc_dim", "shards", "cards"}
+    # every phase's pool is declared, topic PageRank's too
+    declared = {p.get("name") for p in ET.parse(POOLS_FILE).getroot()}
+    assert set(phases) | {"topic_pagerank"} <= declared
+    for name, ph in phases.items():
+        assert ph["pool"] == name
+        assert 0 <= ph["start_s"] <= ph["end_s"] <= prof["total_s"]
+
+    def overlaps(x, y):
+        return x["start_s"] < y["end_s"] and y["start_s"] < x["end_s"]
+
+    pr = phases["pagerank"]
+    assert overlaps(pr, phases["index"]) or overlaps(pr, phases["shards"])
+    # the cards carry PageRank: they start once it is done
+    assert phases["cards"]["start_s"] >= pr["end_s"]
+    eng = SearchEngine.build(
+        spark, spark.createDataFrame(docs_tiny), with_pagerank=False
+    )
+    assert set(eng.build_profile["phases"]) == {
+        "index", "doc_dim", "shards", "cards",
+    }
+
+
+def test_build_phase_error_propagates(spark, docs_tiny):
+    """A phase thread's error leaves ``build`` once every phase thread is
+    joined: a topics frame without ``category`` raises the analysis
+    error naming it, and no thread outlives the call. Jobs run after
+    it stay in the default pool."""
+    import threading
+
+    from pyspark.errors import AnalysisException
+
+    from spaghettisearch_spark.api import SearchEngine
+
+    topics = spark.createDataFrame([("r/a.py", "x")], "doc_id string, cat string")
+    before = threading.active_count()
+    with pytest.raises(AnalysisException, match="category"):
+        SearchEngine.build(spark, spark.createDataFrame(docs_tiny), topics=topics)
+    assert threading.active_count() == before
+    assert spark.sparkContext.getLocalProperty("spark.scheduler.pool") is None
+
+
 def test_warehouse_engine_serves_and_compacts(
     spark, docs_tiny, ref_tiny, tmp_path
 ):

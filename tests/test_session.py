@@ -1,7 +1,9 @@
 """The session's worker daemon (``spaghettisearch_spark.worker``) keeps
 Spark's startup archives from being re-read on every Python task, and
 leaves archives that join the path later to CPython's behaviour. Checked
-on the mechanism inside a worker, not on timing."""
+on the mechanism inside a worker, not on timing. The session also
+schedules FAIR, with the build phases' pools declared, and captures no
+DataFrame call sites."""
 
 from __future__ import annotations
 
@@ -77,3 +79,15 @@ def test_worker_keeps_startup_archive_dirs(spark):
     assert row.startup_reread == 0
     assert row.late_reread
     assert row.late_value == 7
+
+
+def test_session_scheduling_and_call_sites(spark):
+    """FAIR scheduling with the build phases' pools declared, and
+    DataFrame call-site capture off."""
+    from spaghettisearch_spark.session import POOLS_FILE
+
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.scheduler.mode") == "FAIR"
+    assert POOLS_FILE.is_file()
+    assert conf.get("spark.scheduler.allocation.file") == POOLS_FILE.as_uri()
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"

@@ -1,6 +1,8 @@
 """Per-query latency breakdown for the shard-backed WAND path (guide §1).
 
 Builds the sf0.1 index + shards exactly like bench.py, then times:
+  - the engine build, printed from its ``build_profile`` (each phase's
+    pool and start/end offsets, and the total)
   - engine queries over a warehouse built from the same documents, cold
     (``meta_cache`` cleared) and warm: wall time and Spark jobs per query,
     and for a phrase query a cProfile top-15 (cumulative) of one cold
@@ -78,6 +80,16 @@ def phrase_plan_profile(eng, q, top=15):
         print(out.getvalue())
 
 
+def print_build_profile(prof):
+    """The engine's ``build_profile``: each phase's pool and interval
+    (seconds from the build call), in start order, and the total."""
+    for name, ph in sorted(prof["phases"].items(), key=lambda kv: kv[1]["start_s"]):
+        print(f"build_phase {name:<15} pool={ph['pool']:<15} "
+              f"{ph['start_s']:6.2f} -> {ph['end_s']:6.2f} s "
+              f"({ph['end_s'] - ph['start_s']:.2f} s)")
+    print(f"build_total {prof['total_s']:.2f} s")
+
+
 def engine_queries(spark, raw, queries, n=5):
     """Cold (meta_cache cleared before each run) and warm
     ``SearchEngine.query`` calls over a warehouse built from ``raw``
@@ -91,6 +103,7 @@ def engine_queries(spark, raw, queries, n=5):
     st = sc.statusTracker()
     with tempfile.TemporaryDirectory(prefix="profile-wh-") as wh:
         eng = SearchEngine.build(spark, raw, warehouse_dir=wh)
+        print_build_profile(eng.build_profile)
         for qi, (q, wand) in enumerate(queries):
             def run():
                 eng.query(q, 10, use_wand=wand, backend="shards")

@@ -63,16 +63,9 @@ def main():
     corpus_stats = ib.build_corpus_stats(corpus, doc_stats)
     stats_rows = ph("corpus_stats_collect", lambda: corpus_stats.collect())
     n_docs = int(stats_rows[0]["n_docs"])
-    weighted = ib.build_tfidf_weights(postings, term_stats, n_docs)
-    weighted = weighted.join(term_stats, ["term", "field"]).join(
-        doc_stats, ["doc_id", "field"]
-    )
-    contrib = ib.bm25_weight_col(
-        cfg, {r["field"]: (r["n_docs"], r["avgdl"]) for r in stats_rows}
-    )
-    weighted = weighted.withColumn("bm25_weight", contrib).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    weighted = ib.build_weighted_postings(
+        postings, term_stats, doc_stats, stats_rows, cfg
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     ph("weighted_postings_count", lambda: weighted.count())
 
     dim = ph("doc_dim", lambda: build_doc_dim(corpus).cache())
